@@ -19,13 +19,19 @@ Scale design:
 - the gather ``groupBy(dst).sum`` benefits from map-side partial
   aggregation, which neutralizes hub skew for algebraic aggregates
   (explicit salting helpers in graph/skew.py cover non-algebraic cases),
-- each superstep is checkpointed (Parquet) → lineage stays O(1) and the
-  run resumes from the last complete superstep.
+- with ``run_dir`` each superstep is checkpointed (Parquet) → lineage
+  stays O(1) and the run resumes from the last complete superstep,
+- below ``LOCAL_PR_MAX_EDGES`` the whole iteration runs as one
+  vectorized numpy task instead, with or without ``run_dir`` (the task
+  writes the same per-superstep Parquet states).
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -33,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest
+from ..plans.checkpoint import RunManifest, release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize, vertices_of
 
 # Above this vertex count the rank table is no longer broadcast.
@@ -50,8 +56,9 @@ per iteration (a 1.2M-row scatter/gather is ~5 ms in numpy). Measured
 crossover (BENCH/BASELINE.md, 20-superstep walls, local[32]): local
 wins 1.9x at 2M normalized rows, loses 0.61x at 8M — 4M is the
 bracketed midpoint, and also the memory-safe bound for one executor
-(~200 MB edge index + key table). The distributed loop still covers
-``run_dir`` checkpointing and everything above the gate;
+(~200 MB edge index + key table). The gate applies with or without
+``run_dir`` (the kernel then checkpoints each superstep itself); the
+distributed loop covers everything above the gate, and
 ``strategy="broadcast"/"copartition"/"blocked"`` forces it. Parity
 between the two paths is within float64 summation-order noise (≪ the
 1e-6 convergence contract) and is tested."""
@@ -88,6 +95,8 @@ def _local_pagerank(
     max_iter: int,
     init_ranks: DataFrame | None = None,
     personalization: DataFrame | None = None,
+    run_dir: str | None = None,
+    start_k: int = 0,
 ) -> PageRankResult:
     """Single-task power iteration over the (small) transition table.
 
@@ -117,18 +126,29 @@ def _local_pagerank(
     renormalized to sum 1 — the fixed point is init-independent for
     α < 1, so warm vs cold results agree within the tol contract while
     a warm start near the solution saves most supersteps.
+
+    ``start_k > 0`` resumes a checkpointed run: ``init_ranks`` is then the
+    stored state after superstep ``start_k - 1``, taken verbatim (no
+    filtering, no renormalization), so a resumed run is bit-identical to
+    an uninterrupted one. With ``run_dir`` the task writes each
+    superstep's state to ``RunManifest.step_path(k)/part-00000.parquet``
+    (``id``, ``rank``) with pyarrow; recording it in the manifest is the
+    caller's job, after the task has returned.
+
+    The task emits one extra row (null ``id`` and ``rank``) whose
+    ``_meta`` JSON carries the step count, the convergence flag and one
+    record per superstep; it is read in the single collect after the
+    kernel and becomes ``PageRankResult.metrics``.
     """
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, IntegerType, StructField, StructType,
-    )
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
     id_type = norm.schema["src"].dataType
     out_schema = StructType([
         StructField("id", id_type),
         StructField("rank", DoubleType()),
-        StructField("_k", IntegerType()),
-        StructField("_conv", BooleanType()),
+        StructField("_meta", StringType()),
     ])
+    step_path = RunManifest(run_dir).step_path if run_dir is not None else None
     marked = norm.select("src", "dst", "p")
     if personalization is not None:
         # a 4th marker channel rides only when personalization is used,
@@ -160,12 +180,14 @@ def _local_pagerank(
         )
     if init_ranks is not None:
         # dst-null + p-NON-null = init row (p-null dst-null rows are the
-        # universe markers above); non-finite / non-positive priors are
-        # dropped here so they can never masquerade as markers
+        # universe markers above); null priors are dropped here so they
+        # can never masquerade as markers, and so are non-finite /
+        # non-positive warm-start priors (a resumed state is kept whole)
         r0 = F.col("rank").cast("double")
-        init_marked = init_ranks.filter(
-            r0.isNotNull() & ~F.isnan(r0) & (r0 > 0)
-        ).select(
+        keep = r0.isNotNull()
+        if start_k == 0:
+            keep = keep & ~F.isnan(r0) & (r0 > 0)
+        init_marked = init_ranks.filter(keep).select(
             F.col("id").cast(id_type).alias("src"),
             F.lit(None).cast(id_type).alias("dst"),
             r0.alias("p"),
@@ -214,10 +236,14 @@ def _local_pagerank(
             dsts.append(e["dst"].to_numpy())
             ps.append(e["p"].to_numpy(dtype=np.float64))
         all_keys = np.concatenate(vids + srcs + dsts)
+
+        def summary(k, conv, n, steps=()):
+            return pd.DataFrame({"id": [None], "rank": [None], "_meta": [
+                json.dumps({"k": k, "conv": conv, "n": n, "steps": list(steps)})
+            ]})
+
         if all_keys.size == 0:
-            yield pd.DataFrame(
-                {"id": [], "rank": [], "_k": [], "_conv": []}
-            ).astype({"_k": "int32", "_conv": "bool"})
+            yield summary(start_k, True, 0)
             return
         # index in one pass. String keys go through pd.factorize (C hash
         # over all E rows) + an argsort of the V uniques only — measured
@@ -256,11 +282,12 @@ def _local_pagerank(
             pos = pd.Index(ids).get_indexer(ik)
             ok = pos >= 0
             ranks[pos[ok]] = iv[ok]
-            s = float(ranks.sum())
-            if np.isfinite(s) and s > 0:
-                ranks /= s
-            else:  # degenerate prior: fall back to the cold start
-                ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
+            if start_k == 0:  # a resumed state stays verbatim
+                s = float(ranks.sum())
+                if np.isfinite(s) and s > 0:
+                    ranks /= s
+                else:  # degenerate prior: fall back to the cold start
+                    ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
         svec = None
         if pers_keys:
             # teleport vector: weights mapped onto the CURRENT universe
@@ -280,20 +307,21 @@ def _local_pagerank(
                 svec = None
         if pers_requested and svec is None:
             # zero teleport mass (no seed id exists in this universe):
-            # signal with the _k = -1 sentinel instead of iterating — the
+            # signal with the k = -1 sentinel instead of iterating — the
             # driver raises the contract ValueError after the (eager)
             # materialization, so the caller still sees the error at the
             # call site without a separate pre-kernel existence-probe job
-            yield pd.DataFrame({
-                "id": ids,
-                "rank": ranks,
-                "_k": np.int32(-1),
-                "_conv": False,
-            })
+            yield summary(-1, False, nn)
             return
+        if step_path is not None:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            id_arr = pa.array(ids)
         dmass = float(ranks[dang].sum())
-        steps, converged = 0, False
-        for k in range(max_iter):
+        steps, converged, records = start_k, False, []
+        for k in range(start_k, max_iter):
+            t0 = time.monotonic()
             contrib = np.bincount(dst_i, weights=ranks[src_i] * p, minlength=nn)
             if svec is None:
                 base = (1.0 - alpha) / nn + alpha * dmass / nn
@@ -305,37 +333,106 @@ def _local_pagerank(
             delta = float(np.abs(new - ranks).sum())
             ranks = new
             dmass = float(ranks[dang].sum())
+            if step_path is not None:
+                d = step_path(k)
+                shutil.rmtree(d, ignore_errors=True)  # stale files of an older run
+                os.makedirs(d)
+                pq.write_table(
+                    pa.table({"id": id_arr, "rank": ranks}),
+                    os.path.join(d, "part-00000.parquet"),
+                )
+            records.append({
+                "k": k, "wall_ms": (time.monotonic() - t0) * 1e3,
+                "delta": delta, "rows": nn, "dangling_mass_next": dmass,
+            })
             steps = k + 1
             if delta < tol:
                 converged = True
                 break
-        yield pd.DataFrame({
-            "id": ids,
-            "rank": ranks,
-            "_k": np.int32(steps),
-            "_conv": converged,
-        })
+        yield pd.DataFrame({"id": ids, "rank": ranks, "_meta": None})
+        yield summary(steps, converged, nn, records)
 
     out = marked.coalesce(1).mapInPandas(power_iter, out_schema)
     out = out.localCheckpoint(eager=True)
-    meta = out.select(
-        F.max("_k").alias("k"), F.min("_conv").alias("c")
-    ).collect()[0]
-    if personalization is not None and (
-        meta["k"] is None or int(meta["k"]) < 0
-    ):
-        # _k = -1 sentinel (or an empty universe) under a requested
+    meta = json.loads(
+        out.where(F.col("_meta").isNotNull()).select("_meta").collect()[0][0]
+    )
+    if personalization is not None and (meta["k"] < 0 or meta["n"] == 0):
+        # k = -1 sentinel (or an empty universe) under a requested
         # personalization: the teleport vector has no mass on this graph
-        out.unpersist()
+        release_local_checkpoint(out)
         raise ValueError(
             "personalization carries no positive weight on any vertex of "
             "this graph — the teleport distribution would be empty"
         )
     return PageRankResult(
-        out.select("id", "rank"),
-        int(meta["k"] or 0),
-        bool(meta["c"]) if meta["c"] is not None else True,
+        out.where(F.col("_meta").isNull()).select("id", "rank"),
+        meta["k"], meta["conv"], meta["steps"],
     )
+
+
+def _identity(df: DataFrame, *cols: str) -> list[int]:
+    """Content key ``[rows, Σhi, Σlo]`` of ``df`` over ``cols``: the row
+    count plus the sums of the two 32-bit halves of ``xxhash64(cols)``,
+    in ONE single-stage aggregate (no groupBy shuffle). Order-independent
+    and multiplicity-safe: a duplicated row adds its hash again, where an
+    XOR would cancel the pair. The halves are summed as decimals, so no
+    row count can overflow them under ANSI mode."""
+    h = F.xxhash64(*cols)
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.shiftright(h, 32).cast("decimal(28,0)")),
+        F.sum(h.bitwiseAND(F.lit(0xFFFFFFFF)).cast("decimal(28,0)")),
+    ).collect()[0]
+    return [int(row[0]), int(row[1] or 0), int(row[2] or 0)]
+
+
+def _resume_point(manifest: RunManifest, tol: float) -> tuple[int, bool]:
+    """Last recorded superstep of ``manifest`` (-1 if none) and whether
+    the run had already converged there."""
+    last = manifest.last_complete()
+    done = any(
+        s["k"] == last and s.get("delta") is not None and s["delta"] < tol
+        for s in manifest.supersteps
+    )
+    return last, done
+
+
+def _checkpointed_local(
+    spark: SparkSession,
+    run_dir: str,
+    params: dict,
+    vertices: DataFrame | None,
+    norm: DataFrame,
+    alpha: float,
+    tol: float,
+    max_iter: int,
+    init_ranks: DataFrame | None,
+    personalization: DataFrame | None,
+) -> PageRankResult:
+    """``_local_pagerank`` under a run manifest: resume from the last
+    recorded state (``init_ranks`` is then ignored), let the kernel write
+    one Parquet state per superstep, and record those supersteps — with
+    footer lineage, zero Spark jobs — once the task has returned."""
+    manifest = RunManifest.open_or_create(run_dir, "pagerank", params)
+    last, done = _resume_point(manifest, tol)
+    if done:
+        return PageRankResult(
+            manifest.load_state(spark, last).select("id", "rank"),
+            last + 1, True, manifest.metrics(),
+        )
+    res = _local_pagerank(
+        vertices, norm, alpha, tol, max_iter,
+        manifest.load_state(spark, last) if last >= 0 else init_ranks,
+        personalization, run_dir, last + 1,
+    )
+    for m in res.metrics:
+        manifest.record_superstep(
+            spark, m["k"], wall_ms=m["wall_ms"], delta=m["delta"],
+            rows=m["rows"], extra={"dangling_mass_next": m["dangling_mass_next"]},
+        )
+    res.metrics = manifest.metrics()
+    return res
 
 
 def pagerank(
@@ -388,9 +485,26 @@ def pagerank(
     start at 1/N, the assembled vector is renormalized to sum 1, and
     non-finite / non-positive priors are discarded. Ignored when a
     ``run_dir`` manifest resumes checkpointed state (the state
-    supersedes any prior); costs one extra Spark action at superstep 0
-    only (the normalization + dangling-mass aggregate, same shape as
-    the resume path's).
+    supersedes any prior); on the distributed loop it costs one extra
+    Spark action at superstep 0 only (the normalization + dangling-mass
+    aggregate), on the local path none (the prior rides the kernel's
+    input).
+
+    ``run_dir`` makes the run resumable: each superstep's state is
+    written to ``run_dir/superstep_{k:05d}/`` and recorded, with wall,
+    delta and per-file lineage, in ``run_dir/manifest.json``; a rerun
+    with the same inputs and parameters resumes after the last recorded
+    superstep (``max_iter`` may differ) and returns the stored state at
+    once if that superstep had converged. A different input — edges,
+    weights, ``vertices``, seeds — or a different key space (original
+    keys on the local path, xxhash64 vids on the distributed path)
+    starts fresh. Resume granularity is one superstep on the
+    distributed loop and one kernel call on the local path: the kernel
+    writes its states while it runs, but the manifest records them only
+    after the task returns, so a call killed mid-kernel resumes from the
+    previous call's last superstep and no record ever points at a
+    partial file. ``run_dir`` must be a POSIX path that the driver and
+    the executors both see.
 
     ``directed=False`` treats the input as canonical undirected edges and
     symmetrizes (NetworkX Graph semantics). ``tol`` is the absolute L1
@@ -409,10 +523,10 @@ def pagerank(
     ``strategy`` picks the superstep physical plan:
 
     - "local" (auto-selected below ``LOCAL_PR_MAX_EDGES`` normalized
-      edge rows when no ``run_dir`` is requested): one vectorized
-      power-iteration task over the whole transition table — the
-      broadcast-join principle applied to the iteration itself; see
-      ``_local_pagerank``. Incompatible with ``run_dir``.
+      edge rows): one vectorized power-iteration task over the whole
+      transition table — the broadcast-join principle applied to the
+      iteration itself; see ``_local_pagerank``. Resumable under
+      ``run_dir`` like the distributed loop.
     - "broadcast": ranks broadcast to dst-partitioned edges; fastest
       while the rank table is broadcastable. Serial cost: building the
       broadcast (~|V|) every superstep.
@@ -467,19 +581,6 @@ def pagerank(
     norm = e.join(out_w, "src").select(
         "src", "dst", (F.col("weight") / F.col("_wsum")).alias("p")
     )
-    # local fast path (see LOCAL_PR_MAX_EDGES). The size probe caches the
-    # transition table and counts it (one job); a fall-through to the
-    # distributed loop reuses the cache for its one repartition pass and
-    # releases it right after materializing norm_edges, so the probe
-    # never recomputes the normalization and never doubles edge storage
-    # for the rest of the run. The vertex universe is not materialized
-    # at all on the local path — the kernel derives it from the edge
-    # endpoints (+ the optional `vertices` marker rows).
-    if strategy == "local" and run_dir is not None:
-        raise ValueError(
-            "strategy='local' is incompatible with run_dir checkpointing; "
-            "use the distributed loop for resumable runs"
-        )
     pers_clean = None
     if personalization is not None:
         w0 = F.col("weight").cast("double")
@@ -492,27 +593,56 @@ def pagerank(
             .agg(F.sum(w0).alias("weight"))
         )
 
+    # Manifest identity of a checkpointed run. max_iter is a stopping
+    # condition, not part of the computation's identity — a resume may
+    # raise it and continue the same run. The content keys (see
+    # _identity) cover the transition column p — same topology with
+    # changed weights is a DIFFERENT input — the extra `vertices`, and
+    # the teleport input of a seeded run. "ids" (added where the path is
+    # known) names the key space the stored states are written in.
+    params = {"alpha": alpha, "tol": tol, "weighted": has_w, "directed": directed}
+    # local fast path (see LOCAL_PR_MAX_EDGES). The size probe caches the
+    # transition table and counts it — for a checkpointed run the same
+    # single aggregate also yields the input identity. A fall-through to
+    # the distributed loop reuses the cache for its one repartition pass
+    # and releases it right after materializing norm_edges, so the probe
+    # never recomputes the normalization and never doubles edge storage
+    # for the rest of the run. The vertex universe is not materialized
+    # at all on the local path — the kernel derives it from the edge
+    # endpoints (+ the optional `vertices` marker rows).
     probe_cache = None
-    if run_dir is None and strategy in ("auto", "local"):
+    if run_dir is not None or strategy in ("auto", "local"):
         probe_cache = norm.persist(StorageLevel.MEMORY_AND_DISK)
-        if strategy == "local" or probe_cache.count() <= LOCAL_PR_MAX_EDGES:
+        if run_dir is not None:
+            params["input"] = _identity(probe_cache, "src", "dst", "p")
+            n_rows = params["input"][0]
+            if vertices is not None:
+                params["vertices"] = _identity(vertices, "id")
+            if pers_clean is not None:
+                params["personalization"] = _identity(pers_clean, "id", "weight")
+        else:
+            n_rows = None if strategy == "local" else probe_cache.count()
+        if strategy == "local" or (
+            strategy == "auto" and n_rows <= LOCAL_PR_MAX_EDGES
+        ):
             # Zero teleport mass (seeded run, no seed id in the graph) is
             # detected INSIDE the kernel and signalled back through the
-            # _k = -1 sentinel; _local_pagerank raises the contract
-            # ValueError at the call site. Earlier versions ran a
-            # separate pre-kernel existence-probe job here — one extra
-            # action per seeded run (plus a second evaluation of the
-            # caller's seed subquery) spent entirely on the error path.
-            # The kernel's output is materialized eagerly inside, so the
-            # input cache can be dropped before returning.
+            # k = -1 sentinel; _local_pagerank raises the contract
+            # ValueError at the call site. The kernel's output is
+            # materialized eagerly inside, so the input cache can be
+            # dropped before returning.
             try:
-                res = _local_pagerank(
-                    vertices, probe_cache, alpha, tol, max_iter, init_ranks,
-                    pers_clean,
+                if run_dir is None:
+                    return _local_pagerank(
+                        vertices, probe_cache, alpha, tol, max_iter,
+                        init_ranks, pers_clean,
+                    )
+                return _checkpointed_local(
+                    spark, run_dir, {**params, "ids": "key"}, vertices,
+                    probe_cache, alpha, tol, max_iter, init_ranks, pers_clean,
                 )
             finally:
                 probe_cache.unpersist()
-            return res
         norm = probe_cache
 
     # Int64 re-keying for the distributed loop (same mechanics as
@@ -526,9 +656,9 @@ def pagerank(
     # (BENCH/BASELINE.md round-3 section). xxhash64(seed 42) is
     # deterministic, so run_dir resumes re-derive the same vids; a
     # detected 64-bit collision falls back to original keys (rank values
-    # under a collision would silently merge vertices). Encoding changes
-    # the manifest's input identity hash, so pre-encoding run_dirs start
-    # fresh rather than resuming inconsistently.
+    # under a collision would silently merge vertices). The manifest
+    # records the key space ("ids"), so a run_dir written in the other
+    # key space starts fresh rather than resuming inconsistently.
     from pyspark.sql.types import StringType
 
     vdict = None
@@ -586,9 +716,9 @@ def pagerank(
         n = int(row0["n"])
         tot = float(row0["t"] or 0.0)
         if n > 0 and tot <= 0:
-            verts.unpersist()
-            if probe_cache is not None:
-                probe_cache.unpersist()
+            for cached in (verts, probe_cache, vdict):
+                if cached is not None:
+                    cached.unpersist()
             raise ValueError(
                 "personalization carries no positive weight on any vertex "
                 "of this graph — the teleport distribution would be empty"
@@ -602,6 +732,8 @@ def pagerank(
     if n == 0:
         empty = _decode_ranks(verts.select("id", F.lit(0.0).alias("rank")), vdict)
         verts.unpersist()
+        if probe_cache is not None:
+            probe_cache.unpersist()
         return PageRankResult(empty, 0, True)
 
     np = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -677,44 +809,12 @@ def pagerank(
     )
     # exact: the initial state is uniform, so dangling mass = |D| / n
     dmass = n_dangling / n
-    # max_iter is a stopping condition, not part of the computation's
-    # identity — a resume may raise it and continue the same run.
-    params = {
-        "alpha": alpha, "tol": tol,
-        "weighted": has_w, "directed": directed, "n": n,
-    }
     if run_dir is not None:
-        if svec is not None:
-            # the teleport vector is part of the run's identity: a resume
-            # against different seeds must start fresh, not serve the old
-            # seeds' checkpoints. ids are unique (verts), so bit_xor
-            # cannot suffer duplicate-row cancellation. Only checkpointed
-            # runs pay this action — an unmanaged seeded run has no
-            # manifest to key.
-            psk = svec.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("id", "_s")).alias("h"),
-            ).collect()[0]
-            params = {**params, "pers_rows": psk["n"], "pers_hash": psk["h"]}
-        # key the manifest on the input identity so a different edge table
-        # in the same run_dir starts fresh. The hash must cover the
-        # weight-bearing column (p) — same topology with changed weights is
-        # a DIFFERENT input — and must be multiplicity-safe: XOR over raw
-        # rows cancels duplicate rows pairwise (possible on the directed
-        # path, which does not dedup), so hash the distinct (src, dst, p)
-        # set together with each row's multiplicity.
-        sk = (
-            norm_edges.groupBy("src", "dst", "p")
-            .agg(F.count(F.lit(1)).alias("_m"))
-            .agg(
-                F.sum("_m").alias("n"),
-                F.bit_xor(F.xxhash64("src", "dst", "p", "_m")).alias("h"),
-            )
-            .collect()[0]
+        manifest = RunManifest.open_or_create(
+            run_dir, "pagerank",
+            {**params, "ids": "key" if vdict is None else "xxhash64"},
         )
-        params = {**params, "input_rows": sk["n"], "input_hash": sk["h"]}
-        manifest = RunManifest.open_or_create(run_dir, "pagerank", params)
-        last = manifest.last_complete()
+        last, done = _resume_point(manifest, tol)
         if last >= 0:
             loaded = manifest.load_state(spark, last).select("id", "rank")
             if n_dangling > 0:
@@ -730,24 +830,16 @@ def pagerank(
                 # teleport vector rather than trusting stored columns
                 ranks = ranks.join(svec, "id")
             start_k = last + 1
-            done = [
-                s for s in manifest.supersteps
-                if s["k"] == last and s.get("delta") is not None and s["delta"] < tol
-            ]
             if done:
-                for cached in (verts, dangling, norm_edges, rt):
+                for cached in (verts, dangling, norm_edges, rt, svec):
                     if cached is not None:
                         cached.unpersist()
                 return PageRankResult(
                     _decode_ranks(ranks.select("id", "rank"), vdict),
                     last + 1, True, manifest.metrics(),
                 )
-            # one extra action at resume only: dangling mass of the
-            # restored state (steady-state supersteps stay single-action)
-            if n_dangling > 0:
-                dmass = (
-                    ranks.filter("_dang").agg(F.sum("rank")).collect()[0][0] or 0.0
-                )
+            # the restored state's dangling mass was recorded with it
+            dmass = manifest.supersteps[-1]["dangling_mass_next"]
     if init_ranks is not None and start_k == 0:
         # warm start (see docstring): join the prior onto the CURRENT
         # universe, fill gaps with 1/n, renormalize. One extra action —
@@ -817,6 +909,7 @@ def pagerank(
     # the coordination-bound regime) right-size those shuffles to ~100k
     # rows per partition, floor 8, instead of the session default:
     # measured 39.9s -> 30.3s at sf0.1 (|V|=16k, session default 32).
+    # The result never exceeds the session value: the resize only shrinks.
     # Larger graphs keep the session setting (shrinking below the core
     # count would idle executors during the rank-state stages), and
     # copartition/blocked always keep it: their shuffle count must match
@@ -826,7 +919,7 @@ def pagerank(
     resize_sp = False
     if strategy == "broadcast" and n <= 500_000:
         try:
-            rank_parts = max(8, min(int(sp_before), (n + 99_999) // 100_000))
+            rank_parts = min(int(sp_before), max(8, (n + 99_999) // 100_000))
             resize_sp = rank_parts != int(sp_before)
         except ValueError:  # non-numeric (e.g. "auto") — leave untouched
             resize_sp = False
@@ -925,7 +1018,10 @@ def pagerank(
             delta = agg_row["_delta"]
             dmass = (agg_row["_dm"] or 0.0) if n_dangling > 0 else 0.0
             wall_ms = (time.monotonic() - t0) * 1e3
-            entry = {"k": k, "wall_ms": wall_ms, "delta": delta, "rows": n}
+            entry = {
+                "k": k, "wall_ms": wall_ms, "delta": delta, "rows": n,
+                "dangling_mass_next": dmass,
+            }
             local_metrics.append(entry)
             if manifest is not None:
                 manifest.record_superstep(
@@ -935,7 +1031,7 @@ def pagerank(
             # release the superseded superstep state (safe: the new state is
             # materialized) so long runs don't accumulate pinned blocks
             if prev_ckpt is not None and manifest is None:
-                prev_ckpt.unpersist()
+                release_local_checkpoint(prev_ckpt)
             prev_ckpt = new_ranks
             ranks = new_ranks.select(*state_cols)
             steps = k + 1

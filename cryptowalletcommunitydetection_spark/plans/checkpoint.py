@@ -36,6 +36,18 @@ def checkpoint_df(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.parquet(path)
 
 
+def release_local_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks pinned by ``df = x.localCheckpoint(...)``.
+
+    ``DataFrame.unpersist`` only removes cache-manager entries, and a
+    local checkpoint never creates one: its blocks belong to the RDD
+    under the plan's ``LogicalRDD`` and otherwise stay pinned until the
+    JVM garbage-collects that plan. ``df`` must be the checkpoint's
+    direct result, not a projection of it.
+    """
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def partition_lineage(spark: SparkSession, path: str) -> list[dict[str, Any]]:
     """Per-partition lineage of a checkpoint: file name, rows, bytes.
 
@@ -90,6 +102,11 @@ class RunManifest:
           superstep_00000/       # parquet state after superstep 0
           superstep_00001/
           ...
+
+    A state directory is either a Spark write (one part file per
+    partition, via ``checkpoint``) or, from a single-task kernel such as
+    PageRank's local path, one ``part-00000.parquet`` written with
+    pyarrow; ``load_state`` and ``partition_lineage`` read both.
     """
 
     run_dir: str

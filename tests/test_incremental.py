@@ -186,19 +186,33 @@ def test_warm_start_duplicate_prior_ids_do_not_duplicate_state(spark):
     _assert_close(_ranks(cold), ranks)
 
 
-def test_warm_start_ignored_on_manifest_resume(spark, tmp_path):
+def _warm_start_ignored_on_manifest_resume(spark, tmp_path, strategy):
     """A checkpointed run's state supersedes any init_ranks a resume
     passes — the resumed result equals the uninterrupted run."""
     edges = datagen.edges_df(spark, datagen.erdos_renyi(40, 0.05, seed=9))
-    full = pagerank(spark, edges, tol=1e-8, run_dir=str(tmp_path / "full"))
+    full = pagerank(
+        spark, edges, tol=1e-8, strategy=strategy, run_dir=str(tmp_path / "full")
+    )
 
     d = str(tmp_path / "part")
-    partial = pagerank(spark, edges, tol=1e-8, max_iter=3, run_dir=d)
+    partial = pagerank(
+        spark, edges, tol=1e-8, max_iter=3, strategy=strategy, run_dir=d
+    )
     assert not partial.converged
     junk = spark.createDataFrame(
         pd.DataFrame([(0, 0.99), (1, 0.01)], columns=["id", "rank"]),
         "id long, rank double",
     )
-    resumed = pagerank(spark, edges, tol=1e-8, run_dir=d, init_ranks=junk)
+    resumed = pagerank(
+        spark, edges, tol=1e-8, strategy=strategy, run_dir=d, init_ranks=junk
+    )
     assert resumed.converged
     _assert_close(_ranks(full), _ranks(resumed), atol=1e-12)
+
+
+def test_warm_start_ignored_on_manifest_resume(spark, tmp_path):
+    _warm_start_ignored_on_manifest_resume(spark, tmp_path, "auto")
+
+
+def test_warm_start_ignored_on_manifest_resume_distributed(spark, tmp_path):
+    _warm_start_ignored_on_manifest_resume(spark, tmp_path, "broadcast")

@@ -1,5 +1,8 @@
 """PageRank vs nx.pagerank(alpha=0.85) — allclose atol 1e-6 (BASELINE.md)."""
 
+import json
+import os
+
 import numpy as np
 import pytest
 
@@ -168,11 +171,7 @@ def test_pagerank_local_path_equals_distributed(spark):
         assert max(abs(l[k] - d[k]) for k in l) < 1e-12
 
 
-def test_pagerank_auto_selects_local_and_run_dir_forces_distributed(
-    spark, tmp_path
-):
-    from cryptowalletcommunitydetection_spark.graph import pagerank as prmod
-
+def test_pagerank_auto_selects_local_with_and_without_run_dir(spark, tmp_path):
     pairs = datagen.two_cliques_bridge(5)
     edges = datagen.edges_df(spark, pairs)
     auto = pagerank(spark, edges, tol=1e-9, weighted=False)
@@ -181,12 +180,17 @@ def test_pagerank_auto_selects_local_and_run_dir_forces_distributed(
     f = {r["id"]: r["rank"] for r in forced.ranks.collect()}
     # identical bits: auto below the size gate IS the local kernel
     assert a == f
-    # checkpointed runs never take the local path (per-superstep lineage
-    # is part of the contract); strategy="local" + run_dir is an error
-    res = pagerank(
-        spark, edges, tol=1e-9, weighted=False, run_dir=str(tmp_path / "pr")
-    )
-    assert res.metrics, "run_dir path must record superstep metrics"
-    _compare(res.ranks.collect(), {k: a[k] for k in a}, atol=1e-9)
-    with pytest.raises(ValueError):
-        pagerank(spark, edges, strategy="local", run_dir=str(tmp_path / "x"))
+    assert [m["k"] for m in auto.metrics] == list(range(auto.supersteps))
+    # a checkpointed run below the gate runs the same kernel, with or
+    # without the strategy forced, and records every superstep
+    for strategy in ("auto", "local"):
+        d = str(tmp_path / strategy)
+        res = pagerank(
+            spark, edges, tol=1e-9, weighted=False, strategy=strategy, run_dir=d
+        )
+        assert {r["id"]: r["rank"] for r in res.ranks.collect()} == a
+        assert res.supersteps == auto.supersteps
+        with open(os.path.join(d, "manifest.json")) as fh:
+            steps = json.load(fh)["supersteps"]
+        assert [s["k"] for s in steps] == list(range(res.supersteps))
+        assert all(s["partitions"] for s in steps), "lineage per superstep"

@@ -126,22 +126,45 @@ def test_ppr_no_mass_raises(spark):
         )
 
 
-def test_ppr_resume_keyed_on_seeds(spark, tmp_path):
+def _resume_keyed_on_seeds(spark, tmp_path, strategy):
     # same graph, different seeds, same run_dir: the manifest identity
     # includes the teleport vector, so run B must NOT resume run A
     pairs = datagen.two_cliques_bridge(5)
     edges = datagen.edges_df(spark, pairs)
     d = str(tmp_path / "ppr_run")
     a = pagerank(
-        spark, edges, tol=1e-9, run_dir=d,
+        spark, edges, tol=1e-9, run_dir=d, strategy=strategy,
         personalization=_seeds_df(spark, {0: 1.0}),
     )
-    # a manifest-backed result reads its run_dir checkpoints lazily —
+    # a manifest-backed result may read its run_dir checkpoints lazily —
     # materialize BEFORE run B resets the directory for the new identity
     a_rows = a.ranks.collect()
     b = pagerank(
-        spark, edges, tol=1e-9, run_dir=d,
+        spark, edges, tol=1e-9, run_dir=d, strategy=strategy,
         personalization=_seeds_df(spark, {9: 1.0}),
     )
     _compare(a_rows, nx_pagerank(pairs, personalization={0: 1.0}))
     _compare(b.ranks.collect(), nx_pagerank(pairs, personalization={9: 1.0}))
+
+
+def test_ppr_resume_keyed_on_seeds(spark, tmp_path):
+    _resume_keyed_on_seeds(spark, tmp_path, "auto")
+
+
+def test_ppr_resume_keyed_on_seeds_distributed(spark, tmp_path):
+    _resume_keyed_on_seeds(spark, tmp_path, "broadcast")
+
+
+@pytest.mark.parametrize("strategy", ["auto", "broadcast"])
+def test_ppr_no_mass_releases_caches(spark, strategy):
+    """The zero-teleport-mass error leaves no persisted RDD behind, on
+    the local kernel and on the (string-key encoded) distributed loop."""
+    edges = spark.createDataFrame(
+        [(f"w{a}", f"w{b}") for a, b in datagen.ring(6)], "src string, dst string"
+    )
+    seeds = spark.createDataFrame([("nope", 1.0)], "id string, weight double")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(ValueError, match="no positive weight"):
+        pagerank(spark, edges, strategy=strategy, personalization=seeds)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()

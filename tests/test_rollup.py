@@ -1,7 +1,7 @@
 """Bipartite group rollup vs get_group_full semantics (SURVEY.md §5 item 3).
 
-Golden check on both a planted synthetic fixture and the reference's own
-community-assignment CSV (data/social_wallets_pairs.csv, 615 pairs).
+Golden check on a planted synthetic fixture and on the three seeded
+stand-ins for the reference's community-assignment CSVs (conftest.py).
 """
 
 from cryptowalletcommunitydetection_spark import datagen
