@@ -16,7 +16,9 @@ trixt63/CryptoWalletCommunityDetection (reference, read-only at
 - checkpointed, resumable supersteps with per-partition lineage metrics.
 
 No per-row Python on any hot path: built-in pyspark.sql.functions
-everywhere, Arrow `mapInPandas` only in the entity-extraction stage.
+everywhere; Python runs only as vectorized Arrow tasks — `mapInPandas`
+in the entity-extraction stage and the single-task numpy kernels the
+graph operators use below their size gates.
 """
 
 __version__ = "0.1.0"

@@ -15,6 +15,9 @@ the first small-star, so the shuffled volume shrinks toward |V|;
 convergence test is a distributed symmetric-difference count (driver
 sees a scalar); every round is checkpointed to Parquet (lineage cut +
 resume).
+
+Below ``LOCAL_CC_MAX_EDGES`` (and for a pre-contracted graph under it)
+one numpy task labels the whole vertex universe instead (``_cc_body``).
 """
 
 from __future__ import annotations
@@ -24,7 +27,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import RunManifest
+from ..plans.checkpoint import RunManifest, release_local_checkpoint
+from .local_kernel import KEY, run_kernel
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -39,39 +43,20 @@ def _large_star(edges: DataFrame) -> DataFrame:
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("src"), F.col("m").alias("dst"))
     )
-    # no distinct here: _small_star re-orients and distincts first thing,
-    # so a dedup at this point would just add a shuffle per round
+    # no distinct here: the small-star half re-orients and distincts
+    # first thing, so a dedup at this point would just add a shuffle
     return out
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges (larger, smaller); connect u and all smaller neighbors
-    to the minimum neighbor. Output canonically oriented src > dst.
-
-    No input distinct: min() is duplicate-insensitive, duplicate (v, m)
-    join rows collapse in the output distinct, and the duplication factor
-    is bounded by the input's own multiplicity — one less shuffle per
-    round (measured ~15% off the per-round wall at sf0.1)."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-    )
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    nbrs = (
-        oriented.join(mins, "u")
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-    )
-    selfs = mins.select(F.col("u").alias("src"), F.col("m").alias("dst"))
-    return (
-        nbrs.unionByName(selfs)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
 
 
 def _round_step(prev: DataFrame):
     """One large-star + small-star round with intra-round pinning.
 
-    ``_small_star`` consumes its input three times (the nbrs join's probe
+    Small-star orients edges (larger, smaller) and connects u and all
+    its smaller neighbors to the minimum neighbor, output oriented
+    src > dst. No input distinct: min() is duplicate-insensitive and
+    duplicate (v, m) rows collapse in the output distinct.
+
+    Small-star consumes its input three times (the nbrs join's probe
     side, and the mins agg feeding both that join's build side and the
     selfs branch). Compiled naively, each branch re-instantiates the whole
     large-star subtree — the pushed-down ``v > u`` filter makes the sym
@@ -81,13 +66,13 @@ def _round_step(prev: DataFrame):
     localCheckpoints makes every consumer share ONE materialization,
     computed by the same action that materializes the round.
 
-    Returns ``(stepped, pins)``; the caller unpersists ``pins`` after the
+    Returns ``(stepped, pins)``; the caller releases ``pins`` after the
     round's materializing action.
     """
     large = _large_star(prev).localCheckpoint(eager=False)
     # large-star output is already oriented src > dst (v > u >= m), so
     # greatest/least are no-ops kept only for shape parity with
-    # _small_star's contract on arbitrary inputs
+    # small-star's contract on arbitrary inputs
     oriented = large.select(
         F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
     )
@@ -197,7 +182,7 @@ def _min_label_contract(
                 .localCheckpoint(eager=True)
             )
             changed = new.filter(F.col("_old") != F.col("l")).count()
-            labels.unpersist()
+            release_local_checkpoint(labels)
             labels = new
             delta = new.filter(F.col("_old") != F.col("l"))
             if changed <= stall:
@@ -238,12 +223,14 @@ def _edge_sketch(df: DataFrame):
 
 LOCAL_CC_MAX_EDGES = 1_000_000
 """Size gate (distinct non-loop edges) below which the star loop is
-replaced by a single-task union-find over the deduped edge set — the
-same physical-strategy principle as a broadcast join: when one side of
-the problem fits one executor comfortably, a local algorithm beats
-5 × O(log n) distributed rounds of pure scheduling latency. The task is
-an Arrow ``mapInPandas`` kernel (no per-row Python boundary crossings;
-O(E α(E)) work, ≲1 s at the gate). Above the gate — or whenever
+replaced by a single-task vectorized hook-and-jump pass over the edge
+set — the same physical-strategy principle as a broadcast join: when
+one side of the problem fits one executor comfortably, a local
+algorithm beats 5 × O(log n) distributed rounds of pure scheduling
+latency. The probe is the non-loop row count of the pinned edge
+universe (the input rows under ``assume_canonical``, so nothing on the
+path shuffles), taken by the aggregate of the fixpoint sketches. Above
+the gate — or whenever
 ``run_dir`` checkpointing is requested — the alternating-star loop runs
 unchanged; ``local=False`` forces it (equality between the two paths is
 exact and tested)."""
@@ -256,65 +243,42 @@ the per-round savings; above it every round shuffles fixed-width longs
 instead of variable-length keys. See ``connected_components(encode=...)``."""
 
 
-def _local_star_edges(universe: DataFrame) -> DataFrame:
-    """Single-task union-find over the (small) distinct edge set.
+_CC_FIELDS = {"id": KEY, "component": KEY}
 
-    Input: the pinned edge universe (self-loops tolerated). Output: star
-    edges (member, root) with root = min member of the component and
-    member != root — the same shape the distributed loop converges to,
-    so label derivation/decoding is shared. ``coalesce(1)`` is a narrow
-    merge of the checkpoint partitions (no shuffle); the kernel streams
-    Arrow batches into a path-compressed union-find, so the per-row
-    Python cost is dict operations, not serialization.
 
-    Min-key parity with Spark: for strings, UTF-8 byte order equals
-    codepoint order, so Python ``min`` agrees with Spark's ordering.
-    """
-    schema = universe.select("src", "dst").schema
+def _cc_body():
+    """The local path's components, as a ``run_kernel`` body: labels
+    start as the vertex codes; each round hooks every root onto the
+    smallest root among its tree's neighbours and pointer-jumps every
+    label to its root, until no label moves. Labels only decrease, so
+    the fixpoint is each component's minimum code — in key order, the
+    star loop's min-member root. Every tree merges with a neighbour
+    tree each round: O(log n) vectorized rounds, no per-row Python.
+    Self-loop-only vertices and ``vertices`` markers are labelled too."""
 
-    def uf(batches):
-        import pandas as pd
+    def body(g):
+        import numpy as np
 
-        parent: dict = {}
+        u, v = g.src, g.dst
+        lab = np.arange(g.n, dtype=np.int64)
+        rounds = 0
+        while True:
+            m = np.minimum(lab[u], lab[v])
+            new = lab.copy()
+            np.minimum.at(new, lab[u], m)
+            np.minimum.at(new, lab[v], m)
+            while True:
+                nxt = new[new]
+                if np.array_equal(nxt, new):
+                    break
+                new = nxt
+            rounds += 1
+            if np.array_equal(new, lab):
+                break
+            lab = new
+        return {"id": np.arange(g.n), "component": lab}, {"rounds": rounds}
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        size: dict = {}
-        for pdf in batches:
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra == rb:
-                    continue
-                sa, sb = size.get(ra, 1), size.get(rb, 1)
-                if sa < sb:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-                size[ra] = sa + sb
-        comp_min: dict = {}
-        roots = {v: find(v) for v in parent}
-        for v, r in roots.items():
-            m = comp_min.get(r)
-            if m is None or v < m:
-                comp_min[r] = v
-        srcs, dsts = [], []
-        for v, r in roots.items():
-            m = comp_min[r]
-            if v != m:
-                srcs.append(v)
-                dsts.append(m)
-        yield pd.DataFrame({"src": srcs, "dst": dsts})
-
-    return universe.select("src", "dst").coalesce(1).mapInPandas(uf, schema)
+    return body
 
 
 def _encode_keys(raw: DataFrame, vertices: DataFrame | None):
@@ -422,7 +386,7 @@ def connected_components(
 
     ``local`` picks the physical strategy below ``LOCAL_CC_MAX_EDGES``
     distinct edges: ``None`` (default) auto-selects the single-task
-    union-find fast path when ``run_dir`` is not requested; ``False``
+    numpy fast path when ``run_dir`` is not requested; ``False``
     forces the distributed star loop; ``True`` forces the local kernel
     regardless of size (expert). Both produce bitwise-identical labels.
     """
@@ -487,14 +451,14 @@ def connected_components(
         if run_dir is None and (
             local is True or (local is None and n_edges <= LOCAL_CC_MAX_EDGES)
         ):
-            # small-graph fast path: one union-find task instead of
+            # small-graph fast path: one numpy task instead of
             # ~5 distributed rounds (measured crossover in BENCH/; the
             # distributed loop still covers run_dir checkpointing and
             # everything above the gate)
-            out = _finish_labels(
-                spark, _local_star_edges(universe), universe, vertices,
-                None, universe,
-            )
+            try:
+                out = run_kernel(universe, _cc_body(), _CC_FIELDS, vertices=vertices).rows
+            finally:
+                release_local_checkpoint(universe)
             out._cwcd_n_edges = n_edges
             return out
         if encode is None:
@@ -535,7 +499,7 @@ def connected_components(
         last = manifest.last_complete()
         if last >= 0:
             if pinned_seed is not None:
-                pinned_seed.unpersist()
+                release_local_checkpoint(pinned_seed)
                 pinned_seed = None
             loaded = manifest.load_state(spark, last)
             start_k = last + 1
@@ -573,20 +537,26 @@ def connected_components(
         )
     ):
         anchors, contracted = _min_label_contract(prev)
-        # the contracted graph usually fits the local union-find gate
+        # the contracted graph usually fits the local kernel gate
         # (3.5k anchors / 263k contracted edges from 11M on the ER
         # bench): one task closes it instead of ~5 distributed star
         # rounds — the same adaptive principle as the top-level
         # LOCAL_CC_MAX_EDGES gate, composed through the anchors
         if contracted.count() <= LOCAL_CC_MAX_EDGES:
+            kernel = None
             try:
+                kernel = run_kernel(contracted, _cc_body(), _CC_FIELDS)
+                stars = kernel.rows.where(F.col("id") != F.col("component")).select(
+                    F.col("id").alias("src"), F.col("component").alias("dst")
+                )
                 out = _finish_labels(
-                    spark, _local_star_edges(contracted), edge_universe,
-                    vertices, vdict, universe, anchors,
+                    spark, stars, edge_universe, vertices, vdict, universe, anchors,
                 )
             finally:
-                contracted.unpersist()
-                anchors.unpersist()
+                if kernel is not None:
+                    release_local_checkpoint(kernel.pinned)
+                release_local_checkpoint(contracted)
+                release_local_checkpoint(anchors)
             out._cwcd_n_edges = n_edges
             return out
         prev = contracted
@@ -613,7 +583,7 @@ def connected_components(
     finally:
         if anchors is not None:
             # out is eagerly pinned on this path (universe not None)
-            anchors.unpersist()
+            release_local_checkpoint(anchors)
         if resized:
             spark.conf.set(sp_key, sp_before)
     # private hint for composing operators (e.g. the community rollup):
@@ -640,6 +610,7 @@ def _cc_loop(
     anchors: DataFrame | None = None,
 ) -> DataFrame:
     delta = None
+    seed = prev
     for k in range(start_k, max_iter):
         t0 = time.monotonic()
         stepped, pins = _round_step(prev)
@@ -649,7 +620,7 @@ def _cc_loop(
             stepped = stepped.localCheckpoint(eager=False)
         sketch = _edge_sketch(stepped)  # materializes the checkpoint
         for p in pins:  # superseded the moment stepped is materialized
-            p.unpersist()
+            release_local_checkpoint(p)
         rows = sketch[0]
         if sketch == prev_sketch:
             # probable fixpoint — confirm exactly (equal counts + empty
@@ -673,9 +644,9 @@ def _cc_loop(
         # (nothing of its own to release — the universe stays pinned
         # through the run, it backs the final vertex derivation).
         if prev is pinned_seed and pinned_seed is not None:
-            pinned_seed.unpersist()
+            release_local_checkpoint(pinned_seed)
         elif manifest is None and k > start_k:
-            prev.unpersist()
+            release_local_checkpoint(prev)
         prev = stepped
         if delta == 0:
             break
@@ -694,11 +665,10 @@ def _cc_loop(
     out = _finish_labels(
         spark, prev, edge_universe, vertices, vdict, universe, anchors
     )
-    if universe is not None and manifest is None:
+    if universe is not None and manifest is None and prev is not seed:
         # out is materialized (auto path pins eagerly) — the final
-        # round's localCheckpoint can be released too (no-op when the
-        # loop converged on the seed itself)
-        prev.unpersist()
+        # round's localCheckpoint can be released too
+        release_local_checkpoint(prev)
     return out
 
 
@@ -724,7 +694,7 @@ def _finish_labels(
         if vdict is None:
             # the encoded path already pinned inside _decode_labels
             out = out.localCheckpoint(eager=True)
-        universe.unpersist()
+        release_local_checkpoint(universe)
     return out
 
 

@@ -9,9 +9,12 @@ table from which edges are derived by co-occurrence of extracted
 entities within a (repo, commit) group.
 
 Design notes for 100 TB scale:
-- the extraction stage is the ONLY Python-executing operator in the
-  engine (Arrow ``mapInPandas``, vectorized pandas ``str.findall``);
-  everything downstream is built-in JVM expressions,
+- the extraction stage is the only Python-executing operator of the
+  derivation (Arrow ``mapInPandas``, vectorized pandas ``str.findall``);
+  the rest of it is built-in JVM expressions. Downstream, Python runs
+  only in the graph operators' single-task Arrow kernels below their
+  size gates (``graph/local_kernel.py`` and the hits / k-core / truss /
+  walk kernels), never per row,
 - co-occurrence is a self-equi-join on (repo, commit) — quadratic in
   entities-per-group, so groups above ``max_entities_per_group`` are
   dropped (the standard stop-entity cut: a "god" entity appearing in a

@@ -30,8 +30,8 @@ Physical design, same shapes as graph/pagerank.py's copartition loop:
   checkpoints released) — the same unbounded-lineage discipline as
   every iterative operator here.
 - Below ``LOCAL_HITS_MAX_EDGES`` a single-task vectorized numpy kernel
-  (same ``coalesce(1).mapInPandas`` mechanism as
-  graph/pagerank.py::_local_pagerank) runs the identical update rule;
+  (a ``coalesce(1).mapInPandas`` task, the shape of PageRank's local
+  path) runs the identical update rule;
   the gate value is inherited from the measured PageRank crossover
   (LOCAL_PR_MAX_EDGES — the join/agg shapes per superstep match;
   not independently re-measured).

@@ -11,6 +11,8 @@ in tests/oracles.py, since NetworkX's asyn LPA is randomized):
 - stop when no label changes, or after ``max_iter`` supersteps
   (synchronous LPA can 2-cycle on bipartite structures — the cap plus
   checkpointed per-step metrics make that observable and resumable).
+
+Below ``LOCAL_LPA_MAX_EDGES`` the supersteps run as one numpy task.
 """
 
 from __future__ import annotations
@@ -22,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest
+from ..plans.checkpoint import RunManifest, release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize, vertices_of
+from .local_kernel import KEY, run_kernel
 
 
 @dataclass
@@ -35,15 +38,18 @@ class LPAResult:
 
 
 LOCAL_LPA_MAX_EDGES = 4_000_000
-"""Size gate (deduped directed vote rows) below which the superstep
-loop runs as a single vectorized numpy task — the same physical-strategy
-principle as the CC union-find and PageRank power-iteration fast paths:
-below the gate, distributed supersteps are pure job-scheduling latency.
-Vote sums are float64 in both paths; with integral weights (including
-the unweighted lit(1) case) sums are exact below 2^53 regardless of
-order, so the min-(−score, label) tie-break is bit-identical to the
-distributed hash-agg argmax. ``run_dir`` checkpointing always uses the
-distributed loop.
+"""Size gate (directed vote rows) below which the superstep loop runs
+as a single vectorized numpy task — the same physical-strategy
+principle as the CC and PageRank fast paths: below the gate,
+distributed supersteps are pure job-scheduling latency. The probe is
+one count over the input rows: undirected input is canonical, so it
+counts 2× its rows, exactly the deduped vote rows; directed input
+counts its non-loop rows, an upper bound on the deduped vote rows (the
+kernel dedups). Vote sums are float64 in both paths; with integral
+weights (including the unweighted unit vote) sums are exact below 2^53
+regardless of order, so the min-(−score, label) tie-break is
+bit-identical to the distributed hash-agg argmax. ``run_dir``
+checkpointing always uses the distributed loop.
 
 The 4M value is measured, not guessed (``bench_scripts/lpa_crossover.py``,
 local[32], fresh JVM per level, min-of-2, identical label sketches): at
@@ -52,64 +58,40 @@ the loop wins 25.6 vs 40.4 s and at 16M it wins 35.5 vs 93.3 s. Full
 table in ``BENCH/BASELINE.md``."""
 
 
-def _local_lpa(e: DataFrame, max_iter: int) -> LPAResult:
-    """Single-task synchronous LPA over the (small) deduped vote table.
+def _lpa_body(max_iter: int, directed: bool):
+    """The local path's synchronous LPA, as a ``run_kernel`` body.
 
-    Input: ``e(src, dst, weight)`` — directed vote rows, already
-    symmetrized/deduplicated by the caller exactly as for the
-    distributed loop. Vertex index via pd.factorize + argsort of the
-    uniques (sorted index order == Spark's key order for ASCII keys), so
-    "smallest label" ties resolve to the same winner. Per superstep:
-    one (dst, label) key compaction + bincount + lexsorted group-head
-    pick — the vectorized twin of the two hash aggs in the distributed
-    superstep."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, StructField, StructType,
-    )
+    The body builds the vote table itself: undirected canonical rows
+    vote both ways; directed rows are deduplicated per (src, dst),
+    weights summed, or one unit vote when unweighted. Codes are in key
+    order, so "smallest label" ties resolve to the distributed loop's
+    winner. Per superstep: one (dst, label) key compaction + bincount
+    + lexsorted group-head pick — the vectorized twin of the two hash
+    aggs in the distributed superstep. The meta record carries the step
+    count, the convergence flag and one record per superstep (``k``,
+    ``wall_ms``, ``delta`` = changed labels)."""
 
-    id_type = e.schema["src"].dataType
-    out_schema = StructType([
-        StructField("id", id_type),
-        StructField("label", id_type),
-        StructField("_k", IntegerType()),
-        StructField("_conv", BooleanType()),
-    ])
+    def body(g):
+        import time
 
-    def lpa_iter(batches):
         import numpy as np
 
-        srcs, dsts, ws = [], [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-            ws.append(pdf["weight"].to_numpy(dtype=np.float64))
-        if not srcs or sum(len(a) for a in srcs) == 0:
-            yield pd.DataFrame(
-                {"id": [], "label": [], "_k": [], "_conv": []}
-            ).astype({"_k": "int32", "_conv": "bool"})
-            return
-        all_keys = np.concatenate(srcs + dsts)
-        if all_keys.dtype == object:
-            codes, uniques = pd.factorize(all_keys)
-            order_u = np.argsort(uniques)
-            pos = np.empty(len(order_u), dtype=np.int64)
-            pos[order_u] = np.arange(len(order_u))
-            inv = pos[codes]
-            ids = uniques[order_u]
+        nn = g.n
+        src, dst, w = g.src, g.dst, g.weight
+        if directed:
+            key, inv = np.unique(src * nn + dst, return_inverse=True)
+            w = np.bincount(inv, weights=w) if w is not None else np.ones(len(key))
+            src, dst = key // nn, key % nn
         else:
-            ids, inv = np.unique(all_keys, return_inverse=True)
-        nn = len(ids)
-        n_e = sum(len(a) for a in srcs)
-        src_i, dst_i = inv[:n_e], inv[n_e:]
-        w = np.concatenate(ws)
+            src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+            w = np.concatenate([w, w]) if w is not None else np.ones(len(src))
 
         lab = np.arange(nn, dtype=np.int64)  # label_0(v) = v
-        steps, converged = 0, False
+        steps, converged, records = 0, False, []
         for k in range(max_iter):
+            t0 = time.monotonic()
             # (dst, neighbor-label) vote sums
-            key = dst_i * nn + lab[src_i]
-            uk, ki = np.unique(key, return_inverse=True)
+            uk, ki = np.unique(dst * nn + lab[src], return_inverse=True)
             s = np.bincount(ki, weights=w)
             kd = uk // nn
             kl = uk % nn
@@ -124,28 +106,16 @@ def _local_lpa(e: DataFrame, max_iter: int) -> LPAResult:
             changed = int((new != lab).sum())
             lab = new
             steps = k + 1
+            records.append({"k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed})
             if changed == 0:
                 converged = True
                 break
-        yield pd.DataFrame({
-            "id": ids,
-            "label": ids[lab],
-            "_k": np.int32(steps),
-            "_conv": converged,
-        })
+        return (
+            {"id": np.arange(nn), "label": lab},
+            {"k": steps, "conv": converged, "steps": records},
+        )
 
-    out = e.select("src", "dst", "weight").coalesce(1).mapInPandas(
-        lpa_iter, out_schema
-    )
-    out = out.localCheckpoint(eager=True)
-    meta = out.select(
-        F.max("_k").alias("k"), F.min("_conv").alias("c")
-    ).collect()[0]
-    return LPAResult(
-        out.select("id", "label"),
-        int(meta["k"] or 0),
-        bool(meta["c"]) if meta["c"] is not None else True,
-    )
+    return body
 
 
 def label_propagation(
@@ -168,59 +138,61 @@ def label_propagation(
     under it would cast double votes.
 
     ``local`` picks the physical strategy below ``LOCAL_LPA_MAX_EDGES``
-    deduped vote rows: ``None`` (default) auto-selects the single-task
+    vote rows: ``None`` (default) auto-selects the single-task
     vectorized kernel when ``run_dir`` is not requested; ``False``
     forces the distributed superstep loop; ``True`` forces the local
     kernel regardless of size (expert). Label parity between the two
     paths is exact for integral weights (see LOCAL_LPA_MAX_EDGES) and
     tested."""
     has_w = weighted and "weight" in edges.columns
+    cols = ["src", "dst"] + (["weight"] if has_w else [])
     if directed:
         # same hygiene as the undirected path: self-loops never vote for
         # their own label, duplicate rows collapse (weights summed when
         # weighted, a single unit vote otherwise)
-        e = edges.filter(F.col("src") != F.col("dst"))
-        if has_w:
-            e = e.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
-        else:
-            e = e.select("src", "dst").distinct().select(
-                "src", "dst", F.lit(1).alias("weight")
-            )
+        base = edges.filter(F.col("src") != F.col("dst")).select(*cols)
+    elif assume_canonical:
+        base = edges.select(*cols)
     else:
-        if assume_canonical:
-            canon = edges.select(
-                "src", "dst", *([F.col("weight")] if has_w else [])
+        # nx.Graph semantics: duplicate rows / orientations collapse
+        base = canonicalize_edges(edges, weight="weight" if has_w else None).select(*cols)
+
+    # local fast path: size-probe the input rows (see LOCAL_LPA_MAX_EDGES);
+    # the cache feeds the kernel, or the vote table of the distributed loop
+    probe_cache = None
+    try:
+        if run_dir is None and local is None:
+            probe_cache = base = base.persist(StorageLevel.MEMORY_AND_DISK)
+            local = base.count() * (1 if directed else 2) <= LOCAL_LPA_MAX_EDGES
+        if run_dir is None and local:
+            out = run_kernel(
+                base, _lpa_body(max_iter, directed), {"id": KEY, "label": KEY},
+                weight=has_w,
             )
+            return LPAResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
+
+        w = F.col("weight") if has_w else F.lit(1)
+        if directed:
+            if has_w:
+                e = base.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
+            else:
+                e = base.distinct().select("src", "dst", w.alias("weight"))
         else:
-            # nx.Graph semantics: duplicate rows / orientations collapse
-            canon = canonicalize_edges(edges, weight="weight" if has_w else None)
-        if not has_w:
-            canon = canon.select("src", "dst", F.lit(1).alias("weight"))
-        e = symmetrize(canon, weight=True)
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # local fast path: size-probe the deduped vote table (the count also
-    # materializes the persist the distributed loop needs anyway)
-    if run_dir is None and local is not False:
-        m = e.count()
-        if local is True or m <= LOCAL_LPA_MAX_EDGES:
-            res = _local_lpa(e, max_iter)
-            e.unpersist()
-            return res
-
-    # distributed loop ahead: re-lay the cached vote table out
-    # partitioned AND sorted on the per-round join key — an un-laid-out
-    # cache makes every round's sort-merge join re-exchange and re-sort
-    # all 2|E| vote rows (the graph/hits.py layout measurement; for LPA
-    # at 11M canonical edges see BENCH/BASELINE.md). One extra exchange
-    # +sort, bought once; the local kernel path above never pays it.
-    e_sorted = (
-        e.repartition("src").sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_sorted.count()
-    e.unpersist()
-    e = e_sorted
+            e = symmetrize(base.select("src", "dst", w.alias("weight")), weight=True)
+        # distributed loop ahead: lay the vote table out partitioned AND
+        # sorted on the per-round join key — an un-laid-out cache makes
+        # every round's sort-merge join re-exchange and re-sort all 2|E|
+        # vote rows (the graph/hits.py layout measurement; for LPA at 11M
+        # canonical edges see BENCH/BASELINE.md). One exchange + sort,
+        # bought once; the local kernel path above never pays it.
+        e = (
+            e.repartition("src").sortWithinPartitions("src")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        e.count()
+    finally:
+        if probe_cache is not None:
+            probe_cache.unpersist()
 
     verts = vertices_of(e).persist(StorageLevel.MEMORY_AND_DISK)
     labels = verts.select("id", F.col("id").alias("label"))
@@ -299,7 +271,7 @@ def label_propagation(
                 spark, k, wall_ms=wall_ms, delta=changed, rows=agg_row["_n"]
             )
         if prev_ckpt is not None and manifest is None:
-            prev_ckpt.unpersist()
+            release_local_checkpoint(prev_ckpt)
         prev_ckpt = new_labels
         labels = new_labels.select("id", "label")
         steps = k + 1

@@ -23,24 +23,24 @@ Scale design:
   stays O(1) and the run resumes from the last complete superstep,
 - below ``LOCAL_PR_MAX_EDGES`` the whole iteration runs as one
   vectorized numpy task instead, with or without ``run_dir`` (the task
-  writes the same per-superstep Parquet states).
+  writes the same per-superstep Parquet states) and builds the
+  transition table itself from the input rows.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import shutil
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import RunManifest, release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize, vertices_of
+from .local_kernel import KEY, run_kernel
 
 # Above this vertex count the rank table is no longer broadcast.
 BROADCAST_MAX_VERTICES = 2_000_000
@@ -48,7 +48,7 @@ BROADCAST_MAX_VERTICES = 2_000_000
 LOCAL_PR_MAX_EDGES = 4_000_000
 """Size gate (normalized directed edge rows) below which the superstep
 loop is replaced by a single-task vectorized numpy power iteration —
-the same physical-strategy principle as the CC union-find fast path
+the same physical-strategy principle as the CC local fast path
 (graph/cc.py LOCAL_CC_MAX_EDGES) and a broadcast join: when the whole
 transition table fits one executor comfortably, ~100 supersteps of pure
 job-scheduling latency (~400 ms each in local mode) dwarf the O(E) work
@@ -56,7 +56,9 @@ per iteration (a 1.2M-row scatter/gather is ~5 ms in numpy). Measured
 crossover (BENCH/BASELINE.md, 20-superstep walls, local[32]): local
 wins 1.9x at 2M normalized rows, loses 0.61x at 8M — 4M is the
 bracketed midpoint, and also the memory-safe bound for one executor
-(~200 MB edge index + key table). The gate applies with or without
+(~200 MB edge index + key table). The probe counts the input rows
+(doubled when undirected: canonical rows), fused with the manifest
+identity under ``run_dir``. The gate applies with or without
 ``run_dir`` (the kernel then checkpoints each superstep itself); the
 distributed loop covers everything above the gate, and
 ``strategy="broadcast"/"copartition"/"blocked"`` forces it. Parity
@@ -87,201 +89,78 @@ def _decode_ranks(ranks: DataFrame, vdict: DataFrame | None) -> DataFrame:
     return out
 
 
-def _local_pagerank(
-    vertices: DataFrame | None,
-    norm: DataFrame,
+_NO_TELEPORT = (
+    "personalization carries no positive weight on any vertex of this "
+    "graph — the teleport distribution would be empty"
+)
+
+
+def _pagerank_body(
     alpha: float,
     tol: float,
     max_iter: int,
-    init_ranks: DataFrame | None = None,
-    personalization: DataFrame | None = None,
-    run_dir: str | None = None,
-    start_k: int = 0,
-) -> PageRankResult:
-    """Single-task power iteration over the (small) transition table.
+    directed: bool,
+    start_k: int,
+    step_dirs: list[str] | None,
+    has_init: bool,
+    has_pers: bool,
+):
+    """The local path's power iteration, as a ``run_kernel`` body.
 
-    Input: ``norm(src, dst, p)`` — the same normalized transition table
-    the distributed supersteps scatter. The vertex universe is derived
-    from the edge endpoints inside the kernel (exactly ``vertices_of``'s
-    set); only the optional extra ``vertices`` frame rides along as
-    null-dst marker rows, so isolated vertices are part of the state as
-    in the distributed loop. The kernel is vectorized numpy (one
-    ``np.unique(return_inverse)`` index over a fixed-width-bytes view of
-    string keys — C memcmp, not per-element Python compares — lexsorted
-    edge order for run-to-run determinism, bincount gather); per-row
-    Python never touches edge data. Update rule, dangling-mass
-    handling, L1 convergence test and iteration count are the
-    distributed loop's, term for term:
+    The body builds the transition table itself: it symmetrizes the
+    canonical rows (undirected), divides each weight by its source's
+    out-weight sum, and orders the rows by (dst, src), so the summation
+    order does not depend on Spark's row order. The update rule,
+    dangling-mass handling, L1 convergence test and iteration count
+    are the distributed loop's, term for term:
 
       rank' = (1-α)/n + α·dmass/n + α·Σ_{u→v} rank(u)·p(u,v)
 
-    ``coalesce(1)`` is a narrow merge (no shuffle) of the transition
-    table's partitions.
+    Value channel 0 (``has_init``) holds prior ranks, the next one
+    (``has_pers``) teleport weights; ids outside the universe are
+    dropped. Priors never expand the universe, missing vertices start
+    at 1/n, and a fresh run (``start_k == 0``) renormalizes the vector
+    to sum 1 (the fixed point is init-independent for α < 1), falling
+    back to the cold start when it cannot. A resumed run takes its
+    stored state verbatim, so it is bit-identical to an uninterrupted
+    one. Teleport weights are summed per id and normalized; no mass on
+    the graph is an error.
 
-    ``init_ranks`` (DataFrame[id, rank], optional) warm-starts the
-    iteration: rows ride the same input stream as dst-null rows whose
-    ``p`` slot carries the prior rank. Init rows never expand the vertex
-    universe (ids unknown to the current graph are dropped inside the
-    kernel), missing vertices start at 1/n, and the assembled vector is
-    renormalized to sum 1 — the fixed point is init-independent for
-    α < 1, so warm vs cold results agree within the tol contract while
-    a warm start near the solution saves most supersteps.
+    With ``step_dirs`` (indexed by superstep) each superstep's state is
+    written to ``step_dirs[k]/part-00000.parquet`` (``id``, ``rank``).
+    The meta record carries the step count, the convergence flag and
+    one record per superstep (``k``, ``wall_ms``, ``delta``, ``rows``,
+    ``dangling_mass_next``)."""
 
-    ``start_k > 0`` resumes a checkpointed run: ``init_ranks`` is then the
-    stored state after superstep ``start_k - 1``, taken verbatim (no
-    filtering, no renormalization), so a resumed run is bit-identical to
-    an uninterrupted one. With ``run_dir`` the task writes each
-    superstep's state to ``RunManifest.step_path(k)/part-00000.parquet``
-    (``id``, ``rank``) with pyarrow; recording it in the manifest is the
-    caller's job, after the task has returned.
+    def body(g):
+        import os
+        import shutil
+        import time
 
-    The task emits one extra row (null ``id`` and ``rank``) whose
-    ``_meta`` JSON carries the step count, the convergence flag and one
-    record per superstep; it is read in the single collect after the
-    kernel and becomes ``PageRankResult.metrics``.
-    """
-    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
-
-    id_type = norm.schema["src"].dataType
-    out_schema = StructType([
-        StructField("id", id_type),
-        StructField("rank", DoubleType()),
-        StructField("_meta", StringType()),
-    ])
-    step_path = RunManifest(run_dir).step_path if run_dir is not None else None
-    marked = norm.select("src", "dst", "p")
-    if personalization is not None:
-        # a 4th marker channel rides only when personalization is used,
-        # so the default plan (and its job-count audit) is untouched:
-        # dst-null + p-null + s-NON-null = teleport-weight row
-        marked = marked.withColumn("s", F.lit(None).cast("double"))
-    if vertices is not None:
-        verts_marked = vertices.select(
-            F.col("id").cast(id_type).alias("src"),
-            F.lit(None).cast(id_type).alias("dst"),
-            F.lit(None).cast("double").alias("p"),
-        )
-        if personalization is not None:
-            verts_marked = verts_marked.withColumn(
-                "s", F.lit(None).cast("double")
-            )
-        marked = marked.unionByName(verts_marked)
-    if personalization is not None:
-        w0 = F.col("weight").cast("double")
-        marked = marked.unionByName(
-            personalization.filter(
-                w0.isNotNull() & ~F.isnan(w0) & (w0 > 0)
-            ).select(
-                F.col("id").cast(id_type).alias("src"),
-                F.lit(None).cast(id_type).alias("dst"),
-                F.lit(None).cast("double").alias("p"),
-                w0.alias("s"),
-            )
-        )
-    if init_ranks is not None:
-        # dst-null + p-NON-null = init row (p-null dst-null rows are the
-        # universe markers above); null priors are dropped here so they
-        # can never masquerade as markers, and so are non-finite /
-        # non-positive warm-start priors (a resumed state is kept whole)
-        r0 = F.col("rank").cast("double")
-        keep = r0.isNotNull()
-        if start_k == 0:
-            keep = keep & ~F.isnan(r0) & (r0 > 0)
-        init_marked = init_ranks.filter(keep).select(
-            F.col("id").cast(id_type).alias("src"),
-            F.lit(None).cast(id_type).alias("dst"),
-            r0.alias("p"),
-        )
-        if personalization is not None:
-            init_marked = init_marked.withColumn(
-                "s", F.lit(None).cast("double")
-            )
-        marked = marked.unionByName(init_marked)
-
-    def power_iter(batches):
         import numpy as np
-        import pandas as pd
 
-        srcs, dsts, ps, vids = [], [], [], []
-        init_keys, init_vals = [], []
-        pers_keys, pers_vals = [], []
-        pers_requested = False
-        for pdf in batches:
-            if "s" in pdf.columns:
-                pers_requested = True
-            isv = pdf["dst"].isna()
-            if isv.any():
-                vrows = pdf.loc[isv]
-                has_r = vrows["p"].notna()
-                if has_r.any():
-                    init_keys.append(vrows.loc[has_r, "src"].to_numpy())
-                    init_vals.append(
-                        vrows.loc[has_r, "p"].to_numpy(dtype=np.float64)
-                    )
-                    vrows = vrows.loc[~has_r]
-                if "s" in vrows.columns:
-                    has_s = vrows["s"].notna()
-                    if has_s.any():
-                        pers_keys.append(vrows.loc[has_s, "src"].to_numpy())
-                        pers_vals.append(
-                            vrows.loc[has_s, "s"].to_numpy(dtype=np.float64)
-                        )
-                        vrows = vrows.loc[~has_s]
-                if len(vrows):
-                    vids.append(vrows["src"].to_numpy())
-                e = pdf.loc[~isv]
-            else:
-                e = pdf
-            srcs.append(e["src"].to_numpy())
-            dsts.append(e["dst"].to_numpy())
-            ps.append(e["p"].to_numpy(dtype=np.float64))
-        all_keys = np.concatenate(vids + srcs + dsts)
-
-        def summary(k, conv, n, steps=()):
-            return pd.DataFrame({"id": [None], "rank": [None], "_meta": [
-                json.dumps({"k": k, "conv": conv, "n": n, "steps": list(steps)})
-            ]})
-
-        if all_keys.size == 0:
-            yield summary(start_k, True, 0)
-            return
-        # index in one pass. String keys go through pd.factorize (C hash
-        # over all E rows) + an argsort of the V uniques only — measured
-        # 5x over np.unique on a bytes view, 10x+ over object-dtype
-        # unique, and the resulting (sorted-id) mapping is identical, so
-        # the deterministic summation order is preserved.
-        if all_keys.dtype == object:
-            codes, uniques = pd.factorize(all_keys)
-            order_u = np.argsort(uniques)
-            pos = np.empty(len(order_u), dtype=np.int64)
-            pos[order_u] = np.arange(len(order_u))
-            inv = pos[codes]
-            ids = uniques[order_u]
-        else:
-            ids, inv = np.unique(all_keys, return_inverse=True)
-        nn = len(ids)
-        n_v = sum(len(a) for a in vids)
-        n_e = sum(len(a) for a in srcs)
-        src_i = inv[n_v:n_v + n_e]
-        dst_i = inv[n_v + n_e:]
-        p = np.concatenate(ps) if ps else np.array([], dtype=np.float64)
-        # deterministic summation order regardless of upstream Spark row
-        # order: gather in (dst, src) order
-        order = np.lexsort((src_i, dst_i))
-        src_i, dst_i, p = src_i[order], dst_i[order], p[order]
-        has_out = np.zeros(nn, dtype=bool)
-        has_out[src_i] = True
-        dang = ~has_out
+        nn = g.n
+        if nn == 0:
+            meta = {"k": start_k, "conv": True, "steps": []}
+            if has_pers:
+                meta["error"] = _NO_TELEPORT
+            return {"id": [], "rank": []}, meta
+        src, dst = g.src, g.dst
+        w = g.weight if g.weight is not None else np.ones(len(src))
+        if not directed:
+            src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+            w = np.concatenate([w, w])
+        p = w / np.bincount(src, weights=w, minlength=nn)[src]
+        order = np.lexsort((src, dst))
+        src, dst, p = src[order], dst[order], p[order]
+        dang = np.ones(nn, dtype=bool)
+        dang[src] = False
 
         ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
-        if init_keys:
-            ik = np.concatenate(init_keys)
-            iv = np.concatenate(init_vals)
-            # map prior ids onto the CURRENT universe; ids the graph no
-            # longer contains are dropped (get_indexer returns -1)
-            pos = pd.Index(ids).get_indexer(ik)
+        if has_init:
+            pos, val = g.values[0]
             ok = pos >= 0
-            ranks[pos[ok]] = iv[ok]
+            ranks[pos[ok]] = val[ok]
             if start_k == 0:  # a resumed state stays verbatim
                 s = float(ranks.sum())
                 if np.isfinite(s) and s > 0:
@@ -289,43 +168,26 @@ def _local_pagerank(
                 else:  # degenerate prior: fall back to the cold start
                     ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
         svec = None
-        if pers_keys:
-            # teleport vector: weights mapped onto the CURRENT universe
-            # (ids outside the graph are dropped, like init priors),
-            # normalized to sum 1. Emptiness after the drop was already
-            # rejected driver-side; the guard here keeps the kernel total.
-            pk = np.concatenate(pers_keys)
-            pv = np.concatenate(pers_vals)
-            pos = pd.Index(ids).get_indexer(pk)
+        if has_pers:
+            pos, val = g.values[int(has_init)]
             ok = pos >= 0
             svec = np.zeros(nn, dtype=np.float64)
-            np.add.at(svec, pos[ok], pv[ok])
+            np.add.at(svec, pos[ok], val[ok])
             st = float(svec.sum())
-            if st > 0:
-                svec /= st
-            else:
-                svec = None
-        if pers_requested and svec is None:
-            # zero teleport mass (no seed id exists in this universe):
-            # signal with the k = -1 sentinel instead of iterating — the
-            # driver raises the contract ValueError after the (eager)
-            # materialization, so the caller still sees the error at the
-            # call site without a separate pre-kernel existence-probe job
-            yield summary(-1, False, nn)
-            return
-        if step_path is not None:
+            if not st > 0:
+                return {"id": [], "rank": []}, {"error": _NO_TELEPORT}
+            svec /= st
+        if step_dirs is not None:
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            id_arr = pa.array(ids)
         dmass = float(ranks[dang].sum())
         steps, converged, records = start_k, False, []
         for k in range(start_k, max_iter):
             t0 = time.monotonic()
-            contrib = np.bincount(dst_i, weights=ranks[src_i] * p, minlength=nn)
+            contrib = np.bincount(dst, weights=ranks[src] * p, minlength=nn)
             if svec is None:
-                base = (1.0 - alpha) / nn + alpha * dmass / nn
-                new = base + alpha * contrib
+                new = (1.0 - alpha) / nn + alpha * dmass / nn + alpha * contrib
             else:
                 # nx personalization semantics (dangling = teleport):
                 # x' = (1-a)·s + a·(contrib + dmass·s)
@@ -333,12 +195,12 @@ def _local_pagerank(
             delta = float(np.abs(new - ranks).sum())
             ranks = new
             dmass = float(ranks[dang].sum())
-            if step_path is not None:
-                d = step_path(k)
+            if step_dirs is not None:
+                d = step_dirs[k]
                 shutil.rmtree(d, ignore_errors=True)  # stale files of an older run
                 os.makedirs(d)
                 pq.write_table(
-                    pa.table({"id": id_arr, "rank": ranks}),
+                    pa.table({"id": g.ids, "rank": ranks}),
                     os.path.join(d, "part-00000.parquet"),
                 )
             records.append({
@@ -349,26 +211,51 @@ def _local_pagerank(
             if delta < tol:
                 converged = True
                 break
-        yield pd.DataFrame({"id": ids, "rank": ranks, "_meta": None})
-        yield summary(steps, converged, nn, records)
-
-    out = marked.coalesce(1).mapInPandas(power_iter, out_schema)
-    out = out.localCheckpoint(eager=True)
-    meta = json.loads(
-        out.where(F.col("_meta").isNotNull()).select("_meta").collect()[0][0]
-    )
-    if personalization is not None and (meta["k"] < 0 or meta["n"] == 0):
-        # k = -1 sentinel (or an empty universe) under a requested
-        # personalization: the teleport vector has no mass on this graph
-        release_local_checkpoint(out)
-        raise ValueError(
-            "personalization carries no positive weight on any vertex of "
-            "this graph — the teleport distribution would be empty"
+        return (
+            {"id": np.arange(nn), "rank": ranks},
+            {"k": steps, "conv": converged, "steps": records},
         )
-    return PageRankResult(
-        out.where(F.col("_meta").isNull()).select("id", "rank"),
-        meta["k"], meta["conv"], meta["steps"],
+
+    return body
+
+
+def _local_pagerank(
+    base: DataFrame,
+    has_w: bool,
+    directed: bool,
+    vertices: DataFrame | None,
+    alpha: float,
+    tol: float,
+    max_iter: int,
+    init_ranks: DataFrame | None = None,
+    personalization: DataFrame | None = None,
+    step_dirs: list[str] | None = None,
+    start_k: int = 0,
+) -> PageRankResult:
+    """Single-task power iteration (see ``_pagerank_body``) over the
+    input rows ``base(src, dst[, weight])`` — canonical rows when
+    undirected — with ``vertices`` ids in the universe. Null priors of
+    ``init_ranks`` are dropped here, and so are non-finite / non-positive
+    ones unless the run resumes; ``personalization`` holds the
+    caller-cleaned teleport weights."""
+    values = []
+    if init_ranks is not None:
+        r0 = F.col("rank").cast("double")
+        keep = r0.isNotNull()
+        if start_k == 0:
+            keep = keep & ~F.isnan(r0) & (r0 > 0)
+        values.append(init_ranks.filter(keep).select("id", r0.alias("value")))
+    if personalization is not None:
+        values.append(personalization.select("id", F.col("weight").alias("value")))
+    body = _pagerank_body(
+        alpha, tol, max_iter, directed, start_k, step_dirs,
+        init_ranks is not None, personalization is not None,
     )
+    out = run_kernel(
+        base, body, {"id": KEY, "rank": DoubleType()}, weight=has_w,
+        vertices=vertices, values=tuple(values),
+    )
+    return PageRankResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
 
 
 def _identity(df: DataFrame, *cols: str) -> list[int]:
@@ -402,8 +289,10 @@ def _checkpointed_local(
     spark: SparkSession,
     run_dir: str,
     params: dict,
+    base: DataFrame,
+    has_w: bool,
+    directed: bool,
     vertices: DataFrame | None,
-    norm: DataFrame,
     alpha: float,
     tol: float,
     max_iter: int,
@@ -422,9 +311,9 @@ def _checkpointed_local(
             last + 1, True, manifest.metrics(),
         )
     res = _local_pagerank(
-        vertices, norm, alpha, tol, max_iter,
+        base, has_w, directed, vertices, alpha, tol, max_iter,
         manifest.load_state(spark, last) if last >= 0 else init_ranks,
-        personalization, run_dir, last + 1,
+        personalization, [manifest.step_path(k) for k in range(max_iter)], last + 1,
     )
     for m in res.metrics:
         manifest.record_superstep(
@@ -559,91 +448,82 @@ def pagerank(
     to the original keys, values identical up to float summation order.
     """
     has_w = weighted and "weight" in edges.columns
-    if directed:
-        e = edges
-        if not has_w:
-            e = e.select("src", "dst", F.lit(1).alias("weight"))
+    cols = ["src", "dst"] + (["weight"] if has_w else [])
+    if directed or assume_canonical:
+        base = edges.select(*cols)
     else:
-        if assume_canonical:
-            canon = edges.select(
-                "src", "dst",
-                *([F.col("weight")] if has_w else []),
-            )
-        else:
-            # nx.Graph semantics: duplicate rows / reversed orientations
-            # collapse to one undirected edge (weights summed if weighted)
-            canon = canonicalize_edges(edges, weight="weight" if has_w else None)
-        if not has_w:
-            canon = canon.select("src", "dst", F.lit(1).alias("weight"))
-        e = symmetrize(canon, weight=True)
-
-    out_w = e.groupBy("src").agg(F.sum("weight").alias("_wsum"))
-    norm = e.join(out_w, "src").select(
-        "src", "dst", (F.col("weight") / F.col("_wsum")).alias("p")
-    )
-    pers_clean = None
+        # nx.Graph semantics: duplicate rows / reversed orientations
+        # collapse to one undirected edge (weights summed if weighted)
+        base = canonicalize_edges(edges, weight="weight" if has_w else None).select(*cols)
+    pers_clean = pers_rows = None
     if personalization is not None:
         w0 = F.col("weight").cast("double")
-        pers_clean = (
-            personalization.filter(w0.isNotNull() & ~F.isnan(w0) & (w0 > 0))
-            # a duplicated seed id must not duplicate teleport rows:
-            # collapse by summing (a seed listed twice carries 2x mass,
-            # dict-merge semantics)
-            .groupBy("id")
-            .agg(F.sum(w0).alias("weight"))
-        )
+        pers_rows = personalization.filter(
+            w0.isNotNull() & ~F.isnan(w0) & (w0 > 0)
+        ).select("id", w0.alias("weight"))
+        # a duplicated seed id must not duplicate teleport rows:
+        # collapse by summing (a seed listed twice carries 2x mass,
+        # dict-merge semantics; the local kernel sums in numpy)
+        pers_clean = pers_rows.groupBy("id").agg(F.sum("weight").alias("weight"))
 
     # Manifest identity of a checkpointed run. max_iter is a stopping
     # condition, not part of the computation's identity — a resume may
     # raise it and continue the same run. The content keys (see
-    # _identity) cover the transition column p — same topology with
-    # changed weights is a DIFFERENT input — the extra `vertices`, and
-    # the teleport input of a seeded run. "ids" (added where the path is
-    # known) names the key space the stored states are written in.
+    # _identity) cover the input rows with their weights — same
+    # topology with changed weights is a DIFFERENT input — the extra
+    # `vertices`, and the teleport input of a seeded run. "ids" (added
+    # where the path is known) names the key space the stored states
+    # are written in.
     params = {"alpha": alpha, "tol": tol, "weighted": has_w, "directed": directed}
     # local fast path (see LOCAL_PR_MAX_EDGES). The size probe caches the
-    # transition table and counts it — for a checkpointed run the same
-    # single aggregate also yields the input identity. A fall-through to
-    # the distributed loop reuses the cache for its one repartition pass
-    # and releases it right after materializing norm_edges, so the probe
-    # never recomputes the normalization and never doubles edge storage
-    # for the rest of the run. The vertex universe is not materialized
-    # at all on the local path — the kernel derives it from the edge
-    # endpoints (+ the optional `vertices` marker rows).
+    # input rows and counts them — for a checkpointed run the same single
+    # aggregate also yields the input identity. Both read only the input
+    # rows, so with assume_canonical nothing on this path shuffles. A
+    # fall-through to the distributed loop builds its transition table
+    # from the cache and releases it right after materializing
+    # norm_edges.
     probe_cache = None
-    if run_dir is not None or strategy in ("auto", "local"):
-        probe_cache = norm.persist(StorageLevel.MEMORY_AND_DISK)
+    local = strategy == "local"
+    if run_dir is not None or strategy == "auto":
+        probe_cache = base = base.persist(StorageLevel.MEMORY_AND_DISK)
         if run_dir is not None:
-            params["input"] = _identity(probe_cache, "src", "dst", "p")
+            params["input"] = _identity(probe_cache, *cols)
             n_rows = params["input"][0]
             if vertices is not None:
                 params["vertices"] = _identity(vertices, "id")
             if pers_clean is not None:
                 params["personalization"] = _identity(pers_clean, "id", "weight")
         else:
-            n_rows = None if strategy == "local" else probe_cache.count()
-        if strategy == "local" or (
-            strategy == "auto" and n_rows <= LOCAL_PR_MAX_EDGES
-        ):
-            # Zero teleport mass (seeded run, no seed id in the graph) is
-            # detected INSIDE the kernel and signalled back through the
-            # k = -1 sentinel; _local_pagerank raises the contract
-            # ValueError at the call site. The kernel's output is
-            # materialized eagerly inside, so the input cache can be
-            # dropped before returning.
-            try:
-                if run_dir is None:
-                    return _local_pagerank(
-                        vertices, probe_cache, alpha, tol, max_iter,
-                        init_ranks, pers_clean,
-                    )
-                return _checkpointed_local(
-                    spark, run_dir, {**params, "ids": "key"}, vertices,
-                    probe_cache, alpha, tol, max_iter, init_ranks, pers_clean,
+            n_rows = probe_cache.count()
+        # undirected input rows are canonical: two transition rows each
+        n_rows *= 1 if directed else 2
+        local = local or (strategy == "auto" and n_rows <= LOCAL_PR_MAX_EDGES)
+    if local:
+        # Zero teleport mass (seeded run, no seed id in the graph) is
+        # detected INSIDE the kernel; run_kernel raises the contract
+        # ValueError at the call site. The kernel's output is pinned
+        # inside, so the input cache can be dropped before returning.
+        try:
+            if run_dir is None:
+                return _local_pagerank(
+                    base, has_w, directed, vertices, alpha, tol, max_iter,
+                    init_ranks, pers_rows,
                 )
-            finally:
+            return _checkpointed_local(
+                spark, run_dir, {**params, "ids": "key"}, base, has_w, directed,
+                vertices, alpha, tol, max_iter, init_ranks, pers_rows,
+            )
+        finally:
+            if probe_cache is not None:
                 probe_cache.unpersist()
-        norm = probe_cache
+
+    e = base.select("src", "dst", (F.col("weight") if has_w else F.lit(1)).alias("weight"))
+    if not directed:
+        e = symmetrize(e, weight=True)
+    out_w = e.groupBy("src").agg(F.sum("weight").alias("_wsum"))
+    norm = e.join(out_w, "src").select(
+        "src", "dst", (F.col("weight") / F.col("_wsum")).alias("p")
+    )
 
     # Int64 re-keying for the distributed loop (same mechanics as
     # graph/cc.py::_encode_keys; default ON for string keys). Every
@@ -719,10 +599,7 @@ def pagerank(
             for cached in (verts, probe_cache, vdict):
                 if cached is not None:
                     cached.unpersist()
-            raise ValueError(
-                "personalization carries no positive weight on any vertex "
-                "of this graph — the teleport distribution would be empty"
-            )
+            raise ValueError(_NO_TELEPORT)
         if n > 0:
             svec = raw_s.select(
                 "id", (F.col("_w") / F.lit(tot)).alias("_s")

@@ -10,14 +10,18 @@ exactly once as wedge a→b→c closed by a→c.
 The degree ordering bounds wedge fan-out by O(m^{1/2}) per vertex —
 the hub-skew mitigation for this operator (a raw hub with degree d would
 otherwise emit d² wedges).
+Below ``LOCAL_TRI_MAX_EDGES`` the same algorithm runs as one numpy task
+that returns every vertex, zero-triangle ones included.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .edges import degrees, vertices_of
+from .local_kernel import KEY, run_kernel
 
 
 def _canonical(edges: DataFrame, assume_canonical: bool) -> DataFrame:
@@ -98,10 +102,7 @@ def triangle_count(
         m = e.count()
     try:
         if local is True or (local is None and m <= LOCAL_TRI_MAX_EDGES):
-            row = _local_triangle_counts(e).agg(
-                (F.coalesce(F.sum("triangles"), F.lit(0)) / 3).alias("t")
-            ).collect()[0]
-            return int(row["t"])
+            return run_kernel(e, _triangle_body(), None).meta["triangles"]
         if not pinned:
             # distributed path consumes e several times (degrees + both
             # orientation joins); lazy persist — the first job fills it
@@ -127,30 +128,29 @@ def triangles_per_vertex(
     (nx.triangles semantics; vertices in no triangle get 0).
 
     ``local``/``edge_count``: same adaptive gate as ``triangle_count``.
-    The canonical table is always persisted here — the vertex-universe
-    left join is a second consumer even on the kernel path (with a
-    derived edge input, scanning the raw ``edges`` twice would re-run
-    the whole derivation; reading the persisted canonical table keeps
-    it one derivation per call) — but with ``edge_count`` supplied the
-    probe COUNT is skipped and the single output action both fills and
-    drains the cache."""
-    e = _canonical(edges, assume_canonical).persist()
+    The kernel path reads the canonical table once and returns every
+    vertex itself, so the table is persisted only when the probe count
+    runs; the distributed path persists it for its several consumers."""
+    e = _canonical(edges, assume_canonical)
     d = None
+    pinned = False
     try:
         m = edge_count
         if m is None and local is None:
-            m = e.count()  # probe (doubles as the cache materialization)
+            e = e.persist()  # the probe fills the cache the kernel reads
+            pinned = True
+            m = e.count()
         if local is True or (local is None and m <= LOCAL_TRI_MAX_EDGES):
-            counts = _local_triangle_counts(e)
-        else:
-            d = _oriented(e).persist()
-            tri = _closed_wedges_of(d)
-            # one reference to the wedge pipeline (a 3-way unionByName
-            # would re-plan/recompute it three times)
-            corners = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
-            counts = corners.groupBy("id").agg(
-                F.count(F.lit(1)).alias("triangles")
-            )
+            return run_kernel(e, _triangle_body(), {"id": KEY, "triangles": LongType()}).rows
+        if not pinned:
+            e = e.persist()
+            pinned = True
+        d = _oriented(e).persist()
+        tri = _closed_wedges_of(d)
+        # one reference to the wedge pipeline (a 3-way unionByName
+        # would re-plan/recompute it three times)
+        corners = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
+        counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
         out = (
             vertices_of(e)
             .join(counts, "id", "left")
@@ -163,7 +163,8 @@ def triangles_per_vertex(
     finally:
         if d is not None:
             d.unpersist()
-        e.unpersist()
+        if pinned:
+            e.unpersist()
 
 
 # Size gate (canonical edge rows) below which a single vectorized task
@@ -174,44 +175,31 @@ def triangles_per_vertex(
 # random graphs at local[32] (best-of-2 warm walls, local vs
 # distributed): 500k edges 2.5s vs 4.3s; 2M 7.6 vs 7.1 (tied); 4M 13.1
 # vs 9.4; 8M 31.6 vs 15.3 — gate at the tie. Same adaptive pattern as
-# graph/pagerank.py LOCAL_PR_MAX_EDGES and graph/cc.py.
+# graph/pagerank.py LOCAL_PR_MAX_EDGES and graph/cc.py. The probe is one
+# count over the canonical rows (skipped when ``edge_count`` is given or
+# ``local`` forces the path); with ``assume_canonical`` those rows are
+# the input as it stands and nothing on the kernel path shuffles.
 LOCAL_TRI_MAX_EDGES = 2_000_000
 
-def _local_triangle_counts(canon: DataFrame) -> DataFrame:
-    """Single-task vectorized triangle counting over the (small)
-    canonical edge set: DataFrame[id, triangles], only vertices with
-    >= 1 triangle (the caller left-joins the vertex universe).
+
+def _triangle_body():
+    """The local path's triangle counting, as a ``run_kernel`` body over
+    the canonical edge codes: every vertex with its count (0 included),
+    and the total in the meta record.
 
     Same algorithm as the distributed path — degree-(id) orientation,
     wedge generation, closure membership — but as numpy array passes:
-    factorize vertex ids, orient by (degree, code), group oriented
-    edges by source via one argsort, emit each source block's
-    out-neighbor pairs (np.triu_indices per block — block sizes are
-    bounded by O(sqrt m) thanks to the orientation), and close wedges
-    with a searchsorted membership test against the encoded edge set.
-    ``coalesce(1)`` narrowly merges the input partitions; the output id
-    keeps the input's vertex type (parity with the distributed output
-    is exact, pinned by tests)."""
-    id_type = canon.schema["src"].dataType.simpleString()
-    ids = canon.select("src", "dst")
+    orient by (degree, code), group oriented edges by source via one
+    argsort, emit each source block's out-neighbor pairs
+    (np.triu_indices per block — block sizes are bounded by O(sqrt m)
+    thanks to the orientation), and close wedges with a searchsorted
+    membership test against the encoded edge set. Parity with the
+    distributed output is exact, pinned by tests."""
 
-    def kernel(batches):
+    def body(g):
         import numpy as np
-        import pandas as pd
 
-        srcs, dsts = [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-        if not srcs:
-            return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        # factorize to dense codes
-        codes, uniques = pd.factorize(np.concatenate([src, dst]))
-        n = len(uniques)
-        u = codes[: len(src)].astype(np.int64)
-        v = codes[len(src):].astype(np.int64)
+        n, u, v = g.n, g.src, g.dst
         deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
         # total order: (degree, code) — lower end becomes the wedge apex
         order_key = deg.astype(np.int64) * (n + 1) + np.arange(n, dtype=np.int64)
@@ -272,12 +260,9 @@ def _local_triangle_counts(canon: DataFrame) -> DataFrame:
                 tri += np.bincount(apex, minlength=n)
                 tri += np.bincount(bcol, minlength=n)
                 tri += np.bincount(ccol, minlength=n)
-        nz = np.nonzero(tri)[0]
-        yield pd.DataFrame(
-            {"id": uniques[nz], "triangles": tri[nz].astype("int64")}
-        )
+        return {"id": np.arange(n), "triangles": tri}, {"triangles": int(tri.sum()) // 3}
 
-    return ids.coalesce(1).mapInPandas(kernel, f"id {id_type}, triangles long")
+    return body
 
 
 def transitivity(

@@ -180,7 +180,7 @@ def _local_truss_kernel(canon: DataFrame, k: int | None) -> DataFrame:
     DataFrame[src, dst, support]. ``k`` set: peel to the k-truss
     fixpoint -> DataFrame[src, dst].
 
-    Same encoding as graph/triangles.py:_local_triangle_counts —
+    Same encoding as graph/triangles.py:_triangle_body —
     factorized codes, (degree, code) orientation, per-degree-class
     wedge enumeration in bounded slabs, searchsorted closure test —
     plus per-edge scatter: a closed wedge's two legs map back to edge

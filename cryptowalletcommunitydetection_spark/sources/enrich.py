@@ -58,12 +58,16 @@ def batched_enrich(
 
     def run(batches):
         import pandas as pd
+        from pyspark import TaskContext
 
+        # the partition id desynchronizes the retry sleeps of concurrent
+        # tasks; a rerun of the same partition sleeps the same amounts
+        part = TaskContext.get().partitionId()
         for pdf in batches:
             for lo in range(0, len(pdf), batch_size):
                 chunk = pdf.iloc[lo:lo + batch_size]
                 out = retry_call(
-                    fn, chunk, tries=tries, max_sleep=max_sleep
+                    fn, chunk, tries=tries, max_sleep=max_sleep, jitter_key=part
                 )
                 if out is not None and len(out):
                     yield pd.DataFrame(out)

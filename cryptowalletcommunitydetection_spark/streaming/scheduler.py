@@ -63,14 +63,23 @@ class SchedulerSpec:
         interval_part, rest = split1(rest, "/")
         delay_part, rest = split1(rest, "$")
         end_part, retry_part = split1(rest, "#")
+        # the reference builds the string with an f-string over Python
+        # values, so booleans arrive as "True"/"False" and a missing
+        # number as "None"
         truthy = {"true": True, "false": False, "": True}
+        run_part, retry_part = run_part.lower(), retry_part.lower()
         if run_part not in truthy or retry_part not in truthy:
             raise ValueError(f"bad boolean field in scheduler string {s!r}")
+
+        def number(text):
+            return None if text.lower() in ("", "none") else int(text)
+
+        delay = number(delay_part)
         return cls(
             run_now=truthy[run_part],
-            interval=int(interval_part) if interval_part else None,
-            delay=int(delay_part) if delay_part else 0,
-            end_timestamp=int(end_part) if end_part else None,
+            interval=number(interval_part),
+            delay=0 if delay is None else delay,
+            end_timestamp=number(end_part),
             retry=truthy[retry_part],
         )
 
@@ -168,15 +177,19 @@ def retry_call(
     tries: int = 3,
     max_sleep: float = 10.0,
     sleeper: Callable[[float], None] = _time.sleep,
+    jitter_key: object = "",
     **kwargs,
 ):
     """T5 — the reference's retry decorator as a call helper: up to
     ``tries`` attempts (RETRIES_LIMIT = 3, utils/retry_handler.py:10),
     re-raising the last error, sleeping a jittered ``[0, max_sleep)``
     between attempts. The jitter is DETERMINISTIC — derived from
-    md5(fn name | attempt) instead of ``random.random()`` — so
-    reruns behave identically (the engine's no-RNG-state convention;
-    the reference's 10·random() sleep is irreproducible)."""
+    md5(fn name | jitter_key | attempt) instead of ``random.random()``
+    — so reruns behave identically (the engine's no-RNG-state
+    convention; the reference's 10·random() sleep is irreproducible).
+    ``jitter_key`` tells concurrent callers of the same ``fn`` apart
+    (``batched_enrich`` passes the partition id): without it they would
+    all sleep the same amount and retry in lockstep."""
     if tries < 1:
         raise ValueError("tries must be >= 1")
     last = None
@@ -187,7 +200,7 @@ def retry_call(
             last = ex
             if attempt == tries - 1:
                 raise
-            key = f"{getattr(fn, '__name__', 'fn')}|{attempt}".encode()
+            key = f"{getattr(fn, '__name__', 'fn')}|{jitter_key}|{attempt}".encode()
             h = int.from_bytes(hashlib.md5(key).digest()[:8], "big")
             sleeper((h % (1 << 53)) / float(1 << 53) * max_sleep)
     raise last  # pragma: no cover — unreachable

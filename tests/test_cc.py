@@ -12,6 +12,8 @@ SHAPES = {
     "two_cliques": datagen.two_cliques_bridge(5),
     "erdos_renyi": datagen.erdos_renyi(40, 0.04, seed=7),
     "disconnected": datagen.ring(5) + [(100, 101), (102, 103), (101, 102)],
+    # 50 has only a self-loop: a singleton component of its own
+    "self_loops": datagen.ring(6) + [(0, 0), (3, 3), (50, 50), (51, 52)],
 }
 
 
@@ -144,20 +146,36 @@ def test_cc_local_equals_distributed(spark, reference_pairs_pdf):
         schema="src string, dst string",
     )
     verts = spark.createDataFrame([("zz_isolated",)], "id string")
-    loc = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            spark, edges, vertices=verts, local=True
-        ).collect()
-    }
-    dist = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            spark, edges, vertices=verts, local=False
-        ).collect()
-    }
-    assert loc == dist
-    assert loc["zz_isolated"] == "zz_isolated"
+    # plus non-ASCII keys (min ids in UTF-8 byte order: U+E000 sorts
+    # before U+1F600 there, after it in UTF-16), int64 keys with
+    # self-loop rows and a self-loop-only vertex, and an empty table
+    uni = [("中", "é"), ("é", "\U0001F600"), ("\U0001F600", "\ue000"), ("ÿ", "Z"),
+           ("Z", "a"), ("ñ", "ñ")]
+    ints = [(a * 1_000_003, b * 1_000_003) for a, b in datagen.ring(5)]
+    ints += [(7, 7), (0, 0), (9, 8)]
+    cases = [
+        (edges, verts, "zz_isolated"),
+        (spark.createDataFrame(uni, "src string, dst string"),
+         spark.createDataFrame([("ñ_isolated",)], "id string"), "ñ_isolated"),
+        (spark.createDataFrame(ints, "src long, dst long"),
+         spark.createDataFrame([(-3,), (7,)], "id long"), -3),
+        (spark.createDataFrame([], "src string, dst string"), None, None),
+    ]
+    for edges, verts, isolated in cases:
+        loc = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                spark, edges, vertices=verts, local=True
+            ).collect()
+        }
+        dist = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                spark, edges, vertices=verts, local=False
+            ).collect()
+        }
+        assert loc == dist
+        assert isolated is None or loc[isolated] == isolated
 
 
 def test_cc_nonconvergence_raises_unless_opted_out(spark):

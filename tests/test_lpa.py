@@ -33,19 +33,33 @@ def test_lpa_local_path_equals_distributed(spark):
 
     pairs = datagen.erdos_renyi(50, 0.1, seed=9) + datagen.two_cliques_bridge(6)
     w = [(f"v{a}", f"v{b}", float((a * b) % 4 + 1)) for a, b in pairs]
-    edges = spark.createDataFrame(w, ["src", "dst", "weight"])
-    for weighted in (False, True):
-        for directed in (False, True):
-            loc = label_propagation(
-                spark, edges, max_iter=6, weighted=weighted,
-                directed=directed, local=True,
-            )
-            dist = label_propagation(
-                spark, edges, max_iter=6, weighted=weighted,
-                directed=directed, local=False,
-            )
-            l = {r["id"]: r["label"] for r in loc.labels.collect()}
-            d = {r["id"]: r["label"] for r in dist.labels.collect()}
-            assert l == d
-            assert loc.supersteps == dist.supersteps
-            assert loc.converged == dist.converged
+    # non-ASCII keys, whose min-label ties resolve in UTF-8 byte order
+    # (U+E000 sorts before U+1F600 there, after it in UTF-16), int64
+    # keys, and an empty edge table
+    names = ["Z", "a", "é", "z", "中", "\ue000", "\U0001F600", "ÿ"]
+    uni = [(names[a % 8] + str(a // 8), names[b % 8] + str(b // 8), float(a % 2 + 1))
+           for a, b in datagen.erdos_renyi(24, 0.15, seed=4)]
+    ints = [(a * 1_000_003, b * 1_000_003, float(a % 3 + 1))
+            for a, b in datagen.erdos_renyi(30, 0.1, seed=5)]
+    cases = [
+        spark.createDataFrame(w, ["src", "dst", "weight"]),
+        spark.createDataFrame(uni, "src string, dst string, weight double"),
+        spark.createDataFrame(ints, "src long, dst long, weight double"),
+        spark.createDataFrame([], "src string, dst string, weight double"),
+    ]
+    for edges in cases:
+        for weighted in (False, True):
+            for directed in (False, True):
+                loc = label_propagation(
+                    spark, edges, max_iter=6, weighted=weighted,
+                    directed=directed, local=True,
+                )
+                dist = label_propagation(
+                    spark, edges, max_iter=6, weighted=weighted,
+                    directed=directed, local=False,
+                )
+                l = {r["id"]: r["label"] for r in loc.labels.collect()}
+                d = {r["id"]: r["label"] for r in dist.labels.collect()}
+                assert l == d
+                assert loc.supersteps == dist.supersteps
+                assert loc.converged == dist.converged

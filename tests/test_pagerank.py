@@ -152,23 +152,39 @@ def test_pagerank_local_path_equals_distributed(spark):
     param."""
     pairs = datagen.erdos_renyi(60, 0.08, seed=3) + datagen.star(9)
     w = [(f"v{a}", f"v{b}", float((a + b) % 5 + 1)) for a, b in pairs]
-    edges = spark.createDataFrame(w, ["src", "dst", "weight"])
-    verts = spark.createDataFrame([("isolated",)], ["id"])
-    for directed in (False, True):
-        loc = pagerank(
-            spark, edges, tol=1e-9, weighted=True, directed=directed,
-            vertices=verts, strategy="local",
-        )
-        dist = pagerank(
-            spark, edges, tol=1e-9, weighted=True, directed=directed,
-            vertices=verts, strategy="copartition",
-        )
-        l = {r["id"]: r["rank"] for r in loc.ranks.collect()}
-        d = {r["id"]: r["rank"] for r in dist.ranks.collect()}
-        assert set(l) == set(d) and "isolated" in l
-        assert loc.supersteps == dist.supersteps
-        assert loc.converged and dist.converged
-        assert max(abs(l[k] - d[k]) for k in l) < 1e-12
+    # non-ASCII keys (byte order != ASCII order), int64 keys, and an
+    # empty edge table, each with an isolated vertex where it has edges
+    uni = [("é", "z", 2.0), ("z", "中", 1.0), ("Z", "é", 3.0), ("中", "\U0001F600", 1.0),
+           ("\ue000", "Z", 1.0), ("a", "\U0001F600", 2.0)]
+    ints = [(a * 1_000_003, b * 1_000_003, float(a % 3 + 1))
+            for a, b in datagen.erdos_renyi(30, 0.1, seed=5)]
+    cases = [
+        (spark.createDataFrame(w, ["src", "dst", "weight"]), "isolated"),
+        (spark.createDataFrame(uni, "src string, dst string, weight double"), "ñ_isolated"),
+        (spark.createDataFrame(ints, "src long, dst long, weight double"), -7),
+        (spark.createDataFrame([], "src string, dst string, weight double"), None),
+    ]
+    for edges, isolated in cases:
+        verts = None
+        if isolated is not None:
+            id_type = edges.schema["src"].dataType.simpleString()
+            verts = spark.createDataFrame([(isolated,)], f"id {id_type}")
+        for directed in (False, True):
+            loc = pagerank(
+                spark, edges, tol=1e-9, weighted=True, directed=directed,
+                vertices=verts, strategy="local",
+            )
+            dist = pagerank(
+                spark, edges, tol=1e-9, weighted=True, directed=directed,
+                vertices=verts, strategy="copartition",
+            )
+            l = {r["id"]: r["rank"] for r in loc.ranks.collect()}
+            d = {r["id"]: r["rank"] for r in dist.ranks.collect()}
+            assert set(l) == set(d)
+            assert isolated is None or isolated in l
+            assert loc.supersteps == dist.supersteps
+            assert loc.converged and dist.converged
+            assert max((abs(l[k] - d[k]) for k in l), default=0.0) < 1e-12
 
 
 def test_pagerank_auto_selects_local_with_and_without_run_dir(spark, tmp_path):

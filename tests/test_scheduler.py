@@ -27,6 +27,15 @@ def test_parse_reference_strings():
         SchedulerSpec.parse("^maybe@3600/$#true")
 
 
+def test_parse_python_formatted_reference_string():
+    # cli/exchange_deposit_wallets.py:69 f-string-interpolates Python
+    # values: a capitalized bool and None for the missing end time
+    sp = SchedulerSpec.parse("^True@86400/0$None#false")
+    assert sp == SchedulerSpec(True, 86400, 0, None, False)
+    sp = SchedulerSpec.parse("^FALSE@None/None$None#TRUE")
+    assert sp == SchedulerSpec(False, None, 0, None, True)
+
+
 def test_next_fire_interval_aligned():
     """round_timestamp(now, interval) + interval (+ delay) — the
     repeat_handler boundary (utils/repeat_handler.py:54-61)."""
@@ -130,3 +139,22 @@ def test_retry_decorator_succeeds_midway():
 
     assert sometimes() == "ok"
     assert state["n"] == 3
+
+
+def test_retry_jitter_is_keyed_per_caller():
+    """Concurrent callers (batched_enrich's partitions) sleep different
+    amounts; the same caller sleeps the same amounts on a rerun."""
+
+    def flaky():
+        raise RuntimeError("boom")
+
+    def sleeps(key):
+        slept = []
+        with pytest.raises(RuntimeError):
+            retry_call(flaky, tries=3, sleeper=slept.append, jitter_key=key)
+        return slept
+
+    part0, part1 = sleeps(0), sleeps(1)
+    assert part0 != part1
+    assert all(a != b for a, b in zip(part0, part1))
+    assert sleeps(0) == part0

@@ -18,9 +18,9 @@ SHAPES = {
 
 
 @pytest.mark.parametrize("local", [True, False], ids=["local", "distributed"])
-@pytest.mark.parametrize("name", sorted(SHAPES))
+@pytest.mark.parametrize("name", sorted(SHAPES) + ["empty"])
 def test_triangles_match_networkx(spark, name, local):
-    pairs = SHAPES[name]
+    pairs = SHAPES.get(name, [])
     oracle = nx_triangles(pairs)
     edges = datagen.edges_df(spark, pairs)
     got = {
