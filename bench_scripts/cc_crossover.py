@@ -37,7 +37,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from cryptowalletcommunitydetection_spark import build_session
-from cryptowalletcommunitydetection_spark.graph.cc import connected_components
+from cryptowalletcommunitydetection_spark.graph import cc
 
 cpus, E, repeats = {cpus}, {E}, {repeats}
 V = max(E // 3, 4)
@@ -49,19 +49,22 @@ edges = (spark.range(E)
          .persist())
 edges.count()
 
+# (kwargs, re-keying gate): the distributed modes pin the key space by
+# moving cc.ENCODE_MIN_EDGES out of reach or to 0
 MODES = {{
-    "local-uf": dict(local=True),
-    "dist-plain": dict(local=False, encode=False),
-    "dist-encoded": dict(local=False, encode=True),
+    "local-uf": (dict(local=True), cc.ENCODE_MIN_EDGES),
+    "dist-plain": (dict(local=False), 1 << 62),
+    "dist-encoded": (dict(local=False), 0),
 }}
 
 out = {{"E_raw": E, "V": V, "cpus": cpus, "modes": {{}}}}
 sketches = {{}}
-for name, kw in MODES.items():
+for name, (kw, gate) in MODES.items():
+    cc.ENCODE_MIN_EDGES = gate
     walls = []
     for _ in range(repeats):
         t0 = time.monotonic()
-        labels = connected_components(spark, edges, **kw)
+        labels = cc.connected_components(spark, edges, **kw)
         r = labels.agg(
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("id", "component")).alias("h"),

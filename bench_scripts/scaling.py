@@ -160,46 +160,6 @@ print("RESULT " + json.dumps({{
 """
 
 
-SKEW_CHILD = r"""
-import json, statistics, sys, time
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from cryptowalletcommunitydetection_spark import build_session
-from cryptowalletcommunitydetection_spark.graph.edges import canonicalize_edges
-from cryptowalletcommunitydetection_spark.graph.pagerank import pagerank
-
-cpus, V, E, steps, repeats, gamma = {cpus}, {V}, {E}, {steps}, {repeats}, {gamma}
-spark = build_session(app_name=f"scaling-skew-{{cpus}}", master=f"local[{{cpus}}]",
-                      shuffle_partitions=cpus)
-# power-law-ish dst: u^gamma concentrates mass on low ids (hub vertices);
-# src stays uniform — the hub-in-degree regime where vertex-cut routing
-# should beat shipping full scatter messages
-u = F.pmod(F.xxhash64("id", F.lit(2)), F.lit(1 << 24)) / float(1 << 24)
-edges = (spark.range(E)
-         .select(F.pmod(F.xxhash64("id", F.lit(1)), F.lit(V)).alias("src"),
-                 (F.pow(u, F.lit(float(gamma))) * V).cast("long").alias("dst"))
-         .filter(F.col("src") != F.col("dst")))
-ce = canonicalize_edges(edges).persist()
-n = ce.count()
-deg = ce.groupBy("src").count().agg(F.max("count")).collect()[0][0]
-out = {{"cpus": cpus, "V": V, "n_edges": n, "supersteps": steps, "gamma": gamma,
-        "max_canonical_degree_src_side": deg, "strategies": {{}}}}
-for strat in ("copartition", "blocked"):
-    meds = []
-    for _ in range(repeats):
-        res = pagerank(spark, ce, tol=0.0, max_iter=steps, weighted=True,
-                       strategy=strat)
-        meds.append(statistics.median(m["wall_ms"] / 1e3 for m in res.metrics))
-    best = min(meds)
-    out["strategies"][strat] = {{
-        "medians_per_repeat": [round(m, 3) for m in meds],
-        "best_median_superstep_sec": round(best, 3),
-        "throughput": (2 * n) / best,
-    }}
-print("RESULT " + json.dumps(out))
-"""
-
-
 def run_child(code: str) -> dict:
     p = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=3600
@@ -212,12 +172,11 @@ def run_child(code: str) -> dict:
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--mode", choices=["synth", "sf", "both", "skew", "files"],
+    ap.add_argument("--mode", choices=["synth", "sf", "both", "files"],
                     default="synth")
     ap.add_argument("--n-files", type=int, default=200_000)
     ap.add_argument("--passes", type=int, default=2,
                     help="interleaved low/high child passes (files mode)")
-    ap.add_argument("--gamma", type=int, default=4)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--vertices", type=int, default=2_000_000)
     ap.add_argument("--edges", type=int, default=96_000_000)
@@ -334,29 +293,6 @@ high {hi['pagerank_steal_jiffies']} (derive:
 superstep throughput ratio = {hi['throughput'] / lo['throughput']:.3f}; parallelism ratio = {args.high // args.low};
 **scaling efficiency = {eff:.3f}** (criterion: >= 0.8).
 Derivation (mapInPandas extraction) scaling efficiency = {d_eff:.3f}.
-""")
-
-    if args.mode == "skew":
-        r = run_child(SKEW_CHILD.format(
-            repo=REPO, cpus=args.high, V=args.vertices, E=args.edges,
-            steps=args.steps, repeats=args.repeats, gamma=args.gamma))
-        result["skew"] = r
-        co, bl = r["strategies"]["copartition"], r["strategies"]["blocked"]
-        sections.append(f"""
-## Strategy comparison — skewed (power-law-ish) graph, |V|={r['V']:,}, |E|={r['n_edges']:,} (canonical), local[{args.high}]
-
-dst drawn as floor(V * u^{r['gamma']}) (hub mass at low ids; max canonical
-src-degree observed {r['max_canonical_degree_src_side']:,}); PageRank weighted supersteps, fixed
-{r['supersteps']} iterations × {args.repeats} repeats, MIN of per-repeat median superstep walls.
-This measures the blocked (vertex-cut) strategy's claimed win condition
-(replication ≪ hub degree) against copartition on the same input.
-
-| strategy | best median superstep (s) | medians per repeat (s) | throughput (edges/s/superstep) |
-|---|---|---|---|
-| copartition | {co['best_median_superstep_sec']} | {co['medians_per_repeat']} | {co['throughput']:.0f} |
-| blocked | {bl['best_median_superstep_sec']} | {bl['medians_per_repeat']} | {bl['throughput']:.0f} |
-
-blocked / copartition throughput ratio = {bl['throughput'] / co['throughput']:.3f}.
 """)
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

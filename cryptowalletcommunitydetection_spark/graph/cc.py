@@ -14,7 +14,10 @@ Scale notes: per round the state is at most one edge per vertex after
 the first small-star, so the shuffled volume shrinks toward |V|;
 convergence test is a distributed symmetric-difference count (driver
 sees a scalar); every round is checkpointed to Parquet (lineage cut +
-resume).
+resume). One pinned distinct edge set seeds the loop, sizes every gate
+and supplies the vertex universe of the final labels; from
+``ENCODE_MIN_EDGES`` distinct edges on, string vertices run the loop
+as int64 keys.
 
 Below ``LOCAL_CC_MAX_EDGES`` (and for a pre-contracted graph under it)
 one numpy task labels the whole vertex universe instead (``_cc_body``).
@@ -236,11 +239,13 @@ unchanged; ``local=False`` forces it (equality between the two paths is
 exact and tested)."""
 
 ENCODE_MIN_EDGES = 4_000_000
-"""Auto-mode threshold (distinct edges) above which string vertices are
-re-keyed to int64 for the iterative loop. Below it the re-keying's fixed
-costs (dictionary build + collision check + label decode joins) exceed
-the per-round savings; above it every round shuffles fixed-width longs
-instead of variable-length keys. See ``connected_components(encode=...)``."""
+"""Distinct-edge count from which the distributed path re-keys string
+vertices to int64 (xxhash64, seed 42) for the iterative loop. Below it
+the re-keying's fixed costs (dictionary build + collision check + label
+decode joins) exceed the per-round savings — measured at sf0.1 (44k
+edges) they are ~2.4s of an ~8s run; from it on every round shuffles
+fixed-width longs instead of variable-length keys. The probe is the
+distinct-edge count the pinned edge universe already yields."""
 
 
 _CC_FIELDS = {"id": KEY, "component": KEY}
@@ -281,15 +286,15 @@ def _cc_body():
     return body
 
 
-def _encode_keys(raw: DataFrame, vertices: DataFrame | None):
+def _encode_keys(edges: DataFrame, vertices: DataFrame | None):
     """xxhash64(seed 42) re-keying dictionary over every vertex key.
 
-    Returns (vdict[vid, key], raw_encoded, vertices_encoded); vdict is
-    None when a 64-bit collision was detected among the keys (labels in
-    vid space would silently merge distinct vertices — the caller keeps
-    the original keys; the algorithm is key-type agnostic)."""
-    keys = raw.select(F.col("src").alias("key")).unionByName(
-        raw.select(F.col("dst").alias("key"))
+    Returns (vdict[vid, key], vertices_encoded); vdict is None when a
+    64-bit collision was detected among the keys (labels in vid space
+    would silently merge distinct vertices — the caller keeps the
+    original keys; the algorithm is key-type agnostic)."""
+    keys = edges.select(F.col("src").alias("key")).unionByName(
+        edges.select(F.col("dst").alias("key"))
     )
     if vertices is not None:
         keys = keys.unionByName(
@@ -305,17 +310,13 @@ def _encode_keys(raw: DataFrame, vertices: DataFrame | None):
     ).collect()[0]
     if chk["nk"] != chk["nv"]:
         vdict.unpersist()
-        return None, raw, vertices
-    raw_enc = raw.select(
-        F.xxhash64(F.col("src"), F.lit(42)).alias("src"),
-        F.xxhash64(F.col("dst"), F.lit(42)).alias("dst"),
-    )
+        return None, vertices
     verts_enc = None
     if vertices is not None:
         verts_enc = vertices.filter(F.col("id").isNotNull()).select(
             F.xxhash64(F.col("id"), F.lit(42)).alias("id")
         )
-    return vdict, raw_enc, verts_enc
+    return vdict, verts_enc
 
 
 def connected_components(
@@ -325,15 +326,14 @@ def connected_components(
     max_iter: int = 50,
     run_dir: str | None = None,
     strict: bool = True,
-    encode: bool | None = None,
     local: bool | None = None,
     assume_canonical: bool = False,
     pre_contract: bool | None = None,
 ) -> DataFrame:
     """DataFrame[id, component] with component = min member id.
 
-    ``pre_contract`` (auto-path distributed runs only; ``None`` = auto
-    above ``PRE_CONTRACT_MIN_EDGES``): run adaptive
+    ``pre_contract`` (distributed path only; ``None`` = auto above
+    ``PRE_CONTRACT_MIN_EDGES``): run adaptive
     hash-to-min label rounds against the cached symmetric edge table —
     only the |V|-row label table shuffles per round — then contract the
     edge set through the labels before the star loop, and compose the
@@ -359,27 +359,17 @@ def connected_components(
     ``run_dir`` enables per-round Parquet checkpoints + manifest; a rerun
     with the same run_dir resumes from the last complete round.
 
-    ``encode`` re-keys string vertices to int64 (xxhash64, seed 42) for
-    the iterative loop — every per-round shuffle then moves and compares
-    fixed-width longs instead of variable-length strings — and remaps
-    the final labels back so ``component`` is the min ORIGINAL key of
-    each component (exact equality with the unencoded result, collision
-    probability ~2^-64 and detected/fallen back on).
+    The deduped edge set is materialized in original key space — the
+    same single action that seeds the fixpoint probe — and its exact
+    count picks the key space of the distributed loop: from
+    ``ENCODE_MIN_EDGES`` distinct edges on, string vertices are re-keyed
+    to int64 (xxhash64, seed 42), so every per-round shuffle moves and
+    compares fixed-width longs, and the final labels are remapped so
+    ``component`` is the min ORIGINAL key of each component (exact
+    equality with the original-key result; a 64-bit collision, p ~2^-64,
+    is detected and falls back to original keys).
 
-    - ``None`` (default, adaptive): the deduped edge set is materialized
-      in original key space — the same single action that seeds the
-      fixpoint probe — and its exact count picks the path: re-key above
-      ``ENCODE_MIN_EDGES`` distinct edges, keep original keys below.
-      Measured at sf0.1 (44k edges) the fixed re-keying overhead is
-      ~2.4s of an ~8s run, while the per-round saving at that scale is
-      noise — hence the size gate.
-    - ``True`` (expert, for known-large graphs): re-key immediately and
-      skip the original-key pre-distinct entirely — round 0's small-star
-      dedups as part of its normal work, so nothing ever shuffles
-      variable-length keys except the one dictionary build.
-    - ``False``: always keep original keys.
-
-    For small graphs (auto path, known |E|) the loop also right-sizes
+    For small graphs (<= 3.2M distinct edges) the loop also right-sizes
     ``spark.sql.shuffle.partitions`` to ~100k edges/partition (floor 8,
     never above the session setting, restored afterwards) — the same
     measured treatment as the PageRank broadcast regime.
@@ -396,91 +386,65 @@ def connected_components(
         edges.select("src", "dst")
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
-    is_string = isinstance(raw.schema["src"].dataType, StringType)
+    # ONE materialization of the distinct edge set INCLUDING self-loops.
+    # It serves four roles off a single action: the fixpoint-probe seed
+    # (self-loops filtered, a narrow op over the checkpoint), the size
+    # probe of every gate below, the vertex universe for the final label
+    # join (no re-scan of the upstream pipeline — for a derived edge
+    # table that re-scan was the single largest cost of the run), and
+    # the manifest input identity (self-loop-only vertices are part of
+    # the OUTPUT as singletons, so they belong in the identity; the
+    # previous self-loop-free hash let two inputs differing only in
+    # such a vertex share a resume state).
+    universe = (
+        raw if assume_canonical else raw.distinct()
+    ).localCheckpoint(eager=False)
+    non_loop = F.col("src") != F.col("dst")
+    h42 = lambda c: F.xxhash64(F.col(c), F.lit(42))  # noqa: E731
+    r = universe.agg(
+        F.count(F.lit(1)).alias("n_all"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("h_all"),
+        F.count(F.when(non_loop, 1)).alias("n_e"),
+        F.bit_xor(F.when(non_loop, F.xxhash64("src", "dst"))).alias("h_e"),
+        # seed sketch in re-keyed long space, in case re-keying triggers
+        # (same single action; picks the space after seeing n_e)
+        F.bit_xor(
+            F.when(non_loop, F.xxhash64(h42("src"), h42("dst")))
+        ).alias("h_enc"),
+    ).collect()[0]
+    input_sketch = (r["n_all"], r["h_all"])
+    n_edges = r["n_e"]
+    if run_dir is None and (
+        local is True or (local is None and n_edges <= LOCAL_CC_MAX_EDGES)
+    ):
+        # small-graph fast path: one numpy task instead of
+        # ~5 distributed rounds (measured crossover in BENCH/; the
+        # distributed loop still covers run_dir checkpointing and
+        # everything above the gate)
+        try:
+            out = run_kernel(universe, _cc_body(), _CC_FIELDS, vertices=vertices).rows
+        finally:
+            release_local_checkpoint(universe)
+        out._cwcd_n_edges = n_edges
+        return out
     vdict = None
-    n_edges = None  # exact distinct-edge count, when the auto path paid for it
-    input_sketch = None
-    universe = None  # pinned distinct edges incl. self-loops (vertex source)
-
-    if encode is True and is_string:
-        # expert path: no original-key distinct at all (round 0 dedups);
-        # a duplicated initial sketch can only fail the fixpoint compare
-        # (counts differ), never falsely match it. The final vertex
-        # derivation re-scans the upstream plan once — the price of
-        # skipping the dedup materialization.
-        vdict, raw, vertices = _encode_keys(raw, vertices)
-        prev = raw.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=False)
-        pinned_seed = prev
-        edge_universe = raw
-        if run_dir is not None:
-            # manifest identity must be multiplicity-insensitive (CC
-            # depends only on the distinct set; bit_xor cancels dup pairs)
-            input_sketch = _edge_sketch(raw.distinct())
-            prev_sketch = _edge_sketch(prev)
-        else:
-            prev_sketch = _edge_sketch(prev)
+    is_string = isinstance(raw.schema["src"].dataType, StringType)
+    if is_string and n_edges >= ENCODE_MIN_EDGES:
+        vdict, vertices = _encode_keys(universe, vertices)
+    if vdict is not None:
+        # injective on vertices (collision-checked) => the mapped
+        # edge set is still distinct; no second dedup shuffle, and
+        # the loop/labels run entirely in long space off the same
+        # pinned universe
+        edge_universe = universe.select(
+            h42("src").alias("src"), h42("dst").alias("dst")
+        )
+        prev = edge_universe.filter(non_loop)
+        prev_sketch = (n_edges, r["h_enc"])
     else:
-        # ONE materialization of the distinct edge set INCLUDING
-        # self-loops. It serves three roles off a single action:
-        # the fixpoint-probe seed (self-loops filtered, a narrow op over
-        # the checkpoint), the vertex universe for the final label join
-        # (no re-scan of the upstream pipeline — for a derived edge
-        # table that re-scan was the single largest cost of the run),
-        # and the manifest input identity (self-loop-only vertices are
-        # part of the OUTPUT as singletons, so they belong in the
-        # identity; the previous self-loop-free hash let two inputs
-        # differing only in such a vertex share a resume state).
-        universe = (
-            raw if assume_canonical else raw.distinct()
-        ).localCheckpoint(eager=False)
-        non_loop = F.col("src") != F.col("dst")
-        h42 = lambda c: F.xxhash64(F.col(c), F.lit(42))  # noqa: E731
-        r = universe.agg(
-            F.count(F.lit(1)).alias("n_all"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h_all"),
-            F.count(F.when(non_loop, 1)).alias("n_e"),
-            F.bit_xor(F.when(non_loop, F.xxhash64("src", "dst"))).alias("h_e"),
-            # seed sketch in re-keyed long space, in case encode triggers
-            # (same single action; picks the space after seeing n_e)
-            F.bit_xor(
-                F.when(non_loop, F.xxhash64(h42("src"), h42("dst")))
-            ).alias("h_enc"),
-        ).collect()[0]
-        input_sketch = (r["n_all"], r["h_all"])
-        n_edges = r["n_e"]
-        if run_dir is None and (
-            local is True or (local is None and n_edges <= LOCAL_CC_MAX_EDGES)
-        ):
-            # small-graph fast path: one numpy task instead of
-            # ~5 distributed rounds (measured crossover in BENCH/; the
-            # distributed loop still covers run_dir checkpointing and
-            # everything above the gate)
-            try:
-                out = run_kernel(universe, _cc_body(), _CC_FIELDS, vertices=vertices).rows
-            finally:
-                release_local_checkpoint(universe)
-            out._cwcd_n_edges = n_edges
-            return out
-        if encode is None:
-            encode = is_string and n_edges >= ENCODE_MIN_EDGES
-        if encode and is_string:
-            vdict, raw, vertices = _encode_keys(raw, vertices)
-        if vdict is not None:
-            # injective on vertices (collision-checked) => the mapped
-            # edge set is still distinct; no second dedup shuffle, and
-            # the loop/labels run entirely in long space off the same
-            # pinned universe
-            edge_universe = universe.select(
-                h42("src").alias("src"), h42("dst").alias("dst")
-            )
-            prev = edge_universe.filter(non_loop)
-            prev_sketch = (n_edges, r["h_enc"])
-        else:
-            encode = False
-            edge_universe = universe
-            prev = universe.filter(non_loop)
-            prev_sketch = (n_edges, r["h_e"])
-        pinned_seed = None  # the universe checkpoint backs the seed
+        edge_universe = universe
+        prev = universe.filter(non_loop)
+        prev_sketch = (n_edges, r["h_e"])
 
     manifest = None
     start_k = 0
@@ -498,9 +462,6 @@ def connected_components(
         )
         last = manifest.last_complete()
         if last >= 0:
-            if pinned_seed is not None:
-                release_local_checkpoint(pinned_seed)
-                pinned_seed = None
             loaded = manifest.load_state(spark, last)
             start_k = last + 1
             done = [s for s in manifest.supersteps if s["k"] == last and s.get("delta") == 0]
@@ -513,28 +474,15 @@ def connected_components(
             prev = loaded
             prev_sketch = _edge_sketch(prev)
 
-    # small-graph regime (auto path only — n_edges known): right-size the
-    # per-round shuffles; restored in the finally below. AQE stays ON for
-    # CC (unlike PageRank's broadcast loop): measured at sf0.1, AQE off
-    # is 2-10x worse here (the per-round joins need its runtime broadcast
-    # conversion), and at scale its skew handling matters.
-    # hash-to-min pre-contraction (see the docstring): auto-path
-    # distributed runs only — the universe checkpoint backs the final
-    # vertex derivation and the manifest's star-round resume semantics
-    # stay untouched
+    # hash-to-min pre-contraction (see the docstring): runs without
+    # run_dir only — the universe checkpoint backs the final vertex
+    # derivation and the manifest's star-round resume semantics stay
+    # untouched
     anchors = None
-    if (
-        manifest is None
-        and universe is not None
-        and pinned_seed is None
-        and (
-            pre_contract is True
-            or (
-                pre_contract is None
-                and n_edges is not None
-                and n_edges > PRE_CONTRACT_MIN_EDGES
-            )
-        )
+    pinned_seed = None  # the contracted graph; the loop releases it
+    if manifest is None and (
+        pre_contract is True
+        or (pre_contract is None and n_edges > PRE_CONTRACT_MIN_EDGES)
     ):
         anchors, contracted = _min_label_contract(prev)
         # the contracted graph usually fits the local kernel gate
@@ -560,13 +508,18 @@ def connected_components(
             out._cwcd_n_edges = n_edges
             return out
         prev = contracted
-        pinned_seed = contracted  # released by the loop like the expert seed
+        pinned_seed = contracted
         prev_sketch = _edge_sketch(contracted)
 
+    # small-graph regime: right-size the per-round shuffles; restored in
+    # the finally below. AQE stays ON for CC (unlike PageRank's broadcast
+    # loop): measured at sf0.1, AQE off is 2-10x worse here (the
+    # per-round joins need its runtime broadcast conversion), and at
+    # scale its skew handling matters.
     sp_key = "spark.sql.shuffle.partitions"
     sp_before = spark.conf.get(sp_key)
     resized = False
-    if n_edges is not None and n_edges <= 3_200_000:
+    if n_edges <= 3_200_000:
         try:
             parts = max(8, min(int(sp_before), (n_edges + 99_999) // 100_000))
             if parts < int(sp_before):
@@ -582,14 +535,13 @@ def connected_components(
         )
     finally:
         if anchors is not None:
-            # out is eagerly pinned on this path (universe not None)
+            # out is eagerly pinned by _finish_labels
             release_local_checkpoint(anchors)
         if resized:
             spark.conf.set(sp_key, sp_before)
     # private hint for composing operators (e.g. the community rollup):
-    # the exact distinct-edge count the auto path already paid for, so
-    # downstream right-sizing needs no extra action (None on the expert
-    # encode=True path, which never counts)
+    # the exact distinct-edge count already paid for, so downstream
+    # right-sizing needs no extra action
     out._cwcd_n_edges = n_edges
     return out
 
@@ -606,7 +558,7 @@ def _cc_loop(
     max_iter: int,
     strict: bool,
     pinned_seed: DataFrame | None,
-    universe: DataFrame | None,
+    universe: DataFrame,
     anchors: DataFrame | None = None,
 ) -> DataFrame:
     delta = None
@@ -638,11 +590,11 @@ def _cc_loop(
                 spark, k, wall_ms=(time.monotonic() - t0) * 1e3, delta=delta, rows=rows
             )
         # release the superseded round's pinned state (the new round is
-        # materialized and no longer depends on it). The expert path's
-        # pinned seed is released exactly once here; the auto path's
-        # round-0 prev is a narrow op over the universe checkpoint
-        # (nothing of its own to release — the universe stays pinned
-        # through the run, it backs the final vertex derivation).
+        # materialized and no longer depends on it). The contracted
+        # seed is released exactly once here; an uncontracted round-0
+        # prev is a narrow op over the universe checkpoint (nothing of
+        # its own to release — the universe stays pinned through the
+        # run, it backs the final vertex derivation).
         if prev is pinned_seed and pinned_seed is not None:
             release_local_checkpoint(pinned_seed)
         elif manifest is None and k > start_k:
@@ -665,8 +617,8 @@ def _cc_loop(
     out = _finish_labels(
         spark, prev, edge_universe, vertices, vdict, universe, anchors
     )
-    if universe is not None and manifest is None and prev is not seed:
-        # out is materialized (auto path pins eagerly) — the final
+    if manifest is None and prev is not seed:
+        # out is materialized (_finish_labels pins eagerly) — the final
         # round's localCheckpoint can be released too
         release_local_checkpoint(prev)
     return out
@@ -678,23 +630,20 @@ def _finish_labels(
     edge_universe: DataFrame,
     vertices: DataFrame | None,
     vdict: DataFrame | None,
-    universe: DataFrame | None,
+    universe: DataFrame,
     anchors: DataFrame | None = None,
 ) -> DataFrame:
-    """Derive + decode the labels; on the auto path (pinned universe)
-    pin the result eagerly — while any loop-scoped right-sized shuffle
-    width is still in force — and release the universe checkpoint. The
-    expert path (universe None) returns a lazy plan over the caller's
-    edge expression, as before."""
+    """Derive + decode the labels, pin the result eagerly — while any
+    loop-scoped right-sized shuffle width is still in force — and
+    release the universe checkpoint."""
     out = _decode_labels(
         _labels_from_stars(spark, stars, edge_universe, vertices, anchors),
         vdict,
     )
-    if universe is not None:
-        if vdict is None:
-            # the encoded path already pinned inside _decode_labels
-            out = out.localCheckpoint(eager=True)
-        release_local_checkpoint(universe)
+    if vdict is None:
+        # the encoded path already pinned inside _decode_labels
+        out = out.localCheckpoint(eager=True)
+    release_local_checkpoint(universe)
     return out
 
 

@@ -184,8 +184,9 @@ def _sharded_deepwalk(
     num_partitions, step_size, seed, id_type, assume_canonical,
 ):
     """Component-sharded training (see ``shard_vocab_above``): CC over
-    the edge table, components greedily packed into shards of ~``bound``
-    vertices, one Word2Vec fit per shard, vectors unioned.
+    the edge table, the components that carry walks greedily packed into
+    shards of ~``bound`` vertices, one Word2Vec fit per shard, vectors
+    unioned.
 
     The driver sees only the shard COUNT (one scalar); the packing
     itself is one window pass over the per-component size table (a
@@ -201,55 +202,67 @@ def _sharded_deepwalk(
     cc = connected_components(
         spark, edges, assume_canonical=assume_canonical
     )
-    # greedy contiguous packing of size-ordered components: shard k
-    # holds components whose EXCLUSIVE cumulative size lands in
-    # [k*bound, (k+1)*bound) — a shard may overhang its last component,
-    # so `bound` is a target, exceeded by at most one component's size
-    w = (
-        Window.orderBy(F.desc("_n"), "component")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # dense_rank over the floor-bucketed ids: a component LARGER than
-    # the bound makes floor(cumsum/bound) skip values, and iterating a
-    # plain range would fit Word2Vec on the empty gap shard (crash on
-    # zero sentences — round-5 review); dense ids enumerate exactly
-    # the non-empty shards
-    amap = (
-        cc.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            "component",
-            F.floor(
-                F.coalesce(F.sum("_n").over(w), F.lit(0)) / F.lit(bound)
-            ).alias("_bucket"),
-        )
-        .select(
-            "component",
-            (
-                F.dense_rank().over(Window.orderBy("_bucket")) - F.lit(1)
-            ).alias("_shard"),
-        )
-        .persist()
-    )
-    n_shards = int(amap.agg(F.max("_shard")).collect()[0][0]) + 1
     # assign walks to components by their FIRST sequence element (walks
     # never leave a component), so any corpus with a `seq` column works
-    # — the documented contract — whether or not it carries walk_id
-    tagged = (
-        corpus.select(
-            F.element_at("seq", 1).alias("_start"), "seq"
+    # — the documented contract — whether or not it carries walk_id. A
+    # walk whose start is not a vertex of `edges` (a caller's corpus)
+    # is kept, keyed by its start id: no component of `edges` has it.
+    keyed = (
+        corpus.select(F.element_at("seq", 1).alias("_start"), "seq")
+        .join(
+            cc.select(F.col("id").alias("_start"), "component"), "_start", "left"
         )
-        .join(cc.select(F.col("id").alias("_start"), "component"), "_start")
-        .join(F.broadcast(amap), "component")
         .select(
-            "_shard",
+            F.coalesce("component", "_start").alias("component"),
             F.transform(F.col("seq"), lambda v: v.cast("string")).alias(
                 "seq"
             ),
         )
         .persist()
     )
+    amap = None
     try:
+        # only components that carry at least one walk are packed: a
+        # shard of walkless components would fit Word2Vec on zero
+        # sentences (restricted ``starts``, or a caller's corpus)
+        sizes = (
+            keyed.select("component").distinct()
+            .join(
+                cc.groupBy("component").agg(F.count(F.lit(1)).alias("_n")),
+                "component", "left",
+            )
+            .select("component", F.coalesce("_n", F.lit(1)).alias("_n"))
+        )
+        # greedy contiguous packing of size-ordered components: shard k
+        # holds components whose EXCLUSIVE cumulative size lands in
+        # [k*bound, (k+1)*bound) — a shard may overhang its last
+        # component, so `bound` is a target, exceeded by at most one
+        # component's size
+        w = (
+            Window.orderBy(F.desc("_n"), "component")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        # dense_rank over the floor-bucketed ids: a component LARGER
+        # than the bound makes floor(cumsum/bound) skip values, and
+        # iterating a plain range would fit Word2Vec on the empty gap
+        # shard; dense ids enumerate exactly the non-empty shards
+        amap = (
+            sizes.select(
+                "component",
+                F.floor(
+                    F.coalesce(F.sum("_n").over(w), F.lit(0)) / F.lit(bound)
+                ).alias("_bucket"),
+            )
+            .select(
+                "component",
+                (
+                    F.dense_rank().over(Window.orderBy("_bucket")) - F.lit(1)
+                ).alias("_shard"),
+            )
+            .persist()
+        )
+        n_shards = int(amap.agg(F.max("_shard")).collect()[0][0]) + 1
+        tagged = keyed.join(F.broadcast(amap), "component")
         outs = []
         for s in range(n_shards):
             sents = tagged.filter(F.col("_shard") == s).select("seq")
@@ -265,5 +278,6 @@ def _sharded_deepwalk(
         # materialize before releasing the corpus cache the fits read
         return out.localCheckpoint(eager=True)
     finally:
-        tagged.unpersist()
-        amap.unpersist()
+        keyed.unpersist()
+        if amap is not None:
+            amap.unpersist()

@@ -48,6 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoint import release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize, vertices_of
 
 LOCAL_HITS_MAX_EDGES = 4_000_000
@@ -259,14 +260,14 @@ def hits(
                 (F.col("_hr") / nh).alias("hub"),
                 (F.col("_ar") / na).alias("authority"),
             )
-            prev.unpersist()
+            release_local_checkpoint(prev)
             prev = raw
             steps = k + 1
             if delta < tol:
                 converged = True
                 break
         out = state.localCheckpoint(eager=True)
-        prev.unpersist()
+        release_local_checkpoint(prev)
         e_src.unpersist()
         e_dst.unpersist()
         verts.unpersist()

@@ -60,8 +60,8 @@ def incremental_components(
     read — only its labeling. Deletions are out of contract (a deleted
     edge can split a component; condensation cannot observe that).
 
-    ``cc_kwargs`` forward to ``connected_components`` (max_iter, encode,
-    local, strict, run_dir). Do not pass ``assume_canonical`` — the
+    ``cc_kwargs`` forward to ``connected_components`` (max_iter, local,
+    strict, run_dir, pre_contract). Do not pass ``assume_canonical`` — the
     condensed table is not canonical (duplicate orientations and
     self-loops appear whenever two delta edges touch the same prior
     component; CC's defensive dedup handles them).

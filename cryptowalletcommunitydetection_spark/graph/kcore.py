@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest
+from ..plans.checkpoint import RunManifest, release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize
 
 LOCAL_KCORE_MAX_EDGES = 4_000_000
@@ -295,7 +295,7 @@ def core_numbers(
                 spark, k, wall_ms=wall_ms, delta=changed, rows=agg_row["_n"]
             )
         if prev_ckpt is not None and manifest is None:
-            prev_ckpt.unpersist()
+            release_local_checkpoint(prev_ckpt)
         prev_ckpt = new_cores
         cores = new_cores.select("id", "core")
         steps = k + 1
@@ -306,6 +306,8 @@ def core_numbers(
     canon.unpersist()
     e.unpersist()
     if not converged:
+        if prev_ckpt is not None and manifest is None:
+            release_local_checkpoint(prev_ckpt)
         raise RuntimeError(
             f"k-core H-index iteration did not reach its fixpoint within "
             f"max_iter={max_iter} supersteps — the state is an upper bound "

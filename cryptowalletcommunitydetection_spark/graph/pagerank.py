@@ -19,6 +19,8 @@ Scale design:
 - the gather ``groupBy(dst).sum`` benefits from map-side partial
   aggregation, which neutralizes hub skew for algebraic aggregates
   (explicit salting helpers in graph/skew.py cover non-algebraic cases),
+- string vertex keys are re-keyed to int64 (xxhash64) for the
+  superstep loop and decoded once at the end,
 - with ``run_dir`` each superstep is checkpointed (Parquet) → lineage
   stays O(1) and the run resumes from the last complete superstep,
 - below ``LOCAL_PR_MAX_EDGES`` the whole iteration runs as one
@@ -61,7 +63,7 @@ bracketed midpoint, and also the memory-safe bound for one executor
 identity under ``run_dir``. The gate applies with or without
 ``run_dir`` (the kernel then checkpoints each superstep itself); the
 distributed loop covers everything above the gate, and
-``strategy="broadcast"/"copartition"/"blocked"`` forces it. Parity
+``strategy="broadcast"/"copartition"`` forces it. Parity
 between the two paths is within float64 summation-order noise (≪ the
 1e-6 convergence contract) and is tested."""
 
@@ -75,8 +77,8 @@ class PageRankResult:
 
 
 def _decode_ranks(ranks: DataFrame, vdict: DataFrame | None) -> DataFrame:
-    """Map vid-space ranks back to original keys (see _encode block in
-    ``pagerank``). Rank values are unchanged by the bijective re-keying.
+    """Map vid-space ranks back to original keys (see the re-keying block
+    in ``pagerank``). Rank values are unchanged by the bijective re-keying.
     Pinned eagerly so the persisted dict can be released immediately
     (same lifecycle as graph/cc.py::_decode_labels)."""
     if vdict is None:
@@ -335,10 +337,6 @@ def pagerank(
     vertices: DataFrame | None = None,
     run_dir: str | None = None,
     strategy: str = "auto",
-    num_partitions: int | None = None,
-    adaptive_supersteps: bool | None = None,
-    encode: bool | None = None,
-    broadcast_update_join: bool = False,
     assume_canonical: bool = False,
     init_ranks: DataFrame | None = None,
     personalization: DataFrame | None = None,
@@ -421,32 +419,18 @@ def pagerank(
       broadcast (~|V|) every superstep.
     - "copartition": edges partitioned+sorted by src, rank table joined
       co-partitioned; per-superstep shuffle = rank table + scattered
-      messages. Measured best non-broadcast strategy on uniform-degree
-      graphs (17.0M vs blocked's 4.7M edge-traversals/s/superstep at
-      |V|=4M, |E|=96M, local[32]).
-    - "blocked" (GraphX-style vertex-cut): edges partitioned once by
-      dst-block, a static routing table ships each rank only to blocks
-      that reference it, scatter join co-partitioned on the block id,
-      gather groupBy(bj, dst) block-local (no exchange; per-task agg
-      maps bounded by |V|/partitions). Per-superstep shuffle is
-      O(|V|·replication) routed ranks — never the (partially
-      aggregated) message stream. MEASURED (BENCH/BASELINE.md): loses
-      to copartition in local mode on both uniform (4.7M vs 17.0M
-      edge-traversals/s/superstep) and hub-skewed graphs (8.1M vs
-      21.5M with a 1.66M-degree hub) — map-side partial aggregation
-      already absorbs hub skew for the algebraic gather, and local-mode
-      shuffles move through shared memory, so what blocked saves is
-      nearly free here. Kept for genuinely network-bound clusters where
-      shuffling routed ranks instead of the message stream is the
-      difference; never chosen by "auto".
+      messages. Measured 17.0M edge-traversals/s/superstep at |V|=4M,
+      |E|=96M, local[32].
     - "auto": broadcast while |V| ≤ 2M, else copartition.
 
-    ``encode``: int64 re-keying of string vertex ids for the distributed
-    loop (None = auto: on for string keys). See the inline block below —
-    measured ~4x on the superstep's join+gather stage, and required for
-    core-count scaling on string-keyed graphs; results are decoded back
-    to the original keys, values identical up to float summation order.
+    Both distributed plans shuffle at the session's
+    ``spark.sql.shuffle.partitions`` width; the broadcast plan runs its
+    loop with AQE off. String vertex ids are re-keyed to int64 for the
+    distributed loop (see the inline block) and decoded back to the
+    original keys at the end.
     """
+    if strategy not in ("auto", "local", "broadcast", "copartition"):
+        raise ValueError(f"unknown strategy: {strategy}")
     has_w = weighted and "weight" in edges.columns
     cols = ["src", "dst"] + (["weight"] if has_w else [])
     if directed or assume_canonical:
@@ -525,14 +509,14 @@ def pagerank(
         "src", "dst", (F.col("weight") / F.col("_wsum")).alias("p")
     )
 
-    # Int64 re-keying for the distributed loop (same mechanics as
-    # graph/cc.py::_encode_keys; default ON for string keys). Every
-    # superstep probes a broadcast HashedRelation and hash-aggregates on
-    # the vertex key; with string keys that stage measured ~9M rows/s on
-    # the 65M-row files-derived co-occurrence graph AND stopped scaling
-    # with cores (UTF8String probe + allocation pressure), while int64
-    # keys take Spark's dense LongHashedRelation / long hash-agg fast
-    # paths: 2.1-2.8s vs 9-14s for the same join+gather at local[32]
+    # Int64 re-keying of string keys for the distributed loop (same
+    # mechanics as graph/cc.py::_encode_keys). Every superstep probes a
+    # broadcast HashedRelation and hash-aggregates on the vertex key;
+    # with string keys that stage measured ~9M rows/s on the 65M-row
+    # files-derived co-occurrence graph AND stopped scaling with cores
+    # (UTF8String probe + allocation pressure), while int64 keys take
+    # Spark's dense LongHashedRelation / long hash-agg fast paths:
+    # 2.1-2.8s vs 9-14s for the same join+gather at local[32]
     # (BENCH/BASELINE.md round-3 section). xxhash64(seed 42) is
     # deterministic, so run_dir resumes re-derive the same vids; a
     # detected 64-bit collision falls back to original keys (rank values
@@ -542,10 +526,7 @@ def pagerank(
     from pyspark.sql.types import StringType
 
     vdict = None
-    is_string = isinstance(e.schema["src"].dataType, StringType)
-    if encode is None:
-        encode = is_string
-    if encode and is_string:
+    if isinstance(e.schema["src"].dataType, StringType):
         keys = vertices_of(e)
         if vertices is not None:
             keys = keys.unionByName(vertices.select("id")).distinct()
@@ -613,7 +594,7 @@ def pagerank(
             probe_cache.unpersist()
         return PageRankResult(empty, 0, True)
 
-    np = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    np = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if strategy in ("auto", "local"):
         strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "copartition"
     broadcast_ranks = strategy == "broadcast"
@@ -622,37 +603,15 @@ def pagerank(
     #   gather's map-side partial agg emits ~one row per dst and the
     #   shuffle moves ~|V| rows,
     # - copartition: partition by src (sorted) so the rank join streams
-    #   the cached edge side,
-    # - blocked (GraphX-style, for |V| too big to broadcast): partition
-    #   by dst-block bj; a static routing table ships each rank only to
-    #   the blocks that reference it, the scatter join is co-partitioned
-    #   on bj, and the gather groupBy(bj, dst) is satisfied by the block
-    #   partitioning — no exchange, per-task agg maps bounded by |V|/np.
-    rt = None
-    if strategy == "broadcast":
+    #   the cached edge side.
+    if broadcast_ranks:
         norm_edges = norm.repartition(np, "dst")
-    elif strategy == "copartition":
-        norm_edges = norm.repartition(np, "src").sortWithinPartitions("src")
-    elif strategy == "blocked":
-        norm_edges = (
-            norm.withColumn("bj", F.pmod(F.xxhash64("dst"), F.lit(np)))
-            .repartition(np, "bj")
-            .sortWithinPartitions("bj", "src")
-        )
     else:
-        raise ValueError(f"unknown strategy: {strategy}")
+        norm_edges = norm.repartition(np, "src").sortWithinPartitions("src")
     norm_edges = norm_edges.persist(StorageLevel.MEMORY_AND_DISK)
     norm_edges.count()  # materialize once
     if probe_cache is not None:
         probe_cache.unpersist()  # norm_edges now carries the edge data
-    if strategy == "blocked":
-        rt = (
-            norm_edges.select("bj", F.col("src").alias("id"))
-            .distinct()
-            .repartition(np, "id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        rt.count()
 
     dangling = verts.join(
         norm_edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
@@ -708,7 +667,7 @@ def pagerank(
                 ranks = ranks.join(svec, "id")
             start_k = last + 1
             if done:
-                for cached in (verts, dangling, norm_edges, rt, svec):
+                for cached in (verts, dangling, norm_edges, svec):
                     if cached is not None:
                         cached.unpersist()
                 return PageRankResult(
@@ -771,14 +730,11 @@ def pagerank(
     # rank table, coordination-bound supersteps) that planning overhead
     # exceeds any runtime re-optimization win (~18% per superstep
     # measured at sf0.1) — disable it for the loop only, restore after.
-    # The shuffle-heavy strategies keep the session setting: at scale
-    # AQE's skew-join and partition coalescing matter there.
+    # Copartition keeps the session setting: at scale AQE's skew-join
+    # and partition coalescing matter there.
     aqe_key = "spark.sql.adaptive.enabled"
     aqe_before = spark.conf.get(aqe_key)
-    disable_aqe = adaptive_supersteps is False or (
-        adaptive_supersteps is None and strategy == "broadcast"
-    )
-    if disable_aqe:
+    if broadcast_ranks:
         spark.conf.set(aqe_key, "false")
     # In broadcast mode only the gather output / rank-state shuffles use
     # spark.sql.shuffle.partitions (the scatter join is map-side over the
@@ -789,12 +745,12 @@ def pagerank(
     # The result never exceeds the session value: the resize only shrinks.
     # Larger graphs keep the session setting (shrinking below the core
     # count would idle executors during the rank-state stages), and
-    # copartition/blocked always keep it: their shuffle count must match
-    # the persisted edge partitioning or joins re-exchange.
+    # copartition always keeps it: its shuffle count must match the
+    # persisted edge partitioning or joins re-exchange.
     sp_key = "spark.sql.shuffle.partitions"
     sp_before = spark.conf.get(sp_key)
     resize_sp = False
-    if strategy == "broadcast" and n <= 500_000:
+    if broadcast_ranks and n <= 500_000:
         try:
             rank_parts = min(int(sp_before), max(8, (n + 99_999) // 100_000))
             resize_sp = rank_parts != int(sp_before)
@@ -805,40 +761,19 @@ def pagerank(
     try:
         for k in range(start_k, max_iter):
             t0 = time.monotonic()
-            if strategy == "blocked":
-                # ship each rank to the dst-blocks that reference it (one
-                # |V|·replication shuffle); the edge join and the gather are
-                # then block-local — the big edge table never moves
-                delivered = (
-                    ranks.select("id", "rank").join(rt, "id")
-                    .select(F.col("bj"), F.col("id").alias("_sid"), F.col("rank"))
-                    .repartition(np, "bj")
-                )
-                ne, d = norm_edges.alias("e"), delivered.alias("d")
-                contrib = (
-                    ne.join(
-                        d,
-                        (F.col("e.bj") == F.col("d.bj"))
-                        & (F.col("e.src") == F.col("d._sid")),
-                    )
-                    .groupBy(F.col("e.bj"), F.col("e.dst").alias("dst"))
-                    .agg(F.sum(F.col("d.rank") * F.col("e.p")).alias("_c"))
-                    .select("dst", "_c")
-                )
-            else:
-                # copartition mode: no explicit repartition — the rank table
-                # is |V| rows (cheap to shuffle when needed) and its
-                # checkpointed partitioning from the previous superstep's
-                # join is preserved, so Catalyst plans the scatter join
-                # against the pre-partitioned, pre-sorted edge table without
-                # touching the edge side
-                rsmall = ranks.select("id", "rank")
-                r = F.broadcast(rsmall) if broadcast_ranks else rsmall
-                contrib = (
-                    norm_edges.join(r, norm_edges.src == r.id)
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("rank") * F.col("p")).alias("_c"))
-                )
+            # copartition mode: no explicit repartition — the rank table
+            # is |V| rows (cheap to shuffle when needed) and its
+            # checkpointed partitioning from the previous superstep's
+            # join is preserved, so Catalyst plans the scatter join
+            # against the pre-partitioned, pre-sorted edge table without
+            # touching the edge side
+            rsmall = ranks.select("id", "rank")
+            r = F.broadcast(rsmall) if broadcast_ranks else rsmall
+            contrib = (
+                norm_edges.join(r, norm_edges.src == r.id)
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("p")).alias("_c"))
+            )
             # dmass is the dangling mass of the CURRENT state, produced by the
             # previous superstep's fused aggregate (uniform-state closed form
             # at k=0) — no extra per-superstep action. With a teleport
@@ -852,22 +787,11 @@ def pagerank(
             # carry the previous rank along — the L1 delta then needs no
             # second |V|⋈|V| join, just a single-stage agg over the
             # checkpointed result (one fewer shuffle per superstep).
-            # With AQE off this left join plans as a SortMergeJoin —
-            # an Exchange+Sort of the rank state plus a Sort of contrib
-            # every superstep. Broadcasting contrib instead (it is ≤|V|
-            # rows, the same size as the rank table the scatter join
-            # already broadcasts) makes the superstep shuffle-free, but
-            # measured interleaved A/B at |V|=50k / 16M directed edges,
-            # local[32]: SMJ min-median 0.277 s/superstep vs broadcast
-            # 0.313 s — the per-superstep driver collect+broadcast is
-            # serial and costs what the (parallel, |V|-row) exchange+
-            # sort saves. SMJ stays the default; the hint remains as an
-            # explicit escape hatch for cluster regimes where a driver
-            # round-trip is cheaper than an extra shuffle stage.
-            cside = (
-                F.broadcast(contrib) if broadcast_update_join else contrib
-            )
-            new_ranks = ranks.join(cside, ranks.id == cside.dst, "left").select(
+            # It stays a SortMergeJoin: broadcasting contrib measured
+            # 0.313 vs 0.277 s/superstep (|V|=50k, 16M directed edges,
+            # local[32]) — the serial driver collect+broadcast costs more
+            # than the parallel |V|-row exchange+sort it saves.
+            new_ranks = ranks.join(contrib, ranks.id == contrib.dst, "left").select(
                 ranks.id.alias("id"),
                 (base_expr + F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0))).alias(
                     "rank"
@@ -916,7 +840,7 @@ def pagerank(
                 converged = True
                 break
     finally:
-        if disable_aqe:
+        if broadcast_ranks:
             spark.conf.set(aqe_key, aqe_before)
         if resize_sp:
             spark.conf.set(sp_key, sp_before)
@@ -924,8 +848,6 @@ def pagerank(
     verts.unpersist()
     dangling.unpersist()
     norm_edges.unpersist()
-    if rt is not None:
-        rt.unpersist()
     if svec is not None:
         svec.unpersist()
     metrics = manifest.metrics() if manifest is not None else local_metrics

@@ -13,6 +13,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of physical memory given to the driver JVM heap by default; the
+# rest stays for the Python workers, the page cache and other tenants.
+DRIVER_MEM_SHARE = 4
+
+
+def _default_driver_mem() -> str:
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{phys // 2**20 // DRIVER_MEM_SHARE}m"
+
 
 def build_session(
     app_name: str = "cwcd-spark",
@@ -25,9 +34,12 @@ def build_session(
     - AQE on (runtime coalesce + skew-join splitting),
     - Arrow on (vectorized pandas_udf / mapInPandas transfer),
     - UTC session timezone (oracle comparability),
-    - shuffle partitions sized to cores, not the 200 default.
+    - shuffle partitions sized to cores, not the 200 default,
+    - host-sized: ``SPARK_GRAFT_CPUS`` cores (default: every CPU of the
+      host) and a ``SPARK_GRAFT_DRIVER_MEM`` driver heap (default: a
+      quarter of physical memory).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = cpus
@@ -42,7 +54,10 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Bound the textual plan the SQL listener renders per query.

@@ -106,24 +106,35 @@ def test_cc_empty(spark):
     assert connected_components(spark, edges).count() == 0
 
 
-def test_cc_encoded_equals_unencoded(spark):
+def test_cc_encoded_equals_unencoded(spark, monkeypatch):
     """Int64 re-keying is a pure physical optimization: labels (and the
     min-original-key component representative) must be identical to the
-    string-key run, including encoded isolated vertices."""
+    string-key run, including encoded isolated vertices. The distributed
+    path re-keys from ``ENCODE_MIN_EDGES`` distinct edges on; the gate
+    is moved to 0 (every string graph re-keys) and out of reach."""
+    from cryptowalletcommunitydetection_spark.graph import cc
+
     pairs = datagen.gen_wallet_pairs_pdf(n_components=5, seed=11)
     edges = spark.createDataFrame(
         pairs.rename(columns={"from_address": "src", "to_address": "dst"}),
         schema="src string, dst string",
     )
     verts = spark.createDataFrame([("zz_isolated",)], "id string")
-    enc = {
-        r["id"]: r["component"]
-        for r in connected_components(spark, edges, vertices=verts, encode=True).collect()
-    }
-    plain = {
-        r["id"]: r["component"]
-        for r in connected_components(spark, edges, vertices=verts, encode=False).collect()
-    }
+
+    rekeyed = []
+    encode_keys = cc._encode_keys
+    monkeypatch.setattr(
+        cc, "_encode_keys", lambda *a: rekeyed.append(1) or encode_keys(*a)
+    )
+
+    def labels(gate):
+        monkeypatch.setattr(cc, "ENCODE_MIN_EDGES", gate)
+        out = cc.connected_components(spark, edges, vertices=verts, local=False)
+        return {r["id"]: r["component"] for r in out.collect()}
+
+    enc = labels(0)
+    plain = labels(10**18)
+    assert rekeyed == [1]  # only the gate-0 run took the re-keyed path
     assert enc == plain
     assert enc["zz_isolated"] == "zz_isolated"
     # every component label is the minimum of its member keys

@@ -137,6 +137,36 @@ def test_sharded_oversized_component_and_seq_only_corpus(spark):
     assert vec1 == vec2  # same corpus -> bit-identical per shard
 
 
+
+def test_sharded_packs_only_walked_components(spark):
+    """Sharding packs only components that carry walks, and keeps walks
+    whose start is not a vertex of ``edges``. Two disjoint 6-cliques
+    with ``starts`` limited to clique A and bound 5: clique B carries no
+    walk, so no shard may fit Word2Vec on zero sentences, and the
+    vectors cover exactly the walked vertices. A caller's corpus with
+    one extra walk from outside ``edges`` trains that walk too."""
+    from pyspark.sql import functions as F
+
+    clique_a = datagen.clique(6)                               # 0..5
+    clique_b = [(s + 6, d + 6) for s, d in datagen.clique(6)]  # 6..11
+    edges = datagen.edges_df(spark, clique_a + clique_b)
+    starts = spark.range(6).select(F.col("id"))
+    kw = dict(dim=8, num_walks=4, walk_length=8, seed=11, max_iter=1,
+              num_partitions=1)
+    out = deepwalk_embeddings(edges, starts=starts, shard_vocab_above=5, **kw)
+    assert {r["id"] for r in out.select("id").collect()} == set(range(6))
+
+    corpus = random_walks(
+        edges, num_walks=4, walk_length=8, seed=11, starts=starts
+    ).select("seq")
+    stray = spark.createDataFrame([([99, 98, 99],)], corpus.schema)
+    out2 = deepwalk_embeddings(
+        edges, corpus=corpus.unionByName(stray), shard_vocab_above=5, **kw
+    )
+    got = {r["id"] for r in out2.select("id").collect()}
+    assert got == set(range(6)) | {98, 99}
+
+
 def test_default_is_data_parallel(spark):
     """The default (num_partitions=None) resolves to
     defaultParallelism — the scalable mode — and keeps the geometry

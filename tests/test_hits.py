@@ -93,3 +93,17 @@ def test_authority_concentrates_on_sink(spark):
     assert got[99]["hub"] == pytest.approx(0.0, abs=1e-9)
     for i in range(1, 9):
         assert got[i]["hub"] == pytest.approx(1 / 8, abs=1e-9)
+
+
+def test_distributed_loop_releases_superseded_states(spark):
+    """Each superstep state is a local checkpoint, which
+    ``DataFrame.unpersist`` cannot free: only the returned scores' own
+    checkpoint may stay pinned after the distributed loop."""
+    edges = datagen.edges_df(spark, SHAPES["chain_dag"])
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = hits(spark, edges, local=False)
+    assert res.supersteps > 1
+    leaves = res.scores._jdf.queryExecution().analyzed().collectLeaves()
+    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own

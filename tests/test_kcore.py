@@ -114,3 +114,17 @@ def test_run_dir_resume(spark, tmp_path):
     s = {x["id"]: x["core"] for x in straight.cores.collect()}
     assert r == s == _nx_core(pairs)
     assert resumed.converged
+
+
+def test_distributed_loop_releases_superseded_states(spark):
+    """Each superstep state is a local checkpoint, which
+    ``DataFrame.unpersist`` cannot free: only the returned cores' own
+    checkpoint may stay pinned after the distributed loop."""
+    edges = datagen.edges_df(spark, SHAPES["erdos_renyi"])
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = core_numbers(spark, edges, local=False)
+    assert res.supersteps > 1
+    leaves = res.cores._jdf.queryExecution().analyzed().collectLeaves()
+    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own

@@ -78,33 +78,24 @@ def test_pagerank_copartition_strategy_same_result(spark):
 
 
 def test_pagerank_strategies_agree(spark):
-    """All three physical strategies produce identical ranks for a fixed
+    """Both distributed strategies produce identical ranks for a fixed
     iteration count (same arithmetic, different physical plans)."""
     pairs = datagen.erdos_renyi(40, 0.12) + datagen.star(15)
     edges = datagen.edges_df(spark, pairs)
     results = {}
-    for strat in ("broadcast", "copartition", "blocked"):
+    for strat in ("broadcast", "copartition"):
         res = pagerank(spark, edges, tol=0.0, strategy=strat, max_iter=8)
         results[strat] = {r["id"]: r["rank"] for r in res.ranks.collect()}
     base = results["broadcast"]
-    for strat in ("copartition", "blocked"):
-        assert max(abs(results[strat][k] - base[k]) for k in base) < 1e-12
+    assert max(abs(results["copartition"][k] - base[k]) for k in base) < 1e-12
 
 
-def test_pagerank_broadcast_update_join_same_result(spark):
-    """The broadcast_update_join escape hatch (rank-update join as a
-    broadcast probe instead of the default SortMergeJoin) changes only
-    the physical plan, never the ranks."""
-    pairs = datagen.erdos_renyi(40, 0.12) + datagen.star(15)
-    edges = datagen.edges_df(spark, pairs)
-    base = pagerank(spark, edges, tol=0.0, strategy="broadcast", max_iter=8)
-    hinted = pagerank(
-        spark, edges, tol=0.0, strategy="broadcast", max_iter=8,
-        broadcast_update_join=True,
-    )
-    b = {r["id"]: r["rank"] for r in base.ranks.collect()}
-    h = {r["id"]: r["rank"] for r in hinted.ranks.collect()}
-    assert max(abs(h[k] - b[k]) for k in b) < 1e-12
+def test_pagerank_unknown_strategy_raises(spark):
+    """Only auto, local, broadcast and copartition exist; anything else
+    is rejected before any Spark work is done."""
+    edges = datagen.edges_df(spark, datagen.ring(5))
+    with pytest.raises(ValueError, match="unknown strategy: blocked"):
+        pagerank(spark, edges, strategy="blocked")
 
 
 def test_pagerank_one_spark_job_per_superstep(spark):
