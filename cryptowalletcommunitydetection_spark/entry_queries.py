@@ -1334,7 +1334,7 @@ def q_hits(spark, sf_dir):
     fixed-iteration-unroll convention as pagerank_resume's straight-6
     and ktruss's 12-round peel. Update order mirrored exactly: a_raw
     from the previous hubs, h_raw from the RAW new authorities, then
-    both normalize by their sums (graph/hits.py:124-128)."""
+    both normalize by their sums (``graph/hits.py::_hits_body``)."""
     from .graph.hits import hits
 
     pairs = _trade_pairs(spark, sf_dir).select(

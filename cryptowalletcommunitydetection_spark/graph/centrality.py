@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.checkpoint import release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize
 
 
@@ -101,11 +102,12 @@ def betweenness_from_sources(
         new = cand.join(settled, ["source", "id"], "left_anti")
         new = new.localCheckpoint(eager=True)
         if new.isEmpty():
+            release_local_checkpoint(new)
             break
         max_dist += 1
         nxt = settled.unionByName(new).localCheckpoint(eager=True)
         for p in pins:
-            p.unpersist()
+            release_local_checkpoint(p)
         pins = [settled, frontier]
         settled, frontier = nxt, new
     else:
@@ -178,10 +180,6 @@ def betweenness_from_sources(
     # settled/frontier tables and the per-level contribs are superseded
     # by out; repeated calls in one session no longer accumulate blocks
     out = out.localCheckpoint(eager=True)
-    for p in pins:
-        p.unpersist()
-    for c in contribs:
-        c.unpersist()
-    settled.unpersist()
-    frontier.unpersist()
+    for p in pins + contribs + [settled, frontier]:
+        release_local_checkpoint(p)
     return out

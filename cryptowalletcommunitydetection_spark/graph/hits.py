@@ -29,14 +29,16 @@ Physical design, same shapes as graph/pagerank.py's copartition loop:
 - Superstep state is an eager localCheckpoint (leaf plan, superseded
   checkpoints released) — the same unbounded-lineage discipline as
   every iterative operator here.
-- Below ``LOCAL_HITS_MAX_EDGES`` a single-task vectorized numpy kernel
-  (a ``coalesce(1).mapInPandas`` task, the shape of PageRank's local
-  path) runs the identical update rule;
-  the gate value is inherited from the measured PageRank crossover
+- Below ``LOCAL_HITS_MAX_EDGES`` a single-task vectorized numpy body
+  on ``run_kernel`` (graph/local_kernel.py, the one Arrow boundary of
+  the small-graph paths, as PageRank's local path) runs the identical
+  update rule; it deduplicates directed rows and symmetrizes canonical
+  ones itself, so no Spark-side distinct or symmetrize runs. The gate
+  value is inherited from the measured PageRank crossover
   (LOCAL_PR_MAX_EDGES — the join/agg shapes per superstep match;
   not independently re-measured).
 
-``directed=False`` symmetrizes the canonical edge table first; on a
+``directed=False`` symmetrizes the canonical edge table; on a
 symmetric graph hubs == authorities (both converge to the principal
 eigenvector direction of the adjacency), which the tests pin.
 """
@@ -47,9 +49,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from ..plans.checkpoint import release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize, vertices_of
+from .local_kernel import KEY, run_kernel
 
 LOCAL_HITS_MAX_EDGES = 4_000_000
 """Directed edge rows below which the single-task kernel runs
@@ -64,91 +68,42 @@ class HitsResult:
     converged: bool
 
 
-def _directed_edges(edges: DataFrame, directed: bool,
-                    assume_canonical: bool) -> DataFrame:
-    if directed:
-        e = edges.select("src", "dst")
-        if not assume_canonical:
-            e = e.filter(F.col("src") != F.col("dst")).distinct()
-        return e
-    canon = edges if assume_canonical else canonicalize_edges(edges)
-    return symmetrize(canon.select("src", "dst"), weight=False)
+_HITS_FIELDS = {"id": KEY, "hub": DoubleType(), "authority": DoubleType()}
 
 
-def _local_hits(e: DataFrame, tol: float, max_iter: int) -> HitsResult:
-    """Single-task numpy power iteration (small graphs)."""
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, StructField, StructType,
-    )
+def _hits_body(tol: float, max_iter: int, directed: bool):
+    """The local path's power iteration, as a ``run_kernel`` body over
+    loop-free directed rows (deduplicated here) or, with
+    ``directed=False``, canonical rows (symmetrized here) — the same
+    update rule, normalization and stopping test as the distributed
+    loop. The meta record carries the step count and the convergence
+    flag."""
 
-    key_t = e.schema["src"].dataType
-    out_schema = StructType([
-        StructField("id", key_t),
-        StructField("hub", DoubleType()),
-        StructField("authority", DoubleType()),
-        StructField("_converged", BooleanType()),
-        StructField("_steps", DoubleType()),
-    ])
-
-    def kernel(batches):
+    def body(g):
         import numpy as np
-        import pandas as pd
 
-        srcs, dsts = [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-        if not srcs:
-            return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        all_keys = np.concatenate([src, dst])
-        # string keys: pd.factorize (C hash) + argsort of the uniques —
-        # same sorted-id mapping as np.unique, measured ~10x faster than
-        # object-dtype unique (see graph/pagerank.py's kernel)
-        if all_keys.dtype == object:
-            codes, uniques = pd.factorize(all_keys)
-            order_u = np.argsort(uniques)
-            pos = np.empty(len(order_u), dtype=np.int64)
-            pos[order_u] = np.arange(len(order_u))
-            inv = pos[codes]
-            ids = uniques[order_u]
+        n, src, dst = g.n, g.src, g.dst
+        if directed:
+            key = np.unique(src * n + dst)
+            src, dst = key // n, key % n
         else:
-            ids, inv = np.unique(all_keys, return_inverse=True)
-        s_idx, d_idx = inv[: len(src)], inv[len(src):]
-        n = len(ids)
-        h = np.full(n, 1.0 / n)
-        a = np.full(n, 1.0 / n)
-        converged = False
-        steps = 0
-        for k in range(max_iter):
-            a_raw = np.bincount(d_idx, weights=h[s_idx], minlength=n)
-            h_raw = np.bincount(s_idx, weights=a_raw[d_idx], minlength=n)
+            src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+        h = np.full(n, 1.0 / max(n, 1))
+        a = h.copy()
+        steps, converged = 0, n == 0
+        while not converged and steps < max_iter:
+            a_raw = np.bincount(dst, weights=h[src], minlength=n)
+            h_raw = np.bincount(src, weights=a_raw[dst], minlength=n)
             na, nh = a_raw.sum(), h_raw.sum()
             a_new = a_raw / na if na > 0 else a_raw
             h_new = h_raw / nh if nh > 0 else h_raw
             delta = np.abs(a_new - a).sum() + np.abs(h_new - h).sum()
             a, h = a_new, h_new
-            steps = k + 1
-            if delta < tol:
-                converged = True
-                break
-        yield pd.DataFrame({
-            "id": ids, "hub": h, "authority": a,
-            "_converged": np.full(n, converged),
-            "_steps": np.full(n, float(steps)),
-        })
+            steps += 1
+            converged = bool(delta < tol)
+        return {"id": np.arange(n), "hub": h, "authority": a}, {"k": steps, "conv": converged}
 
-    out = e.coalesce(1).mapInPandas(kernel, out_schema)
-    out = out.localCheckpoint(eager=True)
-    first = out.select("_converged", "_steps").limit(1).collect()
-    if not first:  # empty edge table
-        return HitsResult(out.select("id", "hub", "authority"), 0, True)
-    return HitsResult(
-        out.select("id", "hub", "authority"),
-        int(first[0]["_steps"]),
-        bool(first[0]["_converged"]),
-    )
+    return body
 
 
 def hits(
@@ -168,25 +123,47 @@ def hits(
     ``directed=False`` canonicalizes and symmetrizes first (hubs ==
     authorities then, by symmetry). ``local`` forces the physical
     strategy (None = auto by ``LOCAL_HITS_MAX_EDGES``); results are
-    identical (parity-tested).
+    identical (parity-tested). The kernel path reads its input rows
+    once, so they are persisted only for the size probe.
     """
-    e = _directed_edges(edges, directed, assume_canonical).persist()
+    if directed:
+        rows = edges.select("src", "dst")
+        if not assume_canonical:
+            rows = rows.filter(F.col("src") != F.col("dst"))
+    else:
+        rows = (edges if assume_canonical else canonicalize_edges(edges)).select("src", "dst")
+    probed = local is None
     try:
-        m = e.count()  # probe doubles as cache materialization
-        if m == 0:
-            empty = e.select(
-                F.col("src").alias("id"),
-                F.lit(0.0).alias("hub"),
-                F.lit(0.0).alias("authority"),
-            ).limit(0)
-            return HitsResult(empty.localCheckpoint(eager=True), 0, True)
-        if local is None:
-            local = m <= LOCAL_HITS_MAX_EDGES
+        if probed:
+            # the probe fills the cache the kernel or the loop reads; it
+            # counts directed rows before the dedup, an upper bound
+            rows = rows.persist()
+            local = rows.count() * (1 if directed else 2) <= LOCAL_HITS_MAX_EDGES
         if local:
-            return _local_hits(e, tol, max_iter)
+            out = run_kernel(rows, _hits_body(tol, max_iter, directed), _HITS_FIELDS)
+            return HitsResult(out.rows, out.meta["k"], out.meta["conv"])
+        if not directed:
+            e = symmetrize(rows, weight=False)
+        else:
+            e = rows if assume_canonical else rows.distinct()
+        return _distributed_hits(e.persist(), tol, max_iter)
+    finally:
+        if probed:
+            rows.unpersist()
 
+
+def _distributed_hits(e: DataFrame, tol: float, max_iter: int) -> HitsResult:
+    """The superstep loop over the persisted directed edge table ``e``,
+    which it releases."""
+    try:
         verts = vertices_of(e).persist()
         n = verts.count()
+        if n == 0:
+            empty = verts.select(
+                "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
+            ).localCheckpoint(eager=True)
+            verts.unpersist()
+            return HitsResult(empty, 0, True)
         # cache the edge table PRE-PARTITIONED AND PRE-SORTED on each
         # superstep join key (one copy per key — 2x edge storage, bought
         # once; the graph/pagerank.py norm_edges pattern): an

@@ -59,6 +59,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoint import release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize, vertices_of
 
 
@@ -78,7 +79,7 @@ class HyperBallResult:
         must be consumed (or re-pinned by the caller) first — after
         release it would recompute from a freed checkpoint."""
         if self._state is not None:
-            self._state.unpersist()
+            release_local_checkpoint(self._state)
             self._state = None
 
 
@@ -228,7 +229,7 @@ def hyperball(
                 "active": active,
             }
         )
-        state.unpersist()
+        release_local_checkpoint(state)
         state = new_state
         if active == 0:
             converged = True

@@ -33,7 +33,10 @@ Scale design (same physical-strategy playbook as PageRank/CC/LPA):
   the raw edge-scale message stream,
 - below ``LOCAL_KCORE_MAX_EDGES`` the whole loop runs as ONE vectorized
   numpy task (the broadcast-join principle applied to the iteration;
-  same gate rationale as graph/pagerank.py LOCAL_PR_MAX_EDGES),
+  same gate rationale as graph/pagerank.py LOCAL_PR_MAX_EDGES): a
+  ``run_kernel`` body (graph/local_kernel.py, the one Arrow boundary of
+  the small-graph paths) that returns the distributed loop's
+  per-superstep records and, at the cap, raises its error,
 - supersteps checkpoint state + metrics through the same RunManifest
   as PageRank/CC/LPA, so a run is resumable and its convergence
   trajectory observable.
@@ -46,10 +49,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import RunManifest, release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize
+from .local_kernel import KEY, run_kernel
 
 LOCAL_KCORE_MAX_EDGES = 4_000_000
 """Size gate (canonical undirected edge rows) below which the H-index
@@ -71,65 +76,32 @@ class CoreResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _local_core_numbers(canon: DataFrame, max_iter: int) -> CoreResult:
-    """Single-task vectorized H-index iteration over the (small)
-    canonical edge set.
+def _kcore_body(max_iter: int):
+    """The local path's H-index iteration, as a ``run_kernel`` body over
+    the canonical edge codes.
 
-    Per iteration everything is numpy over the symmetrized edge arrays:
+    Per superstep everything is numpy over the symmetrized edge arrays:
     one lexsort groups (vertex, neighbor-value desc), ranks come from
     group-head subtraction, candidates ``min(value, rank)`` reduce per
     group with ``np.maximum.reduceat`` — the vectorized twin of the
-    histogram + window in the distributed superstep. Per-row Python
-    never touches edge data. Terminates at the exact coreness fixpoint
-    (monotone nonincreasing integer state)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, LongType, StructField, StructType,
-    )
+    histogram + window in the distributed superstep. Terminates at the
+    exact coreness fixpoint (monotone nonincreasing integer state). The
+    meta record carries the step count, the convergence flag and the
+    distributed loop's per-superstep records (``k``, ``wall_ms``,
+    ``delta`` = changed cores)."""
 
-    id_type = canon.schema["src"].dataType
-    out_schema = StructType([
-        StructField("id", id_type),
-        StructField("core", LongType()),
-        StructField("_k", IntegerType()),
-        StructField("_conv", BooleanType()),
-    ])
+    def body(g):
+        import time
 
-    def kernel(batches):
         import numpy as np
 
-        srcs, dsts = [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-        m = sum(len(a) for a in srcs)
-        if m == 0:
-            yield pd.DataFrame({"id": [], "core": [], "_k": [], "_conv": []}).astype(
-                {"core": "int64", "_k": "int32", "_conv": "bool"}
-            )
-            return
-        all_keys = np.concatenate(srcs + dsts)
-        if all_keys.dtype == object:
-            # factorize + sorted-unique reindex (C memcmp path), same as
-            # the LPA kernel — sorted order only for run determinism;
-            # coreness itself is order-free
-            codes, uniques = pd.factorize(all_keys)
-            order_u = np.argsort(uniques)
-            pos = np.empty(len(order_u), dtype=np.int64)
-            pos[order_u] = np.arange(len(order_u))
-            inv = pos[codes]
-            ids = uniques[order_u]
-        else:
-            ids, inv = np.unique(all_keys, return_inverse=True)
-        nn = len(ids)
-        src_i, dst_i = inv[:m], inv[m:]
         # symmetrized directed arrays: H-index gathers over in-neighbors
-        s = np.concatenate([src_i, dst_i])
-        t = np.concatenate([dst_i, src_i])
-        c = np.bincount(t, minlength=nn).astype(np.int64)  # c_0 = degree
-
-        steps, converged = 0, False
+        s = np.concatenate([g.src, g.dst])
+        t = np.concatenate([g.dst, g.src])
+        c = np.bincount(t, minlength=g.n).astype(np.int64)  # c_0 = degree
+        steps, converged, records = 0, False, []
         for k in range(max_iter):
+            t0 = time.monotonic()
             vals = c[s]
             o = np.lexsort((-vals, t))
             tt, vv = t[o], vals[o]
@@ -138,31 +110,29 @@ def _local_core_numbers(canon: DataFrame, max_iter: int) -> CoreResult:
             starts = np.flatnonzero(head)
             gid = np.cumsum(head) - 1
             rank = np.arange(len(o), dtype=np.int64) - starts[gid] + 1
-            cand = np.minimum(vv, rank)
-            h = np.maximum.reduceat(cand, starts)
-            # tt groups appear in ascending vertex code; every code has
-            # degree >= 1 post-canonicalization, so h aligns with 0..nn-1
+            # tt groups appear in ascending vertex code; every code is an
+            # edge endpoint, so h aligns with 0..n-1
+            h = np.maximum.reduceat(np.minimum(vv, rank), starts)
             new_c = np.minimum(c, h)
             changed = int((new_c != c).sum())
             c = new_c
             steps = k + 1
+            records.append({"k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed})
             if changed == 0:
                 converged = True
                 break
-        yield pd.DataFrame({
-            "id": ids,
-            "core": c,
-            "_k": np.int32(steps),
-            "_conv": converged,
-        })
+        return {"id": np.arange(g.n), "core": c}, {"k": steps, "conv": converged, "steps": records}
 
-    out = canon.select("src", "dst").coalesce(1).mapInPandas(kernel, out_schema)
-    out = out.localCheckpoint(eager=True)
-    meta = out.select(F.max("_k").alias("k"), F.min("_conv").alias("c")).collect()[0]
-    return CoreResult(
-        out.select("id", "core"),
-        int(meta["k"] or 0),
-        bool(meta["c"]) if meta["c"] is not None else True,
+    return body
+
+
+def _unconverged(max_iter: int, run_dir: str | None) -> RuntimeError:
+    return RuntimeError(
+        f"k-core H-index iteration did not reach its fixpoint within "
+        f"max_iter={max_iter} supersteps — the state is an upper bound "
+        f"on coreness, not coreness. Re-run with a higher max_iter"
+        + (" (the run_dir manifest resumes from the cap)." if run_dir
+           else " or pass run_dir to make the run resumable.")
     )
 
 
@@ -198,14 +168,24 @@ def core_numbers(
         canon = edges.select("src", "dst")
     else:
         canon = canonicalize_edges(edges).select("src", "dst")
-    canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
 
-    if run_dir is None and local is not False:
-        m = canon.count()  # also materializes the persist for either path
-        if local is True or m <= LOCAL_KCORE_MAX_EDGES:
-            res = _local_core_numbers(canon, max_iter)
-            canon.unpersist()
-            return res
+    probed = run_dir is None and local is None
+    if probed:
+        # the probe fills the cache the kernel or the loop reads
+        canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
+        local = canon.count() <= LOCAL_KCORE_MAX_EDGES
+    if run_dir is None and local:
+        try:
+            out = run_kernel(canon, _kcore_body(max_iter), {"id": KEY, "core": LongType()})
+        finally:
+            if probed:
+                canon.unpersist()
+        if not out.meta["conv"]:
+            release_local_checkpoint(out.pinned)
+            raise _unconverged(max_iter, run_dir)
+        return CoreResult(out.rows, out.meta["k"], True, out.meta["steps"])
+    if not probed:
+        canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
 
     # partitioned AND sorted on the per-round join key: an un-laid-out
     # cache re-exchanges + re-sorts all 2|E| rows in every round's
@@ -308,13 +288,7 @@ def core_numbers(
     if not converged:
         if prev_ckpt is not None and manifest is None:
             release_local_checkpoint(prev_ckpt)
-        raise RuntimeError(
-            f"k-core H-index iteration did not reach its fixpoint within "
-            f"max_iter={max_iter} supersteps — the state is an upper bound "
-            f"on coreness, not coreness. Re-run with a higher max_iter"
-            + (" (the run_dir manifest resumes from the cap)." if run_dir
-               else " or pass run_dir to make the run resumable.")
-        )
+        raise _unconverged(max_iter, run_dir)
     metrics = manifest.metrics() if manifest is not None else local_metrics
     return CoreResult(cores, steps, converged, metrics)
 

@@ -1,8 +1,9 @@
 """The single-task Arrow boundary of the small-graph kernels.
 
 Below their size gates, PageRank, label propagation, connected
-components and triangle counting run as one vectorized numpy task
-instead of a distributed loop. ``run_kernel`` owns what they share, so
+components, triangle counting, HITS, k-core and k-truss (with edge
+support) run as one vectorized numpy task instead of a distributed
+loop. ``run_kernel`` owns what they share, so
 each operator keeps only its numpy body:
 
 - the input is the caller's edge rows as they stand (the canonical

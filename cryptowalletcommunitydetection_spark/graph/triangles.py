@@ -182,85 +182,90 @@ def triangles_per_vertex(
 LOCAL_TRI_MAX_EDGES = 2_000_000
 
 
+WEDGE_CHUNK = 16_000_000
+"""Wedge keys one slab of the local wedge enumeration materializes
+(int64, ~128 MB per array). The edge gate does not bound the number of
+wedges (a dense core under 2M edges can hold ~1e9), so each out-degree
+class is enumerated in chunks of at most this many."""
+
+
+def _wedge_enumerator():
+    """The local paths' wedge closure, shared by the triangle and truss
+    bodies: ``closed_wedges(n, u, v)`` over undirected edge codes.
+
+    The same algorithm as the distributed path, as numpy array passes:
+    orient every edge by (degree, code), the lower end being the wedge
+    apex, and lexsort the oriented edges by (apex rank, far rank). That
+    order groups each apex's out-neighbors rank-sorted AND leaves the
+    edge keys ``rank_a * n + rank_b`` sorted, so a wedge (b_i, b_j),
+    i < j, is closed exactly when its key is found by one searchsorted.
+    Apex blocks of the same out-degree k are stacked into one
+    (blocks, k) matrix and paired with one ``triu_indices(k, 1)``; the
+    orientation bounds out-degrees by O(sqrt m), so the Python loop runs
+    over degree classes, not vertices.
+
+    Returns ``(order, apex, far, slabs)``: the lexsort permutation, the
+    oriented endpoints in that order, and a generator of
+    ``(leg1, leg2, closer)`` slabs, the closed wedges' three edges as
+    positions in the lexsort order. A closure, so the bodies ship it by
+    value."""
+
+    def closed_wedges(n, u, v):
+        import numpy as np
+
+        deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
+        order_key = deg.astype(np.int64) * (n + 1) + np.arange(n, dtype=np.int64)
+        low = order_key[u] < order_key[v]
+        a, b = np.where(low, u, v), np.where(low, v, u)
+        rank = np.empty(n, dtype=np.int64)
+        rank[np.argsort(order_key)] = np.arange(n, dtype=np.int64)
+        order = np.lexsort((rank[b], rank[a]))
+        ra, rb = rank[a[order]], rank[b[order]]
+        edge_keys = ra * n + rb
+        _, starts, counts = np.unique(ra, return_index=True, return_counts=True)
+
+        def slabs():
+            for k in np.unique(counts):
+                if k < 2:
+                    continue
+                s_k = starts[counts == k]
+                i, j = np.triu_indices(k, 1)
+                step = max(1, WEDGE_CHUNK // len(i))
+                for lo in range(0, len(s_k), step):
+                    s_c = s_k[lo : lo + step]
+                    nbr = rb[s_c[:, None] + np.arange(k)]  # (chunk, k) ranks, sorted
+                    keys = (nbr[:, i] * n + nbr[:, j]).ravel()
+                    pos = np.searchsorted(edge_keys, keys)
+                    hit = np.flatnonzero(
+                        edge_keys[np.minimum(pos, len(edge_keys) - 1)] == keys
+                    )
+                    if len(hit):
+                        blk, pair = np.divmod(hit, len(i))
+                        yield s_c[blk] + i[pair], s_c[blk] + j[pair], pos[hit]
+
+        return order, a[order], b[order], slabs()
+
+    return closed_wedges
+
+
 def _triangle_body():
     """The local path's triangle counting, as a ``run_kernel`` body over
     the canonical edge codes: every vertex with its count (0 included),
-    and the total in the meta record.
-
-    Same algorithm as the distributed path — degree-(id) orientation,
-    wedge generation, closure membership — but as numpy array passes:
-    orient by (degree, code), group oriented edges by source via one
-    argsort, emit each source block's out-neighbor pairs
-    (np.triu_indices per block — block sizes are bounded by O(sqrt m)
-    thanks to the orientation), and close wedges with a searchsorted
-    membership test against the encoded edge set. Parity with the
-    distributed output is exact, pinned by tests."""
+    and the total in the meta record. Each closed wedge counts its apex
+    and both far ends. Parity with the distributed output is exact,
+    pinned by tests."""
+    closed_wedges = _wedge_enumerator()
 
     def body(g):
         import numpy as np
 
-        n, u, v = g.n, g.src, g.dst
-        deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
-        # total order: (degree, code) — lower end becomes the wedge apex
-        order_key = deg.astype(np.int64) * (n + 1) + np.arange(n, dtype=np.int64)
-        ku, kv = order_key[u], order_key[v]
-        a = np.where(ku < kv, u, v)
-        b = np.where(ku < kv, v, u)
-        # rank in the total order for pair encoding (closure edges are
-        # oriented low->high in the SAME order, so encode (rank_a, rank_b))
-        rank = np.empty(n, dtype=np.int64)
-        rank[np.argsort(order_key)] = np.arange(n, dtype=np.int64)
-        ra, rb = rank[a], rank[b]
-        edge_keys = np.sort(ra * n + rb)
-        # group oriented edges by (apex, neighbor rank): one lexsort
-        # leaves every apex block's out-neighbors rank-sorted, so wedge
-        # pairs are (lower, higher) and match the closure encoding
-        o = np.lexsort((rb, ra))
-        a_s, b_s, rb_s = a[o], b[o], rb[o]
-        blocks, starts, counts = np.unique(
-            a_s, return_index=True, return_counts=True
-        )
-        # fully vectorized wedge generation: process apex blocks of the
-        # SAME out-degree k together — stack their neighbor slices into
-        # an (nblk, k) matrix by fancy indexing and take one
-        # triu_indices per k. Distinct out-degrees are few (bounded by
-        # O(sqrt m) via the orientation), so the python-level loop is
-        # over degrees, not vertices. Each k is processed in CHUNKS of
-        # at most WEDGE_CHUNK materialized wedge keys: the edge-count
-        # gate does not bound total wedges (a dense core under 2M edges
-        # can hold ~1e9), so without the cap a single degree class
-        # could allocate tens of GB in this one task.
-        WEDGE_CHUNK = 16_000_000  # int64 keys per slab (~128 MB/array)
-        tri = np.zeros(n, dtype=np.int64)
-        for k in np.unique(counts):
-            if k < 2:
-                continue
-            sel = counts == k
-            s_k = starts[sel]
-            blk_k = blocks[sel]
-            i, j = np.triu_indices(k, 1)
-            npairs = len(i)
-            step = max(1, WEDGE_CHUNK // npairs)
-            for lo in range(0, len(s_k), step):
-                s_c = s_k[lo : lo + step]
-                blk_c = blk_k[lo : lo + step]
-                idx = s_c[:, None] + np.arange(k)[None, :]
-                nb_m = b_s[idx]      # (chunk, k) neighbor codes
-                nrb_m = rb_s[idx]    # (chunk, k) neighbor ranks (sorted)
-                keys = (nrb_m[:, i] * n + nrb_m[:, j]).ravel()
-                pos = np.searchsorted(edge_keys, keys)
-                hit = (pos < len(edge_keys)) & (
-                    edge_keys[np.minimum(pos, len(edge_keys) - 1)] == keys
-                )
-                if not hit.any():
-                    continue
-                apex = np.repeat(blk_c, npairs)[hit]
-                bcol = nb_m[:, i].ravel()[hit]
-                ccol = nb_m[:, j].ravel()[hit]
-                tri += np.bincount(apex, minlength=n)
-                tri += np.bincount(bcol, minlength=n)
-                tri += np.bincount(ccol, minlength=n)
-        return {"id": np.arange(n), "triangles": tri}, {"triangles": int(tri.sum()) // 3}
+        _, apex, far, slabs = closed_wedges(g.n, g.src, g.dst)
+        tri = np.zeros(g.n, dtype=np.int64)
+        for leg1, leg2, _ in slabs:
+            tri += np.bincount(
+                np.concatenate([apex[leg1], far[leg1], far[leg2]]), minlength=g.n
+            )
+        return {"id": np.arange(g.n), "triangles": tri}, {"triangles": int(tri.sum()) // 3}
 
     return body
 

@@ -28,13 +28,15 @@ oriented wedge-closure pipeline each peel round reuses):
   the peeling depth, typically small; each round's cost shrinks with
   the surviving edge set.
 - **Single-task numpy kernel** below ``LOCAL_TRUSS_MAX_EDGES`` canonical
-  edges: the same orient → per-degree-class wedge enumeration →
-  searchsorted closure test as graph/triangles.py's kernel, extended to
-  scatter support onto edges (wedge legs map positionally, the closer
-  via one searchsorted) and peel in-process until fixpoint. The gate
-  inherits the measured triangle-kernel crossover
-  (LOCAL_TRI_MAX_EDGES): every truss round *is* one triangle pass, and
-  the peel loop amplifies the per-round winner.
+  edges: a ``run_kernel`` body (graph/local_kernel.py, the one Arrow
+  boundary of the small-graph paths) over the canonical rows. It runs
+  graph/triangles.py's wedge enumerator — the same orient →
+  per-degree-class wedge enumeration → searchsorted closure test the
+  triangle body runs — scatters each closed wedge onto its two legs and
+  its closer, and peels in-process until fixpoint. The gate inherits
+  the measured triangle-kernel crossover (LOCAL_TRI_MAX_EDGES): every
+  truss round *is* one triangle pass, and the peel loop amplifies the
+  per-round winner.
 
 Exact integer semantics on both paths — parity is exact (tested).
 """
@@ -43,8 +45,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from .triangles import LOCAL_TRI_MAX_EDGES, _canonical, _closed_wedges_of, _oriented
+from .local_kernel import KEY, run_kernel
+from .triangles import (
+    LOCAL_TRI_MAX_EDGES, _canonical, _closed_wedges_of, _oriented, _wedge_enumerator,
+)
 
 LOCAL_TRUSS_MAX_EDGES = LOCAL_TRI_MAX_EDGES
 """Size gate (canonical edge rows) for the in-process peel kernel.
@@ -52,6 +58,9 @@ Pinned to the measured triangle crossover: a truss round is exactly one
 triangle enumeration, so the per-round winner is the same and the peel
 loop multiplies the gap (the kernel additionally skips the per-round
 checkpoint + count actions the distributed loop needs)."""
+
+_EDGE_FIELDS = {"src": KEY, "dst": KEY}
+_SUPPORT_FIELDS = {**_EDGE_FIELDS, "support": LongType()}
 
 _MAX_PEEL_ROUNDS = 10_000
 """Safety bound; the loop terminates on its own (each round either
@@ -90,31 +99,38 @@ def edge_support(
     ``local`` forces the physical strategy; None auto-selects by the
     ``LOCAL_TRUSS_MAX_EDGES`` gate (one probe count, which doubles as
     the cache materialization — same pattern as
-    graph/triangles.py:triangle_count)."""
-    e = _canonical(edges, assume_canonical).persist()
+    graph/triangles.py:triangles_per_vertex). The kernel path reads the
+    canonical table once, so it is persisted only for the probe or the
+    distributed path."""
+    e = _canonical(edges, assume_canonical)
     d = None
+    pinned = local is None
     try:
-        if local is None:
+        if pinned:
+            e = e.persist()
             local = e.count() <= LOCAL_TRUSS_MAX_EDGES
         if local:
-            out = _local_truss_kernel(e, k=None)
-        else:
-            d = _oriented(e).persist()
-            sup = (
-                _triangle_edge_pairs(d)
-                .groupBy("src", "dst")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
-            out = e.join(sup, ["src", "dst"], "left").select(
-                "src",
-                "dst",
-                F.coalesce("support", F.lit(0)).alias("support"),
-            )
+            return run_kernel(e, _truss_body(None), _SUPPORT_FIELDS).rows
+        if not pinned:
+            e = e.persist()
+            pinned = True
+        d = _oriented(e).persist()
+        sup = (
+            _triangle_edge_pairs(d)
+            .groupBy("src", "dst")
+            .agg(F.count(F.lit(1)).alias("support"))
+        )
+        out = e.join(sup, ["src", "dst"], "left").select(
+            "src",
+            "dst",
+            F.coalesce("support", F.lit(0)).alias("support"),
+        )
         return out.localCheckpoint(eager=True)
     finally:
         if d is not None:
             d.unpersist()
-        e.unpersist()
+        if pinned:
+            e.unpersist()
 
 
 def k_truss(
@@ -127,21 +143,25 @@ def k_truss(
     maximal subgraph where every edge closes >= k-2 triangles within
     the subgraph. ``nx.k_truss`` edge-set semantics; k <= 2 returns the
     canonical edge set unchanged."""
-    e = _canonical(edges, assume_canonical).persist()
+    e = _canonical(edges, assume_canonical)
+    if k <= 2:
+        return e.localCheckpoint(eager=True)
+    pinned = local is None
     try:
-        if k <= 2:
-            return e.localCheckpoint(eager=True)
-        if local is None:
+        if pinned:
+            e = e.persist()
             local = e.count() <= LOCAL_TRUSS_MAX_EDGES
         if local:
-            return _local_truss_kernel(e, k=k).localCheckpoint(eager=True)
+            return run_kernel(e, _truss_body(k), _EDGE_FIELDS).rows
         return _distributed_k_truss(e, k)
     finally:
-        e.unpersist()
+        if pinned:
+            e.unpersist()
 
 
 def _distributed_k_truss(e: DataFrame, k: int) -> DataFrame:
-    """Peel loop over a persisted canonical edge table."""
+    """Peel loop over the canonical edge table, which it reads once into
+    the first round's checkpoint."""
     threshold = k - 2
     cur = e.localCheckpoint(eager=True)
     n_prev = cur.count()
@@ -173,121 +193,39 @@ def _distributed_k_truss(e: DataFrame, k: int) -> DataFrame:
     return cur
 
 
-def _local_truss_kernel(canon: DataFrame, k: int | None) -> DataFrame:
-    """Single-task vectorized support / peel kernel.
+def _truss_body(k: int | None):
+    """The local path's support / peel pass, as a ``run_kernel`` body
+    over the canonical edge codes.
 
-    ``k=None``: one support pass over all edges ->
-    DataFrame[src, dst, support]. ``k`` set: peel to the k-truss
-    fixpoint -> DataFrame[src, dst].
+    ``k=None``: one support pass -> (src, dst, support) per edge.
+    ``k`` set: peel edges with support < k-2 until none is left to peel
+    -> the surviving (src, dst). Support comes from graph/triangles.py's
+    wedge enumerator: each closed wedge adds one to its two legs and its
+    closer, positions in the enumerator's lexsort order, which one
+    scatter through that permutation maps back to edge rows."""
+    closed_wedges = _wedge_enumerator()
 
-    Same encoding as graph/triangles.py:_triangle_body —
-    factorized codes, (degree, code) orientation, per-degree-class
-    wedge enumeration in bounded slabs, searchsorted closure test —
-    plus per-edge scatter: a closed wedge's two legs map back to edge
-    rows positionally through the lexsort permutation, the closing edge
-    through the sorted-key permutation."""
-    src_type = canon.schema["src"].dataType.simpleString()
-    dst_type = canon.schema["dst"].dataType.simpleString()
-    ids = canon.select("src", "dst")
-    want_support = k is None
-    schema = (
-        f"src {src_type}, dst {dst_type}, support long"
-        if want_support
-        else f"src {src_type}, dst {dst_type}"
-    )
-    threshold = None if k is None else k - 2
-
-    def kernel(batches):
+    def body(g):
         import numpy as np
-        import pandas as pd
 
-        srcs, dsts = [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-        if not srcs:
-            return
-        src0 = np.concatenate(srcs)
-        dst0 = np.concatenate(dsts)
-        codes, uniques = pd.factorize(np.concatenate([src0, dst0]))
-        n = len(uniques)
-        u0 = codes[: len(src0)].astype(np.int64)
-        v0 = codes[len(src0):].astype(np.int64)
-
-        WEDGE_CHUNK = 16_000_000  # int64 keys per slab (~128 MB/array)
-
-        def support_of(u, v):
-            """Per-edge triangle support on the subgraph (u, v)."""
-            m = len(u)
-            sup = np.zeros(m, dtype=np.int64)
-            if m == 0:
-                return sup
-            deg = np.bincount(u, minlength=n) + np.bincount(v, minlength=n)
-            order_key = deg.astype(np.int64) * (n + 1) + np.arange(
-                n, dtype=np.int64
-            )
-            ku, kv = order_key[u], order_key[v]
-            a = np.where(ku < kv, u, v)
-            b = np.where(ku < kv, v, u)
-            rank = np.empty(n, dtype=np.int64)
-            rank[np.argsort(order_key)] = np.arange(n, dtype=np.int64)
-            ra, rb = rank[a], rank[b]
-            keys = ra * n + rb
-            key_perm = np.argsort(keys)  # sorted-key pos -> edge row
-            edge_keys = keys[key_perm]
-            o = np.lexsort((rb, ra))  # lexsort pos -> edge row
-            ra_s, rb_s = ra[o], rb[o]
-            starts_all, counts_all = np.unique(
-                ra_s, return_index=True, return_counts=True
-            )[1:]
-            for kk in np.unique(counts_all):
-                if kk < 2:
-                    continue
-                sel = counts_all == kk
-                s_k = starts_all[sel]
-                i, j = np.triu_indices(kk, 1)
-                npairs = len(i)
-                step = max(1, WEDGE_CHUNK // npairs)
-                for lo in range(0, len(s_k), step):
-                    s_c = s_k[lo : lo + step]
-                    idx = s_c[:, None] + np.arange(kk)[None, :]
-                    nrb_m = rb_s[idx]  # (chunk, kk), rank-sorted
-                    wkeys = (nrb_m[:, i] * n + nrb_m[:, j]).ravel()
-                    pos = np.searchsorted(edge_keys, wkeys)
-                    hit = (pos < len(edge_keys)) & (
-                        edge_keys[np.minimum(pos, len(edge_keys) - 1)]
-                        == wkeys
-                    )
-                    if not hit.any():
-                        continue
-                    # legs (apex, b_i) / (apex, b_j): positions in the
-                    # lexsort order map straight back to edge rows
-                    leg1 = o[idx[:, i].ravel()[hit]]
-                    leg2 = o[idx[:, j].ravel()[hit]]
-                    closer = key_perm[pos[hit]]
-                    np.add.at(sup, leg1, 1)
-                    np.add.at(sup, leg2, 1)
-                    np.add.at(sup, closer, 1)
+        def support(u, v):
+            order, _, _, slabs = closed_wedges(g.n, u, v)
+            hits = np.zeros(len(u), dtype=np.int64)
+            for legs in slabs:
+                for pos in legs:
+                    np.add.at(hits, pos, 1)
+            sup = np.empty_like(hits)
+            sup[order] = hits
             return sup
 
-        if want_support:
-            yield pd.DataFrame(
-                {
-                    "src": src0,
-                    "dst": dst0,
-                    "support": support_of(u0, v0),
-                }
-            )
-            return
-
-        alive = np.ones(len(u0), dtype=bool)
-        while alive.any():
-            live_idx = np.flatnonzero(alive)
-            sup = support_of(u0[live_idx], v0[live_idx])
-            drop = sup < threshold
-            if not drop.any():
+        if k is None:
+            return {"src": g.src, "dst": g.dst, "support": support(g.src, g.dst)}, {}
+        alive = np.arange(len(g.src))
+        while len(alive):
+            keep = support(g.src[alive], g.dst[alive]) >= k - 2
+            if keep.all():
                 break
-            alive[live_idx[drop]] = False
-        yield pd.DataFrame({"src": src0[alive], "dst": dst0[alive]})
+            alive = alive[keep]
+        return {"src": g.src[alive], "dst": g.dst[alive]}, {}
 
-    return ids.coalesce(1).mapInPandas(kernel, schema)
+    return body

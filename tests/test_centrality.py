@@ -134,3 +134,19 @@ def test_bridge_vertex_dominates(spark):
     # the bridge edge is (0, 5) by construction — its endpoints broker
     # every cross-clique shortest path
     assert set(top2) == {0, 5}
+
+
+def test_releases_intermediate_checkpoints(spark):
+    """The BFS levels, the per-level dependency rows and the level that
+    ends the forward sweep are local checkpoints, which
+    ``DataFrame.unpersist`` cannot free: only the result's own
+    checkpoint may stay pinned."""
+    pairs = SHAPES["erdos_renyi"]
+    edges = datagen.edges_df(spark, pairs)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = betweenness_from_sources(spark, edges, _src_df(spark, [pairs[0][0]]))
+    assert out.count() > 1
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own

@@ -73,6 +73,27 @@ def test_local_distributed_parity(spark):
     for k in a:
         assert a[k][0] == pytest.approx(b[k][0], abs=1e-6)
         assert a[k][1] == pytest.approx(b[k][1], abs=1e-6)
+    # plus non-ASCII keys (with a self-loop and a duplicate row) both
+    # ways, int64 keys and an empty table, capped at 4 supersteps
+    names = ["Z", "a", "é", "z", "中", "\ue000", "\U0001F600", "ÿ"]
+    uni = [(names[a % 8] + str(a // 8), names[b % 8] + str(b // 8))
+           for a, b in datagen.erdos_renyi(24, 0.15, seed=4)]
+    uni = spark.createDataFrame(uni + [("é0", "é0"), uni[0]], "src string, dst string")
+    ints = [(a * 1_000_003, b * 1_000_003) for a, b in datagen.erdos_renyi(30, 0.1, seed=5)]
+    for edges, directed in (
+        (uni, True),
+        (uni, False),
+        (spark.createDataFrame(ints, "src long, dst long"), True),
+        (spark.createDataFrame([], "src string, dst string"), True),
+    ):
+        loc = hits(spark, edges, max_iter=4, directed=directed, local=True)
+        dist = hits(spark, edges, max_iter=4, directed=directed, local=False)
+        a = {r["id"]: (r["hub"], r["authority"]) for r in loc.scores.collect()}
+        b = {r["id"]: (r["hub"], r["authority"]) for r in dist.scores.collect()}
+        assert a.keys() == b.keys()
+        for k in a:
+            assert a[k] == pytest.approx(b[k], abs=1e-12)
+        assert (loc.supersteps, loc.converged) == (dist.supersteps, dist.converged)
 
 
 def test_symmetric_hub_equals_authority(spark):

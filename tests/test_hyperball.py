@@ -101,6 +101,20 @@ def test_hyperball_assume_canonical_parity(spark):
     assert a.neighborhood == b.neighborhood
 
 
+def test_release_frees_every_round_state(spark):
+    """Each round's sketch state is a local checkpoint, which
+    ``DataFrame.unpersist`` cannot free: once the result is consumed and
+    released, no persistent RDD id is left behind."""
+    edges = datagen.edges_df(spark, SHAPES["erdos_renyi"])
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = hyperball(spark, edges)
+    assert res.supersteps > 1
+    res.per_vertex.collect()
+    res.release()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def test_effective_diameter_interpolation():
     # N = [4, 10, 16, 16]: target 0.9*16 = 14.4 lands between r=1 and r=2
     assert _effective_diameter([4.0, 10.0, 16.0, 16.0]) == pytest.approx(

@@ -55,6 +55,23 @@ def test_local_equals_distributed_string_keys(spark):
     assert l == d
     oracle = {f"w{v:03d}": c for v, c in _nx_core(pairs).items()}
     assert l == oracle
+    # plus non-ASCII keys, int64 keys and an empty table: same cores,
+    # same superstep count and the same per-superstep deltas
+    names = ["Z", "a", "é", "z", "中", "\ue000", "\U0001F600", "ÿ"]
+    uni = [(names[a % 8] + str(a // 8), names[b % 8] + str(b // 8))
+           for a, b in datagen.erdos_renyi(30, 0.15, seed=4)]
+    ints = [(a * 1_000_003, b * 1_000_003) for a, b in datagen.erdos_renyi(30, 0.15, seed=5)]
+    for edges in (
+        spark.createDataFrame(uni, "src string, dst string"),
+        spark.createDataFrame(ints, "src long, dst long"),
+        spark.createDataFrame([], "src string, dst string"),
+    ):
+        loc = core_numbers(spark, edges, local=True)
+        dist = core_numbers(spark, edges, local=False)
+        assert ({r["id"]: r["core"] for r in loc.cores.collect()}
+                == {r["id"]: r["core"] for r in dist.cores.collect()})
+        assert loc.supersteps == dist.supersteps
+        assert [m["delta"] for m in loc.metrics] == [m["delta"] for m in dist.metrics]
 
 
 def test_noncanonical_input_collapses(spark):
@@ -114,6 +131,18 @@ def test_run_dir_resume(spark, tmp_path):
     s = {x["id"]: x["core"] for x in straight.cores.collect()}
     assert r == s == _nx_core(pairs)
     assert resumed.converged
+
+
+@pytest.mark.parametrize("local", [True, False], ids=["local", "distributed"])
+def test_capped_run_raises(spark, local):
+    """Below the fixpoint the state is only an upper bound on coreness:
+    both paths raise instead of returning it, and leave nothing pinned."""
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(40, 0.15, seed=13))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        core_numbers(spark, edges, max_iter=1, local=local)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
 def test_distributed_loop_releases_superseded_states(spark):

@@ -18,6 +18,9 @@ OPERATORS = {
     "lpa": ("lpa", "_lpa_body", lambda m, spark, e: m.label_propagation(spark, e)),
     "cc": ("cc", "_cc_body", lambda m, spark, e: m.connected_components(spark, e)),
     "triangles": ("triangles", "_triangle_body", lambda m, spark, e: m.triangles_per_vertex(e)),
+    "hits": ("hits", "_hits_body", lambda m, spark, e: m.hits(spark, e)),
+    "kcore": ("kcore", "_kcore_body", lambda m, spark, e: m.core_numbers(spark, e)),
+    "truss": ("truss", "_truss_body", lambda m, spark, e: m.k_truss(e, 3)),
 }
 
 

@@ -69,20 +69,30 @@ def test_k_truss_matches_networkx(spark, name, k, local):
 def test_local_equals_distributed_string_keys(spark):
     pairs = datagen.erdos_renyi(45, 0.18, seed=3)
     rows = [(f"w{a:03d}", f"w{b:03d}") for a, b in pairs]
-    edges = spark.createDataFrame(rows, ["src", "dst"])
-    for k in (3, 4):
-        loc = {(r["src"], r["dst"]) for r in k_truss(edges, k, local=True).collect()}
-        dist = {(r["src"], r["dst"]) for r in k_truss(edges, k, local=False).collect()}
-        assert loc == dist
-    sup_l = {
-        (r["src"], r["dst"]): r["support"]
-        for r in edge_support(edges, local=True).collect()
-    }
-    sup_d = {
-        (r["src"], r["dst"]): r["support"]
-        for r in edge_support(edges, local=False).collect()
-    }
-    assert sup_l == sup_d
+    # plus non-ASCII keys, int64 keys and an empty table
+    names = ["Z", "a", "é", "z", "中", "\ue000", "\U0001F600", "ÿ"]
+    uni = [(names[a % 8] + str(a // 8), names[b % 8] + str(b // 8))
+           for a, b in datagen.erdos_renyi(24, 0.2, seed=4)]
+    ints = [(a * 1_000_003, b * 1_000_003) for a, b in datagen.erdos_renyi(24, 0.2, seed=5)]
+    for edges in (
+        spark.createDataFrame(rows, ["src", "dst"]),
+        spark.createDataFrame(uni, "src string, dst string"),
+        spark.createDataFrame(ints, "src long, dst long"),
+        spark.createDataFrame([], "src string, dst string"),
+    ):
+        for k in (3, 4):
+            loc = {(r["src"], r["dst"]) for r in k_truss(edges, k, local=True).collect()}
+            dist = {(r["src"], r["dst"]) for r in k_truss(edges, k, local=False).collect()}
+            assert loc == dist
+        sup_l = {
+            (r["src"], r["dst"]): r["support"]
+            for r in edge_support(edges, local=True).collect()
+        }
+        sup_d = {
+            (r["src"], r["dst"]): r["support"]
+            for r in edge_support(edges, local=False).collect()
+        }
+        assert sup_l == sup_d
 
 
 def test_noncanonical_input_collapses(spark):
