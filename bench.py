@@ -408,7 +408,7 @@ def run_bench(sf_dir: str, cpus: int, quiet: bool = True) -> dict:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     result = run_bench(sf_dir, cpus)
     print(json.dumps(result))
 

@@ -6,7 +6,7 @@ Measures, on the same 11M-canonical-edge uniform random string-key
 graph as distributed_paths.py:
 
 1. `alias_tables` build + full materialization (22M directed rows
-   through the mapInPandas partition kernel + the two degree joins);
+   through the mapInArrow partition kernel + the two degree joins);
 2. a weighted walk corpus over it (200k walkers x L=5, shuffle
    strategy — the weighted production path end to end).
 

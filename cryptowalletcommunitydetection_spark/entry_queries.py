@@ -203,12 +203,16 @@ FROM per
 
 
 def _cc_iteration_ctes(iters: int) -> str:
+    """Unrolled min-label rounds. AS MATERIALIZED: every c_k is read
+    twice (directly by c_{k+1} and through m_{k+1}); DuckDB's default
+    CTE inlining would expand the chain 2^iters times (out of memory at
+    8 rounds), materialization keeps it linear."""
     its = []
     for k in range(1, iters + 1):
         its.append(f"""
-m{k} AS (SELECT s.dst AS id, min(c.component) AS mn
+m{k} AS MATERIALIZED (SELECT s.dst AS id, min(c.component) AS mn
          FROM sym s JOIN c{k - 1} c ON s.src = c.id GROUP BY s.dst),
-c{k} AS (SELECT p.id, least(p.component, coalesce(m{k}.mn, p.component)) AS component
+c{k} AS MATERIALIZED (SELECT p.id, least(p.component, coalesce(m{k}.mn, p.component)) AS component
          FROM c{k - 1} p LEFT JOIN m{k} ON p.id = m{k}.id)""")
     return ",".join(its)
 

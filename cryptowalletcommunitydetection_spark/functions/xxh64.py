@@ -4,32 +4,30 @@ over rows).
 Why this exists: the deterministic-walk operators (graph/walks.py) drive
 every transition with Spark ``xxhash64(...)`` column expressions, which
 makes corpora pure functions of (edges, seed) on any partitioning. Their
-single-task replay kernels need the SAME hash values inside numpy. For
-first-order walks the kernel ships the finished hashes in (one Spark
-projection); the second-order node2vec kernel would need A attempts x 3
-channels x L steps hashes per walker — too wide to ship. Instead it
-ships ONE base hash per walker and re-derives the rest, exploiting how
-Spark computes multi-argument hashes:
+single-task replay kernel needs the SAME hash values inside numpy: it
+builds each walker's id ``<start>#<index>`` itself, hashes it
+(``hash_bytes``, the ``xxhash64(walk_id)`` base), and re-derives every
+step hash from that base, exploiting how Spark computes multi-argument
+hashes:
 
     xxhash64(c1, c2, ..., cn)  ==  fold left over the columns with the
     running hash as the next seed, starting from seed 42:
         h = hash(c1, 42); h = hash(c2, h); ...
 
 so ``xxhash64(walk_id, t, att, seed)`` ==
-``hash_int(seed, hash_int(att, hash_int(t, xxhash64(walk_id))))`` — the
-string prefix is computed ONCE by Spark (`F.xxhash64("walk_id")`), and
-the integer/constant-string suffix steps are re-derived here, vectorized
-over uint64 arrays.
+``hash_int(seed, hash_int(att, hash_int(t, xxhash64(walk_id))))``, all
+vectorized over uint64 arrays.
 
-The step functions mirror Spark's XXH64 (xxHash64 finalization spec —
+The step functions mirror Spark's XXH64 (xxHash64 specification —
 public domain; same algorithm in every implementation):
 
 - ``hash_int(i, seed)``: 4-byte branch (IntegerType literals/columns)
 - ``hash_long(v, seed)``: 8-byte branch (LongType)
-- ``hash_bytes_const(bs, seed)``: variable-length branch for a CONSTANT
-  byte string (the 'coin' / 'alias' / 'accept' channel separators) with
-  a VECTOR of seeds — chunk loops run over the constant's length, not
-  over rows.
+- ``hash_bytes(data, seed)``: variable-length branch (StringType's
+  UTF-8 bytes), for a string array (grouped by byte length) or a
+  CONSTANT byte string (the 'coin' / 'alias' / 'accept' channel
+  separators) under a vector of seeds — loops run over byte positions,
+  not over rows.
 
 Bit-exactness against Spark's expressions is pinned by
 tests/test_xxh64.py property tests (random ints/longs/strings compared
@@ -63,6 +61,10 @@ def _fmix(h: np.ndarray) -> np.ndarray:
     return h
 
 
+def _round(acc, lane):
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
 def _u64(x) -> np.ndarray:
     """int64-ish input -> uint64 bit pattern (vector or scalar)."""
     return np.asarray(x).astype(np.int64).view(np.uint64)
@@ -87,39 +89,76 @@ def hash_long(v, seed) -> np.ndarray:
     """XXH64 of one 8-byte long, seed may be a uint64 vector."""
     with np.errstate(over="ignore"):
         h = np.asarray(seed, dtype=np.uint64) + _P5 + np.uint64(8)
-        k = _u64(v)
-        h = h ^ (_rotl(k * _P2, 31) * _P1)
+        h = h ^ _round(np.uint64(0), _u64(v))
         h = _rotl(h, 27) * _P1 + _P4
         return _fmix(h)
 
 
-def hash_bytes_const(bs: bytes, seed) -> np.ndarray:
-    """XXH64 of a constant byte string (< 32 bytes) under a seed vector.
-
-    The chunk loops iterate over the CONSTANT's bytes, so the work is
-    O(len(bs)) vector operations regardless of row count. Lengths >= 32
-    would enter the four-lane stripe loop, which constant channel
-    separators never reach — guarded explicitly."""
-    if len(bs) >= 32:
-        raise ValueError("hash_bytes_const supports < 32-byte constants")
+def _hash_rows(m: np.ndarray, seed) -> np.ndarray:
+    """XXH64 of each row of the uint8 matrix ``m`` (every row one
+    message of ``m.shape[1]`` bytes) under a seed vector; a one-row
+    ``m`` broadcasts against the seeds. The loops run over the byte
+    positions, so the work is O(length) vector operations."""
+    n = m.shape[1]
+    seed = np.asarray(seed, dtype=np.uint64)
+    words = np.ascontiguousarray(m[:, :n - n % 8]).view("<u8").astype(np.uint64)
+    i = 0
     with np.errstate(over="ignore"):
-        h = np.asarray(seed, dtype=np.uint64) + _P5 + np.uint64(len(bs))
-        i = 0
-        while len(bs) - i >= 8:
-            k1 = np.uint64(int.from_bytes(bs[i:i + 8], "little"))
-            h = h ^ (_rotl(k1 * _P2, 31) * _P1)
+        if n >= 32:  # the four-lane stripe loop
+            v = [seed + _P1 + _P2, seed + _P2, seed, seed - _P1]
+            while n - i >= 32:
+                v = [_round(v[j], words[:, i // 8 + j]) for j in range(4)]
+                i += 32
+            h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+            for lane in v:
+                h = (h ^ _round(np.uint64(0), lane)) * _P1 + _P4
+        else:
+            h = seed + _P5
+        h = h + np.uint64(n)
+        while n - i >= 8:
+            h = h ^ _round(np.uint64(0), words[:, i // 8])
             h = _rotl(h, 27) * _P1 + _P4
             i += 8
-        if len(bs) - i >= 4:
-            k = np.uint64(int.from_bytes(bs[i:i + 4], "little"))
+        if n - i >= 4:
+            k = np.ascontiguousarray(m[:, i:i + 4]).view("<u4").astype(np.uint64)[:, 0]
             h = h ^ (k * _P1)
             h = _rotl(h, 23) * _P2 + _P3
             i += 4
-        while i < len(bs):
-            h = h ^ (np.uint64(bs[i]) * _P5)
+        while i < n:
+            h = h ^ (m[:, i].astype(np.uint64) * _P5)
             h = _rotl(h, 11) * _P1
             i += 1
         return _fmix(h)
+
+
+def hash_bytes(data, seed) -> np.ndarray:
+    """XXH64 of byte strings: Spark's hash of a StringType / BinaryType
+    value (its UTF-8 bytes).
+
+    ``data`` is either one constant ``bytes`` hashed under a seed
+    vector (the 'coin' / 'alias' / 'accept' channel separators), or a
+    pyarrow string / binary array without nulls, hashed row by row
+    under ``seed`` (a scalar or one seed per row). Rows are grouped by
+    byte length, and each group is one ``_hash_rows`` matrix."""
+    if isinstance(data, bytes):
+        return _hash_rows(np.frombuffer(data, dtype=np.uint8)[None, :], seed)
+    import pyarrow as pa
+
+    arr = data.cast(pa.large_binary())
+    off = np.frombuffer(arr.buffers()[1], dtype=np.int64)[arr.offset:arr.offset + len(arr) + 1]
+    buf = arr.buffers()[2]
+    raw = np.frombuffer(buf, dtype=np.uint8) if buf is not None else np.zeros(0, np.uint8)
+    lengths = np.diff(off)
+    seeds = np.broadcast_to(np.asarray(seed, dtype=np.uint64), lengths.shape)
+    out = np.empty(len(lengths), dtype=np.uint64)
+    for n in np.unique(lengths):
+        rows = np.flatnonzero(lengths == n)
+        m = (
+            np.lib.stride_tricks.sliding_window_view(raw, n)[off[rows]]
+            if n else np.zeros((len(rows), 0), np.uint8)
+        )
+        out[rows] = _hash_rows(m, seeds[rows])
+    return out
 
 
 def hash_py_int(i: int, seed) -> np.ndarray:

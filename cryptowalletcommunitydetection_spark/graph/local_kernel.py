@@ -1,10 +1,10 @@
 """The single-task Arrow boundary of the small-graph kernels.
 
 Below their size gates, PageRank, label propagation, connected
-components, triangle counting, HITS, k-core and k-truss (with edge
-support) run as one vectorized numpy task instead of a distributed
-loop. ``run_kernel`` owns what they share, so
-each operator keeps only its numpy body:
+components, triangle counting, HITS, k-core, k-truss (with edge
+support) and the random-walk / node2vec corpora run as one vectorized
+numpy task instead of a distributed loop. ``run_kernel`` owns what they
+share, so each operator keeps only its numpy body:
 
 - the input is the caller's edge rows as they stand (the canonical
   table for undirected operators: no Spark-side symmetrization,
@@ -14,12 +14,14 @@ each operator keeps only its numpy body:
   pyarrow ``unique`` / ``sort_indices`` for strings (UTF-8 byte order,
   which is Spark's ``UTF8String`` order), ``np.unique`` for integers,
   then ``index_in``;
-- the body returns the complete result table, vertex ids as codes, and
+- the body returns the complete result table, vertex ids as codes (a
+  code matrix for a field holding an array of ids, such as a walk), and
   one JSON meta record; both leave through one local checkpoint that
   the single read of the meta record materializes.
 
-The task and the bodies are closures shipped by value, so no worker
-imports this package.
+The task and the bodies are closures shipped by value; only the walk
+body imports package helpers (the XXH64 chain, the alias build) on the
+worker.
 """
 
 from __future__ import annotations
@@ -35,6 +37,11 @@ from ..plans.checkpoint import release_local_checkpoint
 KEY = "key"
 """Result field type meaning "a vertex id": the body returns codes, the
 boundary turns them back into keys of the edge table's id type."""
+
+KEYS = "keys"
+"""Result field type meaning "an array of vertex ids": the body returns
+a 2-D code matrix (one row per result row), the boundary a list of keys
+per row."""
 
 
 class KernelOutput(NamedTuple):
@@ -65,21 +72,23 @@ def run_kernel(
     ``fields`` (``KEY`` fields as codes) and a JSON-able dict, whose
     ``"error"`` entry fails the call with that ``ValueError``.
 
-    ``fields`` maps result names to ``KEY`` or a Spark type. ``rows``
+    ``fields`` maps result names to ``KEY``, ``KEYS`` or a Spark type
+    (the body may return a pyarrow array for the latter). ``rows``
     reads the local checkpoint ``pinned``; release it with
     ``release_local_checkpoint`` once ``rows`` is no longer needed. A
     failing body leaves nothing pinned. With ``fields=None`` nothing is
     pinned and the call is one job that returns the meta record.
     """
     from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     key_type = edges.schema["src"].dataType
     fields = fields or {}
     names = list(fields)
-    value_types = {c: to_arrow_type(t) for c, t in fields.items() if t != KEY}
+    value_types = {c: to_arrow_type(t) for c, t in fields.items() if t not in (KEY, KEYS)}
+    spark_types = {KEY: key_type, KEYS: ArrayType(key_type)}
     out_schema = StructType(
-        [StructField(c, key_type if t == KEY else t) for c, t in fields.items()]
+        [StructField(c, spark_types.get(t, t)) for c, t in fields.items()]
         + [StructField("_meta", StringType())]
     )
 
@@ -138,17 +147,25 @@ def run_kernel(
         cols, meta = body(SimpleNamespace(
             ids=ids, n=len(ids), src=src, dst=dst, weight=wt, values=chans,
         ))
+        key_types = {KEY: ids.type, KEYS: pa.list_(ids.type)}
+
+        def keys_of(c):
+            if fields[c] == KEY:
+                return ids.take(pa.array(cols[c], pa.int64()))
+            m = np.asarray(cols[c], dtype=np.int64)
+            offsets = pa.array(np.arange(len(m) + 1) * m.shape[1], pa.int32())
+            return pa.ListArray.from_arrays(offsets, ids.take(pa.array(m.ravel())))
+
         if names and "error" not in meta:
             arrays = [
-                pa.array(cols[c], value_types[c]) if c in value_types
-                else ids.take(pa.array(cols[c], pa.int64()))
+                pa.array(cols[c], value_types[c]) if c in value_types else keys_of(c)
                 for c in names
             ]
             yield pa.RecordBatch.from_arrays(
                 arrays + [pa.nulls(len(arrays[0]), pa.string())], names=names + ["_meta"]
             )
         yield pa.RecordBatch.from_arrays(
-            [pa.nulls(1, value_types.get(c, ids.type)) for c in names]
+            [pa.nulls(1, value_types.get(c) or key_types[fields[c]]) for c in names]
             + [pa.array([json.dumps(meta)])],
             names=names + ["_meta"],
         )

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.checkpoint import release_local_checkpoint
 from .edges import canonicalize_edges, symmetrize
 
 
@@ -84,45 +85,47 @@ def multi_source_distances(
         )
     else:
         frontier = src0.select("id", F.lit(0).alias("dist"))
-    frontier = frontier.localCheckpoint(eager=True)
-    settled = frontier
-    prev_pins: list[DataFrame] = []
-
-    for _ in range(max_iter):
-        cand = (
-            frontier.join(e, frontier.id == e.src)
-            .select(
-                F.col("dst").alias("id"),
-                *(["source"] if per_source else []),
-                (F.col("dist") + 1).alias("dist"),
+    settled = frontier = frontier.localCheckpoint(eager=True)
+    new = None
+    try:
+        for _ in range(max_iter):
+            cand = (
+                frontier.join(e, frontier.id == e.src)
+                .select(
+                    F.col("dst").alias("id"),
+                    *(["source"] if per_source else []),
+                    (F.col("dist") + 1).alias("dist"),
+                )
+                # min-combine BEFORE the anti-join probe: map-side partial
+                # agg collapses the neighborhood stream to one row per key
+                .groupBy(*key)
+                .agg(F.min("dist").alias("dist"))
             )
-            # min-combine BEFORE the anti-join probe: map-side partial
-            # agg collapses the neighborhood stream to one row per key
-            .groupBy(*key)
-            .agg(F.min("dist").alias("dist"))
-        )
-        new = cand.join(settled, key, "left_anti")
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        settled_next = settled.unionByName(new).localCheckpoint(eager=True)
-        # the new settled table is materialized: release the superseded
-        # pins (frontier feeds the union lazily only until its checkpoint)
-        for p in prev_pins:
-            p.unpersist()
-        prev_pins = [settled, frontier]
-        settled, frontier = settled_next, new
-    else:
+            new = cand.join(settled, key, "left_anti").localCheckpoint(eager=True)
+            if new.isEmpty():
+                return settled
+            settled_next = settled.unionByName(new).localCheckpoint(eager=True)
+            # both new checkpoints are materialized: the superseded
+            # settled table and frontier are no longer read
+            release_local_checkpoint(settled)
+            if frontier is not settled:
+                release_local_checkpoint(frontier)
+            settled, frontier = settled_next, new
         raise RuntimeError(
             f"BFS frontier did not drain within max_iter={max_iter} "
             "supersteps — the graph's diameter exceeds the cap; re-run "
             "with a higher max_iter"
         )
-
-    e.unpersist()
-    for p in prev_pins:
-        p.unpersist()
-    return settled
+    except BaseException:
+        release_local_checkpoint(settled)
+        raise
+    finally:
+        e.unpersist()
+        # the empty last frontier, and the one before it unless it is
+        # the result itself (a first round that settles nothing new)
+        for p in (new, frontier):
+            if p is not None and p is not settled:
+                release_local_checkpoint(p)
 
 
 def eccentricity_lower_bound(

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..plans.checkpoint import release_local_checkpoint
 from .local_kernel import KEY, run_kernel
 from .triangles import (
     LOCAL_TRI_MAX_EDGES, _canonical, _closed_wedges_of, _oriented, _wedge_enumerator,
@@ -161,35 +162,41 @@ def k_truss(
 
 def _distributed_k_truss(e: DataFrame, k: int) -> DataFrame:
     """Peel loop over the canonical edge table, which it reads once into
-    the first round's checkpoint."""
+    the first round's checkpoint. Each round is a local checkpoint,
+    released once the next one is counted; only the result's stays."""
     threshold = k - 2
     cur = e.localCheckpoint(eager=True)
-    n_prev = cur.count()
-    for _ in range(_MAX_PEEL_ROUNDS):
-        if n_prev == 0:
-            break
-        d = _oriented(cur).persist()
-        try:
-            sup = (
-                _triangle_edge_pairs(d)
-                .groupBy("src", "dst")
-                .agg(F.count(F.lit(1)).alias("support"))
-            )
-            # inner join: edges closing zero triangles have no support
-            # row and are peeled implicitly (threshold >= 1 here)
-            nxt = (
-                cur.join(sup, ["src", "dst"])
-                .filter(F.col("support") >= threshold)
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            d.unpersist()
-        n = nxt.count()
-        cur = nxt
-        if n == n_prev:
-            break
-        n_prev = n
+    try:
+        n_prev = cur.count()
+        for _ in range(_MAX_PEEL_ROUNDS):
+            if n_prev == 0:
+                break
+            d = _oriented(cur).persist()
+            try:
+                sup = (
+                    _triangle_edge_pairs(d)
+                    .groupBy("src", "dst")
+                    .agg(F.count(F.lit(1)).alias("support"))
+                )
+                # inner join: edges closing zero triangles have no support
+                # row and are peeled implicitly (threshold >= 1 here)
+                nxt = (
+                    cur.join(sup, ["src", "dst"])
+                    .filter(F.col("support") >= threshold)
+                    .select("src", "dst")
+                    .localCheckpoint(eager=True)
+                )
+            finally:
+                d.unpersist()
+            n = nxt.count()
+            release_local_checkpoint(cur)
+            cur = nxt
+            if n == n_prev:
+                break
+            n_prev = n
+    except BaseException:
+        release_local_checkpoint(cur)
+        raise
     return cur
 
 

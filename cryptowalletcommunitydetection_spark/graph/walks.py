@@ -41,9 +41,17 @@ lookup exists — O(L) supersteps total, the same iterative-join shape
 as PageRank/CC/LPA. Step outputs accumulate as (walk_id, step, vertex)
 rows and are assembled into sequences by one final group, so the
 frontier never carries an O(t) prefix array through the exchanges.
-Every frontier is persisted until the output is pinned: the final
-assembly references all L step tables, and unpinned lazy frontiers
-would re-run the whole join chain per step table (O(L²) recompute).
+Every frontier is an eager local checkpoint, released once the output
+is pinned: the final assembly references all L step tables, and
+unpinned lazy frontiers would re-run the whole join chain per step
+table (O(L²) recompute).
+
+Below the local gates (``LOCAL_WALK_MAX_*``) the corpus is instead ONE
+``run_kernel`` task (graph/local_kernel.py, the Arrow boundary every
+small-graph kernel shares): the task derives the walkers from their
+starts, hashes their walk ids with functions/xxh64.py and replays every
+step as numpy gathers, byte-identical to the distributed loop. The
+module's only Python task of its own is the alias-table build.
 
 Walks on the symmetrized undirected graph never hit a dead end (every
 vertex that appears in an edge has degree >= 1 in both directions), so
@@ -54,8 +62,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from ..plans.checkpoint import release_local_checkpoint
 from .edges import canonicalize_edges, degrees, symmetrize
+from .local_kernel import KEY, KEYS, run_kernel
 
 _COIN_DENOM = 1 << 53
 """Hash-coin resolution: xxhash64 folded into [0, 1) at double
@@ -134,8 +145,8 @@ walk_length): below this AND the adjacency gate the whole corpus is
 generated in ONE Arrow task instead of L serial join barriers. The
 distributed loop's wall at small scale is ~L fixed stage barriers (the
 sf0.1 headline measured 10.2s for 16k walkers x L=10 — barrier-bound,
-not data-bound); the kernel replaces them with one hash-projection scan
-plus a single vectorized replay. MEASURED crossover
+not data-bound); the kernel replaces them with one task that hashes and
+replays every walk. MEASURED crossover
 (bench_scripts/walks_crossover.py, fresh JVM per level, min of 2,
 full-corpus L=10 on uniform random string-keyed graphs): 1M cells
 local 3.7s vs best-distributed 9.8s; 4M cells 14.5 vs 28.0; 8M cells
@@ -155,385 +166,165 @@ adjacency build+layout, so above this bound the broadcast strategy's
 cached-adjacency scan wins."""
 
 
-def _walk_marked_stream(adj, walkers, weighted, ranked, raw_weight=False):
-    """Pack adjacency + walker rows into ONE unioned stream for a
-    single-task replay kernel (``walk_id`` null = adjacency row).
-
-    ``raw_weight=True`` ships the RAW edge weight in the ``prob`` slot
-    (``alias_dst`` rides null) and the kernel builds the Walker alias
-    arrays itself via ``_alias_core`` — the same vectorized
-    construction the Spark-side build runs, on the same dst-sorted
-    segment order, so (prob, alias) come out bit-identical while the
-    local path skips the build's repartition/sort/degree-join plan
-    entirely (the former weighted-local prep cost).
-
-    Column encodings are all Arrow-hazard-driven (shared by both
-    kernels; measured in BENCH/BASELINE.md):
-
-    - ``base`` (the per-walker ``xxhash64(walk_id)``) rides as a
-      DECIMAL STRING: a nullable long column reaches pandas as float64
-      through the union, which silently corrupts 64-bit hash values;
-      a null ARRAY column would cost 14-17s per 1.17M adjacency rows
-      in Spark's Arrow writer, while a null string costs ~0.3s.
-    - For INTEGRAL vertex ids, ``dst``/``alias_dst`` also ride as
-      strings: they are null on walker rows, so a mixed batch would
-      float64-corrupt any id >= 2^53 (e.g. 64-bit hash-keyed
-      vertices). ``src`` is non-null on BOTH row kinds and keeps its
-      native type. String ids need no re-encoding (object dtype).
-    - ``rank`` stays a nullable long: ranks are bounded by the max
-      degree < 2^53, so the float64 round-trip is exact.
-
-    Returns (marked, out_schema, int_ids).
-    """
-    from pyspark.sql.types import (
-        ArrayType, ByteType, IntegerType, LongType, ShortType,
-        StringType, StructField, StructType,
-    )
-
-    id_type = adj.schema["src"].dataType
-    id_t = id_type.simpleString()
-    int_ids = isinstance(
-        id_type, (ByteType, ShortType, IntegerType, LongType)
-    )
-    ship_t = "string" if int_ids else id_t
-    out_schema = StructType([
-        StructField("walk_id", StringType()),
-        StructField("start", id_type),
-        StructField("seq", ArrayType(id_type)),
-    ])
-    # raw_weight ships no alias_dst at all (the kernel derives the
-    # alias arrays itself) — one less Arrow column per adjacency row
-    alias_a = (
-        []
-        if raw_weight
-        else [(
-            F.col("alias_dst").cast(ship_t)
-            if weighted
-            else F.lit(None).cast(ship_t)
-        ).alias("alias_dst")]
-    )
-    alias_w = (
-        [] if raw_weight
-        else [F.lit(None).cast(ship_t).alias("alias_dst")]
-    )
-    a = adj.select(
-        "src",
-        F.col("dst").cast(ship_t).alias("dst"),
-        (
-            F.col("rank").cast("long") if ranked else F.lit(None).cast("long")
-        ).alias("rank"),
-        (
-            F.col("weight").cast("double")
-            if raw_weight
-            else (F.col("prob") if weighted else F.lit(None).cast("double"))
-        ).alias("prob"),
-        *alias_a,
-        F.lit(None).cast("string").alias("walk_id"),
-        F.lit(None).cast("string").alias("base"),
-    )
-    w = walkers.select(
-        F.col("start").alias("src"),
-        F.lit(None).cast(ship_t).alias("dst"),
-        F.lit(None).cast("long").alias("rank"),
-        F.lit(None).cast("double").alias("prob"),
-        *alias_w,
-        "walk_id",
-        F.col("base").cast("string").alias("base"),
-    )
-    return a.unionByName(w), out_schema, int_ids
+_CORPUS_FIELDS = {"walk_id": StringType(), "start": KEY, "seq": KEYS}
 
 
-def _decode_walk_stream(batches, weighted, ranked, int_ids,
-                        raw_weight=False):
-    """Kernel-side decode of a ``_walk_marked_stream`` batch iterator
-    into the CSR + walker arrays both replay kernels consume.
+def _local_corpus(
+    canon: DataFrame,
+    starts: DataFrame | None,
+    num_walks: int,
+    walk_length: int,
+    weighted: bool,
+    steps,
+) -> DataFrame:
+    """The ``strategy="local"`` corpus: ONE ``run_kernel`` task over the
+    canonical edges (with their weights when ``weighted``, and with the
+    start ids as a value channel when ``starts`` is given).
 
-    Returns None when either side is empty, else a dict with:
-    ids (sorted unique vertex ids), deg, offsets, dst_s (CSR neighbor
-    codes, rank order within each source block), prob_s/alias_s
-    (weighted only), wid (walk ids), base (uint64 per-walker hash),
-    cur (start codes) — walkers whose start has no adjacency row are
-    already dropped (the distributed frontier's inner-degree-join
-    contract).
-    """
-    import numpy as np
-    import pandas as pd
+    A walker is a pure function of its start vertex and walk index, so
+    the task derives the walkers itself: the distinct starts present in
+    the graph (every vertex without ``starts``), their walk ids
+    ``<start>#<index>`` (pyarrow, the ``concat_ws`` of the distributed
+    frontier) and each id's base hash ``xxhash64(walk_id)``
+    (functions/xxh64.py). The body symmetrizes the edges and CSR-sorts
+    them by (src, dst) code. Codes are in id order, which is
+    ``ranked_adjacency``'s rank order, and weighted walks build their
+    alias tables with ``_alias_core`` on that same order: the tables
+    are the ones the distributed strategies join against, bit for bit.
+    ``steps(adj, base, cur)`` replays the walks from there and returns
+    the (walkers x walk_length) code matrix."""
+    has_starts = starts is not None  # the body must not capture frames
 
-    a_src, a_dst, a_rank, a_prob, a_alias = [], [], [], [], []
-    k_id, k_start, k_base = [], [], []
+    def body(g):
+        from types import SimpleNamespace
 
-    def _ids(col):
-        # integral ids shipped as strings decode exactly; see
-        # _walk_marked_stream on why they cannot ride as longs
-        return col.astype(np.int64).to_numpy() if int_ids else col.to_numpy()
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    for pdf in batches:
-        isw = pdf["walk_id"].notna()
-        arows = pdf.loc[~isw]
-        if len(arows):
-            a_src.append(_ids(arows["src"]) if int_ids else arows["src"].to_numpy())
-            a_dst.append(_ids(arows["dst"]))
-            if ranked:
-                a_rank.append(arows["rank"].to_numpy(dtype=np.int64))
-            if weighted:
-                a_prob.append(arows["prob"].to_numpy(dtype=np.float64))
-                if not raw_weight:
-                    a_alias.append(_ids(arows["alias_dst"]))
-        wrows = pdf.loc[isw]
-        if len(wrows):
-            k_id.append(wrows["walk_id"].to_numpy())
-            k_start.append(
-                _ids(wrows["src"]) if int_ids else wrows["src"].to_numpy()
-            )
-            k_base.append(wrows["base"].astype(np.int64).to_numpy())
-    if not k_id or not a_src:
-        return None
-    src = np.concatenate(a_src)
-    dst = np.concatenate(a_dst)
-    rank = np.concatenate(a_rank) if ranked else None
-    alias = (
-        np.concatenate(a_alias) if weighted and not raw_weight else None
-    )
-    starts = np.concatenate(k_start)
-    parts = [src, dst] + ([alias] if alias is not None else []) + [starts]
-    keys = np.concatenate(parts)
-    # id-sorted dense codes (the pagerank-kernel indexing pattern);
-    # sorted order doubles as the implicit rank order when ranked=False
-    if keys.dtype == object:
-        codes, uniques = pd.factorize(keys)
-        order_u = np.argsort(uniques)
-        pos = np.empty(len(order_u), dtype=np.int64)
-        pos[order_u] = np.arange(len(order_u))
-        inv = pos[codes]
-        ids = uniques[order_u]
-    else:
-        ids, inv = np.unique(keys, return_inverse=True)
-    n_e = len(src)
-    src_i = inv[:n_e]
-    dst_i = inv[n_e:2 * n_e]
-    off = 2 * n_e
-    alias_i = None
-    if alias is not None:
-        alias_i = inv[off:off + n_e]
-        off += n_e
-    start_i = inv[off:]
-    n = len(ids)
-    deg = np.bincount(src_i, minlength=n)
-    # CSR layout: rows grouped by source code, rank order within
-    # (without an explicit rank, id-sorted dst codes ARE the rank
-    # order — ranked_adjacency's window is orderBy(dst))
-    order = np.lexsort((rank if ranked else dst_i, src_i))
-    dst_s = dst_i[order]
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=offsets[1:])
-    if weighted and raw_weight:
-        # in-kernel Walker build: same vectorized construction, same
-        # dst-sorted segment order as the Spark-side build -> the
-        # (prob, alias) arrays are bit-identical (parity test-pinned)
-        w_s = np.concatenate(a_prob)[order]
-        prob_s, alias_rows, _ = _alias_core(src_i[order], w_s)
-        out = {
-            "ids": ids, "deg": deg, "offsets": offsets, "dst_s": dst_s,
-            "prob_s": prob_s, "alias_s": dst_s[alias_rows],
-        }
-    else:
-        out = {
-            "ids": ids, "deg": deg, "offsets": offsets, "dst_s": dst_s,
-            "prob_s": np.concatenate(a_prob)[order] if weighted else None,
-            "alias_s": alias_i[order] if weighted else None,
-        }
-    ok = deg[start_i] > 0
-    out["wid"] = np.concatenate(k_id)[ok]
-    out["base"] = np.concatenate(k_base)[ok].view(np.uint64)
-    out["cur"] = start_i[ok].copy()
-    return out
-
-
-def _emit_corpus(ids, wid, seq_c):
-    """Chunked (walk_id, start, seq) emission shared by both kernels."""
-    import pandas as pd
-
-    id_mat = ids[seq_c]
-    start_ids = ids[seq_c[:, 0]]
-    chunk = 65536
-    for i in range(0, len(wid), chunk):
-        yield pd.DataFrame(
-            {
-                "walk_id": wid[i:i + chunk],
-                "start": start_ids[i:i + chunk],
-                "seq": [r.tolist() for r in id_mat[i:i + chunk]],
-            }
+        from cryptowalletcommunitydetection_spark.functions.xxh64 import (
+            SPARK_DEFAULT_SEED,
+            hash_bytes,
         )
 
+        src, dst = np.concatenate([g.src, g.dst]), np.concatenate([g.dst, g.src])
+        order = np.lexsort((dst, src))
+        src, dst = src[order], dst[order]
+        deg = np.bincount(src, minlength=g.n)
+        adj = SimpleNamespace(deg=deg, offsets=np.r_[0, np.cumsum(deg)], dst=dst)
+        if weighted and len(src):
+            w = np.ones(len(g.src)) if g.weight is None else g.weight
+            adj.prob, alias_rows, _ = _alias_core(src, np.concatenate([w, w])[order])
+            adj.alias = dst[alias_rows]
+        if has_starts:  # distinct, and -1 (not in the graph) dropped
+            first = np.unique(g.values[0][0])
+            first = first[first >= 0]
+        else:
+            first = np.arange(g.n)
+        first = first[deg[first] > 0]
+        cur = np.repeat(first, num_walks)
+        walk_id = pc.binary_join_element_wise(
+            pc.cast(g.ids.take(pa.array(cur)), pa.string()),
+            pc.cast(pa.array(np.tile(np.arange(num_walks), len(first))), pa.string()),
+            "#",
+        )
+        seq = (
+            steps(adj, hash_bytes(walk_id, SPARK_DEFAULT_SEED), cur)
+            if len(cur) else np.zeros((0, walk_length), np.int64)
+        )
+        return {"walk_id": walk_id, "start": cur, "seq": seq}, {"walkers": len(cur)}
 
-def _empty_corpus():
-    import pandas as pd
+    values = (starts.select("id", F.lit(None).alias("value")),) if has_starts else ()
+    return run_kernel(
+        canon, body, _CORPUS_FIELDS,
+        weight=weighted and "weight" in canon.columns, values=values,
+    ).rows
 
-    return pd.DataFrame({"walk_id": [], "start": [], "seq": []})
+
+def _coin(h):
+    """A hash folded into [0, 1) (Spark: ``pmod(h, 2^53) / 2^53``)."""
+    from cryptowalletcommunitydetection_spark.functions.xxh64 import pmod_u64
+
+    return pmod_u64(h, _COIN_DENOM).astype("float64") / float(_COIN_DENOM)
 
 
-def _local_random_walks(
-    adj: DataFrame,
-    walkers: DataFrame,
-    weighted: bool,
-    walk_length: int,
-    seed: int,
-    ranked: bool = True,
-    raw_weight: bool = False,
-):
-    """Single-task corpus replay over the (small) adjacency table.
+def _random_walk_steps(walk_length: int, seed: int, weighted: bool):
+    """The local replay of ``random_walks``' transitions.
 
     The step-t transition of the distributed loop is
-    ``pmod(xxhash64(walk_id, t, seed), degree(cur))`` — a pure function
-    of (walk_id, t, seed) modulo a table lookup. Walkers ship ONE hash
-    (``base = xxhash64(walk_id)``); the kernel re-derives every step
-    hash/coin through the Spark-bit-exact chain in functions/xxh64.py
-    (``xxhash64(walk_id, t, seed[, 'coin'])`` folds left with the
-    running hash as the next seed; the seed literal's int-vs-long
-    typing is mirrored by ``hash_py_int`` — all pinned by
-    tests/test_xxh64.py) and replays the walk as vectorized numpy
-    gathers: the corpus is byte-identical to the distributed
-    strategies by construction (parity-pinned in test_walks), with
-    zero per-step stage barriers.
+    ``pmod(xxhash64(walk_id, t, seed), degree(cur))`` (plus a
+    ``xxhash64(walk_id, t, seed, 'coin')`` coin between the alias row's
+    two outcomes when weighted). The replay re-derives both from the
+    walker's base hash through the Spark-bit-exact chain in
+    functions/xxh64.py (the hash folds left with the running hash as
+    the next seed; the seed literal's int-vs-long typing is mirrored by
+    ``hash_py_int``) and takes each step as one vectorized gather, so
+    the corpus is byte-identical to the distributed strategies
+    (parity-pinned in test_walks)."""
 
-    Input protocol, column encodings (Arrow hazards) and the
-    ``ranked=False`` implicit-rank contract live in
-    ``_walk_marked_stream`` / ``_decode_walk_stream`` (shared with the
-    node2vec kernel). ``coalesce(1)`` narrowly merges the partitions;
-    nothing shuffles.
-    """
-    marked, out_schema, int_ids = _walk_marked_stream(
-        adj, walkers, weighted, ranked, raw_weight=raw_weight
-    )
-
-    def kernel(batches):
+    def steps(adj, base, cur):
         import numpy as np
 
         from cryptowalletcommunitydetection_spark.functions.xxh64 import (
-            hash_bytes_const,
+            hash_bytes,
             hash_int,
             hash_py_int,
             pmod_u64,
         )
 
-        g = _decode_walk_stream(
-            batches, weighted, ranked, int_ids, raw_weight=raw_weight
-        )
-        if g is None:
-            yield _empty_corpus()
-            return
-        deg, offsets, dst_s = g["deg"], g["offsets"], g["dst_s"]
-        prob_s, alias_s = g["prob_s"], g["alias_s"]
-        base, cur = g["base"], g["cur"]
-        n_w = len(cur)
-        if n_w == 0:
-            yield _empty_corpus()
-            return
-        seq_c = np.empty((n_w, walk_length), dtype=np.int64)
-        seq_c[:, 0] = cur
-        denom = float(_COIN_DENOM)
+        seq = np.empty((len(cur), walk_length), dtype=np.int64)
+        seq[:, 0] = cur
         for t in range(1, walk_length):
-            # xxhash64(walk_id, t, seed) re-derived from the shipped
-            # base; pmod via numpy % (sign follows the positive
-            # divisor, matching Spark pmod)
             h_t = hash_py_int(seed, hash_int(t, base))
-            r = pmod_u64(h_t, deg[cur])
-            row = offsets[cur] + r
+            row = adj.offsets[cur] + pmod_u64(h_t, adj.deg[cur])
+            nxt = adj.dst[row]
             if weighted:
-                # xxhash64(walk_id, t, seed, 'coin')
-                coin = pmod_u64(
-                    hash_bytes_const(b"coin", h_t), _COIN_DENOM
-                ).astype(np.float64) / denom
-                take = coin < prob_s[row]
-                nxt = np.where(take, dst_s[row], alias_s[row])
-            else:
-                nxt = dst_s[row]
-            seq_c[:, t] = nxt
-            cur = nxt
-        yield from _emit_corpus(g["ids"], g["wid"], seq_c)
+                take = _coin(hash_bytes(b"coin", h_t)) < adj.prob[row]
+                nxt = np.where(take, nxt, adj.alias[row])
+            seq[:, t] = cur = nxt
+        return seq
 
-    return marked.coalesce(1).mapInPandas(kernel, out_schema)
+    return steps
 
 
-
-def _local_node2vec_walks(
-    adj: DataFrame,
-    walkers: DataFrame,
-    weighted: bool,
-    walk_length: int,
-    seed: int,
-    w_ret: float,
-    w_stay: float,
-    w_far: float,
-    max_attempts: int,
-    ranked: bool = True,
-    raw_weight: bool = False,
+def _node2vec_steps(
+    walk_length: int, seed: int, weighted: bool,
+    w_ret: float, w_stay: float, w_far: float, max_attempts: int,
 ):
-    """Single-task replay of the node2vec rejection-sampling rounds.
+    """The local replay of ``node2vec_walks``' rejection-sampling rounds.
 
-    Same stream protocol as ``_local_random_walks`` (see
-    ``_walk_marked_stream`` / ``_decode_walk_stream``). The A-attempt x
-    3-channel x L-step hash tensor is re-derived from the per-walker
-    base hash through the Spark-bit-exact chain in functions/xxh64.py
-    (``xxhash64(walk_id, t, att, seed[, ch])`` folds left with the
-    running hash as the next seed; seed literal typing mirrored by
-    ``hash_py_int``). The membership test (is x a neighbor of prev) is
-    a vectorized binary search per walker in the CSR block of ``prev``
-    — within-block order is dst-id order on BOTH adjacency flavors
-    (``ranked=False`` raw symmetric edges get code-sorted here; alias
-    tables rank dst-sorted at build), which equals dst-code order
-    because codes are id-sorted.
+    The A-attempt x 3-channel x L-step hash tensor
+    ``xxhash64(walk_id, t, att, seed[, channel])`` is re-derived from
+    the walker's base hash as in ``_random_walk_steps``. The membership
+    test (is x a neighbor of prev) is a vectorized binary search per
+    walker in the CSR block of ``prev``, whose dst codes are sorted.
 
     Semantics replayed exactly (parity-pinned in test_walks): step 1 is
     one uniform (weighted: alias-drawn) proposal; steps >= 2 accept the
     FIRST attempt whose 'accept' coin clears w/max_w, falling back to
     attempt 0's proposal when all reject; weighted proposals draw
-    through the alias coin ('alias' channel) before acceptance.
-    """
-    marked, out_schema, int_ids = _walk_marked_stream(
-        adj, walkers, weighted, ranked, raw_weight=raw_weight
-    )
-    w_max_k = max(w_ret, w_stay, w_far)
+    through the alias coin ('alias' channel) before acceptance."""
+    w_max = max(w_ret, w_stay, w_far)
 
-    def kernel(batches):
+    def steps(adj, base, cur):
         import numpy as np
 
         from cryptowalletcommunitydetection_spark.functions.xxh64 import (
-            hash_bytes_const,
+            hash_bytes,
             hash_int,
             hash_py_int,
             pmod_u64,
         )
 
-        g = _decode_walk_stream(
-            batches, weighted, ranked, int_ids, raw_weight=raw_weight
-        )
-        if g is None:
-            yield _empty_corpus()
-            return
-        deg, offsets, dst_s = g["deg"], g["offsets"], g["dst_s"]
-        prob_s, alias_s = g["prob_s"], g["alias_s"]
-        base, cur = g["base"], g["cur"]
-        n_w = len(cur)
-        if n_w == 0:
-            yield _empty_corpus()
-            return
-
-        denom = float(_COIN_DENOM)
-
-        def frac(h):
-            return pmod_u64(h, _COIN_DENOM).astype(np.float64) / denom
-
         def member(prev, x):
-            # vectorized per-walker binary search of x in prev's CSR
-            # block (dst-id order within block, see docstring)
-            lo = offsets[prev].copy()
-            hi = offsets[prev + 1].copy()
+            # vectorized per-walker binary search of x in prev's block
+            lo = adj.offsets[prev].copy()
+            hi = adj.offsets[prev + 1].copy()
             found = np.zeros(len(prev), dtype=bool)
             active = lo < hi
             while active.any():
                 mid = (lo + hi) >> 1
-                v = dst_s[np.where(active, mid, 0)]
+                v = adj.dst[np.where(active, mid, 0)]
                 eq = active & (v == x)
                 found |= eq
                 less = v < x
@@ -545,17 +336,15 @@ def _local_node2vec_walks(
 
         def propose(h_sd, cur):
             # one attempt's proposal from the chained hash state
-            r = pmod_u64(h_sd, deg[cur])
-            row = offsets[cur] + r
+            row = adj.offsets[cur] + pmod_u64(h_sd, adj.deg[cur])
             if weighted:
-                c_w = frac(hash_bytes_const(b"alias", h_sd))
-                take = c_w < prob_s[row]
-                return np.where(take, dst_s[row], alias_s[row])
-            return dst_s[row]
+                take = _coin(hash_bytes(b"alias", h_sd)) < adj.prob[row]
+                return np.where(take, adj.dst[row], adj.alias[row])
+            return adj.dst[row]
 
-        seq_c = np.empty((n_w, walk_length), dtype=np.int64)
-        seq_c[:, 0] = cur
-        prev = cur
+        n_w = len(cur)
+        seq = np.empty((n_w, walk_length), dtype=np.int64)
+        seq[:, 0] = prev = cur
         for t in range(1, walk_length):
             h_t = hash_int(t, base)
             if t == 1:
@@ -571,24 +360,17 @@ def _local_node2vec_walks(
                     if att == 0:
                         fallback = x
                     wgt = np.where(
-                        x == prev,
-                        w_ret,
-                        np.where(member(prev, x), w_stay, w_far),
+                        x == prev, w_ret, np.where(member(prev, x), w_stay, w_far)
                     )
-                    acc = frac(hash_bytes_const(b"accept", h_sd)) < (
-                        wgt / w_max_k
-                    )
-                    newly = acc & ~accepted
-                    chosen = np.where(newly, x, chosen)
+                    acc = _coin(hash_bytes(b"accept", h_sd)) < wgt / w_max
+                    chosen = np.where(acc & ~accepted, x, chosen)
                     accepted |= acc
                 nxt = np.where(accepted, chosen, fallback)
-            seq_c[:, t] = nxt
-            prev = cur
-            cur = nxt
-        yield from _emit_corpus(g["ids"], g["wid"], seq_c)
+            seq[:, t] = nxt
+            prev, cur = cur, nxt
+        return seq
 
-    return marked.coalesce(1).mapInPandas(kernel, out_schema)
-
+    return steps
 
 
 def ranked_adjacency(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
@@ -628,10 +410,9 @@ def _alias_core(seg_keys, w):
     dst order — within each segment); ``w``: float64 weights. Returns
     ``(prob, alias_row, rank)`` where ``alias_row`` indexes into the
     SAME row space. Shared bit-for-bit by the Spark-side partition
-    builder (``_alias_build_kernel``) and the replay kernels'
-    in-kernel build (``_decode_walk_stream`` raw_weight mode) — same
-    formulas, same in-segment order, so both sides produce identical
-    tables (parity test-pinned). Construction math in the
+    builder (``_alias_build_kernel``) and the local corpus task's
+    build (``_local_corpus``) — same formulas, same in-segment order,
+    so both sides produce identical tables (parity test-pinned). Construction math in the
     ``alias_tables`` docstring."""
     import numpy as np
 
@@ -762,38 +543,30 @@ def _alias_core(seg_keys, w):
 
 
 def _alias_build_kernel(batches):
-    """Partition kernel for ``alias_tables``: rows arrive sorted by
-    (src, dst) with every src's rows co-located; emits one alias-table
-    row per input row. Fully vectorized (``_alias_core``: segmented
-    prefix sums + merged-order rank counts, no per-element Python);
-    the invariant is pinned numerically by
+    """Partition kernel for ``alias_tables``: Arrow batches of rows
+    sorted by (src, dst), every src's rows co-located in the partition;
+    emits one alias-table row per input row. Fully vectorized
+    (``_alias_core``: segmented prefix sums + merged-order rank counts,
+    no per-element Python); the invariant is pinned numerically by
     tests/test_walks.py::test_alias_tables_exact_marginals."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    pdfs = [p for p in batches if len(p)]
-    if not pdfs:
+    got = [b for b in batches if b.num_rows]
+    if not got:
         return
-    pdf = pd.concat(pdfs, ignore_index=True)
-    src = pdf["src"].to_numpy()
-    dst = pdf["dst"].to_numpy()
-    w = pdf["weight"].to_numpy(dtype="float64")
-    n = len(src)
-    prob, alias_row, rank = _alias_core(src, w)
-
-    out_rank = rank.astype("int32")
-    alias_dst = dst[alias_row]
-    chunk = 65536
-    for i in range(0, n, chunk):
-        yield pd.DataFrame(
-            {
-                "src": src[i:i + chunk],
-                "rank": out_rank[i:i + chunk],
-                "dst": dst[i:i + chunk],
-                "prob": prob[i:i + chunk],
-                "alias_dst": alias_dst[i:i + chunk],
-            }
-        )
+    t = pa.Table.from_batches(got).combine_chunks()
+    src, dst = t.column("src"), t.column("dst")
+    prob, alias_row, rank = _alias_core(
+        src.to_numpy(zero_copy_only=False), t.column("weight").to_numpy()
+    )
+    yield from pa.table({
+        "src": src,
+        "rank": pa.array(rank.astype(np.int32)),
+        "dst": dst,
+        "prob": pa.array(prob),
+        "alias_dst": dst.take(pa.array(alias_row)),
+    }).to_batches(max_chunksize=65536)
 
 
 def alias_tables(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
@@ -812,9 +585,9 @@ def alias_tables(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
 
     Built VECTORIZED over whole partitions: the symmetric weighted
     adjacency is hash-partitioned by ``src`` and sorted by
-    ``(src, dst)``, and one ``mapInPandas`` kernel constructs every
+    ``(src, dst)``, and one ``mapInArrow`` kernel constructs every
     vertex's table in that partition with segmented numpy prefix sums —
-    no per-element Python, no per-vertex pandas group. The construction
+    no per-element Python, no per-vertex group. The construction
     is the prefix-sum ("sweep") formulation of Walker/Vose: lay the
     light items' deficits (``1 - scaled``) and the heavy items'
     surpluses (``scaled - 1``) out as two cumulative streams per
@@ -857,7 +630,7 @@ def alias_tables(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
     tab = (
         sym.repartition("src")
         .sortWithinPartitions("src", "dst")
-        .mapInPandas(_alias_build_kernel, schema)
+        .mapInArrow(_alias_build_kernel, schema)
     )
     # annotate both stored outcomes with their vertex's degree (= that
     # vertex's alias-table size), so a walk never needs a separate
@@ -879,6 +652,115 @@ def alias_tables(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
         .select(
             "src", "rank", "dst", "prob", "alias_dst", "dst_degree", "alias_degree"
         )
+    )
+
+
+def _check_walk_args(num_walks, walk_length, strategy, transition, weighted):
+    if walk_length < 1:
+        raise ValueError("walk_length must be >= 1")
+    if num_walks < 1:
+        raise ValueError("num_walks must be >= 1")
+    if strategy not in (None, "local", "broadcast", "shuffle"):
+        raise ValueError(
+            "strategy must be None, 'local', 'broadcast' or 'shuffle'"
+        )
+    if transition not in ("xxhash64", "md5_52"):
+        raise ValueError("transition must be 'xxhash64' or 'md5_52'")
+    if transition != "xxhash64":
+        # the DuckDB-oracle twin: distributed unweighted strategies only
+        if weighted:
+            raise ValueError(
+                "transition='md5_52' supports unweighted walks only"
+            )
+        if strategy == "local":
+            raise ValueError(
+                "the local kernel replays the xxhash64 chain only"
+            )
+
+
+def _start_ids(starts: DataFrame | None, deg: DataFrame) -> DataFrame:
+    """DataFrame[id] of the distributed frontier's starts. distinct(): a
+    duplicated start id would otherwise produce COLLIDING walk_ids,
+    which the assembly groupBy merges into one 2L-length row — the
+    dedupe makes duplicate starts well-defined (one walk batch per
+    distinct id) and strategy-invariant (the local task dedupes too)."""
+    return starts.select("id").distinct() if starts is not None else deg.select("id")
+
+
+def _pick_strategy(canon, verts, num_walks, walk_length, transition, fanout):
+    """The auto strategy. One |V|-scale (or |starts|-scale) count
+    decides the physical shape; the edge count (local gate only) fills
+    the canonical cache every later consumer reads — the same
+    probe-doubles-as-materialization pattern as graph/triangles.py.
+    ``fanout``: broadcast-side rows per walker."""
+    fr_rows = verts.count() * num_walks
+    if (
+        transition == "xxhash64"
+        and fr_rows * walk_length <= LOCAL_WALK_MAX_STEP_ROWS
+        and 2 * canon.count() <= LOCAL_WALK_MAX_ADJ_ROWS
+    ):
+        return "local"
+    if fr_rows * fanout <= BROADCAST_FRONTIER_MAX_ROWS:
+        return "broadcast"
+    return "shuffle"
+
+
+def _step_adjacency(canon: DataFrame, adjacency: DataFrame | None, weighted: bool):
+    """(adjacency, owned) for the distributed loops: the caller's, or a
+    ``ranked_adjacency`` (``alias_tables`` when weighted) cached
+    pre-partitioned AND pre-sorted on the per-step join key. In shuffle
+    mode every step's join reuses this partitioning (only the
+    constant-width frontier shuffles); a partitioned-but-unsorted cache
+    would make every superstep's sort-merge join re-sort the full
+    2|E|-row adjacency (the graph/hits.py measurement: layout cost
+    dominates the loop)."""
+    if adjacency is not None:
+        return adjacency, False
+    adj = (
+        alias_tables(canon, assume_canonical=True)
+        if weighted
+        else ranked_adjacency(canon, assume_canonical=True)
+    )
+    return adj.repartition("src", "rank").sortWithinPartitions("src", "rank").persist(), True
+
+
+def _first_frontier(verts: DataFrame, deg: DataFrame, num_walks: int) -> DataFrame:
+    """DataFrame[walk_id, cur, cur_degree]: ``num_walks`` walkers per
+    start, ``walk_id = <start>#<index>``; the inner degree join drops
+    starts outside the graph."""
+    return (
+        verts.select(
+            "id", F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("walk_idx")
+        )
+        .join(deg, "id")
+        .select(
+            F.concat_ws("#", F.col("id").cast("string"), F.col("walk_idx")).alias("walk_id"),
+            F.col("id").alias("cur"),
+            F.col("degree").alias("cur_degree"),
+        )
+    )
+
+
+def _step_rows(frontier: DataFrame, t: int) -> DataFrame:
+    return frontier.select("walk_id", F.lit(t).alias("step"), F.col("cur").alias("vertex"))
+
+
+def _assemble(steps: list[DataFrame]) -> DataFrame:
+    """The corpus from its (walk_id, step, vertex) step tables: one
+    final group, so no frontier carries an O(t) prefix array."""
+    long = steps[0]
+    for s in steps[1:]:
+        long = long.unionByName(s)
+    return (
+        long.groupBy("walk_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("step", "vertex"))),
+                lambda s: s["vertex"],
+            ).alias("seq")
+        )
+        .withColumn("start", F.element_at("seq", 1))
+        .select("walk_id", "start", "seq")
     )
 
 
@@ -912,15 +794,18 @@ def random_walks(
     are identical on every strategy (the transition is a pure function
     of walk_id/step/seed; parity is test-pinned):
 
-    - ``"local"``: ONE Arrow task replays every walk against the
-      in-memory adjacency. Each walker ships a single Spark-computed
-      ``xxhash64(walk_id)`` base hash; every per-step hash/coin is
-      re-derived from it through the Spark-bit-exact numpy chain in
+    - ``"local"``: ONE ``run_kernel`` task (graph/local_kernel.py)
+      replays every walk over the canonical edges. The task derives
+      the walkers, their walk ids and each id's ``xxhash64(walk_id)``
+      base hash itself, and re-derives every per-step hash/coin from
+      that base through the Spark-bit-exact numpy chain in
       functions/xxh64.py (parity pinned by test_xxh64/test_walks), so
       the corpus is byte-identical to the distributed strategies with
-      zero per-step stage barriers. Right when walkers x length and
-      the adjacency both fit one task (the small-graph / seed-set
-      regime where the distributed loop is pure barrier overhead).
+      zero per-step stage barriers (``_local_corpus``). Right when
+      walkers x length and the adjacency both fit one task (the
+      small-graph / seed-set regime where the distributed loop is pure
+      barrier overhead). Vertex ids are integral or strings: the task
+      formats walk ids the way Spark casts those to string.
     - ``"broadcast"``: the frontier is broadcast; each step is ONE
       mapper-side stage over the cached adjacency — no shuffle at all.
       Right when |starts|·num_walks is executor-memory small (seed-set
@@ -948,7 +833,8 @@ def random_walks(
     yourself (ideally ``.repartition("src", "rank")
     .sortWithinPartitions("src", "rank")`` first so the shuffle
     path reuses both the partitioning and the sort order); this
-    function will not unpersist it.
+    function will not unpersist it. The local strategy does not read
+    it: its task builds the same adjacency from the edges.
 
     Deterministic: the step-t transition of a walk is driven by
     ``xxhash64(walk_id, t, seed)`` (plus an independent
@@ -962,178 +848,34 @@ def random_walks(
     Unweighted distributed strategies only (the local kernel replays
     the xxhash64 chain; the weighted coin is xxhash64-folded).
     """
-    if walk_length < 1:
-        raise ValueError("walk_length must be >= 1")
-    if num_walks < 1:
-        raise ValueError("num_walks must be >= 1")
-    if strategy not in (None, "local", "broadcast", "shuffle"):
-        raise ValueError(
-            "strategy must be None, 'local', 'broadcast' or 'shuffle'"
-        )
-    if transition not in ("xxhash64", "md5_52"):
-        raise ValueError("transition must be 'xxhash64' or 'md5_52'")
-    if transition != "xxhash64":
-        if weighted:
-            raise ValueError(
-                "transition='md5_52' supports unweighted walks only"
-            )
-        if strategy == "local":
-            raise ValueError(
-                "the local kernel replays the xxhash64 chain only"
-            )
-
-    if assume_canonical:
-        canon = edges
-    else:
-        canon = canonicalize_edges(
-            edges, weight="weight" if weighted and "weight" in edges.columns else None
-        )
-    # consumed by adjacency, degrees, and starts — but never drop a
-    # cache the CALLER owns (an already-persisted canonical table passed
-    # with assume_canonical=True stays persisted after this returns)
-    canon_owned = not canon.storageLevel.useMemory
+    _check_walk_args(num_walks, walk_length, strategy, transition, weighted)
+    canon = edges if assume_canonical else canonicalize_edges(
+        edges, weight="weight" if weighted and "weight" in edges.columns else None
+    )
+    # consumed by the probe, adjacency, degrees and starts — but never
+    # drop a cache the CALLER owns (an already-persisted canonical table
+    # passed with assume_canonical=True stays persisted after this
+    # returns); a forced local run reads it once and pins nothing
+    canon_owned = strategy != "local" and not canon.storageLevel.useMemory
     if canon_owned:
         canon = canon.persist()
     # symmetrized out-degree == undirected degree; only joined ONCE, to
     # seed the initial frontier — every later step reads the next hop's
     # degree off the adjacency row it just fetched
     deg = degrees(canon)
-    # distinct(): a duplicated start id would otherwise produce
-    # COLLIDING walk_ids, which the distributed assembly groupBy merges
-    # into one 2L-length row while the kernel emits two rows — the
-    # dedupe makes duplicate starts well-defined (one walk batch per
-    # distinct id) and strategy-invariant
-    verts = (
-        starts.select(F.col("id")).distinct()
-        if starts is not None
-        else deg.select("id")
-    )
+    verts = _start_ids(starts, deg)
+    pinned: list[DataFrame] = []
+    adj, adj_owned = None, False
     try:
         if strategy is None:
-            # one |V|-scale (or |starts|-scale) count decides the
-            # physical shape; the same probe-doubles-as-materialization
-            # pattern as graph/triangles.py. The edge count probe
-            # (local gate only) fills the canonical cache every later
-            # consumer reads.
-            fr_rows = verts.count() * num_walks
-            if (
-                transition == "xxhash64"
-                and fr_rows * walk_length <= LOCAL_WALK_MAX_STEP_ROWS
-                and 2 * canon.count() <= LOCAL_WALK_MAX_ADJ_ROWS
-            ):
-                strategy = "local"
-            elif fr_rows <= BROADCAST_FRONTIER_MAX_ROWS:
-                strategy = "broadcast"
-            else:
-                strategy = "shuffle"
-    except BaseException:
-        # the probe runs before the branch-local try/finally blocks
-        # own the cleanup — a failing starts scan must not leak the
-        # canonical cache
-        if canon_owned:
-            canon.unpersist()
-        raise
-    adj_owned = adjacency is None
-    if adj_owned and strategy != "local":
-        adj = (
-            alias_tables(canon, assume_canonical=True)
-            if weighted
-            else ranked_adjacency(canon, assume_canonical=True)
-        )
-        # cache the adjacency PRE-PARTITIONED on the per-step join key:
-        # in shuffle mode every step's join reuses this partitioning (no
-        # |E|-scale exchange per superstep — only the constant-width
-        # frontier shuffles); in broadcast mode the cache is simply the
-        # per-step scan target
-        # pre-partitioned AND pre-sorted on the per-step join key —
-        # a partitioned-but-unsorted cache makes every superstep's
-        # sort-merge join re-sort the full 2|E|-row adjacency (the
-        # graph/hits.py measurement: layout cost dominates the loop).
-        # The local kernel consumes the adjacency exactly ONCE in one
-        # task — no layout, no cache.
-        adj = (
-            adj.repartition("src", "rank")
-            .sortWithinPartitions("src", "rank")
-            .persist()
-        )
-    elif not adj_owned:
-        adj = adjacency
-
-    if strategy == "local":
-        try:
-            raw_w = False
-            if not adj_owned:
-                kern_adj, ranked = adjacency, True
-            elif weighted:
-                # raw symmetric weights; the kernel runs _alias_core
-                # itself — skips the builder's repartition/sort/
-                # degree-join plan (measured: the bulk of the former
-                # weighted-local prep at sf0.1)
-                wcanon = canon
-                if "weight" not in wcanon.columns:
-                    wcanon = wcanon.withColumn("weight", F.lit(1.0))
-                kern_adj, ranked, raw_w = (
-                    symmetrize(
-                        wcanon.select(
-                            "src", "dst",
-                            F.col("weight").cast("double").alias("weight"),
-                        ),
-                        weight=True,
-                    ),
-                    False,
-                    True,
-                )
-            else:
-                # the kernel derives ranks from its id-sorted code
-                # space — no adjacency windows at all on this path
-                kern_adj, ranked = (
-                    symmetrize(canon.select("src", "dst"), weight=False),
-                    False,
-                )
-            walkers = verts.select(
-                "id",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(num_walks - 1))
-                ).alias("walk_idx"),
-            ).select(
-                F.concat_ws(
-                    "#", F.col("id").cast("string"), F.col("walk_idx")
-                ).alias("walk_id"),
-                F.col("id").alias("start"),
-            ).select(
-                "walk_id",
-                "start",
-                # ONE hash per walker; the kernel re-derives every
-                # per-step hash/coin from it (functions/xxh64.py chain)
-                F.xxhash64("walk_id").alias("base"),
+            strategy = _pick_strategy(canon, verts, num_walks, walk_length, transition, 1)
+        if strategy == "local":
+            return _local_corpus(
+                canon, starts, num_walks, walk_length, weighted,
+                _random_walk_steps(walk_length, seed, weighted),
             )
-            out = _local_random_walks(
-                kern_adj, walkers, weighted, walk_length, seed,
-                ranked=ranked, raw_weight=raw_w,
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            if canon_owned:
-                canon.unpersist()
-
-    pinned: list[DataFrame] = []
-    try:
-        frontier = (
-            verts.select(
-                "id",
-                F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias(
-                    "walk_idx"
-                ),
-            )
-            .join(deg, "id")
-            .select(
-                F.concat_ws("#", F.col("id").cast("string"), F.col("walk_idx"))
-                .alias("walk_id"),
-                F.col("id").alias("cur"),
-                F.col("degree").alias("cur_degree"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        adj, adj_owned = _step_adjacency(canon, adjacency, weighted)
+        frontier = _first_frontier(verts, deg, num_walks).localCheckpoint(eager=True)
         pinned.append(frontier)
 
         # step tables accumulate as constant-width (walk_id, step, vertex)
@@ -1148,11 +890,7 @@ def random_walks(
         # just STRINGIFYING it for the SQL listener at L=20 on a 1g
         # spark-submit heap (observed; checkpoint leaves keep every
         # per-step plan O(1))
-        steps = [
-            frontier.select(
-                "walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex")
-            )
-        ]
+        steps = [_step_rows(frontier, 0)]
         for t in range(1, walk_length):
             # exactly ONE equi-join per step: hash a rank in
             # [0, cur_degree), fetch that adjacency row; the row carries
@@ -1195,32 +933,13 @@ def random_walks(
                 "walk_id", nxt.alias("cur"), nxt_deg.alias("cur_degree")
             ).localCheckpoint(eager=True)
             pinned.append(frontier)
-            steps.append(
-                frontier.select(
-                    "walk_id", F.lit(t).alias("step"), F.col("cur").alias("vertex")
-                )
-            )
-
-        long = steps[0]
-        for s in steps[1:]:
-            long = long.unionByName(s)
-        out = (
-            long.groupBy("walk_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("step", "vertex"))),
-                    lambda s: s["vertex"],
-                ).alias("seq")
-            )
-            .withColumn("start", F.element_at("seq", 1))
-            .select("walk_id", "start", "seq")
-        )
-        # pin before releasing the caches (same pattern as
+            steps.append(_step_rows(frontier, t))
+        # pin before releasing the frontiers (same pattern as
         # graph/triangles.py triangles_per_vertex)
-        return out.localCheckpoint(eager=True)
+        return _assemble(steps).localCheckpoint(eager=True)
     finally:
         for df in pinned:
-            df.unpersist()
+            release_local_checkpoint(df)
         if adj_owned:
             adj.unpersist()
         if canon_owned:
@@ -1295,29 +1014,9 @@ def node2vec_walks(
     exactly as in ``random_walks`` (caller-persisted, never unpersisted
     here).
     """
-    if walk_length < 1:
-        raise ValueError("walk_length must be >= 1")
-    if num_walks < 1:
-        raise ValueError("num_walks must be >= 1")
+    _check_walk_args(num_walks, walk_length, strategy, transition, weighted)
     if p <= 0 or q <= 0:
         raise ValueError("p and q must be > 0")
-    if strategy not in (None, "local", "broadcast", "shuffle"):
-        raise ValueError(
-            "strategy must be None, 'local', 'broadcast' or 'shuffle'"
-        )
-    if transition not in ("xxhash64", "md5_52"):
-        raise ValueError("transition must be 'xxhash64' or 'md5_52'")
-    if transition != "xxhash64":
-        # the DuckDB-oracle twin (see random_walks): distributed
-        # unweighted strategies only
-        if weighted:
-            raise ValueError(
-                "transition='md5_52' supports unweighted walks only"
-            )
-        if strategy == "local":
-            raise ValueError(
-                "the local kernel replays the xxhash64 chain only"
-            )
 
     import math
 
@@ -1333,159 +1032,56 @@ def node2vec_walks(
     if max_attempts < 1:
         raise ValueError("max_attempts must be >= 1")
 
-    if assume_canonical:
-        canon = edges
-    else:
-        canon = canonicalize_edges(
-            edges,
-            weight="weight" if weighted and "weight" in edges.columns else None,
-        )
-    canon_owned = not canon.storageLevel.useMemory  # see random_walks
+    canon = edges if assume_canonical else canonicalize_edges(
+        edges, weight="weight" if weighted and "weight" in edges.columns else None
+    )
+    canon_owned = strategy != "local" and not canon.storageLevel.useMemory  # see random_walks
     if canon_owned:
         canon = canon.persist()
     deg = degrees(canon)
-    # distinct(): same duplicate-start collision rationale as
-    # random_walks
-    verts = (
-        starts.select(F.col("id")).distinct()
-        if starts is not None
-        else deg.select("id")
-    )
+    verts = _start_ids(starts, deg)
+    pinned: list[DataFrame] = []
+    adj, adj_owned, mem = None, False, None
     try:
         if strategy is None:
-            # same cells gate as random_walks, NOT multiplied by
-            # max_attempts: the kernel's per-attempt cost is a few
-            # vector ops while the distributed rounds pay per-attempt
-            # ROW fan-out through three joins, so A cancels out of the
-            # crossover. MEASURED at A=32, p=0.5/q=2.0, local[32]:
-            # sf0.1 (160k cells) local 3.9s vs broadcast 18.2s; 4M
-            # cells (1.2M-edge uniform graph) local 35.1s vs shuffle
-            # 60.9s — local still 1.7x ahead at the deepwalk gate
+            # the broadcast side is walker x A rows, but the cells gate
+            # is NOT multiplied by max_attempts: the kernel's per-attempt
+            # cost is a few vector ops while the distributed rounds pay
+            # per-attempt ROW fan-out through three joins, so A cancels
+            # out of the crossover. MEASURED at A=32, p=0.5/q=2.0,
+            # local[32]: sf0.1 (160k cells) local 3.9s vs broadcast
+            # 18.2s; 4M cells (1.2M-edge uniform graph) local 35.1s vs
+            # shuffle 60.9s — local still 1.7x ahead at the deepwalk gate
             # boundary.
-            fr_rows = verts.count() * num_walks
-            if (
-                transition == "xxhash64"
-                and fr_rows * walk_length <= LOCAL_WALK_MAX_STEP_ROWS
-                and 2 * canon.count() <= LOCAL_WALK_MAX_ADJ_ROWS
-            ):
-                strategy = "local"
-            elif fr_rows * max_attempts <= BROADCAST_FRONTIER_MAX_ROWS:
-                strategy = "broadcast"
-            else:
-                strategy = "shuffle"
-    except BaseException:
-        # see random_walks: a failing probe must not leak the cache
-        if canon_owned:
-            canon.unpersist()
-        raise
-    adj_owned = adjacency is None
-    if adj_owned and strategy != "local":
-        adj = (
-            alias_tables(canon, assume_canonical=True)
-            if weighted
-            else ranked_adjacency(canon, assume_canonical=True)
-        )
-        # pre-partitioned AND pre-sorted on the per-step join key —
-        # a partitioned-but-unsorted cache makes every superstep's
-        # sort-merge join re-sort the full 2|E|-row adjacency (the
-        # graph/hits.py measurement: layout cost dominates the loop)
-        adj = (
-            adj.repartition("src", "rank")
-            .sortWithinPartitions("src", "rank")
-            .persist()
-        )
-    elif not adj_owned:
-        adj = adjacency
-
-    if strategy == "local":
-        try:
-            raw_w = False
-            if not adj_owned:
-                kern_adj, ranked = adjacency, True
-            elif weighted:
-                # raw weights + in-kernel _alias_core (see random_walks)
-                wcanon = canon
-                if "weight" not in wcanon.columns:
-                    wcanon = wcanon.withColumn("weight", F.lit(1.0))
-                kern_adj, ranked, raw_w = (
-                    symmetrize(
-                        wcanon.select(
-                            "src", "dst",
-                            F.col("weight").cast("double").alias("weight"),
-                        ),
-                        weight=True,
-                    ),
-                    False,
-                    True,
-                )
-            else:
-                kern_adj, ranked = (
-                    symmetrize(canon.select("src", "dst"), weight=False),
-                    False,
-                )
-            walkers = verts.select(
-                "id",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(num_walks - 1))
-                ).alias("walk_idx"),
-            ).select(
-                F.concat_ws(
-                    "#", F.col("id").cast("string"), F.col("walk_idx")
-                ).alias("walk_id"),
-                F.col("id").alias("start"),
-            ).select(
-                "walk_id",
-                "start",
-                # ONE long per walker; the kernel re-derives the full
-                # per-(t, att, channel) hash tensor from it through the
-                # Spark-bit-exact chain (functions/xxh64.py)
-                F.xxhash64("walk_id").alias("base"),
+            strategy = _pick_strategy(
+                canon, verts, num_walks, walk_length, transition, max_attempts
             )
-            out = _local_node2vec_walks(
-                kern_adj, walkers, weighted, walk_length, seed,
-                w_ret, w_stay, w_far, max_attempts, ranked=ranked,
-                raw_weight=raw_w,
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            if canon_owned:
-                canon.unpersist()
-
-    # membership side of step (2): the symmetric edge PAIR set, cached
-    # pre-partitioned on its join key so the per-step membership join
-    # never re-exchanges it
-    mem = (
-        symmetrize(canon.select("src", "dst"), weight=False)
-        .select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
-        .repartition("m_src", "m_dst")
-        .sortWithinPartitions("m_src", "m_dst")
-        .persist()
-    )
-    pinned: list[DataFrame] = []
-    try:
-        frontier = (
-            verts.select(
-                "id",
-                F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias(
-                    "walk_idx"
+        if strategy == "local":
+            return _local_corpus(
+                canon, starts, num_walks, walk_length, weighted,
+                _node2vec_steps(
+                    walk_length, seed, weighted, w_ret, w_stay, w_far, max_attempts
                 ),
             )
-            .join(deg, "id")
-            .select(
-                F.concat_ws("#", F.col("id").cast("string"), F.col("walk_idx"))
-                .alias("walk_id"),
-                F.col("id").alias("prev"),  # placeholder; step 1 is uniform
-                F.col("id").alias("cur"),
-                F.col("degree").alias("cur_degree"),
-            )
-            .localCheckpoint(eager=True)
+        adj, adj_owned = _step_adjacency(canon, adjacency, weighted)
+        # membership side of step (2): the symmetric edge PAIR set, cached
+        # pre-partitioned on its join key so the per-step membership join
+        # never re-exchanges it
+        mem = (
+            symmetrize(canon.select("src", "dst"), weight=False)
+            .select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
+            .repartition("m_src", "m_dst")
+            .sortWithinPartitions("m_src", "m_dst")
+            .persist()
         )
+        frontier = _first_frontier(verts, deg, num_walks).select(
+            "walk_id",
+            F.col("cur").alias("prev"),  # placeholder; step 1 is uniform
+            "cur",
+            "cur_degree",
+        ).localCheckpoint(eager=True)
         pinned.append(frontier)
-        steps = [
-            frontier.select(
-                "walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex")
-            )
-        ]
+        steps = [_step_rows(frontier, 0)]
         for t in range(1, walk_length):
             # step 1 has no real prev — one uniform attempt (the
             # standard node2vec first transition); later steps run the
@@ -1602,32 +1198,13 @@ def node2vec_walks(
                 F.col("x_degree").alias("cur_degree"),
             ).localCheckpoint(eager=True)
             pinned.append(frontier)
-            steps.append(
-                frontier.select(
-                    "walk_id", F.lit(t).alias("step"),
-                    F.col("cur").alias("vertex"),
-                )
-            )
-
-        long = steps[0]
-        for s in steps[1:]:
-            long = long.unionByName(s)
-        out = (
-            long.groupBy("walk_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("step", "vertex"))),
-                    lambda s: s["vertex"],
-                ).alias("seq")
-            )
-            .withColumn("start", F.element_at("seq", 1))
-            .select("walk_id", "start", "seq")
-        )
-        return out.localCheckpoint(eager=True)
+            steps.append(_step_rows(frontier, t))
+        return _assemble(steps).localCheckpoint(eager=True)
     finally:
         for df in pinned:
-            df.unpersist()
-        mem.unpersist()
+            release_local_checkpoint(df)
+        if mem is not None:
+            mem.unpersist()
         if adj_owned:
             adj.unpersist()
         if canon_owned:

@@ -4,9 +4,8 @@ Python-executing nodes on the hot paths are Arrow MapInPandas in the
 extraction stage and the one-task Arrow MapInArrow of the small-graph
 kernels (graph/local_kernel.py), whose input carries no Exchange under
 ``assume_canonical``; the results those kernels return are plain scans.
-(Only the walk kernels still run their own MapInPandas tasks: a walker
-carries a 64-bit hash and a string walk id, which the kernel's float64
-value channels cannot carry exactly.)"""
+The walk corpora run on that boundary too; the walk module's only task
+of its own is the Arrow alias-table build."""
 
 import re
 from pathlib import Path
@@ -27,6 +26,7 @@ from cryptowalletcommunitydetection_spark.graph import (
 )
 from cryptowalletcommunitydetection_spark.graph.hits import hits
 from cryptowalletcommunitydetection_spark.graph.rollup import bipartite_group_rollup
+from cryptowalletcommunitydetection_spark.graph.walks import random_walks
 
 
 def _plan(df):
@@ -60,19 +60,21 @@ def test_graph_pipeline_plans_pure_jvm(spark):
 
 def test_python_tasks_enter_graph_through_known_kernels():
     """Python tasks enter graph/ only through the small-graph boundary
-    (local_kernel.py), the extraction kernel (edges.py) and the three
-    walk kernels (walks.py: two replays and the alias build). A new
-    operator runs its numpy body on ``run_kernel`` instead of growing
-    its own task and its own copy of the key indexing."""
+    (local_kernel.py), the extraction kernel (edges.py) and the
+    alias-table build (walks.py). A new operator runs its numpy body on
+    ``run_kernel`` instead of growing its own task and its own copy of
+    the key indexing."""
     sources = {f.name: f.read_text() for f in sorted(Path(graph.__file__).parent.glob("*.py"))}
     sites = {name: len(re.findall(r"\.mapIn(?:Pandas|Arrow)\(", src)) for name, src in sources.items()}
     assert {name: n for name, n in sites.items() if n} == {
-        "edges.py": 1, "local_kernel.py": 1, "walks.py": 3,
+        "edges.py": 1, "local_kernel.py": 1, "walks.py": 1,
     }
-    assert [name for name, src in sources.items() if "factorize(" in src] == ["walks.py"]
+    assert [name for name, src in sources.items() if "factorize(" in src] == []
 
 
-@pytest.mark.parametrize("name", ["pagerank", "cc", "lpa", "triangles", "hits", "kcore", "truss"])
+@pytest.mark.parametrize(
+    "name", ["pagerank", "cc", "lpa", "triangles", "hits", "kcore", "truss", "walks"]
+)
 def test_local_kernels_do_not_shuffle_canonical_input(spark, monkeypatch, name):
     """Under assume_canonical the small-graph path runs no Exchange: the
     kernel's input plan, and every frame the operator persists or
@@ -100,6 +102,7 @@ def test_local_kernels_do_not_shuffle_canonical_input(spark, monkeypatch, name):
         "hits": lambda: hits(spark, edges, assume_canonical=True).scores,
         "kcore": lambda: core_numbers(spark, edges, assume_canonical=True).cores,
         "truss": lambda: edge_support(edges, assume_canonical=True),
+        "walks": lambda: random_walks(edges, strategy="local", assume_canonical=True),
     }
     assert calls[name]().count() > 0
     assert len(plans["mapInArrow"]) == 1

@@ -150,3 +150,21 @@ def test_harmonic_centrality_from_sources(spark):
     want = nx.harmonic_centrality(g, sources=seeds)
     for v, h in want.items():
         assert got.get(v, 0.0) == pytest.approx(h, abs=1e-9), v
+
+
+def test_distances_release_checkpoints(spark):
+    """Frontier and settled tables are local checkpoints, which
+    ``DataFrame.unpersist`` cannot free: a normal return leaves only
+    the result's own checkpoint pinned, and a call that raises at
+    ``max_iter`` leaves nothing."""
+    edges = datagen.edges_df(spark, SHAPES["ring"])
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = multi_source_distances(spark, edges, _src_df(spark, [0]))
+    assert out.count() == 12
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own
+    with pytest.raises(RuntimeError):
+        multi_source_distances(spark, edges, _src_df(spark, [0]), max_iter=2)
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own

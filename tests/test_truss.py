@@ -123,3 +123,19 @@ def test_peeling_is_iterative_not_one_shot(spark):
     for local in (True, False):
         got = {(r["src"], r["dst"]) for r in k_truss(edges, 4, local=local).collect()}
         assert got == want
+
+
+def test_distributed_peel_releases_superseded_rounds(spark):
+    """Each peel round is a local checkpoint, which
+    ``DataFrame.unpersist`` cannot free: after a peel of >= 2 rounds
+    only the result's own checkpoint stays pinned."""
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    cascade = [(10, 11), (11, 12), (10, 12), (12, 13), (10, 13)]  # peels in 2 rounds
+    edges = datagen.edges_df(spark, k4 + cascade)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = k_truss(edges, 4, local=False)
+    assert {(r["src"], r["dst"]) for r in out.collect()} == set(k4)
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own

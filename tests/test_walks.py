@@ -364,11 +364,10 @@ def test_local_kernel_parity_all_strategies(spark):
 
 def test_local_kernel_parity_huge_long_ids_and_big_seed(spark):
     """Two float64-precision regressions pinned: (1) vertex ids above
-    2^53 survive the kernel's Arrow transfer (integral ids ship as
-    strings — a nullable long column reaches pandas as float64 and
-    silently corrupts low bits); (2) a seed outside int32 hashes
-    through the 8-byte branch exactly like Spark's LongType literal
-    (hash_py_int)."""
+    2^53 survive the kernel's Arrow transfer and its walk-id formatting
+    (a long that passed through float64 anywhere would lose low bits);
+    (2) a seed outside int32 hashes through the 8-byte branch exactly
+    like Spark's LongType literal (hash_py_int)."""
     base = 2 ** 61
     pairs = [(base + a, base + b) for a, b in PAIRS]
     edges = datagen.edges_df(spark, pairs)
@@ -406,6 +405,62 @@ def test_local_kernel_parity_huge_long_ids_and_big_seed(spark):
         ).collect()
     }
     assert n2v_l == n2v_d
+
+
+def test_local_kernel_parity_long_and_non_ascii_string_ids(spark):
+    """String ids of >= 32 bytes (the four-lane stripe loop of the
+    walk-id hash) and non-ASCII ids (multi-byte UTF-8, whose byte order
+    is the code order): both flavors, unweighted from every vertex and
+    weighted from a start set holding an absent id, replay the
+    distributed corpus byte for byte."""
+    import hashlib
+
+    import pyspark.sql.functions as F
+
+    def key(v):
+        if v % 3 == 0:
+            return "0x" + hashlib.sha1(str(v).encode()).hexdigest()  # 42 bytes
+        return f"wället-{v}-中" if v % 3 == 1 else f"ü{v}"
+
+    edges = spark.createDataFrame(
+        [(key(a), key(b)) for a, b in PAIRS], "src string, dst string"
+    )
+    wedges = edges.withColumn(
+        "weight", (F.xxhash64("src", "dst") % 5 + 6).cast("double")
+    )
+    starts = spark.createDataFrame(
+        [(key(0),), (key(4),), (key(20),), ("0x" + "f" * 40,)], "id string"
+    )
+    for walk in (random_walks, node2vec_walks):
+        kw = {"p": 0.5, "q": 2.0} if walk is node2vec_walks else {}
+        for e, weighted, st in ((edges, False, None), (wedges, True, starts)):
+            def corp(strategy):
+                return {
+                    r["walk_id"]: (r["start"], tuple(r["seq"]))
+                    for r in walk(
+                        e, num_walks=2, walk_length=4, seed=1009,
+                        weighted=weighted, starts=st, strategy=strategy, **kw,
+                    ).collect()
+                }
+
+            local = corp("local")
+            assert local and local == corp("broadcast")
+
+
+@pytest.mark.parametrize("flavor", ["random", "node2vec"])
+def test_distributed_walks_release_frontiers(spark, flavor):
+    """Every frontier is a local checkpoint, which
+    ``DataFrame.unpersist`` cannot free: only the corpus' own
+    checkpoint may stay pinned after the distributed loop."""
+    edges = datagen.edges_df(spark, PAIRS)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    kw = {"p": 0.5, "q": 2.0} if flavor == "node2vec" else {}
+    walk = node2vec_walks if flavor == "node2vec" else random_walks
+    corpus = walk(edges, num_walks=1, walk_length=4, seed=1, strategy="shuffle", **kw)
+    leaves = corpus._jdf.queryExecution().analyzed().collectLeaves()
+    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert set(jsc.getPersistentRDDs().keys()) - before <= own
 
 
 def test_duplicate_starts_deduped_all_strategies(spark):
@@ -548,7 +603,7 @@ def test_n2v_weighted_deterministic_and_valid(spark):
 def test_walk_plans_pure_jvm(spark):
     """ranked_adjacency and skipgram_pairs stay entirely JVM-side; the
     only Python node anywhere in the walk family is alias_tables'
-    Arrow partition kernel (MapInPandas — vectorized over whole
+    Arrow partition kernel (MapInArrow — vectorized over whole
     partitions, never a per-vertex group map)."""
     edges = datagen.edges_df(spark, PAIRS)
     adj_plan = ranked_adjacency(edges)._jdf.queryExecution().executedPlan().toString()
@@ -560,7 +615,7 @@ def test_walk_plans_pure_jvm(spark):
     alias_plan = alias_tables(edges)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in alias_plan  # Arrow map only
     assert "FlatMapGroupsInPandas" not in alias_plan  # no per-vertex groups
-    assert "MapInPandas" in alias_plan
+    assert "MapInArrow" in alias_plan
 
 
 def test_alias_core_integer_weight_fuzz():

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from cryptowalletcommunitydetection_spark.functions.xxh64 import (
     SPARK_DEFAULT_SEED,
-    hash_bytes_const,
+    hash_bytes,
     hash_int,
     hash_long,
     pmod_u64,
@@ -75,8 +75,34 @@ def test_const_string_step_matches_spark(spark, strings_df, lit):
     got = _spark_hashes(spark, strings_df, F.col("s"), F.lit(7), F.lit(lit))
     base = _spark_hashes(spark, strings_df, F.col("s")).view(np.uint64)
     mine = to_spark_long(
-        hash_bytes_const(lit.encode("utf-8"), hash_int(7, base))
+        hash_bytes(lit.encode("utf-8"), hash_int(7, base))
     )
+    assert np.array_equal(got, mine)
+
+
+def test_string_hash_matches_spark(spark):
+    """hash_bytes over a string array equals ``F.xxhash64(s)`` for every
+    byte length 0-80: the < 32-byte tail branches and the four-lane
+    stripe loop, with multi-byte UTF-8 characters."""
+    import random
+
+    import pyarrow as pa
+
+    rng = random.Random(11)
+    alpha = "abc#0123456789xyzé中🙂"
+    strings = []
+    for n in range(81):  # one string of exactly n UTF-8 bytes per length
+        s = ""
+        while len(s.encode("utf-8")) < n:
+            c = rng.choice(alpha)
+            s += c if len((s + c).encode("utf-8")) <= n else "a"
+        strings.append(s)
+    strings += ["0x" + "".join(rng.choice("0123456789abcdef") for _ in range(40)) + "#7"
+                for _ in range(20)]
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    got = _spark_hashes(spark, df, F.col("s"))
+    mine = to_spark_long(hash_bytes(pa.array(strings), SPARK_DEFAULT_SEED))
+    assert [len(s.encode("utf-8")) for s in strings[:81]] == list(range(81))
     assert np.array_equal(got, mine)
 
 
