@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import RunManifest, release_local_checkpoint
+from ..plans.superstep import scoped_conf
 from .local_kernel import KEY, run_kernel
 
 
@@ -502,7 +503,7 @@ def connected_components(
                 )
             finally:
                 if kernel is not None:
-                    release_local_checkpoint(kernel.pinned)
+                    release_local_checkpoint(kernel.rows)
                 release_local_checkpoint(contracted)
                 release_local_checkpoint(anchors)
             out._cwcd_n_edges = n_edges
@@ -511,34 +512,22 @@ def connected_components(
         pinned_seed = contracted
         prev_sketch = _edge_sketch(contracted)
 
-    # small-graph regime: right-size the per-round shuffles; restored in
-    # the finally below. AQE stays ON for CC (unlike PageRank's broadcast
-    # loop): measured at sf0.1, AQE off is 2-10x worse here (the
-    # per-round joins need its runtime broadcast conversion), and at
-    # scale its skew handling matters.
-    sp_key = "spark.sql.shuffle.partitions"
-    sp_before = spark.conf.get(sp_key)
-    resized = False
-    if n_edges <= 3_200_000:
-        try:
-            parts = max(8, min(int(sp_before), (n_edges + 99_999) // 100_000))
-            if parts < int(sp_before):
-                spark.conf.set(sp_key, str(parts))
-                resized = True
-        except ValueError:  # non-numeric session setting (e.g. "auto")
-            pass
+    # small-graph regime: right-size the per-round shuffles for the
+    # loop. AQE stays ON for CC (unlike PageRank's broadcast loop):
+    # measured at sf0.1, AQE off is 2-10x worse here (the per-round
+    # joins need its runtime broadcast conversion), and at scale its
+    # skew handling matters.
     try:
-        out = _cc_loop(
-            spark, prev, prev_sketch, edge_universe, vertices, vdict,
-            manifest, start_k, max_iter, strict, pinned_seed, universe,
-            anchors,
-        )
+        with scoped_conf(spark, n_edges if n_edges <= 3_200_000 else None):
+            out = _cc_loop(
+                spark, prev, prev_sketch, edge_universe, vertices, vdict,
+                manifest, start_k, max_iter, strict, pinned_seed, universe,
+                anchors,
+            )
     finally:
         if anchors is not None:
             # out is eagerly pinned by _finish_labels
             release_local_checkpoint(anchors)
-        if resized:
-            spark.conf.set(sp_key, sp_before)
     # private hint for composing operators (e.g. the community rollup):
     # the exact distinct-edge count already paid for, so downstream
     # right-sizing needs no extra action

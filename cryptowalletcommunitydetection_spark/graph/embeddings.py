@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.checkpoint import release_local_checkpoint
 from .walks import random_walks
 
 
@@ -141,8 +142,13 @@ def deepwalk_embeddings(
     Every vertex that appears in the corpus gets a vector
     (``min_count=0``); isolated vertices never enter walks and so never
     get one — same domain as the walk corpus itself.
+
+    A corpus generated here is a local checkpoint; it is released once
+    the vectors are built, also on failure. A caller's corpus is left
+    as it is.
     """
-    if corpus is None:
+    generated = corpus is None
+    if generated:
         corpus = random_walks(
             edges,
             num_walks=num_walks,
@@ -152,31 +158,37 @@ def deepwalk_embeddings(
             starts=starts,
             weighted=weighted,
         )
-    spark = corpus.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    id_type = (
-        corpus.schema["seq"].dataType.elementType.simpleString()
-    )
-    sents = corpus.select(
-        F.transform(F.col("seq"), lambda v: v.cast("string")).alias("seq")
-    )
+    try:
+        spark = corpus.sparkSession
+        if num_partitions is None:
+            num_partitions = spark.sparkContext.defaultParallelism
+        id_type = (
+            corpus.schema["seq"].dataType.elementType.simpleString()
+        )
+        sents = corpus.select(
+            F.transform(F.col("seq"), lambda v: v.cast("string")).alias("seq")
+        )
 
-    if shard_vocab_above is not None:
-        vocab = corpus.select(
-            F.explode("seq").alias("id")
-        ).distinct().count()
-        if vocab > shard_vocab_above:
-            return _sharded_deepwalk(
-                spark, edges, corpus, shard_vocab_above, dim, window,
-                min_count, max_iter, num_partitions, step_size, seed,
-                id_type, assume_canonical,
-            )
+        if shard_vocab_above is not None:
+            vocab = corpus.select(
+                F.explode("seq").alias("id")
+            ).distinct().count()
+            if vocab > shard_vocab_above:
+                return _sharded_deepwalk(
+                    spark, edges, corpus, shard_vocab_above, dim, window,
+                    min_count, max_iter, num_partitions, step_size, seed,
+                    id_type, assume_canonical,
+                )
 
-    return _fit_word2vec(
-        sents, dim, window, min_count, max_iter, num_partitions,
-        step_size, seed, id_type,
-    )
+        # the fitted vectors are the model's own data, not a plan over
+        # the corpus, so the corpus can go once this returns
+        return _fit_word2vec(
+            sents, dim, window, min_count, max_iter, num_partitions,
+            step_size, seed, id_type,
+        )
+    finally:
+        if generated:
+            release_local_checkpoint(corpus)
 
 
 def _sharded_deepwalk(

@@ -26,9 +26,12 @@ Physical design, same shapes as graph/pagerank.py's copartition loop:
   action) and the delta aggregate over the now-cached state. (PageRank
   manages one action because its normalizer is closed-form; HITS'
   norms depend on the raw sums themselves.)
-- Superstep state is an eager localCheckpoint (leaf plan, superseded
-  checkpoints released) — the same unbounded-lineage discipline as
-  every iterative operator here.
+- The loop is plans/superstep.py's ``run_supersteps``, shared with
+  PageRank, LPA and k-core: the checkpointed state is the raw
+  (unnormalized) score table, which the next superstep and the result
+  normalize by the norms its record carries; superseded states are
+  released, every cache and state also when a superstep fails, and
+  each superstep returns one metrics record.
 - Below ``LOCAL_HITS_MAX_EDGES`` a single-task vectorized numpy body
   on ``run_kernel`` (graph/local_kernel.py, the one Arrow boundary of
   the small-graph paths, as PageRank's local path) runs the identical
@@ -45,13 +48,13 @@ eigenvector direction of the adjacency), which the tests pin.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from ..plans.checkpoint import release_local_checkpoint
+from ..plans.superstep import run_supersteps
 from .edges import canonicalize_edges, symmetrize, vertices_of
 from .local_kernel import KEY, run_kernel
 
@@ -66,6 +69,7 @@ class HitsResult:
     scores: DataFrame  # id, hub, authority
     supersteps: int
     converged: bool
+    metrics: list[dict] = field(default_factory=list)
 
 
 _HITS_FIELDS = {"id": KEY, "hub": DoubleType(), "authority": DoubleType()}
@@ -76,10 +80,13 @@ def _hits_body(tol: float, max_iter: int, directed: bool):
     loop-free directed rows (deduplicated here) or, with
     ``directed=False``, canonical rows (symmetrized here) — the same
     update rule, normalization and stopping test as the distributed
-    loop. The meta record carries the step count and the convergence
-    flag."""
+    loop. The meta record carries the step count, the convergence flag
+    and one record per superstep (``k``, ``wall_ms``, ``delta``,
+    ``rows`` = vertices)."""
 
     def body(g):
+        import time
+
         import numpy as np
 
         n, src, dst = g.n, g.src, g.dst
@@ -90,8 +97,9 @@ def _hits_body(tol: float, max_iter: int, directed: bool):
             src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
         h = np.full(n, 1.0 / max(n, 1))
         a = h.copy()
-        steps, converged = 0, n == 0
+        steps, converged, records = 0, n == 0, []
         while not converged and steps < max_iter:
+            t0 = time.monotonic()
             a_raw = np.bincount(dst, weights=h[src], minlength=n)
             h_raw = np.bincount(src, weights=a_raw[dst], minlength=n)
             na, nh = a_raw.sum(), h_raw.sum()
@@ -99,9 +107,16 @@ def _hits_body(tol: float, max_iter: int, directed: bool):
             h_new = h_raw / nh if nh > 0 else h_raw
             delta = np.abs(a_new - a).sum() + np.abs(h_new - h).sum()
             a, h = a_new, h_new
+            records.append({
+                "k": steps, "wall_ms": (time.monotonic() - t0) * 1e3,
+                "delta": float(delta), "rows": n,
+            })
             steps += 1
             converged = bool(delta < tol)
-        return {"id": np.arange(n), "hub": h, "authority": a}, {"k": steps, "conv": converged}
+        return (
+            {"id": np.arange(n), "hub": h, "authority": a},
+            {"k": steps, "conv": converged, "steps": records},
+        )
 
     return body
 
@@ -116,7 +131,7 @@ def hits(
     local: bool | None = None,
 ) -> HitsResult:
     """Hub/authority scores: HitsResult(scores=DataFrame[id, hub,
-    authority], supersteps, converged).
+    authority], supersteps, converged, metrics).
 
     ``directed=True`` (default) reads ``edges`` as directed (src -> dst;
     deduped and self-loop-filtered unless ``assume_canonical``);
@@ -124,7 +139,9 @@ def hits(
     authorities then, by symmetry). ``local`` forces the physical
     strategy (None = auto by ``LOCAL_HITS_MAX_EDGES``); results are
     identical (parity-tested). The kernel path reads its input rows
-    once, so they are persisted only for the size probe.
+    once, so they are persisted only for the size probe. ``metrics``
+    holds one record per superstep (``k``, ``wall_ms``, ``delta``,
+    ``rows``; the distributed loop adds the norms it divided by).
     """
     if directed:
         rows = edges.select("src", "dst")
@@ -141,7 +158,7 @@ def hits(
             local = rows.count() * (1 if directed else 2) <= LOCAL_HITS_MAX_EDGES
         if local:
             out = run_kernel(rows, _hits_body(tol, max_iter, directed), _HITS_FIELDS)
-            return HitsResult(out.rows, out.meta["k"], out.meta["conv"])
+            return HitsResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
         if not directed:
             e = symmetrize(rows, weight=False)
         else:
@@ -152,102 +169,91 @@ def hits(
             rows.unpersist()
 
 
+def _normalized(raw: DataFrame, record: dict) -> DataFrame:
+    """The scores of a raw state: each side divided by its norm."""
+    return raw.select(
+        "id",
+        (F.col("_hr") / record["hub_norm"]).alias("hub"),
+        (F.col("_ar") / record["authority_norm"]).alias("authority"),
+    )
+
+
 def _distributed_hits(e: DataFrame, tol: float, max_iter: int) -> HitsResult:
     """The superstep loop over the persisted directed edge table ``e``,
     which it releases."""
-    try:
-        verts = vertices_of(e).persist()
-        n = verts.count()
-        if n == 0:
-            empty = verts.select(
-                "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
-            ).localCheckpoint(eager=True)
-            verts.unpersist()
-            return HitsResult(empty, 0, True)
-        # cache the edge table PRE-PARTITIONED AND PRE-SORTED on each
-        # superstep join key (one copy per key — 2x edge storage, bought
-        # once; the graph/pagerank.py norm_edges pattern): an
-        # un-partitioned cache re-exchanges all 2|E| edge rows in BOTH
-        # per-superstep joins, and a partitioned-but-unsorted cache
-        # still re-SORTS them per join per superstep. Measured at 11M
-        # canonical edges (22M directed), local[32], 10-superstep walls
-        # including the one-time cache build: 174-225 s un-partitioned,
-        # 109-154 s partitioned, 79 s (best clean) partitioned+sorted;
-        # marginal cost per EXTRA superstep of the final plan (the
-        # iters=12 minus iters=2 protocol, one-time costs cancel):
-        # ~5.5 s — ~3.7x PageRank's 1.5 s on the same graph, consistent
-        # with 2x the join+agg rounds, 2 actions, and double-width state
-        e_src = (
-            e.repartition("src").sortWithinPartitions("src").persist()
+    verts = vertices_of(e).persist()
+    n = verts.count()
+    # cache the edge table PRE-PARTITIONED AND PRE-SORTED on each
+    # superstep join key (one copy per key — 2x edge storage, bought
+    # once; the graph/pagerank.py norm_edges pattern): an
+    # un-partitioned cache re-exchanges all 2|E| edge rows in BOTH
+    # per-superstep joins, and a partitioned-but-unsorted cache
+    # still re-SORTS them per join per superstep. Measured at 11M
+    # canonical edges (22M directed), local[32], 10-superstep walls
+    # including the one-time cache build: 174-225 s un-partitioned,
+    # 109-154 s partitioned, 79 s (best clean) partitioned+sorted;
+    # marginal cost per EXTRA superstep of the final plan (the
+    # iters=12 minus iters=2 protocol, one-time costs cancel):
+    # ~5.5 s — ~3.7x PageRank's 1.5 s on the same graph, consistent
+    # with 2x the join+agg rounds, 2 actions, and double-width state
+    e_src = e.repartition("src").sortWithinPartitions("src").persist()
+    e_dst = e.repartition("dst").sortWithinPartitions("dst").persist()
+
+    def step(prev: DataFrame, last: dict) -> DataFrame:
+        state = _normalized(prev, last)
+        h_side = state.select(F.col("id").alias("_hid"), F.col("hub"))
+        a_raw = (
+            e_src.join(h_side, e_src.src == F.col("_hid"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("hub").alias("_ar"))
         )
-        e_dst = (
-            e.repartition("dst").sortWithinPartitions("dst").persist()
+        ar_side = a_raw.select(F.col("id").alias("_aid"), F.col("_ar"))
+        h_raw = (
+            e_dst.join(ar_side, e_dst.dst == F.col("_aid"))
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("_ar").alias("_hr"))
         )
-        state = verts.select(
-            "id",
-            F.lit(1.0 / n).alias("hub"),
-            F.lit(1.0 / n).alias("authority"),
-        ).localCheckpoint(eager=True)
-        prev = state
-        converged = False
-        steps = 0
-        for k in range(max_iter):
-            h_side = state.select(F.col("id").alias("_hid"), F.col("hub"))
-            a_raw = (
-                e_src.join(h_side, e_src.src == F.col("_hid"))
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("hub").alias("_ar"))
-            )
-            ar_side = a_raw.select(F.col("id").alias("_aid"), F.col("_ar"))
-            h_raw = (
-                e_dst.join(ar_side, e_dst.dst == F.col("_aid"))
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("_ar").alias("_hr"))
-            )
-            raw = (
-                state.join(a_raw, "id", "left")
-                .join(h_raw, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("_hr", F.lit(0.0)).alias("_hr"),
-                    F.coalesce("_ar", F.lit(0.0)).alias("_ar"),
-                    F.col("hub").alias("_h_old"),
-                    F.col("authority").alias("_a_old"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # action 1: norms (materializes the checkpoint)
-            norm_row = raw.agg(
-                F.sum("_hr").alias("_nh"), F.sum("_ar").alias("_na")
-            ).collect()[0]
-            nh = float(norm_row["_nh"] or 0.0)
-            na = float(norm_row["_na"] or 0.0)
-            nh = nh if nh > 0 else 1.0
-            na = na if na > 0 else 1.0
-            # action 2: L1 delta of the normalized update (scan of the
-            # now-cached |V|-row state — no joins)
-            delta = raw.agg(
-                F.sum(
-                    F.abs(F.col("_hr") / nh - F.col("_h_old"))
-                    + F.abs(F.col("_ar") / na - F.col("_a_old"))
-                ).alias("_d")
-            ).collect()[0]["_d"]
-            state = raw.select(
+        return (
+            state.join(a_raw, "id", "left")
+            .join(h_raw, "id", "left")
+            .select(
                 "id",
-                (F.col("_hr") / nh).alias("hub"),
-                (F.col("_ar") / na).alias("authority"),
+                F.coalesce("_hr", F.lit(0.0)).alias("_hr"),
+                F.coalesce("_ar", F.lit(0.0)).alias("_ar"),
+                F.col("hub").alias("_h_old"),
+                F.col("authority").alias("_a_old"),
             )
-            release_local_checkpoint(prev)
-            prev = raw
-            steps = k + 1
-            if delta < tol:
-                converged = True
-                break
-        out = state.localCheckpoint(eager=True)
-        release_local_checkpoint(prev)
-        e_src.unpersist()
-        e_dst.unpersist()
-        verts.unpersist()
-        return HitsResult(out, steps, converged)
-    finally:
-        e.unpersist()
+        )
+
+    def measure(raw: DataFrame) -> dict:
+        # action 1: norms (materializes the checkpoint)
+        norm_row = raw.agg(
+            F.sum("_hr").alias("_nh"), F.sum("_ar").alias("_na")
+        ).collect()[0]
+        nh = float(norm_row["_nh"] or 0.0)
+        na = float(norm_row["_na"] or 0.0)
+        nh = nh if nh > 0 else 1.0
+        na = na if na > 0 else 1.0
+        # action 2: L1 delta of the normalized update (scan of the
+        # now-cached |V|-row state — no joins)
+        delta = raw.agg(
+            F.sum(
+                F.abs(F.col("_hr") / nh - F.col("_h_old"))
+                + F.abs(F.col("_ar") / na - F.col("_a_old"))
+            ).alias("_d")
+        ).collect()[0]["_d"]
+        return {"delta": delta, "rows": n, "hub_norm": nh, "authority_norm": na}
+
+    # the initial raw state is uniform with unit norms; an empty graph
+    # runs no superstep and returns the empty (converged) state
+    uniform = F.lit(1.0 / max(n, 1))
+    res = run_supersteps(
+        verts.select("id", uniform.alias("_hr"), uniform.alias("_ar")),
+        step, measure, lambda m: m["delta"] < tol,
+        max_iter=max_iter if n else 0, first={"hub_norm": 1.0, "authority_norm": 1.0},
+        inputs=(e, verts, e_src, e_dst),
+    )
+    return HitsResult(
+        _normalized(res.state, res.record), res.supersteps, res.converged or n == 0,
+        res.metrics,
+    )

@@ -37,14 +37,17 @@ Scale design (same physical-strategy playbook as PageRank/CC/LPA):
   ``run_kernel`` body (graph/local_kernel.py, the one Arrow boundary of
   the small-graph paths) that returns the distributed loop's
   per-superstep records and, at the cap, raises its error,
-- supersteps checkpoint state + metrics through the same RunManifest
-  as PageRank/CC/LPA, so a run is resumable and its convergence
-  trajectory observable.
+- the distributed loop runs on plans/superstep.py's
+  ``run_supersteps``, as PageRank's, LPA's and HITS': one
+  changed-count aggregate per superstep computes and pins the new
+  state (a local checkpoint, or Parquet under ``run_dir`` keyed on the
+  edge set's content identity, so a run is resumable and a changed
+  input starts fresh), each superstep returns one metrics record, and
+  every cache and state is released also when a superstep fails.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -52,7 +55,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest, release_local_checkpoint
+from ..plans.checkpoint import RunManifest, content_identity, release_local_checkpoint
+from ..plans.superstep import count_changed, run_supersteps
 from .edges import canonicalize_edges, symmetrize
 from .local_kernel import KEY, run_kernel
 
@@ -65,7 +69,7 @@ uniform random string-keyed graphs): local wins 5.2x at 1M raw rows,
 last measured local win. Integer state in both paths, so
 local/distributed parity is exact (tested; the crossover script also
 sketch-checks agreement at every level). ``run_dir`` checkpointing
-always uses the distributed loop."""
+always uses the distributed loop (``run_supersteps``)."""
 
 
 @dataclass
@@ -88,7 +92,7 @@ def _kcore_body(max_iter: int):
     exact coreness fixpoint (monotone nonincreasing integer state). The
     meta record carries the step count, the convergence flag and the
     distributed loop's per-superstep records (``k``, ``wall_ms``,
-    ``delta`` = changed cores)."""
+    ``delta`` = changed cores, ``rows`` = vertices)."""
 
     def body(g):
         import time
@@ -117,7 +121,9 @@ def _kcore_body(max_iter: int):
             changed = int((new_c != c).sum())
             c = new_c
             steps = k + 1
-            records.append({"k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed})
+            records.append({
+                "k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed, "rows": g.n,
+            })
             if changed == 0:
                 converged = True
                 break
@@ -181,7 +187,7 @@ def core_numbers(
             if probed:
                 canon.unpersist()
         if not out.meta["conv"]:
-            release_local_checkpoint(out.pinned)
+            release_local_checkpoint(out.rows)
             raise _unconverged(max_iter, run_dir)
         return CoreResult(out.rows, out.meta["k"], True, out.meta["steps"])
     if not probed:
@@ -196,40 +202,12 @@ def core_numbers(
         .repartition("src").sortWithinPartitions("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    cores = (
-        e.groupBy(F.col("dst").alias("id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("core"))
-    )
-
     manifest = None
-    start_k = 0
     if run_dir is not None:
-        # input identity: coreness is a function of the distinct
-        # canonical edge set only — (count, bit_xor) over it cannot
-        # suffer duplicate-row XOR cancellation (the set is deduped)
-        sk = canon.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        params = {"input_rows": sk["n"], "input_hash": sk["h"]}
-        manifest = RunManifest.open_or_create(run_dir, "kcore", params)
-        last = manifest.last_complete()
-        if last >= 0:
-            cores = manifest.load_state(spark, last).select("id", "core")
-            start_k = last + 1
-            if any(
-                s["k"] == last and s.get("delta") == 0
-                for s in manifest.supersteps
-            ):
-                canon.unpersist()
-                e.unpersist()
-                return CoreResult(cores, last + 1, True, manifest.metrics())
-    cores = cores.localCheckpoint(eager=True) if manifest is None else cores
-
-    converged = False
-    steps = start_k
-    local_metrics: list[dict] = []
-    prev_ckpt = cores if manifest is None else None
+        # coreness is a function of the distinct canonical edge set only
+        manifest = RunManifest.open_or_create(
+            run_dir, "kcore", {"input": content_identity(canon, "src", "dst")}
+        )
     # histogram rows per vertex = distinct neighbor values (<= degree,
     # typically tiny); window sorts only that compacted stream
     wcum = (
@@ -237,8 +215,9 @@ def core_numbers(
         .orderBy(F.col("_cv").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    for k in range(start_k, max_iter):
-        t0 = time.monotonic()
+
+    def step(prev: DataFrame, _: dict) -> DataFrame:
+        cores = prev.select("id", "core")
         nbr = e.join(cores, e.src == cores.id).select(
             F.col("dst"), F.col("core").alias("_cv")
         )
@@ -251,7 +230,7 @@ def core_numbers(
             .agg(F.max("_hh").alias("_h"))
             .select(F.col("dst").alias("id"), "_h")
         )
-        new_cores = cores.join(h, "id", "left").select(
+        return cores.join(h, "id", "left").select(
             "id",
             # every vertex has degree >= 1, but a checkpoint-resumed
             # state may carry ids the join misses only if the edge table
@@ -259,38 +238,16 @@ def core_numbers(
             F.least(F.col("core"), F.coalesce("_h", F.col("core"))).alias("core"),
             F.col("core").alias("_old"),
         )
-        if manifest is not None:
-            new_cores = manifest.checkpoint(new_cores, k)
-        else:
-            new_cores = new_cores.localCheckpoint(eager=False)
-        agg_row = new_cores.agg(
-            F.sum((F.col("core") != F.col("_old")).cast("long")).alias("_chg"),
-            F.count(F.lit(1)).alias("_n"),
-        ).collect()[0]
-        changed = int(agg_row["_chg"] or 0)
-        wall_ms = (time.monotonic() - t0) * 1e3
-        local_metrics.append({"k": k, "wall_ms": wall_ms, "delta": changed})
-        if manifest is not None:
-            manifest.record_superstep(
-                spark, k, wall_ms=wall_ms, delta=changed, rows=agg_row["_n"]
-            )
-        if prev_ckpt is not None and manifest is None:
-            release_local_checkpoint(prev_ckpt)
-        prev_ckpt = new_cores
-        cores = new_cores.select("id", "core")
-        steps = k + 1
-        if changed == 0:
-            converged = True
-            break
 
-    canon.unpersist()
-    e.unpersist()
-    if not converged:
-        if prev_ckpt is not None and manifest is None:
-            release_local_checkpoint(prev_ckpt)
+    res = run_supersteps(
+        e.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).cast("long").alias("core")),
+        step, count_changed("core"), lambda m: m["delta"] == 0,
+        max_iter=max_iter, manifest=manifest, inputs=(canon, e),
+    )
+    if not res.converged:
+        release_local_checkpoint(res.state)
         raise _unconverged(max_iter, run_dir)
-    metrics = manifest.metrics() if manifest is not None else local_metrics
-    return CoreResult(cores, steps, converged, metrics)
+    return CoreResult(res.state.select("id", "core"), res.supersteps, True, res.metrics)
 
 
 def k_core(

@@ -45,9 +45,8 @@ per row."""
 
 
 class KernelOutput(NamedTuple):
-    rows: DataFrame | None       # the result table; None without fields
+    rows: DataFrame | None  # over a local checkpoint; None without fields
     meta: dict
-    pinned: DataFrame | None     # the local checkpoint behind ``rows``
 
 
 def run_kernel(
@@ -74,8 +73,8 @@ def run_kernel(
 
     ``fields`` maps result names to ``KEY``, ``KEYS`` or a Spark type
     (the body may return a pyarrow array for the latter). ``rows``
-    reads the local checkpoint ``pinned``; release it with
-    ``release_local_checkpoint`` once ``rows`` is no longer needed. A
+    reads a local checkpoint; release it with
+    ``release_local_checkpoint(rows)`` once it is no longer needed. A
     failing body leaves nothing pinned. With ``fields=None`` nothing is
     pinned and the call is one job that returns the meta record.
     """
@@ -186,7 +185,7 @@ def run_kernel(
         return meta
 
     if not names:
-        return KernelOutput(None, read_meta(out), None)
+        return KernelOutput(None, read_meta(out))
     # lazy: the meta read is the one job that computes AND pins the
     # result, and a body that raises there leaves a handle to release
     pinned = out.localCheckpoint(eager=False)
@@ -195,4 +194,4 @@ def run_kernel(
     except BaseException:
         release_local_checkpoint(pinned)
         raise
-    return KernelOutput(pinned.where(~is_meta).select(*names), meta, pinned)
+    return KernelOutput(pinned.where(~is_meta).select(*names), meta)

@@ -13,18 +13,24 @@ in tests/oracles.py, since NetworkX's asyn LPA is randomized):
   checkpointed per-step metrics make that observable and resumable).
 
 Below ``LOCAL_LPA_MAX_EDGES`` the supersteps run as one numpy task.
+Above it, or with ``run_dir``, they run on plans/superstep.py's
+``run_supersteps``: one changed-count aggregate per superstep computes
+and pins the new labels (a local checkpoint, or Parquet under
+``run_dir``, keyed on the input's content identity so a changed input
+starts fresh), and every cache and state is released also when a
+superstep fails.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest, release_local_checkpoint
+from ..plans.checkpoint import RunManifest, content_identity
+from ..plans.superstep import count_changed, run_supersteps
 from .edges import canonicalize_edges, symmetrize, vertices_of
 from .local_kernel import KEY, run_kernel
 
@@ -49,7 +55,7 @@ kernel dedups). Vote sums are float64 in both paths; with integral
 weights (including the unweighted unit vote) sums are exact below 2^53
 regardless of order, so the min-(−score, label) tie-break is
 bit-identical to the distributed hash-agg argmax. ``run_dir``
-checkpointing always uses the distributed loop.
+checkpointing always uses the distributed loop (``run_supersteps``).
 
 The 4M value is measured, not guessed (``bench_scripts/lpa_crossover.py``,
 local[32], fresh JVM per level, min-of-2, identical label sketches): at
@@ -69,7 +75,8 @@ def _lpa_body(max_iter: int, directed: bool):
     + lexsorted group-head pick — the vectorized twin of the two hash
     aggs in the distributed superstep. The meta record carries the step
     count, the convergence flag and one record per superstep (``k``,
-    ``wall_ms``, ``delta`` = changed labels)."""
+    ``wall_ms``, ``delta`` = changed labels, ``rows`` = vertices), as
+    the distributed loop returns them."""
 
     def body(g):
         import time
@@ -106,7 +113,9 @@ def _lpa_body(max_iter: int, directed: bool):
             changed = int((new != lab).sum())
             lab = new
             steps = k + 1
-            records.append({"k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed})
+            records.append({
+                "k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed, "rows": nn,
+            })
             if changed == 0:
                 converged = True
                 break
@@ -194,40 +203,20 @@ def label_propagation(
         if probe_cache is not None:
             probe_cache.unpersist()
 
-    verts = vertices_of(e).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = verts.select("id", F.col("id").alias("label"))
-
     manifest = None
-    start_k = 0
-    params = {"weighted": has_w, "directed": directed}
     if run_dir is not None:
         # key the manifest on the input identity so a different edge
         # table in the same run_dir starts fresh instead of resuming.
-        # ``e`` always carries a weight column (lit(1) when unweighted)
-        # and is deduplicated by construction above, so hashing
-        # (src, dst, weight) covers weighted-vote changes and cannot
-        # suffer pairwise XOR cancellation of duplicate rows.
-        sk = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst", "weight")).alias("h"),
-        ).collect()[0]
-        params = {**params, "input_rows": sk["n"], "input_hash": sk["h"]}
-        manifest = RunManifest.open_or_create(run_dir, "lpa", params)
-        last = manifest.last_complete()
-        if last >= 0:
-            labels = manifest.load_state(spark, last).select("id", "label")
-            start_k = last + 1
-            if any(s["k"] == last and s.get("delta") == 0 for s in manifest.supersteps):
-                return LPAResult(labels, last + 1, True, manifest.metrics())
-    labels = labels.localCheckpoint(eager=True) if manifest is None else labels
+        # ``e`` always carries a weight column (lit(1) when unweighted),
+        # so the content key covers weighted-vote changes.
+        manifest = RunManifest.open_or_create(run_dir, "lpa", {
+            "weighted": has_w, "directed": directed,
+            "input": content_identity(e, "src", "dst", "weight"),
+        })
+    verts = vertices_of(e).persist(StorageLevel.MEMORY_AND_DISK)
 
-    converged = False
-    steps = start_k
-    local_metrics: list[dict] = []
-    # seed with the initial pinned state so round 0 releases it
-    prev_ckpt = labels if manifest is None else None
-    for k in range(start_k, max_iter):
-        t0 = time.monotonic()
+    def step(prev: DataFrame, _: dict) -> DataFrame:
+        labels = prev.select("id", "label")
         nbr = e.join(labels, e.src == labels.id).select(
             F.col("dst"), F.col("label"), F.col("weight")
         )
@@ -246,40 +235,18 @@ def label_propagation(
             )
             .select(F.col("dst").alias("id"), F.col("_b.label").alias("_new"))
         )
-        new_labels = (
+        return (
             labels.join(best, "id", "left")
             .select("id", F.coalesce("_new", F.col("label")).alias("label"),
                     F.col("label").alias("_old"))
         )
-        # checkpoint BEFORE the changed-count so the superstep computes
-        # once: the count below is the action that materializes it
-        if manifest is not None:
-            new_labels = manifest.checkpoint(new_labels, k)
-        else:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        # one action: changed-count and row-count fused
-        agg_row = new_labels.agg(
-            F.sum((F.col("label") != F.col("_old")).cast("long")).alias("_chg"),
-            F.count(F.lit(1)).alias("_n"),
-        ).collect()[0]
-        changed = int(agg_row["_chg"] or 0)
-        wall_ms = (time.monotonic() - t0) * 1e3
-        entry = {"k": k, "wall_ms": wall_ms, "delta": changed}
-        local_metrics.append(entry)
-        if manifest is not None:
-            manifest.record_superstep(
-                spark, k, wall_ms=wall_ms, delta=changed, rows=agg_row["_n"]
-            )
-        if prev_ckpt is not None and manifest is None:
-            release_local_checkpoint(prev_ckpt)
-        prev_ckpt = new_labels
-        labels = new_labels.select("id", "label")
-        steps = k + 1
-        if changed == 0:
-            converged = True
-            break
 
-    e.unpersist()
-    verts.unpersist()
-    metrics = manifest.metrics() if manifest is not None else local_metrics
-    return LPAResult(labels, steps, converged, metrics)
+    # one action per superstep: the changed-count and row-count aggregate
+    res = run_supersteps(
+        verts.select("id", F.col("id").alias("label")), step,
+        count_changed("label"), lambda m: m["delta"] == 0,
+        max_iter=max_iter, manifest=manifest, inputs=(e, verts),
+    )
+    return LPAResult(
+        res.state.select("id", "label"), res.supersteps, res.converged, res.metrics
+    )

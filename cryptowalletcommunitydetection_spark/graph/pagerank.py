@@ -21,8 +21,12 @@ Scale design:
   (explicit salting helpers in graph/skew.py cover non-algebraic cases),
 - string vertex keys are re-keyed to int64 (xxhash64) for the
   superstep loop and decoded once at the end,
-- with ``run_dir`` each superstep is checkpointed (Parquet) → lineage
-  stays O(1) and the run resumes from the last complete superstep,
+- the loop itself is plans/superstep.py's ``run_supersteps``: each
+  state is a lazy local checkpoint (Parquet under ``run_dir``, so the
+  run resumes from the last complete superstep) that the superstep's
+  one fused aggregate — L1 delta plus the next dangling mass —
+  computes and pins; superseded states are released, and every cache
+  and state is released when a superstep fails,
 - below ``LOCAL_PR_MAX_EDGES`` the whole iteration runs as one
   vectorized numpy task instead, with or without ``run_dir`` (the task
   writes the same per-superstep Parquet states) and builds the
@@ -32,7 +36,6 @@ Scale design:
 from __future__ import annotations
 
 import math
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest, release_local_checkpoint
+from ..plans.checkpoint import RunManifest, content_identity, release_local_checkpoint
+from ..plans.superstep import run_supersteps, scoped_conf
 from .edges import canonicalize_edges, symmetrize, vertices_of
 from .local_kernel import KEY, run_kernel
 
@@ -62,7 +66,8 @@ bracketed midpoint, and also the memory-safe bound for one executor
 (doubled when undirected: canonical rows), fused with the manifest
 identity under ``run_dir``. The gate applies with or without
 ``run_dir`` (the kernel then checkpoints each superstep itself); the
-distributed loop covers everything above the gate, and
+distributed loop (``run_supersteps``, plans/superstep.py) covers
+everything above the gate, and
 ``strategy="broadcast"/"copartition"`` forces it. Parity
 between the two paths is within float64 summation-order noise (≪ the
 1e-6 convergence contract) and is tested."""
@@ -260,33 +265,6 @@ def _local_pagerank(
     return PageRankResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
 
 
-def _identity(df: DataFrame, *cols: str) -> list[int]:
-    """Content key ``[rows, Σhi, Σlo]`` of ``df`` over ``cols``: the row
-    count plus the sums of the two 32-bit halves of ``xxhash64(cols)``,
-    in ONE single-stage aggregate (no groupBy shuffle). Order-independent
-    and multiplicity-safe: a duplicated row adds its hash again, where an
-    XOR would cancel the pair. The halves are summed as decimals, so no
-    row count can overflow them under ANSI mode."""
-    h = F.xxhash64(*cols)
-    row = df.agg(
-        F.count(F.lit(1)),
-        F.sum(F.shiftright(h, 32).cast("decimal(28,0)")),
-        F.sum(h.bitwiseAND(F.lit(0xFFFFFFFF)).cast("decimal(28,0)")),
-    ).collect()[0]
-    return [int(row[0]), int(row[1] or 0), int(row[2] or 0)]
-
-
-def _resume_point(manifest: RunManifest, tol: float) -> tuple[int, bool]:
-    """Last recorded superstep of ``manifest`` (-1 if none) and whether
-    the run had already converged there."""
-    last = manifest.last_complete()
-    done = any(
-        s["k"] == last and s.get("delta") is not None and s["delta"] < tol
-        for s in manifest.supersteps
-    )
-    return last, done
-
-
 def _checkpointed_local(
     spark: SparkSession,
     run_dir: str,
@@ -306,7 +284,7 @@ def _checkpointed_local(
     one Parquet state per superstep, and record those supersteps — with
     footer lineage, zero Spark jobs — once the task has returned."""
     manifest = RunManifest.open_or_create(run_dir, "pagerank", params)
-    last, done = _resume_point(manifest, tol)
+    last, done = manifest.resume_point(lambda m: m["delta"] < tol)
     if done:
         return PageRankResult(
             manifest.load_state(spark, last).select("id", "rank"),
@@ -453,7 +431,7 @@ def pagerank(
     # Manifest identity of a checkpointed run. max_iter is a stopping
     # condition, not part of the computation's identity — a resume may
     # raise it and continue the same run. The content keys (see
-    # _identity) cover the input rows with their weights — same
+    # content_identity) cover the input rows with their weights — same
     # topology with changed weights is a DIFFERENT input — the extra
     # `vertices`, and the teleport input of a seeded run. "ids" (added
     # where the path is known) names the key space the stored states
@@ -471,12 +449,12 @@ def pagerank(
     if run_dir is not None or strategy == "auto":
         probe_cache = base = base.persist(StorageLevel.MEMORY_AND_DISK)
         if run_dir is not None:
-            params["input"] = _identity(probe_cache, *cols)
+            params["input"] = content_identity(probe_cache, *cols)
             n_rows = params["input"][0]
             if vertices is not None:
-                params["vertices"] = _identity(vertices, "id")
+                params["vertices"] = content_identity(vertices, "id")
             if pers_clean is not None:
-                params["personalization"] = _identity(pers_clean, "id", "weight")
+                params["personalization"] = content_identity(pers_clean, "id", "weight")
         else:
             n_rows = probe_cache.count()
         # undirected input rows are canonical: two transition rows each
@@ -525,242 +503,168 @@ def pagerank(
     # key space starts fresh rather than resuming inconsistently.
     from pyspark.sql.types import StringType
 
-    vdict = None
-    if isinstance(e.schema["src"].dataType, StringType):
-        keys = vertices_of(e)
-        if vertices is not None:
-            keys = keys.unionByName(vertices.select("id")).distinct()
-        vdict = keys.select(
-            F.xxhash64(F.col("id"), F.lit(42)).alias("vid"),
-            F.col("id").alias("key"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        chk = vdict.agg(
-            F.count(F.lit(1)).alias("nk"), F.countDistinct("vid").alias("nv")
-        ).collect()[0]
-        if chk["nk"] != chk["nv"]:
-            vdict.unpersist()
-            vdict = None
-        else:
-            norm = norm.select(
-                F.xxhash64(F.col("src"), F.lit(42)).alias("src"),
-                F.xxhash64(F.col("dst"), F.lit(42)).alias("dst"),
-                "p",
-            )
-
-    if vdict is not None:
-        verts = vdict.select(F.col("vid").alias("id"))  # incl. marker-only ids
-    else:
-        verts = vertices_of(e)
-        if vertices is not None:
-            verts = verts.unionByName(vertices.select("id")).distinct()
-    verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
-    # teleport vector for personalized runs: |V| rows of (id, _s), s
-    # normalized over the vertices actually in the graph. Built once,
-    # persisted (initial state + resume + warm start all join it); the
-    # per-superstep update reads _s from the STATE, never this table.
-    # The normalizing mass and the vertex count come out of ONE fused
-    # aggregate over the joined table (a seeded run used to pay a
-    # separate driver action for each).
-    svec = None
-    if pers_clean is not None:
-        pc = pers_clean
-        if vdict is not None:
-            pc = pc.select(
-                F.xxhash64(F.col("id"), F.lit(42)).alias("id"), "weight"
-            )
-        raw_s = verts.join(pc, "id", "left").select(
-            "id", F.coalesce("weight", F.lit(0.0)).alias("_w")
-        )
-        row0 = raw_s.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("_w").alias("t")
-        ).collect()[0]
-        n = int(row0["n"])
-        tot = float(row0["t"] or 0.0)
-        if n > 0 and tot <= 0:
-            for cached in (verts, probe_cache, vdict):
-                if cached is not None:
-                    cached.unpersist()
-            raise ValueError(_NO_TELEPORT)
-        if n > 0:
-            svec = raw_s.select(
-                "id", (F.col("_w") / F.lit(tot)).alias("_s")
+    # every cache below is released on the way out, also on failure
+    vdict = verts = svec = norm_edges = dangling = None
+    try:
+        if isinstance(e.schema["src"].dataType, StringType):
+            keys = vertices_of(e)
+            if vertices is not None:
+                keys = keys.unionByName(vertices.select("id")).distinct()
+            vdict = keys.select(
+                F.xxhash64(F.col("id"), F.lit(42)).alias("vid"),
+                F.col("id").alias("key"),
             ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        n = verts.count()
-    if n == 0:
-        empty = _decode_ranks(verts.select("id", F.lit(0.0).alias("rank")), vdict)
-        verts.unpersist()
-        if probe_cache is not None:
-            probe_cache.unpersist()
-        return PageRankResult(empty, 0, True)
-
-    np = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if strategy in ("auto", "local"):
-        strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "copartition"
-    broadcast_ranks = strategy == "broadcast"
-    # Partitioning of the persisted transition table:
-    # - broadcast: scatter join is map-side, so partition by dst — the
-    #   gather's map-side partial agg emits ~one row per dst and the
-    #   shuffle moves ~|V| rows,
-    # - copartition: partition by src (sorted) so the rank join streams
-    #   the cached edge side.
-    if broadcast_ranks:
-        norm_edges = norm.repartition(np, "dst")
-    else:
-        norm_edges = norm.repartition(np, "src").sortWithinPartitions("src")
-    norm_edges = norm_edges.persist(StorageLevel.MEMORY_AND_DISK)
-    norm_edges.count()  # materialize once
-    if probe_cache is not None:
-        probe_cache.unpersist()  # norm_edges now carries the edge data
-
-    dangling = verts.join(
-        norm_edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_dangling = dangling.count()
-
-    manifest = None
-    start_k = 0
-    # the dangling flag rides along in the state so the per-superstep agg
-    # can produce the NEXT superstep's dangling mass together with the L1
-    # delta — one Spark action per superstep, not two. Graphs with no
-    # dangling vertices (every symmetrized undirected graph) skip the
-    # flag entirely: dmass is identically 0 and the state stays 2 columns.
-    if n_dangling > 0:
-        ranks = verts.join(
-            dangling.select("id", F.lit(True).alias("_dang")), "id", "left"
-        ).select(
-            "id", F.lit(1.0 / n).alias("rank"),
-            F.coalesce("_dang", F.lit(False)).alias("_dang"),
-        )
-    else:
-        ranks = verts.select("id", F.lit(1.0 / n).alias("rank"))
-    if svec is not None:
-        # the teleport weight rides in the state like _dang, so the
-        # per-superstep update stays a single join + projection
-        ranks = ranks.join(svec, "id")
-    state_cols = (
-        ["id", "rank"]
-        + (["_dang"] if n_dangling > 0 else [])
-        + (["_s"] if svec is not None else [])
-    )
-    # exact: the initial state is uniform, so dangling mass = |D| / n
-    dmass = n_dangling / n
-    if run_dir is not None:
-        manifest = RunManifest.open_or_create(
-            run_dir, "pagerank",
-            {**params, "ids": "key" if vdict is None else "xxhash64"},
-        )
-        last, done = _resume_point(manifest, tol)
-        if last >= 0:
-            loaded = manifest.load_state(spark, last).select("id", "rank")
-            if n_dangling > 0:
-                ranks = loaded.join(
-                    dangling.select("id", F.lit(True).alias("_dang")), "id", "left"
-                ).select(
-                    "id", "rank", F.coalesce("_dang", F.lit(False)).alias("_dang")
-                )
+            chk = vdict.agg(
+                F.count(F.lit(1)).alias("nk"), F.countDistinct("vid").alias("nv")
+            ).collect()[0]
+            if chk["nk"] != chk["nv"]:
+                vdict.unpersist()
+                vdict = None
             else:
-                ranks = loaded
-            if svec is not None:
-                # _s is derived state: rebuild from the (identity-checked)
-                # teleport vector rather than trusting stored columns
-                ranks = ranks.join(svec, "id")
-            start_k = last + 1
-            if done:
-                for cached in (verts, dangling, norm_edges, svec):
-                    if cached is not None:
-                        cached.unpersist()
-                return PageRankResult(
-                    _decode_ranks(ranks.select("id", "rank"), vdict),
-                    last + 1, True, manifest.metrics(),
+                norm = norm.select(
+                    F.xxhash64(F.col("src"), F.lit(42)).alias("src"),
+                    F.xxhash64(F.col("dst"), F.lit(42)).alias("dst"),
+                    "p",
                 )
-            # the restored state's dangling mass was recorded with it
-            dmass = manifest.supersteps[-1]["dangling_mass_next"]
-    if init_ranks is not None and start_k == 0:
-        # warm start (see docstring): join the prior onto the CURRENT
-        # universe, fill gaps with 1/n, renormalize. One extra action —
-        # the total and next dangling mass come out of a single aggregate.
-        r0 = F.col("rank").cast("double")
-        init = init_ranks.filter(r0.isNotNull() & ~F.isnan(r0) & (r0 > 0)).select(
-            F.col("id"), r0.alias("_r0")
-        )
+
         if vdict is not None:
-            init = init.select(
-                F.xxhash64(F.col("id"), F.lit(42)).alias("id"), "_r0"
+            verts = vdict.select(F.col("vid").alias("id"))  # incl. marker-only ids
+        else:
+            verts = vertices_of(e)
+            if vertices is not None:
+                verts = verts.unionByName(vertices.select("id")).distinct()
+        verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
+        # teleport vector for personalized runs: |V| rows of (id, _s), s
+        # normalized over the vertices actually in the graph. Built once,
+        # persisted (initial state + resume + warm start all join it); the
+        # per-superstep update reads _s from the STATE, never this table.
+        # The normalizing mass and the vertex count come out of ONE fused
+        # aggregate over the joined table (a seeded run used to pay a
+        # separate Spark action for each).
+        if pers_clean is not None:
+            pc = pers_clean
+            if vdict is not None:
+                pc = pc.select(
+                    F.xxhash64(F.col("id"), F.lit(42)).alias("id"), "weight"
+                )
+            raw_s = verts.join(pc, "id", "left").select(
+                "id", F.coalesce("weight", F.lit(0.0)).alias("_w")
             )
-        # defensive: a duplicated prior id would duplicate STATE rows and
-        # corrupt every superstep after the left join below — collapse to
-        # one row per id (max is as good as any: init only moves the
-        # starting point, never the fixed point)
-        init = init.groupBy("id").agg(F.max("_r0").alias("_r0"))
-        warm = ranks.join(init, "id", "left").select(
-            "id",
-            F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"),
-            *(["_dang"] if n_dangling > 0 else []),
-            *(["_s"] if svec is not None else []),
+            row0 = raw_s.agg(
+                F.count(F.lit(1)).alias("n"), F.sum("_w").alias("t")
+            ).collect()[0]
+            n = int(row0["n"])
+            tot = float(row0["t"] or 0.0)
+            if n > 0 and tot <= 0:
+                raise ValueError(_NO_TELEPORT)
+            if n > 0:
+                svec = raw_s.select(
+                    "id", (F.col("_w") / F.lit(tot)).alias("_s")
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+        else:
+            n = verts.count()
+        if n == 0:
+            empty = verts.select("id", F.lit(0.0).alias("rank"))
+            return PageRankResult(_decode_ranks(empty, vdict), 0, True)
+
+        np = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if strategy in ("auto", "local"):
+            strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "copartition"
+        broadcast_ranks = strategy == "broadcast"
+        # Partitioning of the persisted transition table:
+        # - broadcast: scatter join is map-side, so partition by dst — the
+        #   gather's map-side partial agg emits ~one row per dst and the
+        #   shuffle moves ~|V| rows,
+        # - copartition: partition by src (sorted) so the rank join streams
+        #   the cached edge side.
+        if broadcast_ranks:
+            norm_edges = norm.repartition(np, "dst")
+        else:
+            norm_edges = norm.repartition(np, "src").sortWithinPartitions("src")
+        norm_edges = norm_edges.persist(StorageLevel.MEMORY_AND_DISK)
+        norm_edges.count()  # materialize once
+        if probe_cache is not None:
+            probe_cache.unpersist()  # norm_edges now carries the edge data
+
+        dangling = verts.join(
+            norm_edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        n_dangling = dangling.count()
+
+        # the dangling flag rides along in the state so the per-superstep
+        # agg can produce the NEXT superstep's dangling mass together with
+        # the L1 delta — one Spark action per superstep, not two. Graphs
+        # with no dangling vertices (every symmetrized undirected graph)
+        # skip the flag entirely: dmass is identically 0 and the state
+        # stays 2 columns. The teleport weight rides along the same way,
+        # so the per-superstep update stays a single join + projection.
+        # Both are derived state: a resumed (id, rank) state is joined to
+        # them again rather than trusting stored columns.
+        def with_flags(ranks: DataFrame) -> DataFrame:
+            if n_dangling > 0:
+                ranks = ranks.join(
+                    dangling.select("id", F.lit(True).alias("_dang")), "id", "left"
+                ).select("id", "rank", F.coalesce("_dang", F.lit(False)).alias("_dang"))
+            return ranks.join(svec, "id") if svec is not None else ranks
+
+        ranks = with_flags(verts.select("id", F.lit(1.0 / n).alias("rank")))
+        state_cols = (
+            ["id", "rank"]
+            + (["_dang"] if n_dangling > 0 else [])
+            + (["_s"] if svec is not None else [])
         )
-        aggs = [F.sum("rank").alias("_t")] + (
-            [F.sum(F.when(F.col("_dang"), F.col("rank"))).alias("_d")]
-            if n_dangling > 0
-            else []
-        )
-        row0 = warm.agg(*aggs).collect()[0]
-        total = float(row0["_t"] or 0.0)
-        if math.isfinite(total) and total > 0:
-            ranks = warm.select(
+        # exact: the initial state is uniform, so dangling mass = |D| / n
+        dmass = n_dangling / n
+        manifest = None
+        if run_dir is not None:
+            manifest = RunManifest.open_or_create(
+                run_dir, "pagerank",
+                {**params, "ids": "key" if vdict is None else "xxhash64"},
+            )
+        if init_ranks is not None and (manifest is None or manifest.last_complete() < 0):
+            # warm start (see docstring): join the prior onto the CURRENT
+            # universe, fill gaps with 1/n, renormalize. One extra action —
+            # the total and next dangling mass come out of a single aggregate.
+            r0 = F.col("rank").cast("double")
+            init = init_ranks.filter(r0.isNotNull() & ~F.isnan(r0) & (r0 > 0)).select(
+                F.col("id"), r0.alias("_r0")
+            )
+            if vdict is not None:
+                init = init.select(
+                    F.xxhash64(F.col("id"), F.lit(42)).alias("id"), "_r0"
+                )
+            # defensive: a duplicated prior id would duplicate STATE rows and
+            # corrupt every superstep after the left join below — collapse to
+            # one row per id (max is as good as any: init only moves the
+            # starting point, never the fixed point)
+            init = init.groupBy("id").agg(F.max("_r0").alias("_r0"))
+            warm = ranks.join(init, "id", "left").select(
                 "id",
-                (F.col("rank") / F.lit(total)).alias("rank"),
+                F.coalesce("_r0", F.lit(1.0 / n)).alias("rank"),
                 *(["_dang"] if n_dangling > 0 else []),
                 *(["_s"] if svec is not None else []),
             )
-            dmass = (
-                float(row0["_d"] or 0.0) / total if n_dangling > 0 else 0.0
+            aggs = [F.sum("rank").alias("_t")] + (
+                [F.sum(F.when(F.col("_dang"), F.col("rank"))).alias("_d")]
+                if n_dangling > 0
+                else []
             )
-        # else: degenerate prior — keep the uniform cold start
+            row0 = warm.agg(*aggs).collect()[0]
+            total = float(row0["_t"] or 0.0)
+            if math.isfinite(total) and total > 0:
+                ranks = warm.select(
+                    "id",
+                    (F.col("rank") / F.lit(total)).alias("rank"),
+                    *(["_dang"] if n_dangling > 0 else []),
+                    *(["_s"] if svec is not None else []),
+                )
+                dmass = (
+                    float(row0["_d"] or 0.0) / total if n_dangling > 0 else 0.0
+                )
+            # else: degenerate prior — keep the uniform cold start
 
-    ranks = ranks.localCheckpoint(eager=True) if manifest is None else ranks
-
-    converged = False
-    steps = start_k
-    local_metrics: list[dict] = []
-    # seed with the initial pinned state so round 0 releases it (a None
-    # seed leaked one |V|-sized checkpoint for the whole run)
-    prev_ckpt = ranks if manifest is None else None
-    # AQE re-plans every query stage; for the broadcast regime (small
-    # rank table, coordination-bound supersteps) that planning overhead
-    # exceeds any runtime re-optimization win (~18% per superstep
-    # measured at sf0.1) — disable it for the loop only, restore after.
-    # Copartition keeps the session setting: at scale AQE's skew-join
-    # and partition coalescing matter there.
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_before = spark.conf.get(aqe_key)
-    if broadcast_ranks:
-        spark.conf.set(aqe_key, "false")
-    # In broadcast mode only the gather output / rank-state shuffles use
-    # spark.sql.shuffle.partitions (the scatter join is map-side over the
-    # persisted edge partitioning). For SMALL rank tables (<= 500k rows —
-    # the coordination-bound regime) right-size those shuffles to ~100k
-    # rows per partition, floor 8, instead of the session default:
-    # measured 39.9s -> 30.3s at sf0.1 (|V|=16k, session default 32).
-    # The result never exceeds the session value: the resize only shrinks.
-    # Larger graphs keep the session setting (shrinking below the core
-    # count would idle executors during the rank-state stages), and
-    # copartition always keeps it: its shuffle count must match the
-    # persisted edge partitioning or joins re-exchange.
-    sp_key = "spark.sql.shuffle.partitions"
-    sp_before = spark.conf.get(sp_key)
-    resize_sp = False
-    if broadcast_ranks and n <= 500_000:
-        try:
-            rank_parts = min(int(sp_before), max(8, (n + 99_999) // 100_000))
-            resize_sp = rank_parts != int(sp_before)
-        except ValueError:  # non-numeric (e.g. "auto") — leave untouched
-            resize_sp = False
-    if resize_sp:
-        spark.conf.set(sp_key, str(rank_parts))
-    try:
-        for k in range(start_k, max_iter):
-            t0 = time.monotonic()
+        def step(prev: DataFrame, last: dict) -> DataFrame:
+            ranks = prev.select(*state_cols)
             # copartition mode: no explicit repartition — the rank table
             # is |V| rows (cheap to shuffle when needed) and its
             # checkpointed partitioning from the previous superstep's
@@ -774,11 +678,14 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("p")).alias("_c"))
             )
-            # dmass is the dangling mass of the CURRENT state, produced by the
-            # previous superstep's fused aggregate (uniform-state closed form
-            # at k=0) — no extra per-superstep action. With a teleport
-            # vector the base is per-vertex ((1-α)+α·D)·s(v), read from
-            # the _s state column — same single join + projection.
+            # the dangling mass of the CURRENT state, produced by the
+            # previous superstep's fused aggregate (uniform-state closed
+            # form, or the warm start's aggregate, at a fresh start; the
+            # manifest's record on a resume) — no extra per-superstep
+            # action. With a teleport vector the base is per-vertex
+            # ((1-α)+α·D)·s(v), read from the _s state column — same
+            # single join + projection.
+            dmass = last["dangling_mass_next"]
             if svec is not None:
                 base_expr = ranks["_s"] * F.lit((1.0 - alpha) + alpha * dmass)
             else:
@@ -791,7 +698,7 @@ def pagerank(
             # 0.313 vs 0.277 s/superstep (|V|=50k, 16M directed edges,
             # local[32]) — the serial driver collect+broadcast costs more
             # than the parallel |V|-row exchange+sort it saves.
-            new_ranks = ranks.join(contrib, ranks.id == contrib.dst, "left").select(
+            return ranks.join(contrib, ranks.id == contrib.dst, "left").select(
                 ranks.id.alias("id"),
                 (base_expr + F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0))).alias(
                     "rank"
@@ -800,57 +707,52 @@ def pagerank(
                 *([ranks["_dang"]] if n_dangling > 0 else []),
                 *([ranks["_s"]] if svec is not None else []),
             )
-            if manifest is not None:
-                new_ranks = manifest.checkpoint(new_ranks, k)
-            else:
-                # lazy local checkpoint: the fused agg below is the action
-                # that computes AND pins the superstep state — one Spark job
-                # per superstep instead of two
-                new_ranks = new_ranks.localCheckpoint(eager=False)
 
-            # ONE action: L1 delta (+ the next superstep's dangling mass when
-            # the graph has dangling vertices)
+        def measure(new: DataFrame) -> dict:
+            # ONE action: L1 delta (+ the next superstep's dangling mass
+            # when the graph has dangling vertices)
             aggs = [F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("_delta")]
             if n_dangling > 0:
                 aggs.append(
                     F.sum(F.when(F.col("_dang"), F.col("rank")).otherwise(0.0)).alias("_dm")
                 )
-            agg_row = new_ranks.agg(*aggs).collect()[0]
-            delta = agg_row["_delta"]
-            dmass = (agg_row["_dm"] or 0.0) if n_dangling > 0 else 0.0
-            wall_ms = (time.monotonic() - t0) * 1e3
-            entry = {
-                "k": k, "wall_ms": wall_ms, "delta": delta, "rows": n,
-                "dangling_mass_next": dmass,
-            }
-            local_metrics.append(entry)
-            if manifest is not None:
-                manifest.record_superstep(
-                    spark, k, wall_ms=wall_ms, delta=delta, rows=n,
-                    extra={"dangling_mass_next": dmass},
-                )
-            # release the superseded superstep state (safe: the new state is
-            # materialized) so long runs don't accumulate pinned blocks
-            if prev_ckpt is not None and manifest is None:
-                release_local_checkpoint(prev_ckpt)
-            prev_ckpt = new_ranks
-            ranks = new_ranks.select(*state_cols)
-            steps = k + 1
-            if delta < tol:
-                converged = True
-                break
-    finally:
-        if broadcast_ranks:
-            spark.conf.set(aqe_key, aqe_before)
-        if resize_sp:
-            spark.conf.set(sp_key, sp_before)
+            row = new.agg(*aggs).collect()[0]
+            dm = (row["_dm"] or 0.0) if n_dangling > 0 else 0.0
+            return {"delta": row["_delta"], "rows": n, "dangling_mass_next": dm}
 
-    verts.unpersist()
-    dangling.unpersist()
-    norm_edges.unpersist()
-    if svec is not None:
-        svec.unpersist()
-    metrics = manifest.metrics() if manifest is not None else local_metrics
-    return PageRankResult(
-        _decode_ranks(ranks.select("id", "rank"), vdict), steps, converged, metrics
-    )
+        # AQE re-plans every query stage; for the broadcast regime (small
+        # rank table, coordination-bound supersteps) that planning overhead
+        # exceeds any runtime re-optimization win (~18% per superstep
+        # measured at sf0.1) — disable it for the loop only. Copartition
+        # keeps the session setting: at scale AQE's skew-join and
+        # partition coalescing matter there.
+        # In broadcast mode only the gather output / rank-state shuffles
+        # use spark.sql.shuffle.partitions (the scatter join is map-side
+        # over the persisted edge partitioning). For SMALL rank tables
+        # (<= 500k rows — the coordination-bound regime) right-size those
+        # shuffles to ~100k rows per partition: measured 39.9s -> 30.3s at
+        # sf0.1 (|V|=16k, session default 32). Larger graphs keep the
+        # session setting (shrinking below the core count would idle
+        # executors during the rank-state stages), and copartition always
+        # keeps it: its shuffle count must match the persisted edge
+        # partitioning or joins re-exchange.
+        with scoped_conf(
+            spark,
+            n if broadcast_ranks and n <= 500_000 else None,
+            {"spark.sql.adaptive.enabled": "false"} if broadcast_ranks else None,
+        ):
+            res = run_supersteps(
+                ranks, step, measure, lambda m: m["delta"] < tol,
+                max_iter=max_iter, manifest=manifest,
+                resume=lambda loaded: with_flags(loaded.select("id", "rank")),
+                first={"dangling_mass_next": dmass},
+            )
+        ranks = res.state.select("id", "rank")
+        if vdict is not None:
+            ranks = _decode_ranks(ranks, vdict)
+            release_local_checkpoint(res.state)  # the decoded ranks are pinned
+        return PageRankResult(ranks, res.supersteps, res.converged, res.metrics)
+    finally:
+        for cached in (probe_cache, vdict, verts, svec, dangling, norm_edges):
+            if cached is not None:
+                cached.unpersist()

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import deterministic_id
+from ..plans.superstep import scoped_conf
 from .cc import connected_components
 from .edges import canonicalize_edges
 
@@ -153,19 +154,7 @@ def bipartite_group_rollup(
     # afterwards).
     n_edges = getattr(cc, "_cwcd_n_edges", None)
     if n_edges is not None and n_edges <= 3_200_000:
-        sp_key = "spark.sql.shuffle.partitions"
-        sp_before = spark.conf.get(sp_key)
-        try:
-            parts = max(8, min(int(sp_before), (n_edges + 99_999) // 100_000))
-            narrowed = parts < int(sp_before)
-        except ValueError:  # non-numeric session setting (e.g. "auto")
-            narrowed = False
-        if narrowed:
-            spark.conf.set(sp_key, str(parts))
-        try:
+        with scoped_conf(spark, n_edges):
             out = out.localCheckpoint(eager=True)
-        finally:
-            if narrowed:
-                spark.conf.set(sp_key, sp_before)
         pairs.unpersist()
     return out

@@ -8,6 +8,9 @@ lineage — without it, iterative join plans grow unboundedly) and a JSON
 manifest records, per superstep, wall time, convergence delta, row count
 and per-partition lineage, so any run can resume from the last complete
 superstep with identical results (tested in tests/test_resume.py).
+plans/superstep.py drives the distributed loops over it; a manifest is
+keyed on its operator's parameters and on ``content_identity`` of the
+inputs, so a changed input starts fresh.
 
 Group/superstep identifiers are deterministic — the reference's uuid4 ids
 (services/wallet_clustering.py:6-7,33) would break replay equality.
@@ -19,7 +22,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,15 +40,36 @@ def checkpoint_df(df: DataFrame, path: str) -> DataFrame:
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
-    """Drop the blocks pinned by ``df = x.localCheckpoint(...)``.
+    """Drop the blocks pinned by ``x.localCheckpoint(...)`` under ``df``.
 
     ``DataFrame.unpersist`` only removes cache-manager entries, and a
     local checkpoint never creates one: its blocks belong to the RDD
     under the plan's ``LogicalRDD`` and otherwise stay pinned until the
-    JVM garbage-collects that plan. ``df`` must be the checkpoint's
-    direct result, not a projection of it.
+    JVM garbage-collects that plan. ``df`` is the checkpoint's result or
+    a plan over it; every locally checkpointed ``LogicalRDD`` leaf of
+    that plan is released, and no other leaf is touched.
     """
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" and leaf.rdd().isLocallyCheckpointed():
+            leaf.rdd().unpersist(False)
+
+
+def content_identity(df: DataFrame, *cols: str) -> list[int]:
+    """Content key ``[rows, Σhi, Σlo]`` of ``df`` over ``cols``: the row
+    count plus the sums of the two 32-bit halves of ``xxhash64(cols)``,
+    in ONE single-stage aggregate (no groupBy shuffle). Order-independent
+    and multiplicity-safe: a duplicated row adds its hash again, where an
+    XOR would cancel the pair. The halves are summed as decimals, so no
+    row count can overflow them under ANSI mode."""
+    h = F.xxhash64(*cols)
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.shiftright(h, 32).cast("decimal(28,0)")),
+        F.sum(h.bitwiseAND(F.lit(0xFFFFFFFF)).cast("decimal(28,0)")),
+    ).collect()[0]
+    return [int(row[0]), int(row[1] or 0), int(row[2] or 0)]
 
 
 def partition_lineage(spark: SparkSession, path: str) -> list[dict[str, Any]]:
@@ -162,6 +186,15 @@ class RunManifest:
         """Highest superstep index recorded as complete; -1 if none."""
         return max((s["k"] for s in self.supersteps), default=-1)
 
+    def resume_point(self, done: Callable[[dict], bool]) -> tuple[int, bool]:
+        """The last recorded superstep (-1 if none) and whether the run
+        had converged there, by the operator's test ``done(record)``."""
+        last = self.last_complete()
+        return last, any(
+            s["k"] == last and s.get("delta") is not None and done(s)
+            for s in self.supersteps
+        )
+
     def load_state(self, spark: SparkSession, k: int) -> DataFrame:
         return spark.read.parquet(self.step_path(k))
 
@@ -174,7 +207,6 @@ class RunManifest:
         delta: float | int | None,
         rows: int,
         extra: dict[str, Any] | None = None,
-        lineage: bool = True,
     ) -> None:
         entry: dict[str, Any] = {
             "k": k,
@@ -185,8 +217,7 @@ class RunManifest:
         }
         if extra:
             entry.update(extra)
-        if lineage:
-            entry["partitions"] = partition_lineage(spark, self.step_path(k))
+        entry["partitions"] = partition_lineage(spark, self.step_path(k))
         # idempotent on resume: drop any stale record for the same k
         self.supersteps = [s for s in self.supersteps if s["k"] != k] + [entry]
         self.supersteps.sort(key=lambda s: s["k"])

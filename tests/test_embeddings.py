@@ -206,3 +206,20 @@ def test_ann_operator_consumes_output(spark):
     ).collect()
     assert len(top) == 1
     assert top[0]["id"] in set(range(1, 6))  # same clique as vertex 0
+
+
+def test_generated_corpus_is_released(spark):
+    """The corpus the function walks itself is a local checkpoint and is
+    released once the vectors exist; a caller's corpus stays pinned."""
+    edges = datagen.edges_df(spark, datagen.two_cliques_bridge(5))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    out = deepwalk_embeddings(edges, dim=4, num_walks=2, walk_length=4)
+    assert out.count() == 10
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+    corpus = random_walks(edges, num_walks=2, walk_length=4)
+    pinned = set(jsc.getPersistentRDDs().keys()) - before
+    assert pinned
+    deepwalk_embeddings(edges, dim=4, corpus=corpus).count()
+    assert set(jsc.getPersistentRDDs().keys()) - before == pinned

@@ -7,6 +7,7 @@ kernels (graph/local_kernel.py), whose input carries no Exchange under
 The walk corpora run on that boundary too; the walk module's only task
 of its own is the Arrow alias-table build."""
 
+import ast
 import re
 from pathlib import Path
 
@@ -70,6 +71,27 @@ def test_python_tasks_enter_graph_through_known_kernels():
         "edges.py": 1, "local_kernel.py": 1, "walks.py": 1,
     }
     assert [name for name, src in sources.items() if "factorize(" in src] == []
+
+
+def test_superstep_lifecycle_lives_in_plans():
+    """The distributed loops' checkpointing, release, resume and metrics
+    live in plans/superstep.py. Outside plans/ only CC's star loop (not
+    ported yet) and PageRank's checkpointed local kernel record
+    supersteps themselves, and no graph operator sets session conf:
+    ``scoped_conf`` narrows it for a plan and restores it."""
+    package = Path(graph.__file__).parent.parent
+    sites = set()
+    for f in sorted(package.rglob("*.py")):
+        if f.parent.name == "plans":
+            continue
+        for node in ast.parse(f.read_text()).body:
+            for sub in ast.walk(node):
+                if (isinstance(sub, ast.Call) and isinstance(sub.func, ast.Attribute)
+                        and sub.func.attr == "record_superstep"):
+                    sites.add((f"{f.parent.name}/{f.name}", getattr(node, "name", None)))
+    assert sites == {("graph/cc.py", "_cc_loop"), ("graph/pagerank.py", "_checkpointed_local")}
+    graph_dir = Path(graph.__file__).parent
+    assert [f.name for f in graph_dir.glob("*.py") if "spark.conf.set(" in f.read_text()] == []
 
 
 @pytest.mark.parametrize(

@@ -9,10 +9,12 @@ import json
 import os
 
 import numpy as np
+import pytest
 
 from cryptowalletcommunitydetection_spark import datagen
 from cryptowalletcommunitydetection_spark.graph import (
     connected_components,
+    core_numbers,
     label_propagation,
     pagerank,
 )
@@ -222,3 +224,85 @@ def test_manifest_records_partition_lineage(spark, tmp_path):
 
 def test_manifest_records_partition_lineage_distributed(spark, tmp_path):
     _manifest_records_partition_lineage(spark, tmp_path, "broadcast")
+
+
+class Killed(RuntimeError):
+    pass
+
+
+def _killed_then_resumed(spark, tmp_path, monkeypatch, run):
+    """Run ``run(run_dir)`` killed right after superstep 2's state is
+    written and before the manifest records it, then rerun it. The kill
+    leaves nothing pinned; the rerun resumes after superstep 1 and
+    returns the same as an uninterrupted run. Each caller's graph is
+    its own: a cache an earlier test left for the same plan would be
+    reused, and a leak would add no new RDD."""
+    d = str(tmp_path / "killed")
+    checkpoint = RunManifest.checkpoint
+
+    def killing_checkpoint(self, df, k):
+        out = checkpoint(self, df, k)
+        if k == 2:
+            raise Killed("after the state of superstep 2 was written")
+        return out
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    monkeypatch.setattr(RunManifest, "checkpoint", killing_checkpoint)
+    with pytest.raises(Killed):
+        run(d)
+    monkeypatch.undo()
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    assert [s["k"] for s in RunManifest.load(d).supersteps] == [0, 1]
+    resumed, straight = run(d), run(str(tmp_path / "straight"))
+    assert (resumed.supersteps, resumed.converged) == (straight.supersteps, straight.converged)
+    assert [m["k"] for m in resumed.metrics] == list(range(straight.supersteps))
+    return resumed, straight
+
+
+def test_pagerank_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(40, 0.05, seed=9))
+    resumed, straight = _killed_then_resumed(
+        spark, tmp_path, monkeypatch,
+        lambda d: pagerank(spark, edges, tol=1e-4, strategy="broadcast", run_dir=d),
+    )
+    a, b = _ranks(resumed), _ranks(straight)
+    assert set(a) == set(b)
+    assert max(abs(a[k] - b[k]) for k in a) < 1e-12
+
+
+def test_lpa_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    resumed, straight = _killed_then_resumed(
+        spark, tmp_path, monkeypatch, lambda d: label_propagation(spark, edges, run_dir=d),
+    )
+    assert resumed.converged
+    labels = [{r["id"]: r["label"] for r in x.labels.collect()} for x in (resumed, straight)]
+    assert labels[0] == labels[1]
+
+
+def test_kcore_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    resumed, straight = _killed_then_resumed(
+        spark, tmp_path, monkeypatch, lambda d: core_numbers(spark, edges, run_dir=d),
+    )
+    cores = [{r["id"]: r["core"] for r in x.cores.collect()} for x in (resumed, straight)]
+    assert cores[0] == cores[1]
+
+
+def test_kcore_run_dir_reused_on_changed_input_starts_fresh(spark, tmp_path):
+    """A run dir written by a capped run on graph A, reused on a graph B
+    with as many edges, starts fresh: B's cores, not A's state."""
+    a = datagen.erdos_renyi(40, 0.15, seed=13)
+    b = datagen.erdos_renyi(40, 0.2, seed=14)[: len(a)]
+    assert len(b) == len(a) and set(b) != set(a)
+    d = str(tmp_path / "kcore")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        core_numbers(spark, datagen.edges_df(spark, a), max_iter=1, run_dir=d)
+    edges_b = datagen.edges_df(spark, b)
+    reused = core_numbers(spark, edges_b, run_dir=d)
+    straight = core_numbers(spark, edges_b)
+    assert reused.supersteps == straight.supersteps
+    assert [m["k"] for m in reused.metrics] == list(range(straight.supersteps))
+    got = {r["id"]: r["core"] for r in reused.cores.collect()}
+    assert got == {r["id"]: r["core"] for r in straight.cores.collect()}
