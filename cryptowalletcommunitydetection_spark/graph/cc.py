@@ -231,13 +231,13 @@ replaced by a single-task vectorized hook-and-jump pass over the edge
 set — the same physical-strategy principle as a broadcast join: when
 one side of the problem fits one executor comfortably, a local
 algorithm beats 5 × O(log n) distributed rounds of pure scheduling
-latency. The probe is the non-loop row count of the pinned edge
-universe (the input rows under ``assume_canonical``, so nothing on the
-path shuffles), taken by the aggregate of the fixpoint sketches. Above
-the gate — or whenever
-``run_dir`` checkpointing is requested — the alternating-star loop runs
-unchanged; ``local=False`` forces it (equality between the two paths is
-exact and tested)."""
+latency. The kernel task counts the distinct rows, self-loops included
+(the input rows under ``assume_canonical``, so nothing on the path
+shuffles), itself (``run_kernel``'s ``max_edge_rows``), as it does for
+a pre-contracted graph. Above the gate — or whenever ``run_dir``
+checkpointing is requested — the alternating-star loop runs unchanged;
+``local=False`` forces it (equality between the two paths is exact and
+tested)."""
 
 ENCODE_MIN_EDGES = 4_000_000
 """Distinct-edge count from which the distributed path re-keys string
@@ -282,7 +282,8 @@ def _cc_body():
             if np.array_equal(new, lab):
                 break
             lab = new
-        return {"id": np.arange(g.n), "component": lab}, {"rounds": rounds}
+        meta = {"rounds": rounds, "edges": int(np.count_nonzero(u != v))}
+        return {"id": np.arange(g.n), "component": lab}, meta
 
     return body
 
@@ -387,6 +388,7 @@ def connected_components(
         edges.select("src", "dst")
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     )
+    dedup = raw if assume_canonical else raw.distinct()
     # ONE materialization of the distinct edge set INCLUDING self-loops.
     # It serves four roles off a single action: the fixpoint-probe seed
     # (self-loops filtered, a narrow op over the checkpoint), the size
@@ -396,10 +398,30 @@ def connected_components(
     # the manifest input identity (self-loop-only vertices are part of
     # the OUTPUT as singletons, so they belong in the identity; the
     # previous self-loop-free hash let two inputs differing only in
-    # such a vertex share a resume state).
-    universe = (
-        raw if assume_canonical else raw.distinct()
-    ).localCheckpoint(eager=False)
+    # such a vertex share a resume state). Shuffled rows are pinned in
+    # it before a speculative kernel call already (see run_kernel).
+    pin = run_dir is None and local is None and not assume_canonical
+    universe = dedup.localCheckpoint(eager=False) if pin else dedup
+    if run_dir is None and local is not False:
+        # small-graph fast path: one numpy task instead of ~5 distributed
+        # rounds (measured crossover in BENCH/)
+        try:
+            kernel = run_kernel(
+                universe, _cc_body(), _CC_FIELDS, vertices=vertices,
+                max_edge_rows=None if local else LOCAL_CC_MAX_EDGES,
+            )
+        except BaseException:
+            if pin:
+                release_local_checkpoint(universe)
+            raise
+        if kernel is not None:
+            if pin:
+                release_local_checkpoint(universe)
+            out = kernel.rows
+            out._cwcd_n_edges = kernel.meta["edges"]
+            return out
+    if not pin:
+        universe = dedup.localCheckpoint(eager=False)
     non_loop = F.col("src") != F.col("dst")
     h42 = lambda c: F.xxhash64(F.col(c), F.lit(42))  # noqa: E731
     r = universe.agg(
@@ -415,19 +437,6 @@ def connected_components(
     ).collect()[0]
     input_sketch = (r["n_all"], r["h_all"])
     n_edges = r["n_e"]
-    if run_dir is None and (
-        local is True or (local is None and n_edges <= LOCAL_CC_MAX_EDGES)
-    ):
-        # small-graph fast path: one numpy task instead of
-        # ~5 distributed rounds (measured crossover in BENCH/; the
-        # distributed loop still covers run_dir checkpointing and
-        # everything above the gate)
-        try:
-            out = run_kernel(universe, _cc_body(), _CC_FIELDS, vertices=vertices).rows
-        finally:
-            release_local_checkpoint(universe)
-        out._cwcd_n_edges = n_edges
-        return out
     vdict = None
     is_string = isinstance(raw.schema["src"].dataType, StringType)
     if is_string and n_edges >= ENCODE_MIN_EDGES:
@@ -491,10 +500,16 @@ def connected_components(
         # bench): one task closes it instead of ~5 distributed star
         # rounds — the same adaptive principle as the top-level
         # LOCAL_CC_MAX_EDGES gate, composed through the anchors
-        if contracted.count() <= LOCAL_CC_MAX_EDGES:
-            kernel = None
+        try:
+            kernel = run_kernel(
+                contracted, _cc_body(), _CC_FIELDS, max_edge_rows=LOCAL_CC_MAX_EDGES
+            )
+        except BaseException:
+            release_local_checkpoint(contracted)
+            release_local_checkpoint(anchors)
+            raise
+        if kernel is not None:
             try:
-                kernel = run_kernel(contracted, _cc_body(), _CC_FIELDS)
                 stars = kernel.rows.where(F.col("id") != F.col("component")).select(
                     F.col("id").alias("src"), F.col("component").alias("dst")
                 )
@@ -502,14 +517,12 @@ def connected_components(
                     spark, stars, edge_universe, vertices, vdict, universe, anchors,
                 )
             finally:
-                if kernel is not None:
-                    release_local_checkpoint(kernel.rows)
+                release_local_checkpoint(kernel.rows)
                 release_local_checkpoint(contracted)
                 release_local_checkpoint(anchors)
             out._cwcd_n_edges = n_edges
             return out
-        prev = contracted
-        pinned_seed = contracted
+        prev = pinned_seed = contracted
         prev_sketch = _edge_sketch(contracted)
 
     # small-graph regime: right-size the per-round shuffles for the

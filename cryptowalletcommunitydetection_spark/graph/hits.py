@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from ..plans.checkpoint import release_local_checkpoint
 from ..plans.superstep import run_supersteps
 from .edges import canonicalize_edges, symmetrize, vertices_of
 from .local_kernel import KEY, run_kernel
@@ -61,7 +62,8 @@ from .local_kernel import KEY, run_kernel
 LOCAL_HITS_MAX_EDGES = 4_000_000
 """Directed edge rows below which the single-task kernel runs
 (inherited from graph/pagerank.py's measured LOCAL_PR_MAX_EDGES — the
-per-superstep join/agg shape is the same; not re-measured)."""
+per-superstep join/agg shape is the same; not re-measured), counted by
+the kernel task itself (``run_kernel``'s ``max_edge_rows``)."""
 
 
 @dataclass
@@ -138,8 +140,8 @@ def hits(
     ``directed=False`` canonicalizes and symmetrizes first (hubs ==
     authorities then, by symmetry). ``local`` forces the physical
     strategy (None = auto by ``LOCAL_HITS_MAX_EDGES``); results are
-    identical (parity-tested). The kernel path reads its input rows
-    once, so they are persisted only for the size probe. ``metrics``
+    identical (parity-tested). The kernel task applies the gate, so a
+    small call is one Spark job. ``metrics``
     holds one record per superstep (``k``, ``wall_ms``, ``delta``,
     ``rows``; the distributed loop adds the norms it divided by).
     """
@@ -149,24 +151,27 @@ def hits(
             rows = rows.filter(F.col("src") != F.col("dst"))
     else:
         rows = (edges if assume_canonical else canonicalize_edges(edges)).select("src", "dst")
-    probed = local is None
+    # shuffled rows are pinned for a fall-through (see run_kernel)
+    pin = local is None and not (directed or assume_canonical)
+    if pin:
+        rows = rows.localCheckpoint(eager=False)
     try:
-        if probed:
-            # the probe fills the cache the kernel or the loop reads; it
-            # counts directed rows before the dedup, an upper bound
-            rows = rows.persist()
-            local = rows.count() * (1 if directed else 2) <= LOCAL_HITS_MAX_EDGES
-        if local:
-            out = run_kernel(rows, _hits_body(tol, max_iter, directed), _HITS_FIELDS)
-            return HitsResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
+        if local is not False:
+            # gated on directed rows before the dedup, an upper bound
+            out = run_kernel(
+                rows, _hits_body(tol, max_iter, directed), _HITS_FIELDS,
+                max_edge_rows=None if local else LOCAL_HITS_MAX_EDGES // (1 if directed else 2),
+            )
+            if out is not None:
+                return HitsResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
         if not directed:
             e = symmetrize(rows, weight=False)
         else:
             e = rows if assume_canonical else rows.distinct()
         return _distributed_hits(e.persist(), tol, max_iter)
     finally:
-        if probed:
-            rows.unpersist()
+        if pin:
+            release_local_checkpoint(rows)
 
 
 def _normalized(raw: DataFrame, record: dict) -> DataFrame:

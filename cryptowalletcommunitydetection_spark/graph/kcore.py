@@ -66,7 +66,8 @@ loop runs as a single vectorized numpy task. MEASURED crossover
 (bench_scripts/kcore_crossover.py, local[32], fresh-JVM min-of-2,
 uniform random string-keyed graphs): local wins 5.2x at 1M raw rows,
 1.8x at 2M, 1.4x at 4M, and LOSES 0.78x at 8M — the gate sits at the
-last measured local win. Integer state in both paths, so
+last measured local win, applied by the kernel task itself
+(``run_kernel``'s ``max_edge_rows``). Integer state in both paths, so
 local/distributed parity is exact (tested; the crossover script also
 sketch-checks agreement at every level). ``run_dir`` checkpointing
 always uses the distributed loop (``run_supersteps``)."""
@@ -175,22 +176,28 @@ def core_numbers(
     else:
         canon = canonicalize_edges(edges).select("src", "dst")
 
-    probed = run_dir is None and local is None
-    if probed:
-        # the probe fills the cache the kernel or the loop reads
-        canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
-        local = canon.count() <= LOCAL_KCORE_MAX_EDGES
-    if run_dir is None and local:
+    # shuffled rows are pinned for a fall-through (see run_kernel)
+    pin = run_dir is None and local is None and not assume_canonical
+    if pin:
+        canon = canon.localCheckpoint(eager=False)
+    if run_dir is None and local is not False:
         try:
-            out = run_kernel(canon, _kcore_body(max_iter), {"id": KEY, "core": LongType()})
-        finally:
-            if probed:
-                canon.unpersist()
-        if not out.meta["conv"]:
-            release_local_checkpoint(out.rows)
-            raise _unconverged(max_iter, run_dir)
-        return CoreResult(out.rows, out.meta["k"], True, out.meta["steps"])
-    if not probed:
+            out = run_kernel(
+                canon, _kcore_body(max_iter), {"id": KEY, "core": LongType()},
+                max_edge_rows=None if local else LOCAL_KCORE_MAX_EDGES,
+            )
+        except BaseException:
+            if pin:
+                release_local_checkpoint(canon)
+            raise
+        if out is not None:
+            if pin:
+                release_local_checkpoint(canon)
+            if not out.meta["conv"]:
+                release_local_checkpoint(out.rows)
+                raise _unconverged(max_iter, run_dir)
+            return CoreResult(out.rows, out.meta["k"], True, out.meta["steps"])
+    if not pin:
         canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
 
     # partitioned AND sorted on the per-round join key: an un-laid-out
@@ -239,11 +246,15 @@ def core_numbers(
             F.col("core").alias("_old"),
         )
 
-    res = run_supersteps(
-        e.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).cast("long").alias("core")),
-        step, count_changed("core"), lambda m: m["delta"] == 0,
-        max_iter=max_iter, manifest=manifest, inputs=(canon, e),
-    )
+    try:
+        res = run_supersteps(
+            e.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).cast("long").alias("core")),
+            step, count_changed("core"), lambda m: m["delta"] == 0,
+            max_iter=max_iter, manifest=manifest, inputs=(canon, e),
+        )
+    finally:
+        if pin:
+            release_local_checkpoint(canon)
     if not res.converged:
         release_local_checkpoint(res.state)
         raise _unconverged(max_iter, run_dir)

@@ -10,6 +10,12 @@ share, so each operator keeps only its numpy body:
   table for undirected operators: no Spark-side symmetrization,
   normalization or join) plus optional marker rows, all in one
   ``coalesce(1).mapInArrow`` task — a narrow merge, no exchange;
+- the size gate runs in that task: with ``max_edge_rows`` the edge rows
+  enter through ``coalesce(1).limit(gate + 1)`` (narrow: still one job;
+  the scan stops there when no exchange lies below the edge rows);
+  past the gate the task returns only an overflow record and the call
+  returns ``None`` for the operator's distributed path, so a
+  small-graph call is one Spark job;
 - the task indexes every key once into int64 codes in key order:
   pyarrow ``unique`` / ``sort_indices`` for strings (UTF-8 byte order,
   which is Spark's ``UTF8String`` order), ``np.unique`` for integers,
@@ -27,12 +33,15 @@ worker.
 from __future__ import annotations
 
 import json
+import logging
 from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import release_local_checkpoint
+
+log = logging.getLogger(__name__)
 
 KEY = "key"
 """Result field type meaning "a vertex id": the body returns codes, the
@@ -57,7 +66,8 @@ def run_kernel(
     weight: bool = False,
     vertices: DataFrame | None = None,
     values: tuple[DataFrame, ...] = (),
-) -> KernelOutput:
+    max_edge_rows: int | None = None,
+) -> KernelOutput | None:
     """Run ``body`` over ``edges(src, dst[, weight])`` in one task.
 
     ``vertices`` (DataFrame[id]) adds members to the vertex universe;
@@ -75,8 +85,19 @@ def run_kernel(
     (the body may return a pyarrow array for the latter). ``rows``
     reads a local checkpoint; release it with
     ``release_local_checkpoint(rows)`` once it is no longer needed. A
-    failing body leaves nothing pinned. With ``fields=None`` nothing is
-    pinned and the call is one job that returns the meta record.
+    failing body leaves nothing pinned. With ``fields=None`` nothing
+    stays pinned and the call returns only the meta record.
+
+    ``max_edge_rows`` (the operator's size gate, in rows of ``edges``)
+    makes the call speculative: the task reads at most that many edge
+    rows plus one, and past the gate it skips the body; the call then
+    pins nothing and returns ``None``. The scan of ``edges`` stops at
+    the limit only when no exchange lies below it; a shuffle below runs
+    in full, so a caller with a distributed path pins such ``edges``
+    first with a lazy ``localCheckpoint`` (a cache would add a query
+    stage job under adaptive execution; the checkpoint adds none): the
+    kernel job fills it, and past the gate the distributed path reads
+    it instead of shuffling again.
     """
     from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
@@ -97,6 +118,11 @@ def run_kernel(
         "src", "dst", *([w.alias("w")] if weight or marked else []),
         *([F.lit(0).cast("byte").alias("_c")] if marked else []),
     )
+    if max_edge_rows is not None:
+        # one partition already, so the limit needs no exchange; the
+        # scan below it stops after gate + 1 rows unless an exchange
+        # lies below the limit (that stage runs in full first)
+        inp = inp.coalesce(1).limit(max_edge_rows + 1)
     markers = [vertices.select("id", F.lit(None).alias("value"))] if vertices is not None else []
     # channel 1 = universe members, 2.. = value channels
     for c, m in enumerate(markers + list(values), start=2 - len(markers)):
@@ -116,14 +142,27 @@ def run_kernel(
 
         got = list(batches)
         t = pa.Table.from_batches(got) if got else empty
+        id_type = t.schema.field("src").type
+        key_types = {KEY: id_type, KEYS: pa.list_(id_type)}
+
+        def meta_batch(meta):
+            return pa.RecordBatch.from_arrays(
+                [pa.nulls(1, value_types.get(c) or key_types[fields[c]]) for c in names]
+                + [pa.array([json.dumps(meta)])],
+                names=names + ["_meta"],
+            )
+
         chan = t.column("_c").to_numpy() if marked else None
 
         def rows_of(c):
             return t.filter(pa.array(chan == c)) if marked else t
 
         e = rows_of(0)
+        if max_edge_rows is not None and e.num_rows > max_edge_rows:
+            yield meta_batch({"overflow": e.num_rows})
+            return
         keys = [e.column("src"), e.column("dst")] + ([rows_of(1).column("src")] if has_verts else [])
-        all_keys = pa.chunked_array([ch for k in keys for ch in k.chunks], t.schema.field("src").type)
+        all_keys = pa.chunked_array([ch for k in keys for ch in k.chunks], id_type)
         if pa.types.is_integer(all_keys.type):
             ids = pa.array(np.unique(pc.drop_null(all_keys).to_numpy()), all_keys.type)
         else:
@@ -146,7 +185,6 @@ def run_kernel(
         cols, meta = body(SimpleNamespace(
             ids=ids, n=len(ids), src=src, dst=dst, weight=wt, values=chans,
         ))
-        key_types = {KEY: ids.type, KEYS: pa.list_(ids.type)}
 
         def keys_of(c):
             if fields[c] == KEY:
@@ -163,11 +201,7 @@ def run_kernel(
             yield pa.RecordBatch.from_arrays(
                 arrays + [pa.nulls(len(arrays[0]), pa.string())], names=names + ["_meta"]
             )
-        yield pa.RecordBatch.from_arrays(
-            [pa.nulls(1, value_types.get(c) or key_types[fields[c]]) for c in names]
-            + [pa.array([json.dumps(meta)])],
-            names=names + ["_meta"],
-        )
+        yield meta_batch(meta)
 
     out = inp.coalesce(1).mapInArrow(task, out_schema)
     is_meta = F.col("_meta").isNotNull()
@@ -184,8 +218,6 @@ def run_kernel(
             raise ValueError(meta["error"])
         return meta
 
-    if not names:
-        return KernelOutput(None, read_meta(out))
     # lazy: the meta read is the one job that computes AND pins the
     # result, and a body that raises there leaves a handle to release
     pinned = out.localCheckpoint(eager=False)
@@ -194,4 +226,11 @@ def run_kernel(
     except BaseException:
         release_local_checkpoint(pinned)
         raise
-    return KernelOutput(pinned.where(~is_meta).select(*names), meta)
+    if "overflow" in meta:
+        log.info(
+            "local kernel skipped: %d edge rows read, gate %d", meta["overflow"], max_edge_rows
+        )
+    elif names:
+        return KernelOutput(pinned.where(~is_meta).select(*names), meta)
+    release_local_checkpoint(pinned)
+    return None if "overflow" in meta else KernelOutput(None, meta)

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.checkpoint import RunManifest, content_identity
+from ..plans.checkpoint import RunManifest, content_identity, release_local_checkpoint
 from ..plans.superstep import count_changed, run_supersteps
 from .edges import canonicalize_edges, symmetrize, vertices_of
 from .local_kernel import KEY, run_kernel
@@ -47,15 +47,16 @@ LOCAL_LPA_MAX_EDGES = 4_000_000
 """Size gate (directed vote rows) below which the superstep loop runs
 as a single vectorized numpy task — the same physical-strategy
 principle as the CC and PageRank fast paths: below the gate,
-distributed supersteps are pure job-scheduling latency. The probe is
-one count over the input rows: undirected input is canonical, so it
-counts 2× its rows, exactly the deduped vote rows; directed input
-counts its non-loop rows, an upper bound on the deduped vote rows (the
-kernel dedups). Vote sums are float64 in both paths; with integral
-weights (including the unweighted unit vote) sums are exact below 2^53
-regardless of order, so the min-(−score, label) tie-break is
-bit-identical to the distributed hash-agg argmax. ``run_dir``
-checkpointing always uses the distributed loop (``run_supersteps``).
+distributed supersteps are pure job-scheduling latency. The kernel
+task counts the input rows (``run_kernel``'s ``max_edge_rows``):
+undirected input is canonical, so 2× its rows, exactly the deduped
+vote rows; directed input counts its non-loop rows, an upper bound on
+the deduped vote rows (the kernel dedups). Vote sums are float64 in
+both paths; with integral weights (including the unweighted unit
+vote) sums are exact below 2^53 regardless of order, so the
+min-(−score, label) tie-break is bit-identical to the distributed
+hash-agg argmax. ``run_dir`` checkpointing always uses the distributed
+loop (``run_supersteps``).
 
 The 4M value is measured, not guessed (``bench_scripts/lpa_crossover.py``,
 local[32], fresh JVM per level, min-of-2, identical label sketches): at
@@ -166,19 +167,20 @@ def label_propagation(
         # nx.Graph semantics: duplicate rows / orientations collapse
         base = canonicalize_edges(edges, weight="weight" if has_w else None).select(*cols)
 
-    # local fast path: size-probe the input rows (see LOCAL_LPA_MAX_EDGES);
-    # the cache feeds the kernel, or the vote table of the distributed loop
-    probe_cache = None
+    # local fast path (see LOCAL_LPA_MAX_EDGES); shuffled rows are
+    # pinned lazily for a fall-through past the gate (see run_kernel)
+    pinned = None
+    if run_dir is None and local is None and not (directed or assume_canonical):
+        pinned = base = base.localCheckpoint(eager=False)
     try:
-        if run_dir is None and local is None:
-            probe_cache = base = base.persist(StorageLevel.MEMORY_AND_DISK)
-            local = base.count() * (1 if directed else 2) <= LOCAL_LPA_MAX_EDGES
-        if run_dir is None and local:
+        if run_dir is None and local is not False:
             out = run_kernel(
                 base, _lpa_body(max_iter, directed), {"id": KEY, "label": KEY},
                 weight=has_w,
+                max_edge_rows=None if local else LOCAL_LPA_MAX_EDGES // (1 if directed else 2),
             )
-            return LPAResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
+            if out is not None:
+                return LPAResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
 
         w = F.col("weight") if has_w else F.lit(1)
         if directed:
@@ -200,8 +202,8 @@ def label_propagation(
         )
         e.count()
     finally:
-        if probe_cache is not None:
-            probe_cache.unpersist()
+        if pinned is not None:
+            release_local_checkpoint(pinned)
 
     manifest = None
     if run_dir is not None:

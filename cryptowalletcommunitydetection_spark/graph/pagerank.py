@@ -62,9 +62,10 @@ per iteration (a 1.2M-row scatter/gather is ~5 ms in numpy). Measured
 crossover (BENCH/BASELINE.md, 20-superstep walls, local[32]): local
 wins 1.9x at 2M normalized rows, loses 0.61x at 8M — 4M is the
 bracketed midpoint, and also the memory-safe bound for one executor
-(~200 MB edge index + key table). The probe counts the input rows
-(doubled when undirected: canonical rows), fused with the manifest
-identity under ``run_dir``. The gate applies with or without
+(~200 MB edge index + key table). The gate counts input rows (doubled
+when undirected: canonical rows): inside the kernel task
+(``run_kernel``'s ``max_edge_rows``), or under ``run_dir`` in the
+manifest identity's aggregate. The gate applies with or without
 ``run_dir`` (the kernel then checkpoints each superstep itself); the
 distributed loop (``run_supersteps``, plans/superstep.py) covers
 everything above the gate, and
@@ -238,13 +239,15 @@ def _local_pagerank(
     personalization: DataFrame | None = None,
     step_dirs: list[str] | None = None,
     start_k: int = 0,
-) -> PageRankResult:
+    max_edge_rows: int | None = None,
+) -> PageRankResult | None:
     """Single-task power iteration (see ``_pagerank_body``) over the
     input rows ``base(src, dst[, weight])`` — canonical rows when
     undirected — with ``vertices`` ids in the universe. Null priors of
     ``init_ranks`` are dropped here, and so are non-finite / non-positive
     ones unless the run resumes; ``personalization`` holds the
-    caller-cleaned teleport weights."""
+    caller-cleaned teleport weights. ``None`` when ``base`` holds more
+    than ``max_edge_rows`` rows (see ``run_kernel``)."""
     values = []
     if init_ranks is not None:
         r0 = F.col("rank").cast("double")
@@ -260,8 +263,10 @@ def _local_pagerank(
     )
     out = run_kernel(
         base, body, {"id": KEY, "rank": DoubleType()}, weight=has_w,
-        vertices=vertices, values=tuple(values),
+        vertices=vertices, values=tuple(values), max_edge_rows=max_edge_rows,
     )
+    if out is None:
+        return None
     return PageRankResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
 
 
@@ -428,6 +433,10 @@ def pagerank(
         # dict-merge semantics; the local kernel sums in numpy)
         pers_clean = pers_rows.groupBy("id").agg(F.sum("weight").alias("weight"))
 
+    # a null id is no vertex, on either path
+    if vertices is not None:
+        vertices = vertices.select("id").where(F.col("id").isNotNull())
+
     # Manifest identity of a checkpointed run. max_iter is a stopping
     # condition, not part of the computation's identity — a resume may
     # raise it and continue the same run. The content keys (see
@@ -437,47 +446,48 @@ def pagerank(
     # where the path is known) names the key space the stored states
     # are written in.
     params = {"alpha": alpha, "tol": tol, "weighted": has_w, "directed": directed}
-    # local fast path (see LOCAL_PR_MAX_EDGES). The size probe caches the
-    # input rows and counts them — for a checkpointed run the same single
-    # aggregate also yields the input identity. Both read only the input
-    # rows, so with assume_canonical nothing on this path shuffles. A
-    # fall-through to the distributed loop builds its transition table
-    # from the cache and releases it right after materializing
-    # norm_edges.
-    probe_cache = None
+    # local fast path (see LOCAL_PR_MAX_EDGES); undirected input rows are
+    # canonical, two transition rows each. Under run_dir the identity
+    # aggregate counts the input rows, so the gate is decided here;
+    # without it the kernel task applies the gate itself and returns
+    # None past it. Both read only the input rows, so with
+    # assume_canonical nothing on this path shuffles; shuffled rows with
+    # a second reader ahead are pinned lazily (see run_kernel).
+    gate = LOCAL_PR_MAX_EDGES // (1 if directed else 2)
     local = strategy == "local"
-    if run_dir is not None or strategy == "auto":
-        probe_cache = base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        if run_dir is not None:
-            params["input"] = content_identity(probe_cache, *cols)
-            n_rows = params["input"][0]
-            if vertices is not None:
-                params["vertices"] = content_identity(vertices, "id")
-            if pers_clean is not None:
-                params["personalization"] = content_identity(pers_clean, "id", "weight")
-        else:
-            n_rows = probe_cache.count()
-        # undirected input rows are canonical: two transition rows each
-        n_rows *= 1 if directed else 2
-        local = local or (strategy == "auto" and n_rows <= LOCAL_PR_MAX_EDGES)
-    if local:
+    pinned = None
+    if not (directed or assume_canonical) and (run_dir is not None or strategy == "auto"):
+        pinned = base = base.localCheckpoint(eager=False)
+    if run_dir is not None:
+        params["input"] = content_identity(base, *cols)
+        if vertices is not None:
+            params["vertices"] = content_identity(vertices, "id")
+        if pers_clean is not None:
+            params["personalization"] = content_identity(pers_clean, "id", "weight")
+        local = local or (strategy == "auto" and params["input"][0] <= gate)
+    if local or (strategy == "auto" and run_dir is None):
         # Zero teleport mass (seeded run, no seed id in the graph) is
         # detected INSIDE the kernel; run_kernel raises the contract
-        # ValueError at the call site. The kernel's output is pinned
-        # inside, so the input cache can be dropped before returning.
+        # ValueError at the call site.
         try:
-            if run_dir is None:
-                return _local_pagerank(
-                    base, has_w, directed, vertices, alpha, tol, max_iter,
-                    init_ranks, pers_rows,
+            if run_dir is not None:
+                res = _checkpointed_local(
+                    spark, run_dir, {**params, "ids": "key"}, base, has_w, directed,
+                    vertices, alpha, tol, max_iter, init_ranks, pers_rows,
                 )
-            return _checkpointed_local(
-                spark, run_dir, {**params, "ids": "key"}, base, has_w, directed,
-                vertices, alpha, tol, max_iter, init_ranks, pers_rows,
-            )
-        finally:
-            if probe_cache is not None:
-                probe_cache.unpersist()
+            else:
+                res = _local_pagerank(
+                    base, has_w, directed, vertices, alpha, tol, max_iter,
+                    init_ranks, pers_rows, max_edge_rows=None if local else gate,
+                )
+        except BaseException:
+            if pinned is not None:
+                release_local_checkpoint(pinned)
+            raise
+        if res is not None:
+            if pinned is not None:
+                release_local_checkpoint(pinned)  # the result is pinned on its own
+            return res
 
     e = base.select("src", "dst", (F.col("weight") if has_w else F.lit(1)).alias("weight"))
     if not directed:
@@ -509,7 +519,7 @@ def pagerank(
         if isinstance(e.schema["src"].dataType, StringType):
             keys = vertices_of(e)
             if vertices is not None:
-                keys = keys.unionByName(vertices.select("id")).distinct()
+                keys = keys.unionByName(vertices).distinct()
             vdict = keys.select(
                 F.xxhash64(F.col("id"), F.lit(42)).alias("vid"),
                 F.col("id").alias("key"),
@@ -532,7 +542,7 @@ def pagerank(
         else:
             verts = vertices_of(e)
             if vertices is not None:
-                verts = verts.unionByName(vertices.select("id")).distinct()
+                verts = verts.unionByName(vertices).distinct()
         verts = verts.persist(StorageLevel.MEMORY_AND_DISK)
         # teleport vector for personalized runs: |V| rows of (id, _s), s
         # normalized over the vertices actually in the graph. Built once,
@@ -583,8 +593,8 @@ def pagerank(
             norm_edges = norm.repartition(np, "src").sortWithinPartitions("src")
         norm_edges = norm_edges.persist(StorageLevel.MEMORY_AND_DISK)
         norm_edges.count()  # materialize once
-        if probe_cache is not None:
-            probe_cache.unpersist()  # norm_edges now carries the edge data
+        if pinned is not None:
+            release_local_checkpoint(pinned)  # norm_edges now carries the edges
 
         dangling = verts.join(
             norm_edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
@@ -753,6 +763,8 @@ def pagerank(
             release_local_checkpoint(res.state)  # the decoded ranks are pinned
         return PageRankResult(ranks, res.supersteps, res.converged, res.metrics)
     finally:
-        for cached in (probe_cache, vdict, verts, svec, dangling, norm_edges):
+        if pinned is not None:
+            release_local_checkpoint(pinned)
+        for cached in (vdict, verts, svec, dangling, norm_edges):
             if cached is not None:
                 cached.unpersist()

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..plans.checkpoint import release_local_checkpoint
 from .edges import degrees, vertices_of
 from .local_kernel import KEY, run_kernel
 
@@ -84,37 +85,39 @@ def triangle_count(
     ``local``: physical strategy — None (default) auto-selects the
     single-task numpy kernel below ``LOCAL_TRI_MAX_EDGES`` canonical
     edges, True/False force. Results are identical (parity-tested).
-    ``edge_count``: caller-supplied canonical edge count — skips the
-    probe job entirely (callers that already counted the table, e.g.
-    the bench harness or a rollup that ran CC first, pay no second
-    action for the gate). The kernel path consumes the edge table
-    exactly ONCE, so when the path is already decided (``local`` forced
-    or ``edge_count`` given) nothing is persisted or probed."""
+    On auto the kernel task counts the canonical rows against the gate
+    itself, so a small call is one Spark job (under ``assume_canonical``)
+    and nothing stays pinned; past the gate the distributed pipeline
+    runs. ``edge_count``:
+    caller-supplied canonical edge count that decides the path up front
+    (callers that already counted the table, e.g. the bench harness or
+    a rollup that ran CC first, skip the speculation)."""
     e = _canonical(edges, assume_canonical)
-    m = edge_count
-    pinned = False
-    if local is None and m is None:
-        # the probe doubles as the chosen path's materialization: the
-        # cache it fills feeds either the kernel's single scan or the
-        # distributed pipeline's multi-consumption
-        e = e.persist()
-        pinned = True
-        m = e.count()
+    if local is None and edge_count is not None:
+        local = edge_count <= LOCAL_TRI_MAX_EDGES
+    # shuffled rows are pinned for a fall-through (see run_kernel)
+    pin = local is None and not assume_canonical
+    if pin:
+        e = e.localCheckpoint(eager=False)
     try:
-        if local is True or (local is None and m <= LOCAL_TRI_MAX_EDGES):
-            return run_kernel(e, _triangle_body(), None).meta["triangles"]
-        if not pinned:
-            # distributed path consumes e several times (degrees + both
-            # orientation joins); lazy persist — the first job fills it
-            e = e.persist()
-            pinned = True
+        if local is not False:
+            out = run_kernel(
+                e, _triangle_body(), None, max_edge_rows=None if local else LOCAL_TRI_MAX_EDGES
+            )
+            if out is not None:
+                return out.meta["triangles"]
+        # distributed path consumes e several times (degrees + both
+        # orientation joins); lazy persist — the first job fills it
+        e = e if pin else e.persist()
         d = _oriented(e).persist()
         try:
             return _closed_wedges_of(d).count()
         finally:
             d.unpersist()
     finally:
-        if pinned:
+        if pin:
+            release_local_checkpoint(e)
+        elif e.is_cached:
             e.unpersist()
 
 
@@ -129,41 +132,45 @@ def triangles_per_vertex(
 
     ``local``/``edge_count``: same adaptive gate as ``triangle_count``.
     The kernel path reads the canonical table once and returns every
-    vertex itself, so the table is persisted only when the probe count
-    runs; the distributed path persists it for its several consumers."""
+    vertex itself; the distributed path persists the table for its
+    several consumers."""
     e = _canonical(edges, assume_canonical)
-    d = None
-    pinned = False
+    if local is None and edge_count is not None:
+        local = edge_count <= LOCAL_TRI_MAX_EDGES
+    pin = local is None and not assume_canonical  # as in triangle_count
+    if pin:
+        e = e.localCheckpoint(eager=False)
     try:
-        m = edge_count
-        if m is None and local is None:
-            e = e.persist()  # the probe fills the cache the kernel reads
-            pinned = True
-            m = e.count()
-        if local is True or (local is None and m <= LOCAL_TRI_MAX_EDGES):
-            return run_kernel(e, _triangle_body(), {"id": KEY, "triangles": LongType()}).rows
-        if not pinned:
-            e = e.persist()
-            pinned = True
+        if local is not False:
+            out = run_kernel(
+                e, _triangle_body(), {"id": KEY, "triangles": LongType()},
+                max_edge_rows=None if local else LOCAL_TRI_MAX_EDGES,
+            )
+            if out is not None:
+                return out.rows
+        e = e if pin else e.persist()
         d = _oriented(e).persist()
-        tri = _closed_wedges_of(d)
-        # one reference to the wedge pipeline (a 3-way unionByName
-        # would re-plan/recompute it three times)
-        corners = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
-        counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-        out = (
-            vertices_of(e)
-            .join(counts, "id", "left")
-            .select("id", F.coalesce("triangles", F.lit(0)).alias("triangles"))
-        )
-        # pin the result once so the caches can be released immediately
-        # (same pattern as graph/cc.py:_decode_labels); the checkpoint
-        # blocks are the caller's result set, LRU-evicted after use
-        return out.localCheckpoint(eager=True)
-    finally:
-        if d is not None:
+        try:
+            tri = _closed_wedges_of(d)
+            # one reference to the wedge pipeline (a 3-way unionByName
+            # would re-plan/recompute it three times)
+            corners = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
+            counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
+            out = (
+                vertices_of(e)
+                .join(counts, "id", "left")
+                .select("id", F.coalesce("triangles", F.lit(0)).alias("triangles"))
+            )
+            # pin the result once so the caches can be released immediately
+            # (same pattern as graph/cc.py:_decode_labels); the checkpoint
+            # blocks are the caller's result set, LRU-evicted after use
+            return out.localCheckpoint(eager=True)
+        finally:
             d.unpersist()
-        if pinned:
+    finally:
+        if pin:
+            release_local_checkpoint(e)
+        elif e.is_cached:
             e.unpersist()
 
 
@@ -175,10 +182,10 @@ def triangles_per_vertex(
 # random graphs at local[32] (best-of-2 warm walls, local vs
 # distributed): 500k edges 2.5s vs 4.3s; 2M 7.6 vs 7.1 (tied); 4M 13.1
 # vs 9.4; 8M 31.6 vs 15.3 — gate at the tie. Same adaptive pattern as
-# graph/pagerank.py LOCAL_PR_MAX_EDGES and graph/cc.py. The probe is one
-# count over the canonical rows (skipped when ``edge_count`` is given or
-# ``local`` forces the path); with ``assume_canonical`` those rows are
-# the input as it stands and nothing on the kernel path shuffles.
+# graph/pagerank.py LOCAL_PR_MAX_EDGES and graph/cc.py. The kernel task
+# applies it to the canonical rows (``run_kernel``'s ``max_edge_rows``)
+# unless ``edge_count`` or ``local`` decides the path; with
+# ``assume_canonical`` nothing on the kernel path shuffles.
 LOCAL_TRI_MAX_EDGES = 2_000_000
 
 

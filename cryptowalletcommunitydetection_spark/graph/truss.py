@@ -58,7 +58,8 @@ LOCAL_TRUSS_MAX_EDGES = LOCAL_TRI_MAX_EDGES
 Pinned to the measured triangle crossover: a truss round is exactly one
 triangle enumeration, so the per-round winner is the same and the peel
 loop multiplies the gap (the kernel additionally skips the per-round
-checkpoint + count actions the distributed loop needs)."""
+checkpoint + count actions the distributed loop needs); the kernel task
+applies it itself (``run_kernel``'s ``max_edge_rows``)."""
 
 _EDGE_FIELDS = {"src": KEY, "dst": KEY}
 _SUPPORT_FIELDS = {**_EDGE_FIELDS, "support": LongType()}
@@ -98,39 +99,43 @@ def edge_support(
     triangles it participates in (0 for triangle-free edges).
 
     ``local`` forces the physical strategy; None auto-selects by the
-    ``LOCAL_TRUSS_MAX_EDGES`` gate (one probe count, which doubles as
-    the cache materialization — same pattern as
-    graph/triangles.py:triangles_per_vertex). The kernel path reads the
-    canonical table once, so it is persisted only for the probe or the
-    distributed path."""
+    ``LOCAL_TRUSS_MAX_EDGES`` gate, which the kernel task applies to the
+    canonical rows itself (one Spark job on a small canonical graph,
+    nothing left pinned); the distributed path persists the table for
+    its several consumers."""
     e = _canonical(edges, assume_canonical)
-    d = None
-    pinned = local is None
+    # shuffled rows are pinned for a fall-through (see run_kernel)
+    pin = local is None and not assume_canonical
+    if pin:
+        e = e.localCheckpoint(eager=False)
     try:
-        if pinned:
-            e = e.persist()
-            local = e.count() <= LOCAL_TRUSS_MAX_EDGES
-        if local:
-            return run_kernel(e, _truss_body(None), _SUPPORT_FIELDS).rows
-        if not pinned:
-            e = e.persist()
-            pinned = True
+        if local is not False:
+            out = run_kernel(
+                e, _truss_body(None), _SUPPORT_FIELDS,
+                max_edge_rows=None if local else LOCAL_TRUSS_MAX_EDGES,
+            )
+            if out is not None:
+                return out.rows
+        e = e if pin else e.persist()
         d = _oriented(e).persist()
-        sup = (
-            _triangle_edge_pairs(d)
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("support"))
-        )
-        out = e.join(sup, ["src", "dst"], "left").select(
-            "src",
-            "dst",
-            F.coalesce("support", F.lit(0)).alias("support"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        if d is not None:
+        try:
+            sup = (
+                _triangle_edge_pairs(d)
+                .groupBy("src", "dst")
+                .agg(F.count(F.lit(1)).alias("support"))
+            )
+            out = e.join(sup, ["src", "dst"], "left").select(
+                "src",
+                "dst",
+                F.coalesce("support", F.lit(0)).alias("support"),
+            )
+            return out.localCheckpoint(eager=True)
+        finally:
             d.unpersist()
-        if pinned:
+    finally:
+        if pin:
+            release_local_checkpoint(e)
+        elif e.is_cached:
             e.unpersist()
 
 
@@ -147,17 +152,21 @@ def k_truss(
     e = _canonical(edges, assume_canonical)
     if k <= 2:
         return e.localCheckpoint(eager=True)
-    pinned = local is None
+    pin = local is None and not assume_canonical  # as in edge_support
+    if pin:
+        e = e.localCheckpoint(eager=False)
     try:
-        if pinned:
-            e = e.persist()
-            local = e.count() <= LOCAL_TRUSS_MAX_EDGES
-        if local:
-            return run_kernel(e, _truss_body(k), _EDGE_FIELDS).rows
+        if local is not False:
+            out = run_kernel(
+                e, _truss_body(k), _EDGE_FIELDS,
+                max_edge_rows=None if local else LOCAL_TRUSS_MAX_EDGES,
+            )
+            if out is not None:
+                return out.rows
         return _distributed_k_truss(e, k)
     finally:
-        if pinned:
-            e.unpersist()
+        if pin:
+            release_local_checkpoint(e)
 
 
 def _distributed_k_truss(e: DataFrame, k: int) -> DataFrame:

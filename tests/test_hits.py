@@ -7,6 +7,7 @@ import pytest
 
 from cryptowalletcommunitydetection_spark import datagen
 from cryptowalletcommunitydetection_spark.graph.hits import hits
+from tests.pins import nothing_left_pinned
 
 
 def np_hits(pairs, tol=1e-8, max_iter=300, directed=True):
@@ -121,10 +122,7 @@ def test_distributed_loop_releases_superseded_states(spark):
     ``DataFrame.unpersist`` cannot free: only the returned scores' own
     checkpoint may stay pinned after the distributed loop."""
     edges = datagen.edges_df(spark, SHAPES["chain_dag"])
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    res = hits(spark, edges, local=False)
+    with nothing_left_pinned(spark) as keep:
+        res = hits(spark, edges, local=False)
+        keep.append(res.scores)
     assert res.supersteps > 1
-    leaves = res.scores._jdf.queryExecution().analyzed().collectLeaves()
-    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
-    assert set(jsc.getPersistentRDDs().keys()) - before <= own

@@ -15,6 +15,7 @@ from cryptowalletcommunitydetection_spark import datagen
 from cryptowalletcommunitydetection_spark.graph.kcore import (
     core_numbers, degeneracy, k_core,
 )
+from tests.pins import nothing_left_pinned
 
 SHAPES = {
     "ring": datagen.ring(12),
@@ -138,11 +139,9 @@ def test_capped_run_raises(spark, local):
     """Below the fixpoint the state is only an upper bound on coreness:
     both paths raise instead of returning it, and leave nothing pinned."""
     edges = datagen.edges_df(spark, datagen.erdos_renyi(40, 0.15, seed=13))
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        core_numbers(spark, edges, max_iter=1, local=local)
-    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    with nothing_left_pinned(spark):
+        with pytest.raises(RuntimeError, match="fixpoint"):
+            core_numbers(spark, edges, max_iter=1, local=local)
 
 
 def test_distributed_loop_releases_superseded_states(spark):
@@ -150,10 +149,7 @@ def test_distributed_loop_releases_superseded_states(spark):
     ``DataFrame.unpersist`` cannot free: only the returned cores' own
     checkpoint may stay pinned after the distributed loop."""
     edges = datagen.edges_df(spark, SHAPES["erdos_renyi"])
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    res = core_numbers(spark, edges, local=False)
+    with nothing_left_pinned(spark) as keep:
+        res = core_numbers(spark, edges, local=False)
+        keep.append(res.cores)
     assert res.supersteps > 1
-    leaves = res.cores._jdf.queryExecution().analyzed().collectLeaves()
-    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
-    assert set(jsc.getPersistentRDDs().keys()) - before <= own

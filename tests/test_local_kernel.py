@@ -1,11 +1,17 @@
 """The single-task Arrow boundary of the small-graph kernels
-(graph/local_kernel.py): a failing numpy body leaves nothing pinned."""
+(graph/local_kernel.py): a failing numpy body leaves nothing pinned, a
+small-graph call is one Spark job with the size gate applied inside the
+task, and a call past the gate falls through to the distributed path
+after reading at most gate + 1 edge rows."""
 
+import logging
 from importlib import import_module
 
+import numpy as np
 import pytest
 
 from cryptowalletcommunitydetection_spark import datagen
+from tests.pins import nothing_left_pinned
 
 
 def _module(name):
@@ -26,9 +32,9 @@ OPERATORS = {
 
 @pytest.mark.parametrize("name", sorted(OPERATORS))
 def test_kernel_failure_releases_caches(spark, monkeypatch, name):
-    """When the numpy body raises inside the task, the operator's probe
-    cache, its pinned input and the kernel's own output checkpoint are
-    all released: no new persistent RDD id remains."""
+    """When the numpy body raises inside the task, the operator's
+    input and the kernel's own output checkpoint are released: no new
+    persistent RDD and no cache entry remains."""
     module_name, factory, call = OPERATORS[name]
     module = _module(module_name)
 
@@ -39,8 +45,135 @@ def test_kernel_failure_releases_caches(spark, monkeypatch, name):
     edges = spark.createDataFrame(
         [(f"w{a}", f"w{b}") for a, b in datagen.ring(6)], "src string, dst string"
     )
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    with pytest.raises(Exception, match="injected kernel failure"):
-        call(module, spark, edges)
-    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    with nothing_left_pinned(spark):
+        with pytest.raises(Exception, match="injected kernel failure"):
+            call(module, spark, edges)
+
+
+def _rows(df, key):
+    return {key(r): r[-1] for r in df.collect()}
+
+
+# Every auto site of the size gate: its module, its gate constant, the
+# call (``force`` pins the local kernel, ``canon`` is the call's
+# ``assume_canonical``), the
+# frames whose own checkpoint the result keeps, and the result as
+# Python values with the tolerance of the path parity (0 = exact).
+SITES = {
+    "pagerank": (
+        "pagerank", "LOCAL_PR_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("pagerank").pagerank(
+            spark, e, assume_canonical=canon, strategy="local" if force else "auto"),
+        lambda r: [r.ranks], lambda r: _rows(r.ranks, lambda x: x[0]), 1e-6,
+    ),
+    "cc": (
+        "cc", "LOCAL_CC_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("cc").connected_components(
+            spark, e, assume_canonical=canon, local=force or None),
+        lambda r: [r], lambda r: _rows(r, lambda x: x[0]), 0,
+    ),
+    "lpa": (
+        "lpa", "LOCAL_LPA_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("lpa").label_propagation(
+            spark, e, assume_canonical=canon, local=force or None),
+        lambda r: [r.labels], lambda r: _rows(r.labels, lambda x: x[0]), 0,
+    ),
+    "triangles_per_vertex": (
+        "triangles", "LOCAL_TRI_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("triangles").triangles_per_vertex(
+            e, assume_canonical=canon, local=force or None),
+        lambda r: [r], lambda r: _rows(r, lambda x: x[0]), 0,
+    ),
+    "triangle_count": (
+        "triangles", "LOCAL_TRI_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("triangles").triangle_count(
+            e, assume_canonical=canon, local=force or None),
+        lambda r: [], lambda r: r, 0,
+    ),
+    "edge_support": (
+        "truss", "LOCAL_TRUSS_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("truss").edge_support(
+            e, assume_canonical=canon, local=force or None),
+        lambda r: [r], lambda r: _rows(r, lambda x: (x[0], x[1])), 0,
+    ),
+    "k_truss": (
+        "truss", "LOCAL_TRUSS_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("truss").k_truss(
+            e, 3, assume_canonical=canon, local=force or None),
+        lambda r: [r], lambda r: sorted(tuple(x) for x in r.collect()), 0,
+    ),
+    "core_numbers": (
+        "kcore", "LOCAL_KCORE_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("kcore").core_numbers(
+            spark, e, assume_canonical=canon, local=force or None),
+        lambda r: [r.cores], lambda r: _rows(r.cores, lambda x: x[0]), 0,
+    ),
+    "hits": (
+        "hits", "LOCAL_HITS_MAX_EDGES",
+        lambda spark, e, force, canon=True: _module("hits").hits(
+            spark, e, assume_canonical=canon, local=force or None),
+        lambda r: [r.scores], lambda r: {x[0]: (x[1], x[2]) for x in r.scores.collect()}, 1e-6,
+    ),
+}
+
+# canonical (src < dst, distinct, loop-free): two triangle-rich
+# components and a tail, so every operator has something to find
+PAIRS = datagen.two_cliques_bridge(4) + [(20, 21), (20, 22), (21, 22), (22, 23)]
+# the same graph with reversed and repeated rows: 5 more distinct rows
+RAW_PAIRS = PAIRS + [(b, a) for a, b in PAIRS[:5]] + PAIRS[:3]
+
+
+def _equal(a, b, tol):
+    if not tol:
+        return a == b
+    return a.keys() == b.keys() and all(np.allclose(a[k], b[k], rtol=0, atol=tol) for k in a)
+
+
+@pytest.mark.parametrize("name", sorted(SITES))
+def test_small_call_is_one_spark_job(spark, name):
+    """Below the gate the call runs exactly one Spark job (with AQE on,
+    as ``build_session`` sets it): the kernel task applies the gate, so
+    no count runs in front of it."""
+    _, _, call, _, _, _ = SITES[name]
+    edges = datagen.edges_df(spark, PAIRS)
+    sc = spark.sparkContext
+    group = f"one-job-{name}"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        res = call(spark, edges, False)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    if name == "cc":
+        # community_rollup sizes its shuffles from this hint
+        assert res._cwcd_n_edges == len(PAIRS)
+
+
+@pytest.mark.parametrize("canon", [True, False], ids=["canonical", "raw"])
+@pytest.mark.parametrize("name", sorted(SITES))
+def test_past_the_gate_falls_through_to_the_distributed_path(
+    spark, monkeypatch, caplog, name, canon
+):
+    """With the gate at a few rows, the task reads at most gate + 1 edge
+    rows, gives up, and the distributed path returns what the forced
+    local kernel returns, leaving nothing pinned but its result — also
+    the cache that carries a raw input's canonicalization from the
+    kernel job to the distributed path."""
+    module_name, gate_name, call, kept, value, tol = SITES[name]
+    pairs = PAIRS if canon else RAW_PAIRS
+    edges = datagen.edges_df(spark, pairs)
+    want = value(call(spark, edges, True, canon))
+    monkeypatch.setattr(_module(module_name), gate_name, 3)
+    logger = "cryptowalletcommunitydetection_spark.graph.local_kernel"
+    with caplog.at_level(logging.INFO, logger=logger):
+        with nothing_left_pinned(spark) as keep:
+            res = call(spark, edges, False, canon)
+            keep.extend(kept(res))
+    skips = [r.args for r in caplog.records if r.getMessage().startswith("local kernel skipped")]
+    assert len(skips) == 1
+    rows_read, gate = skips[0]
+    assert gate < rows_read <= gate + 1
+    assert _equal(value(res), want, tol)
+    if name == "cc":
+        assert res._cwcd_n_edges == len(set(pairs))

@@ -178,6 +178,26 @@ def test_pagerank_local_path_equals_distributed(spark):
             assert max((abs(l[k] - d[k]) for k in l), default=0.0) < 1e-12
 
 
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_pagerank_null_vertex_is_no_vertex_on_either_path(spark, id_type):
+    """A null id in ``vertices`` adds no vertex: the distributed loop
+    (int64 universe, or the re-keying dictionary of string keys) ranks
+    the same universe as the local kernel, and returns no null row."""
+    key = (lambda v: v) if id_type == "long" else (lambda v: f"v{v}")
+    edges = spark.createDataFrame(
+        [(key(a), key(b)) for a, b in datagen.ring(5)], f"src {id_type}, dst {id_type}"
+    )
+    verts = spark.createDataFrame([(key(1),), (None,), (key(99),)], f"id {id_type}")
+    got = {}
+    for strategy in ("local", "broadcast"):
+        res = pagerank(spark, edges, tol=1e-9, vertices=verts, strategy=strategy)
+        got[strategy] = {r["id"]: r["rank"] for r in res.ranks.collect()}
+    loc, dist = got["local"], got["broadcast"]
+    assert None not in dist
+    assert set(loc) == set(dist) == {key(v) for v in [0, 1, 2, 3, 4, 99]}
+    assert max(abs(loc[k] - dist[k]) for k in loc) < 1e-6
+
+
 def test_pagerank_auto_selects_local_with_and_without_run_dir(spark, tmp_path):
     pairs = datagen.two_cliques_bridge(5)
     edges = datagen.edges_df(spark, pairs)

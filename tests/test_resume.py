@@ -19,6 +19,7 @@ from cryptowalletcommunitydetection_spark.graph import (
     pagerank,
 )
 from cryptowalletcommunitydetection_spark.plans.checkpoint import RunManifest
+from tests.pins import nothing_left_pinned
 
 
 def _ranks(res):
@@ -234,9 +235,7 @@ def _killed_then_resumed(spark, tmp_path, monkeypatch, run):
     """Run ``run(run_dir)`` killed right after superstep 2's state is
     written and before the manifest records it, then rerun it. The kill
     leaves nothing pinned; the rerun resumes after superstep 1 and
-    returns the same as an uninterrupted run. Each caller's graph is
-    its own: a cache an earlier test left for the same plan would be
-    reused, and a leak would add no new RDD."""
+    returns the same as an uninterrupted run."""
     d = str(tmp_path / "killed")
     checkpoint = RunManifest.checkpoint
 
@@ -246,13 +245,11 @@ def _killed_then_resumed(spark, tmp_path, monkeypatch, run):
             raise Killed("after the state of superstep 2 was written")
         return out
 
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    monkeypatch.setattr(RunManifest, "checkpoint", killing_checkpoint)
-    with pytest.raises(Killed):
-        run(d)
-    monkeypatch.undo()
-    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    with nothing_left_pinned(spark):
+        monkeypatch.setattr(RunManifest, "checkpoint", killing_checkpoint)
+        with pytest.raises(Killed):
+            run(d)
+        monkeypatch.undo()
     assert [s["k"] for s in RunManifest.load(d).supersteps] == [0, 1]
     resumed, straight = run(d), run(str(tmp_path / "straight"))
     assert (resumed.supersteps, resumed.converged) == (straight.supersteps, straight.converged)

@@ -16,6 +16,7 @@ from cryptowalletcommunitydetection_spark.graph import (
 )
 from cryptowalletcommunitydetection_spark.graph.hits import hits
 from cryptowalletcommunitydetection_spark.plans.superstep import scoped_conf
+from tests.pins import nothing_left_pinned
 
 
 class Injected(RuntimeError):
@@ -33,10 +34,6 @@ RUNS = {
 }
 
 
-def _persistent(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
 @pytest.mark.parametrize("name", sorted(RUNS))
 def test_failed_superstep_releases_everything(spark, monkeypatch, name):
     edges = datagen.edges_df(spark, datagen.erdos_renyi(40, 0.15, seed=13))
@@ -50,12 +47,11 @@ def test_failed_superstep_releases_everything(spark, monkeypatch, name):
             raise Injected(f"action {nth}")
         return collect(self)
 
-    before = _persistent(spark)
-    monkeypatch.setattr(cls, "collect", failing_collect)
-    with pytest.raises(Injected):
-        run(spark, edges)
-    monkeypatch.undo()
-    assert _persistent(spark) - before == set()
+    with nothing_left_pinned(spark):
+        monkeypatch.setattr(cls, "collect", failing_collect)
+        with pytest.raises(Injected):
+            run(spark, edges)
+        monkeypatch.undo()
 
 
 def test_decoded_pagerank_keeps_only_its_result_pinned(spark):
@@ -65,12 +61,10 @@ def test_decoded_pagerank_keeps_only_its_result_pinned(spark):
         [(f"w{a}", f"w{b}") for a, b in datagen.erdos_renyi(30, 0.15, seed=3)],
         "src string, dst string",
     )
-    before = _persistent(spark)
-    res = pagerank(spark, edges, strategy="broadcast")
+    with nothing_left_pinned(spark) as keep:
+        res = pagerank(spark, edges, strategy="broadcast")
+        keep.append(res.ranks)
     assert res.supersteps > 1
-    leaves = res.ranks._jdf.queryExecution().analyzed().collectLeaves()
-    own = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
-    assert _persistent(spark) - before <= own
 
 
 def test_scoped_conf_restores_when_the_body_raises(spark):
