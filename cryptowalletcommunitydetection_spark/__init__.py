@@ -16,8 +16,8 @@ trixt63/CryptoWalletCommunityDetection (reference, read-only at
 - checkpointed, resumable supersteps with per-partition lineage metrics.
 
 No per-row Python on any hot path: built-in pyspark.sql.functions
-everywhere; Python runs only as vectorized Arrow tasks — `mapInPandas`
-in the entity-extraction stage and the single-task numpy kernels the
+everywhere; Python runs only as vectorized Arrow code — `mapInPandas`
+in the entity-extraction stage and the driver-side numpy kernels the
 graph operators use below their size gates.
 """
 

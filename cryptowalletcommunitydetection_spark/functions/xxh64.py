@@ -4,7 +4,7 @@ over rows).
 Why this exists: the deterministic-walk operators (graph/walks.py) drive
 every transition with Spark ``xxhash64(...)`` column expressions, which
 makes corpora pure functions of (edges, seed) on any partitioning. Their
-single-task replay kernel needs the SAME hash values inside numpy: it
+driver-side replay kernel needs the SAME hash values inside numpy: it
 builds each walker's id ``<start>#<index>`` itself, hashes it
 (``hash_bytes``, the ``xxhash64(walk_id)`` base), and re-derives every
 step hash from that base, exploiting how Spark computes multi-argument

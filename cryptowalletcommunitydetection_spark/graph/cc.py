@@ -227,13 +227,13 @@ def _edge_sketch(df: DataFrame):
 
 LOCAL_CC_MAX_EDGES = 1_000_000
 """Size gate (distinct non-loop edges) below which the star loop is
-replaced by a single-task vectorized hook-and-jump pass over the edge
+replaced by a driver-side vectorized hook-and-jump pass over the edge
 set — the same physical-strategy principle as a broadcast join: when
-one side of the problem fits one executor comfortably, a local
+one side of the problem fits the driver comfortably, a local
 algorithm beats 5 × O(log n) distributed rounds of pure scheduling
-latency. The kernel task counts the distinct rows, self-loops included
+latency. The kernel's collect counts the distinct rows, self-loops included
 (the input rows under ``assume_canonical``, so nothing on the path
-shuffles), itself (``run_kernel``'s ``max_edge_rows``), as it does for
+shuffles; ``run_kernel``'s ``max_edge_rows``), as it does for
 a pre-contracted graph. Above the gate — or whenever ``run_dir``
 checkpointing is requested — the alternating-star loop runs unchanged;
 ``local=False`` forces it (equality between the two paths is exact and
@@ -377,7 +377,7 @@ def connected_components(
     measured treatment as the PageRank broadcast regime.
 
     ``local`` picks the physical strategy below ``LOCAL_CC_MAX_EDGES``
-    distinct edges: ``None`` (default) auto-selects the single-task
+    distinct edges: ``None`` (default) auto-selects the driver-side
     numpy fast path when ``run_dir`` is not requested; ``False``
     forces the distributed star loop; ``True`` forces the local kernel
     regardless of size (expert). Both produce bitwise-identical labels.
@@ -497,7 +497,7 @@ def connected_components(
         anchors, contracted = _min_label_contract(prev)
         # the contracted graph usually fits the local kernel gate
         # (3.5k anchors / 263k contracted edges from 11M on the ER
-        # bench): one task closes it instead of ~5 distributed star
+        # bench): one kernel call closes it instead of ~5 distributed star
         # rounds — the same adaptive principle as the top-level
         # LOCAL_CC_MAX_EDGES gate, composed through the anchors
         try:
@@ -517,7 +517,6 @@ def connected_components(
                     spark, stars, edge_universe, vertices, vdict, universe, anchors,
                 )
             finally:
-                release_local_checkpoint(kernel.rows)
                 release_local_checkpoint(contracted)
                 release_local_checkpoint(anchors)
             out._cwcd_n_edges = n_edges

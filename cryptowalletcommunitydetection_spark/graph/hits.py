@@ -32,7 +32,7 @@ Physical design, same shapes as graph/pagerank.py's copartition loop:
   normalize by the norms its record carries; superseded states are
   released, every cache and state also when a superstep fails, and
   each superstep returns one metrics record.
-- Below ``LOCAL_HITS_MAX_EDGES`` a single-task vectorized numpy body
+- Below ``LOCAL_HITS_MAX_EDGES`` a driver-side vectorized numpy body
   on ``run_kernel`` (graph/local_kernel.py, the one Arrow boundary of
   the small-graph paths, as PageRank's local path) runs the identical
   update rule; it deduplicates directed rows and symmetrizes canonical
@@ -60,10 +60,10 @@ from .edges import canonicalize_edges, symmetrize, vertices_of
 from .local_kernel import KEY, run_kernel
 
 LOCAL_HITS_MAX_EDGES = 4_000_000
-"""Directed edge rows below which the single-task kernel runs
+"""Directed edge rows below which the driver-side kernel runs
 (inherited from graph/pagerank.py's measured LOCAL_PR_MAX_EDGES — the
 per-superstep join/agg shape is the same; not re-measured), counted by
-the kernel task itself (``run_kernel``'s ``max_edge_rows``)."""
+the kernel's own collect (``run_kernel``'s ``max_edge_rows``)."""
 
 
 @dataclass
@@ -140,7 +140,7 @@ def hits(
     ``directed=False`` canonicalizes and symmetrizes first (hubs ==
     authorities then, by symmetry). ``local`` forces the physical
     strategy (None = auto by ``LOCAL_HITS_MAX_EDGES``); results are
-    identical (parity-tested). The kernel task applies the gate, so a
+    identical (parity-tested). The kernel's collect applies the gate, so a
     small call is one Spark job. ``metrics``
     holds one record per superstep (``k``, ``wall_ms``, ``delta``,
     ``rows``; the distributed loop adds the norms it divided by).

@@ -62,11 +62,11 @@ from .local_kernel import KEY, run_kernel
 
 LOCAL_KCORE_MAX_EDGES = 4_000_000
 """Size gate (canonical undirected edge rows) below which the H-index
-loop runs as a single vectorized numpy task. MEASURED crossover
+loop runs as one vectorized numpy body in the driver. MEASURED crossover
 (bench_scripts/kcore_crossover.py, local[32], fresh-JVM min-of-2,
 uniform random string-keyed graphs): local wins 5.2x at 1M raw rows,
 1.8x at 2M, 1.4x at 4M, and LOSES 0.78x at 8M — the gate sits at the
-last measured local win, applied by the kernel task itself
+last measured local win, applied by the kernel's own collect
 (``run_kernel``'s ``max_edge_rows``). Integer state in both paths, so
 local/distributed parity is exact (tested; the crossover script also
 sketch-checks agreement at every level). ``run_dir`` checkpointing
@@ -160,7 +160,7 @@ def core_numbers(
     defensive ``canonicalize_edges`` shuffle is skipped. A contract,
     not a hint: duplicate orientations would inflate degrees.
 
-    ``local``: ``None`` auto-selects the single-task vectorized kernel
+    ``local``: ``None`` auto-selects the driver-side vectorized kernel
     below ``LOCAL_KCORE_MAX_EDGES`` when no ``run_dir`` is requested;
     ``False`` forces the distributed loop; ``True`` forces local.
 
@@ -194,7 +194,6 @@ def core_numbers(
             if pin:
                 release_local_checkpoint(canon)
             if not out.meta["conv"]:
-                release_local_checkpoint(out.rows)
                 raise _unconverged(max_iter, run_dir)
             return CoreResult(out.rows, out.meta["k"], True, out.meta["steps"])
     if not pin:

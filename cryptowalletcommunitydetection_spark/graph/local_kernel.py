@@ -1,45 +1,48 @@
-"""The single-task Arrow boundary of the small-graph kernels.
+"""The driver-side Arrow boundary of the small-graph kernels.
 
 Below their size gates, PageRank, label propagation, connected
 components, triangle counting, HITS, k-core, k-truss (with edge
 support) and the random-walk / node2vec corpora run as one vectorized
-numpy task instead of a distributed loop. ``run_kernel`` owns what they
+numpy body instead of a distributed loop. ``run_kernel`` owns what they
 share, so each operator keeps only its numpy body:
 
 - the input is the caller's edge rows as they stand (the canonical
   table for undirected operators: no Spark-side symmetrization,
-  normalization or join) plus optional marker rows, all in one
-  ``coalesce(1).mapInArrow`` task — a narrow merge, no exchange;
-- the size gate runs in that task: with ``max_edge_rows`` the edge rows
-  enter through ``coalesce(1).limit(gate + 1)`` (narrow: still one job;
-  the scan stops there when no exchange lies below the edge rows);
-  past the gate the task returns only an overflow record and the call
-  returns ``None`` for the operator's distributed path, so a
-  small-graph call is one Spark job;
-- the task indexes every key once into int64 codes in key order:
+  normalization or join) plus optional marker rows, collected into the
+  driver by one ``toArrow()`` job — no Python worker task;
+- the size gate is part of that collect: with ``max_edge_rows`` the
+  edge rows enter through ``coalesce(1).limit(gate + 1)`` (narrow:
+  still one job; the scan stops there when no exchange lies below the
+  edge rows); past the gate the call returns ``None`` for the
+  operator's distributed path, so a small-graph call is one Spark job;
+- the driver indexes every key once into int64 codes in key order:
   pyarrow ``unique`` / ``sort_indices`` for strings (UTF-8 byte order,
   which is Spark's ``UTF8String`` order), ``np.unique`` for integers,
   then ``index_in``;
-- the body returns the complete result table, vertex ids as codes (a
-  code matrix for a field holding an array of ids, such as a walk), and
-  one JSON meta record; both leave through one local checkpoint that
-  the single read of the meta record materializes.
-
-The task and the bodies are closures shipped by value; only the walk
-body imports package helpers (the XXH64 chain, the alias build) on the
-worker.
+- the body runs in the driver and returns the complete result table,
+  vertex ids as codes (a code matrix for a field holding an array of
+  ids, such as a walk), and a meta record; the result goes
+  back to Spark as one partition of Arrow batches held by the driver
+  (no checkpoint, nothing to release).
 """
 
 from __future__ import annotations
 
-import json
 import logging
+import threading
+import time
+from types import SimpleNamespace
 from typing import Any, Callable, NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, StructField, StructType
 
-from ..plans.checkpoint import release_local_checkpoint
+from ..plans.superstep import scoped_conf
 
 log = logging.getLogger(__name__)
 
@@ -52,9 +55,21 @@ KEYS = "keys"
 a 2-D code matrix (one row per result row), the boundary a list of keys
 per row."""
 
+# Spark embeds an Arrow result smaller than this threshold (48 MB by
+# default) in the query plan as a LocalRelation of rows; at 0 the
+# result is always an RDD of the Arrow batches, read as a plain scan.
+# The setting is session-global, so concurrent calls take turns.
+_AS_RDD = {"spark.sql.execution.arrow.localRelationThreshold": "0"}
+_AS_RDD_LOCK = threading.Lock()
+
 
 class KernelOutput(NamedTuple):
-    rows: DataFrame | None  # over a local checkpoint; None without fields
+    """A kernel's result. ``rows`` is one partition over the Arrow
+    batches the driver built (no checkpoint: nothing is pinned and
+    nothing needs a release; a write makes one file), None without
+    result fields; ``meta`` is the body's meta record."""
+
+    rows: DataFrame | None
     meta: dict
 
 
@@ -68,7 +83,7 @@ def run_kernel(
     values: tuple[DataFrame, ...] = (),
     max_edge_rows: int | None = None,
 ) -> KernelOutput | None:
-    """Run ``body`` over ``edges(src, dst[, weight])`` in one task.
+    """Run ``body`` over ``edges(src, dst[, weight])`` in the driver.
 
     ``vertices`` (DataFrame[id]) adds members to the vertex universe;
     each ``values`` frame (DataFrame[id, value]) becomes one value
@@ -78,40 +93,29 @@ def run_kernel(
     ``g.weight`` (float64, or None without ``weight``) and ``g.values``
     (per channel: codes, -1 for an id outside the graph, and float64
     values). It returns ``(columns, meta)``: an array per name of
-    ``fields`` (``KEY`` fields as codes) and a JSON-able dict, whose
-    ``"error"`` entry fails the call with that ``ValueError``.
+    ``fields`` (``KEY`` fields as codes) and a dict, whose ``"error"``
+    entry fails the call with that ``ValueError``.
 
-    ``fields`` maps result names to ``KEY``, ``KEYS`` or a Spark type
-    (the body may return a pyarrow array for the latter). ``rows``
-    reads a local checkpoint; release it with
-    ``release_local_checkpoint(rows)`` once it is no longer needed. A
-    failing body leaves nothing pinned. With ``fields=None`` nothing
-    stays pinned and the call returns only the meta record.
+    All input rows arrive through one ``toArrow()`` job; the body runs
+    in the driver. ``fields`` maps result names to ``KEY``, ``KEYS`` or
+    a Spark type (the body may return a pyarrow array for the latter).
+    ``rows`` is one partition over the driver-held Arrow result: no
+    checkpoint, nothing to release. With ``fields=None`` the call
+    returns only the meta record.
 
     ``max_edge_rows`` (the operator's size gate, in rows of ``edges``)
-    makes the call speculative: the task reads at most that many edge
-    rows plus one, and past the gate it skips the body; the call then
-    pins nothing and returns ``None``. The scan of ``edges`` stops at
-    the limit only when no exchange lies below it; a shuffle below runs
-    in full, so a caller with a distributed path pins such ``edges``
-    first with a lazy ``localCheckpoint`` (a cache would add a query
-    stage job under adaptive execution; the checkpoint adds none): the
-    kernel job fills it, and past the gate the distributed path reads
-    it instead of shuffling again.
+    makes the call speculative: the collect reads at most that many
+    edge rows plus one, and past the gate the body is skipped and the
+    call returns ``None``. The driver then holds up to gate + 1 rows, so
+    the gate bounds driver memory. The scan of ``edges`` stops at the
+    limit only when no exchange lies below it; a shuffle below runs in
+    full, so a caller with a distributed path pins such ``edges`` first
+    with a lazy ``localCheckpoint`` (a cache would add a query stage
+    job under adaptive execution; the checkpoint adds none): the collect
+    fills it, and past the gate the distributed path reads it instead
+    of shuffling again.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
     key_type = edges.schema["src"].dataType
-    fields = fields or {}
-    names = list(fields)
-    value_types = {c: to_arrow_type(t) for c, t in fields.items() if t not in (KEY, KEYS)}
-    spark_types = {KEY: key_type, KEYS: ArrayType(key_type)}
-    out_schema = StructType(
-        [StructField(c, spark_types.get(t, t)) for c, t in fields.items()]
-        + [StructField("_meta", StringType())]
-    )
-
     marked = vertices is not None or bool(values)
     w = F.col("weight").cast("double") if weight else F.lit(None).cast("double")
     inp = edges.select(
@@ -130,107 +134,66 @@ def run_kernel(
             F.col("id").cast(key_type).alias("src"), F.lit(None).cast(key_type).alias("dst"),
             F.col("value").cast("double").alias("w"), F.lit(c).cast("byte").alias("_c"),
         ))
-    empty = to_arrow_schema(inp.schema).empty_table()
-    n_channels, has_verts = len(values), bool(markers)  # the task must not capture frames
+    t = inp.toArrow()
+    chan = t.column("_c").to_numpy() if marked else None
 
-    def task(batches):
-        from types import SimpleNamespace
+    def rows_of(c):
+        return t.filter(pa.array(chan == c)) if marked else t
 
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    e = rows_of(0)
+    if max_edge_rows is not None and e.num_rows > max_edge_rows:
+        log.info("local kernel skipped: %d edge rows read, gate %d", e.num_rows, max_edge_rows)
+        return None
+    id_type = t.schema.field("src").type
+    keys = [e.column("src"), e.column("dst")] + ([rows_of(1).column("src")] if markers else [])
+    all_keys = pa.chunked_array([ch for k in keys for ch in k.chunks], id_type)
+    if pa.types.is_integer(id_type):
+        ids = pa.array(np.unique(pc.drop_null(all_keys).to_numpy()), id_type)
+    else:
+        uniq = pc.drop_null(pc.unique(all_keys))
+        ids = uniq.take(pc.sort_indices(uniq))
 
-        got = list(batches)
-        t = pa.Table.from_batches(got) if got else empty
-        id_type = t.schema.field("src").type
-        key_types = {KEY: id_type, KEYS: pa.list_(id_type)}
+    def code(col):  # -1 = null or not a vertex
+        return pc.fill_null(pc.index_in(col, value_set=ids), -1).to_numpy().astype(np.int64)
 
-        def meta_batch(meta):
-            return pa.RecordBatch.from_arrays(
-                [pa.nulls(1, value_types.get(c) or key_types[fields[c]]) for c in names]
-                + [pa.array([json.dumps(meta)])],
-                names=names + ["_meta"],
-            )
+    src, dst = code(e.column("src")), code(e.column("dst"))
+    wt = e.column("w").to_numpy().astype(np.float64) if weight else None
+    ok = (src >= 0) & (dst >= 0)
+    if not ok.all():  # a row with a null endpoint is no edge
+        src, dst = src[ok], dst[ok]
+        wt = wt[ok] if wt is not None else None
+    chans = [
+        (code(m.column("src")), m.column("w").to_numpy().astype(np.float64))
+        for m in map(rows_of, range(2, 2 + len(values)))
+    ]
+    t0 = time.perf_counter()
+    cols, meta = body(SimpleNamespace(ids=ids, n=len(ids), src=src, dst=dst, weight=wt, values=chans))
+    body_ms = (time.perf_counter() - t0) * 1e3
+    if "error" in meta:
+        raise ValueError(meta["error"])
+    fields = fields or {}
 
-        chan = t.column("_c").to_numpy() if marked else None
-
-        def rows_of(c):
-            return t.filter(pa.array(chan == c)) if marked else t
-
-        e = rows_of(0)
-        if max_edge_rows is not None and e.num_rows > max_edge_rows:
-            yield meta_batch({"overflow": e.num_rows})
-            return
-        keys = [e.column("src"), e.column("dst")] + ([rows_of(1).column("src")] if has_verts else [])
-        all_keys = pa.chunked_array([ch for k in keys for ch in k.chunks], id_type)
-        if pa.types.is_integer(all_keys.type):
-            ids = pa.array(np.unique(pc.drop_null(all_keys).to_numpy()), all_keys.type)
-        else:
-            uniq = pc.drop_null(pc.unique(all_keys))
-            ids = uniq.take(pc.sort_indices(uniq))
-
-        def code(col):  # -1 = null or not a vertex
-            return pc.fill_null(pc.index_in(col, value_set=ids), -1).to_numpy().astype(np.int64)
-
-        src, dst = code(e.column("src")), code(e.column("dst"))
-        wt = e.column("w").to_numpy().astype(np.float64) if weight else None
-        ok = (src >= 0) & (dst >= 0)
-        if not ok.all():  # a row with a null endpoint is no edge
-            src, dst = src[ok], dst[ok]
-            wt = wt[ok] if wt is not None else None
-        chans = [
-            (code(m.column("src")), m.column("w").to_numpy().astype(np.float64))
-            for m in map(rows_of, range(2, 2 + n_channels))
-        ]
-        cols, meta = body(SimpleNamespace(
-            ids=ids, n=len(ids), src=src, dst=dst, weight=wt, values=chans,
-        ))
-
-        def keys_of(c):
-            if fields[c] == KEY:
-                return ids.take(pa.array(cols[c], pa.int64()))
+    def column(c):
+        if fields[c] == KEY:
+            return ids.take(pa.array(cols[c], pa.int64()))
+        if fields[c] == KEYS:
             m = np.asarray(cols[c], dtype=np.int64)
             offsets = pa.array(np.arange(len(m) + 1) * m.shape[1], pa.int32())
             return pa.ListArray.from_arrays(offsets, ids.take(pa.array(m.ravel())))
+        return pa.array(cols[c], to_arrow_type(fields[c]))
 
-        if names and "error" not in meta:
-            arrays = [
-                pa.array(cols[c], value_types[c]) if c in value_types else keys_of(c)
-                for c in names
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [pa.nulls(len(arrays[0]), pa.string())], names=names + ["_meta"]
-            )
-        yield meta_batch(meta)
-
-    out = inp.coalesce(1).mapInArrow(task, out_schema)
-    is_meta = F.col("_meta").isNotNull()
-
-    def read_meta(frame):
-        got = frame.where(is_meta).select("_meta").collect()
-        if not got:
-            # adaptive execution drops the task when an exchange below it
-            # turns out empty; the empty graph's result is empty, so only
-            # its meta record is missing
-            got = [list(task(iter([])))[-1].column("_meta").to_pylist()]
-        meta = json.loads(got[0][0])
-        if "error" in meta:
-            raise ValueError(meta["error"])
-        return meta
-
-    # lazy: the meta read is the one job that computes AND pins the
-    # result, and a body that raises there leaves a handle to release
-    pinned = out.localCheckpoint(eager=False)
-    try:
-        meta = read_meta(pinned)
-    except BaseException:
-        release_local_checkpoint(pinned)
-        raise
-    if "overflow" in meta:
-        log.info(
-            "local kernel skipped: %d edge rows read, gate %d", meta["overflow"], max_edge_rows
-        )
-    elif names:
-        return KernelOutput(pinned.where(~is_meta).select(*names), meta)
-    release_local_checkpoint(pinned)
-    return None if "overflow" in meta else KernelOutput(None, meta)
+    result = pa.table([column(c) for c in fields], names=list(fields))
+    log.info(
+        "local kernel ran: %d edge rows read, gate %s, body %.1f ms, %d result rows",
+        e.num_rows, max_edge_rows, body_ms, result.num_rows,
+    )
+    if not fields:
+        return KernelOutput(None, meta)
+    spark_types = {KEY: key_type, KEYS: ArrayType(key_type)}
+    schema = StructType([StructField(c, spark_types.get(f, f)) for c, f in fields.items()])
+    spark = edges.sparkSession
+    with _AS_RDD_LOCK, scoped_conf(spark, settings=_AS_RDD):
+        rows = spark.createDataFrame(result, schema)
+    # one partition per Arrow batch (maxRecordsPerBatch rows): merge them
+    # so a write makes one file
+    return KernelOutput(rows.coalesce(1), meta)

@@ -45,10 +45,10 @@ class LPAResult:
 
 LOCAL_LPA_MAX_EDGES = 4_000_000
 """Size gate (directed vote rows) below which the superstep loop runs
-as a single vectorized numpy task — the same physical-strategy
+as one vectorized numpy body in the driver — the same physical-strategy
 principle as the CC and PageRank fast paths: below the gate,
-distributed supersteps are pure job-scheduling latency. The kernel
-task counts the input rows (``run_kernel``'s ``max_edge_rows``):
+distributed supersteps are pure job-scheduling latency. The kernel's
+collect counts the input rows (``run_kernel``'s ``max_edge_rows``):
 undirected input is canonical, so 2× its rows, exactly the deduped
 vote rows; directed input counts its non-loop rows, an upper bound on
 the deduped vote rows (the kernel dedups). Vote sums are float64 in
@@ -148,7 +148,7 @@ def label_propagation(
     under it would cast double votes.
 
     ``local`` picks the physical strategy below ``LOCAL_LPA_MAX_EDGES``
-    vote rows: ``None`` (default) auto-selects the single-task
+    vote rows: ``None`` (default) auto-selects the driver-side
     vectorized kernel when ``run_dir`` is not requested; ``False``
     forces the distributed superstep loop; ``True`` forces the local
     kernel regardless of size (expert). Label parity between the two

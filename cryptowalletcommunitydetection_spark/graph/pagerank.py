@@ -28,8 +28,8 @@ Scale design:
   computes and pins; superseded states are released, and every cache
   and state is released when a superstep fails,
 - below ``LOCAL_PR_MAX_EDGES`` the whole iteration runs as one
-  vectorized numpy task instead, with or without ``run_dir`` (the task
-  writes the same per-superstep Parquet states) and builds the
+  vectorized numpy body in the driver instead, with or without
+  ``run_dir`` (the body writes the same per-superstep Parquet states) and builds the
   transition table itself from the input rows.
 """
 
@@ -53,7 +53,7 @@ BROADCAST_MAX_VERTICES = 2_000_000
 
 LOCAL_PR_MAX_EDGES = 4_000_000
 """Size gate (normalized directed edge rows) below which the superstep
-loop is replaced by a single-task vectorized numpy power iteration —
+loop is replaced by a driver-side vectorized numpy power iteration —
 the same physical-strategy principle as the CC local fast path
 (graph/cc.py LOCAL_CC_MAX_EDGES) and a broadcast join: when the whole
 transition table fits one executor comfortably, ~100 supersteps of pure
@@ -61,9 +61,9 @@ job-scheduling latency (~400 ms each in local mode) dwarf the O(E) work
 per iteration (a 1.2M-row scatter/gather is ~5 ms in numpy). Measured
 crossover (BENCH/BASELINE.md, 20-superstep walls, local[32]): local
 wins 1.9x at 2M normalized rows, loses 0.61x at 8M — 4M is the
-bracketed midpoint, and also the memory-safe bound for one executor
+bracketed midpoint, and also the memory-safe bound for the driver
 (~200 MB edge index + key table). The gate counts input rows (doubled
-when undirected: canonical rows): inside the kernel task
+when undirected: canonical rows): in the kernel's own collect
 (``run_kernel``'s ``max_edge_rows``), or under ``run_dir`` in the
 manifest identity's aggregate. The gate applies with or without
 ``run_dir`` (the kernel then checkpoints each superstep itself); the
@@ -287,7 +287,7 @@ def _checkpointed_local(
     """``_local_pagerank`` under a run manifest: resume from the last
     recorded state (``init_ranks`` is then ignored), let the kernel write
     one Parquet state per superstep, and record those supersteps — with
-    footer lineage, zero Spark jobs — once the task has returned."""
+    footer lineage, zero Spark jobs — once the body has returned."""
     manifest = RunManifest.open_or_create(run_dir, "pagerank", params)
     last, done = manifest.resume_point(lambda m: m["delta"] < tol)
     if done:
@@ -371,7 +371,7 @@ def pagerank(
     starts fresh. Resume granularity is one superstep on the
     distributed loop and one kernel call on the local path: the kernel
     writes its states while it runs, but the manifest records them only
-    after the task returns, so a call killed mid-kernel resumes from the
+    after the body returns, so a call killed mid-kernel resumes from the
     previous call's last superstep and no record ever points at a
     partial file. ``run_dir`` must be a POSIX path that the driver and
     the executors both see.
@@ -449,7 +449,7 @@ def pagerank(
     # local fast path (see LOCAL_PR_MAX_EDGES); undirected input rows are
     # canonical, two transition rows each. Under run_dir the identity
     # aggregate counts the input rows, so the gate is decided here;
-    # without it the kernel task applies the gate itself and returns
+    # without it the kernel's collect applies the gate and returns
     # None past it. Both read only the input rows, so with
     # assume_canonical nothing on this path shuffles; shuffled rows with
     # a second reader ahead are pinned lazily (see run_kernel).

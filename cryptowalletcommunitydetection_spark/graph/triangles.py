@@ -83,10 +83,10 @@ def triangle_count(
     """Total number of triangles in the undirected graph.
 
     ``local``: physical strategy — None (default) auto-selects the
-    single-task numpy kernel below ``LOCAL_TRI_MAX_EDGES`` canonical
+    driver-side numpy kernel below ``LOCAL_TRI_MAX_EDGES`` canonical
     edges, True/False force. Results are identical (parity-tested).
-    On auto the kernel task counts the canonical rows against the gate
-    itself, so a small call is one Spark job (under ``assume_canonical``)
+    On auto the kernel's collect counts the canonical rows against the
+    gate, so a small call is one Spark job (under ``assume_canonical``)
     and nothing stays pinned; past the gate the distributed pipeline
     runs. ``edge_count``:
     caller-supplied canonical edge count that decides the path up front
@@ -182,8 +182,8 @@ def triangles_per_vertex(
 # random graphs at local[32] (best-of-2 warm walls, local vs
 # distributed): 500k edges 2.5s vs 4.3s; 2M 7.6 vs 7.1 (tied); 4M 13.1
 # vs 9.4; 8M 31.6 vs 15.3 — gate at the tie. Same adaptive pattern as
-# graph/pagerank.py LOCAL_PR_MAX_EDGES and graph/cc.py. The kernel task
-# applies it to the canonical rows (``run_kernel``'s ``max_edge_rows``)
+# graph/pagerank.py LOCAL_PR_MAX_EDGES and graph/cc.py. The kernel's
+# collect applies it to the canonical rows (``run_kernel``'s ``max_edge_rows``)
 # unless ``edge_count`` or ``local`` decides the path; with
 # ``assume_canonical`` nothing on the kernel path shuffles.
 LOCAL_TRI_MAX_EDGES = 2_000_000
@@ -325,7 +325,7 @@ def triangle_count_sampled(
     This is the >100M-edge scale path for G8: the wedge join's shuffle
     shrinks ~p² and the closure semi-join ~p³, and a sparsified graph
     that falls under ``LOCAL_TRI_MAX_EDGES`` additionally collapses to
-    the single-task kernel (measured: 11.0M canonical edges, exact
+    the driver-side kernel (measured: 11.0M canonical edges, exact
     distributed 22.7 s → p=0.1 sampled ~2 s, see BENCH/BASELINE.md).
 
     The sparsifier is a DETERMINISTIC hash coin — xxhash64(src, dst,

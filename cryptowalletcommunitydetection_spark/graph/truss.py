@@ -58,8 +58,8 @@ LOCAL_TRUSS_MAX_EDGES = LOCAL_TRI_MAX_EDGES
 Pinned to the measured triangle crossover: a truss round is exactly one
 triangle enumeration, so the per-round winner is the same and the peel
 loop multiplies the gap (the kernel additionally skips the per-round
-checkpoint + count actions the distributed loop needs); the kernel task
-applies it itself (``run_kernel``'s ``max_edge_rows``)."""
+checkpoint + count actions the distributed loop needs); the kernel's
+collect applies it (``run_kernel``'s ``max_edge_rows``)."""
 
 _EDGE_FIELDS = {"src": KEY, "dst": KEY}
 _SUPPORT_FIELDS = {**_EDGE_FIELDS, "support": LongType()}
@@ -99,8 +99,8 @@ def edge_support(
     triangles it participates in (0 for triangle-free edges).
 
     ``local`` forces the physical strategy; None auto-selects by the
-    ``LOCAL_TRUSS_MAX_EDGES`` gate, which the kernel task applies to the
-    canonical rows itself (one Spark job on a small canonical graph,
+    ``LOCAL_TRUSS_MAX_EDGES`` gate, which the kernel's collect applies to
+    the canonical rows (one Spark job on a small canonical graph,
     nothing left pinned); the distributed path persists the table for
     its several consumers."""
     e = _canonical(edges, assume_canonical)

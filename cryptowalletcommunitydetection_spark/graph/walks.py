@@ -47,8 +47,8 @@ unpinned lazy frontiers would re-run the whole join chain per step
 table (O(L²) recompute).
 
 Below the local gates (``LOCAL_WALK_MAX_*``) the corpus is instead ONE
-``run_kernel`` task (graph/local_kernel.py, the Arrow boundary every
-small-graph kernel shares): the task derives the walkers from their
+``run_kernel`` call (graph/local_kernel.py, the Arrow boundary every
+small-graph kernel shares): its driver-side body derives the walkers from their
 starts, hashes their walk ids with functions/xxh64.py and replays every
 step as numpy gathers, byte-identical to the distributed loop. The
 module's only Python task of its own is the alias-table build.
@@ -142,11 +142,11 @@ win below it."""
 LOCAL_WALK_MAX_STEP_ROWS = 4_000_000
 """Adaptive local-kernel gate on emitted corpus cells (walkers x
 walk_length): below this AND the adjacency gate the whole corpus is
-generated in ONE Arrow task instead of L serial join barriers. The
+generated by ONE driver-side kernel instead of L serial join barriers. The
 distributed loop's wall at small scale is ~L fixed stage barriers (the
 sf0.1 headline measured 10.2s for 16k walkers x L=10 — barrier-bound,
-not data-bound); the kernel replaces them with one task that hashes and
-replays every walk. MEASURED crossover
+not data-bound); the kernel replaces them with one body that hashes
+and replays every walk. MEASURED crossover
 (bench_scripts/walks_crossover.py, fresh JVM per level, min of 2,
 full-corpus L=10 on uniform random string-keyed graphs): 1M cells
 local 3.7s vs best-distributed 9.8s; 4M cells 14.5 vs 28.0; 8M cells
@@ -156,11 +156,11 @@ LOCAL_PR_MAX_EDGES."""
 
 LOCAL_WALK_MAX_ADJ_ROWS = 8_000_000
 """Second local-kernel gate: directed adjacency rows (2x canonical
-edges) that must fit one task alongside the walk state — it binds on
+edges) that must fit the driver alongside the walk state — it binds on
 SEED-SET corpora (few walkers, big graph), where the cells gate alone
-would send an arbitrarily large adjacency through the single task.
+would send an arbitrarily large adjacency into the driver.
 8M rows of (src, dst, rank) is ~200 MB as numpy int64/object arrays
-and ~8-10s of single-task Arrow conversion at the measured
+and ~8-10s of Arrow conversion at the measured
 ~1.2s/M-rows rate — comparable to the distributed path's one-time
 adjacency build+layout, so above this bound the broadcast strategy's
 cached-adjacency scan wins."""
@@ -177,12 +177,12 @@ def _local_corpus(
     weighted: bool,
     steps,
 ) -> DataFrame:
-    """The ``strategy="local"`` corpus: ONE ``run_kernel`` task over the
+    """The ``strategy="local"`` corpus: ONE ``run_kernel`` call over the
     canonical edges (with their weights when ``weighted``, and with the
     start ids as a value channel when ``starts`` is given).
 
     A walker is a pure function of its start vertex and walk index, so
-    the task derives the walkers itself: the distinct starts present in
+    the body derives the walkers itself: the distinct starts present in
     the graph (every vertex without ``starts``), their walk ids
     ``<start>#<index>`` (pyarrow, the ``concat_ws`` of the distributed
     frontier) and each id's base hash ``xxhash64(walk_id)``
@@ -193,8 +193,6 @@ def _local_corpus(
     are the ones the distributed strategies join against, bit for bit.
     ``steps(adj, base, cur)`` replays the walks from there and returns
     the (walkers x walk_length) code matrix."""
-    has_starts = starts is not None  # the body must not capture frames
-
     def body(g):
         from types import SimpleNamespace
 
@@ -216,7 +214,7 @@ def _local_corpus(
             w = np.ones(len(g.src)) if g.weight is None else g.weight
             adj.prob, alias_rows, _ = _alias_core(src, np.concatenate([w, w])[order])
             adj.alias = dst[alias_rows]
-        if has_starts:  # distinct, and -1 (not in the graph) dropped
+        if starts is not None:  # distinct, and -1 (not in the graph) dropped
             first = np.unique(g.values[0][0])
             first = first[first >= 0]
         else:
@@ -234,7 +232,7 @@ def _local_corpus(
         )
         return {"walk_id": walk_id, "start": cur, "seq": seq}, {"walkers": len(cur)}
 
-    values = (starts.select("id", F.lit(None).alias("value")),) if has_starts else ()
+    values = (starts.select("id", F.lit(None).alias("value")),) if starts is not None else ()
     return run_kernel(
         canon, body, _CORPUS_FIELDS,
         weight=weighted and "weight" in canon.columns, values=values,
@@ -794,17 +792,17 @@ def random_walks(
     are identical on every strategy (the transition is a pure function
     of walk_id/step/seed; parity is test-pinned):
 
-    - ``"local"``: ONE ``run_kernel`` task (graph/local_kernel.py)
-      replays every walk over the canonical edges. The task derives
+    - ``"local"``: ONE ``run_kernel`` call (graph/local_kernel.py)
+      replays every walk over the canonical edges in the driver. It derives
       the walkers, their walk ids and each id's ``xxhash64(walk_id)``
       base hash itself, and re-derives every per-step hash/coin from
       that base through the Spark-bit-exact numpy chain in
       functions/xxh64.py (parity pinned by test_xxh64/test_walks), so
       the corpus is byte-identical to the distributed strategies with
       zero per-step stage barriers (``_local_corpus``). Right when
-      walkers x length and the adjacency both fit one task (the
+      walkers x length and the adjacency both fit the driver (the
       small-graph / seed-set regime where the distributed loop is pure
-      barrier overhead). Vertex ids are integral or strings: the task
+      barrier overhead). Vertex ids are integral or strings: the body
       formats walk ids the way Spark casts those to string.
     - ``"broadcast"``: the frontier is broadcast; each step is ONE
       mapper-side stage over the cached adjacency — no shuffle at all.

@@ -128,7 +128,7 @@ class RunManifest:
           ...
 
     A state directory is either a Spark write (one part file per
-    partition, via ``checkpoint``) or, from a single-task kernel such as
+    partition, via ``checkpoint``) or, from a driver-side kernel such as
     PageRank's local path, one ``part-00000.parquet`` written with
     pyarrow; ``load_state`` and ``partition_lineage`` read both.
     """

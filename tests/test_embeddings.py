@@ -209,8 +209,9 @@ def test_ann_operator_consumes_output(spark):
 
 
 def test_generated_corpus_is_released(spark):
-    """The corpus the function walks itself is a local checkpoint and is
-    released once the vectors exist; a caller's corpus stays pinned."""
+    """The corpus the function walks itself is released once the
+    vectors exist; a caller's corpus stays pinned (a distributed corpus
+    is a local checkpoint; a local-kernel corpus pins nothing)."""
     edges = datagen.edges_df(spark, datagen.two_cliques_bridge(5))
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
@@ -218,7 +219,7 @@ def test_generated_corpus_is_released(spark):
     assert out.count() == 10
     assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
-    corpus = random_walks(edges, num_walks=2, walk_length=4)
+    corpus = random_walks(edges, num_walks=2, walk_length=4, strategy="broadcast")
     pinned = set(jsc.getPersistentRDDs().keys()) - before
     assert pinned
     deepwalk_embeddings(edges, dim=4, corpus=corpus).count()

@@ -1,10 +1,15 @@
-"""The single-task Arrow boundary of the small-graph kernels
+"""The driver-side Arrow boundary of the small-graph kernels
 (graph/local_kernel.py): a failing numpy body leaves nothing pinned, a
-small-graph call is one Spark job with the size gate applied inside the
-task, and a call past the gate falls through to the distributed path
-after reading at most gate + 1 edge rows."""
+small-graph call is one Spark job with the size gate applied in its
+collect, its result is a plain one-partition scan, calls on one session
+may run concurrently, and a call past the gate falls through to the
+distributed path after reading at most gate + 1 edge rows."""
 
+import glob
 import logging
+import os
+import sys
+import threading
 from importlib import import_module
 
 import numpy as np
@@ -32,9 +37,8 @@ OPERATORS = {
 
 @pytest.mark.parametrize("name", sorted(OPERATORS))
 def test_kernel_failure_releases_caches(spark, monkeypatch, name):
-    """When the numpy body raises inside the task, the operator's
-    input and the kernel's own output checkpoint are released: no new
-    persistent RDD and no cache entry remains."""
+    """When the numpy body raises, the operator's pinned input is
+    released: no new persistent RDD and no cache entry remains."""
     module_name, factory, call = OPERATORS[name]
     module = _module(module_name)
 
@@ -177,3 +181,73 @@ def test_past_the_gate_falls_through_to_the_distributed_path(
     assert _equal(value(res), want, tol)
     if name == "cc":
         assert res._cwcd_n_edges == len(set(pairs))
+
+
+@pytest.mark.parametrize("name", sorted(SITES))
+def test_local_result_is_one_partition_scan(spark, tmp_path, name):
+    """The local result reads the driver's Arrow batches: its plan runs
+    no Python task, embeds no LocalRelation and reads no local
+    checkpoint, and its Parquet write is one part file."""
+    _, _, call, kept, _, _ = SITES[name]
+    edges = datagen.edges_df(spark, PAIRS)
+    for df in kept(call(spark, edges, False)):
+        qe = df._jdf.queryExecution()
+        assert "MapInArrow" not in qe.executedPlan().toString()
+        assert "LocalRelation" not in qe.optimizedPlan().toString()
+        leaves = qe.analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            assert leaf.nodeName() == "LogicalRDD"
+            assert not leaf.rdd().isLocallyCheckpointed()
+        out = str(tmp_path / "out")
+        df.write.parquet(out)
+        assert len(glob.glob(os.path.join(out, "part-*"))) == 1
+
+
+def test_concurrent_calls_on_one_session(spark):
+    """Six threads run PageRank and CC at once on one session with a
+    short switch interval: each result equals the sequential one and is
+    an RDD scan, never a LocalRelation (the Arrow threshold the result
+    conversion narrows is session-global, so a lost update would show
+    as one), and the threshold is restored."""
+    pr = _module("pagerank")
+    cc = _module("cc")
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    before = spark.conf.get(key)
+    edges = datagen.edges_df(spark, PAIRS)
+    calls = {
+        "pagerank": lambda: pr.pagerank(spark, edges, assume_canonical=True).ranks,
+        "cc": lambda: cc.connected_components(spark, edges, assume_canonical=True),
+    }
+    want = {name: _rows(fn(), lambda x: x[0]) for name, fn in calls.items()}
+    names = sorted(calls) * 3
+    got, errors = [], []
+    start = threading.Barrier(len(names))
+
+    def run(name):
+        try:
+            start.wait()
+            for _ in range(2):
+                df = calls[name]()
+                plan = df._jdf.queryExecution().optimizedPlan().toString()
+                got.append((name, "LocalRelation" in plan, _rows(df, lambda x: x[0])))
+        except BaseException as err:  # surfaced below
+            errors.append(err)
+
+    threads = [threading.Thread(target=run, args=(name,)) for name in names]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) == 2 * len(names)
+    for name, local_relation, rows in got:
+        assert not local_relation
+        assert _equal(want[name], rows, 0 if name == "cc" else 1e-12)
+    assert spark.conf.get(key) == before

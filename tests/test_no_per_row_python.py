@@ -1,11 +1,11 @@
 """Hot-path audit (SURVEY.md §5 item 6, BASELINE.md): physical plans must
 contain no BatchEvalPython (row-at-a-time Python UDF) anywhere. The
 Python-executing nodes on the hot paths are Arrow MapInPandas in the
-extraction stage and the one-task Arrow MapInArrow of the small-graph
-kernels (graph/local_kernel.py), whose input carries no Exchange under
-``assume_canonical``; the results those kernels return are plain scans.
-The walk corpora run on that boundary too; the walk module's only task
-of its own is the Arrow alias-table build."""
+extraction stage and the walk module's Arrow alias-table build. The
+small-graph kernels (graph/local_kernel.py), the walk corpora included,
+run no Python task: one ``toArrow()`` collect, whose input carries no
+Exchange under ``assume_canonical``, feeds a numpy body in the driver,
+and the results they return are plain scans."""
 
 import ast
 import re
@@ -60,15 +60,15 @@ def test_graph_pipeline_plans_pure_jvm(spark):
 
 
 def test_python_tasks_enter_graph_through_known_kernels():
-    """Python tasks enter graph/ only through the small-graph boundary
-    (local_kernel.py), the extraction kernel (edges.py) and the
-    alias-table build (walks.py). A new operator runs its numpy body on
-    ``run_kernel`` instead of growing its own task and its own copy of
-    the key indexing."""
+    """Python tasks enter graph/ only through the extraction kernel
+    (edges.py) and the alias-table build (walks.py); the small-graph
+    boundary (local_kernel.py) runs its bodies in the driver. A new
+    operator runs its numpy body on ``run_kernel`` instead of growing
+    its own task and its own copy of the key indexing."""
     sources = {f.name: f.read_text() for f in sorted(Path(graph.__file__).parent.glob("*.py"))}
     sites = {name: len(re.findall(r"\.mapIn(?:Pandas|Arrow)\(", src)) for name, src in sources.items()}
     assert {name: n for name, n in sites.items() if n} == {
-        "edges.py": 1, "local_kernel.py": 1, "walks.py": 1,
+        "edges.py": 1, "walks.py": 1,
     }
     assert [name for name, src in sources.items() if "factorize(" in src] == []
 
@@ -99,8 +99,9 @@ def test_superstep_lifecycle_lives_in_plans():
 )
 def test_local_kernels_do_not_shuffle_canonical_input(spark, monkeypatch, name):
     """Under assume_canonical the small-graph path runs no Exchange: the
-    kernel's input plan, and every frame the operator persists or
-    checkpoints on the way, is free of one. A plan fact, not a timing."""
+    plan of the kernel's one ``toArrow()`` collect, and every frame the
+    operator persists or checkpoints on the way, is free of one. A plan
+    fact, not a timing."""
     pairs = sorted({tuple(sorted((f"v{a}", f"v{b}")))
                     for a, b in datagen.erdos_renyi(40, 0.1, seed=2)})
     edges = spark.createDataFrame(
@@ -108,7 +109,7 @@ def test_local_kernels_do_not_shuffle_canonical_input(spark, monkeypatch, name):
     )
     plans = {}
     cls = type(edges)  # Spark's concrete (classic) DataFrame class
-    for method in ("mapInArrow", "persist", "localCheckpoint"):
+    for method in ("toArrow", "persist", "localCheckpoint"):
         original = getattr(cls, method)
 
         def spy(self, *args, _original=original, _method=method, **kwargs):
@@ -127,7 +128,7 @@ def test_local_kernels_do_not_shuffle_canonical_input(spark, monkeypatch, name):
         "walks": lambda: random_walks(edges, strategy="local", assume_canonical=True),
     }
     assert calls[name]().count() > 0
-    assert len(plans["mapInArrow"]) == 1
+    assert len(plans["toArrow"]) == 1
     for method, seen in plans.items():
         for plan in seen:
             assert "Exchange" not in plan, (method, plan)
