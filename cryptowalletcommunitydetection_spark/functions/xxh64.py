@@ -28,10 +28,15 @@ public domain; same algorithm in every implementation):
   CONSTANT byte string (the 'coin' / 'alias' / 'accept' channel
   separators) under a vector of seeds — loops run over byte positions,
   not over rows.
+- ``hash_double(x, seed)``: DoubleType (canonical NaN, ``-0.0`` as 0.0)
+- ``hash_arrow(columns)``: the whole ``xxhash64(c1, ..., cn)`` chain over
+  pyarrow columns, nulls skipped — the driver-side kernels key their run
+  manifests with it (plans/checkpoint.py ``arrow_identity``).
 
 Bit-exactness against Spark's expressions is pinned by
 tests/test_xxh64.py property tests (random ints/longs/strings compared
-to ``F.xxhash64`` column output).
+to ``F.xxhash64`` column output, and the manifest key against
+``content_identity``).
 """
 
 from __future__ import annotations
@@ -159,6 +164,44 @@ def hash_bytes(data, seed) -> np.ndarray:
         )
         out[rows] = _hash_rows(m, seeds[rows])
     return out
+
+
+def hash_double(x, seed) -> np.ndarray:
+    """Spark's hash of a DoubleType value: the long bits of
+    ``doubleToLongBits``, so every NaN hashes as the canonical NaN and
+    ``-0.0`` as ``0.0``."""
+    x = np.asarray(x, dtype=np.float64)
+    bits = np.where(np.isnan(x), np.int64(0x7FF8000000000000), x.view(np.int64))
+    return hash_long(np.where(x == 0.0, np.int64(0), bits), seed)
+
+
+def hash_arrow(columns) -> np.ndarray:
+    """Spark's ``xxhash64(c1, ..., cn)`` over pyarrow arrays of equal
+    length: the columns chain from seed 42, and a null leaves the
+    running hash as it was. Integer, boolean, date, timestamp, double
+    and string / binary columns hash as Spark hashes their types."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    h = np.full(len(columns[0]) if columns else 0, SPARK_DEFAULT_SEED, dtype=np.uint64)
+    for col in columns:
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        t = col.type
+        if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) \
+                or pa.types.is_large_binary(t):
+            step = hash_bytes(pc.fill_null(col.cast(pa.large_binary()), b""), h)
+        elif pa.types.is_floating(t) and t.bit_width == 64:
+            step = hash_double(pc.fill_null(col, 0.0).to_numpy(), h)
+        elif pa.types.is_integer(t) or pa.types.is_boolean(t) or pa.types.is_date32(t) \
+                or pa.types.is_timestamp(t):
+            v = pc.fill_null(col.cast(pa.int32() if pa.types.is_date32(t) else pa.int64()), 0)
+            v = v.to_numpy().astype(np.int64)
+            step = hash_long(v, h) if t.bit_width == 64 else hash_int(v, h)
+        else:
+            raise TypeError(f"no Spark xxhash64 twin for column type {t}")
+        h = np.where(pc.is_valid(col).to_numpy(zero_copy_only=False), step, h)
+    return h
 
 
 def hash_py_int(i: int, seed) -> np.ndarray:

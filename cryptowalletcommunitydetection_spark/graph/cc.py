@@ -20,19 +20,22 @@ and supplies the vertex universe of the final labels; from
 as int64 keys.
 
 Below ``LOCAL_CC_MAX_EDGES`` (and for a pre-contracted graph under it)
-one numpy task labels the whole vertex universe instead (``_cc_body``).
+one numpy body in the driver labels the whole vertex universe instead
+(``_cc_body``), with or without ``run_dir``: under a run manifest it
+records its final labels as one superstep.
 """
 
 from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import RunManifest, release_local_checkpoint
-from ..plans.superstep import scoped_conf
-from .local_kernel import KEY, run_kernel
+from ..plans.superstep import scoped_conf, unchanged
+from .local_kernel import KEY, Resumable, iterate, run_kernel
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -234,10 +237,9 @@ algorithm beats 5 × O(log n) distributed rounds of pure scheduling
 latency. The kernel's collect counts the distinct rows, self-loops included
 (the input rows under ``assume_canonical``, so nothing on the path
 shuffles; ``run_kernel``'s ``max_edge_rows``), as it does for
-a pre-contracted graph. Above the gate — or whenever ``run_dir``
-checkpointing is requested — the alternating-star loop runs unchanged;
-``local=False`` forces it (equality between the two paths is exact and
-tested)."""
+a pre-contracted graph, with or without ``run_dir``. Above the gate the
+alternating-star loop runs unchanged; ``local=False`` forces it
+(equality between the two paths is exact and tested)."""
 
 ENCODE_MIN_EDGES = 4_000_000
 """Distinct-edge count from which the distributed path re-keys string
@@ -260,29 +262,32 @@ def _cc_body():
     the fixpoint is each component's minimum code — in key order, the
     star loop's min-member root. Every tree merges with a neighbour
     tree each round: O(log n) vectorized rounds, no per-row Python.
-    Self-loop-only vertices and ``vertices`` markers are labelled too."""
+    Self-loop-only vertices and ``vertices`` markers are labelled too.
+    The whole solve is one superstep of ``iterate`` (``delta`` 0: the
+    labels are final), so a run manifest holds the final labels."""
 
     def body(g):
-        import numpy as np
-
         u, v = g.src, g.dst
-        lab = np.arange(g.n, dtype=np.int64)
-        rounds = 0
-        while True:
-            m = np.minimum(lab[u], lab[v])
-            new = lab.copy()
-            np.minimum.at(new, lab[u], m)
-            np.minimum.at(new, lab[v], m)
+
+        def solve(lab):
+            rounds = 0
             while True:
-                nxt = new[new]
-                if np.array_equal(nxt, new):
-                    break
-                new = nxt
-            rounds += 1
-            if np.array_equal(new, lab):
-                break
-            lab = new
-        meta = {"rounds": rounds, "edges": int(np.count_nonzero(u != v))}
+                m = np.minimum(lab[u], lab[v])
+                new = lab.copy()
+                np.minimum.at(new, lab[u], m)
+                np.minimum.at(new, lab[v], m)
+                while True:
+                    nxt = new[new]
+                    if np.array_equal(nxt, new):
+                        break
+                    new = nxt
+                rounds += 1
+                if np.array_equal(new, lab):
+                    return lab, {"delta": 0, "rows": g.n, "rounds": rounds}
+                lab = new
+
+        lab, meta = iterate(g, np.arange(g.n, dtype=np.int64), solve, unchanged, 1)
+        meta["edges"] = int(np.count_nonzero(u != v))
         return {"id": np.arange(g.n), "component": lab}, meta
 
     return body
@@ -342,9 +347,9 @@ def connected_components(
     star roots back through the anchors afterwards. Labels are exactly
     equal either way (min-anchor == min-member; parity-tested); the
     star loop then closes a graph typically orders of magnitude
-    smaller. Skipped when ``run_dir`` is set (the resume manifest's
-    per-round state is star-round state; a resumable pre-phase would
-    change its semantics).
+    smaller. Skipped when the distributed path runs under ``run_dir``
+    (the resume manifest's per-round state is star-round state; a
+    resumable pre-phase would change its semantics).
 
     ``assume_canonical``: the caller guarantees the input satisfies the
     ``derive_edges`` output contract (src < dst, one row per unordered
@@ -358,8 +363,12 @@ def connected_components(
     ``edges`` needs columns src, dst (any orderable type; self-loops and
     duplicate orientations tolerated). ``vertices`` (DataFrame[id])
     optionally adds isolated vertices (own singleton components).
-    ``run_dir`` enables per-round Parquet checkpoints + manifest; a rerun
-    with the same run_dir resumes from the last complete round.
+    ``run_dir`` enables a Parquet state per superstep + manifest (see
+    ``RunManifest``); a rerun with the same run_dir resumes from the last
+    complete superstep. The local kernel's one superstep is the final
+    labels, the star loop's are its rounds; the two key their manifests
+    differently, so a run dir written by one path starts fresh on the
+    other.
 
     The deduped edge set is materialized in original key space — the
     same single action that seeds the fixpoint probe — and its exact
@@ -378,7 +387,7 @@ def connected_components(
 
     ``local`` picks the physical strategy below ``LOCAL_CC_MAX_EDGES``
     distinct edges: ``None`` (default) auto-selects the driver-side
-    numpy fast path when ``run_dir`` is not requested; ``False``
+    numpy fast path, with or without ``run_dir``; ``False``
     forces the distributed star loop; ``True`` forces the local kernel
     regardless of size (expert). Both produce bitwise-identical labels.
     """
@@ -400,15 +409,16 @@ def connected_components(
     # previous self-loop-free hash let two inputs differing only in
     # such a vertex share a resume state). Shuffled rows are pinned in
     # it before a speculative kernel call already (see run_kernel).
-    pin = run_dir is None and local is None and not assume_canonical
+    pin = local is None and not assume_canonical
     universe = dedup.localCheckpoint(eager=False) if pin else dedup
-    if run_dir is None and local is not False:
-        # small-graph fast path: one numpy task instead of ~5 distributed
+    if local is not False:
+        # small-graph fast path: one numpy body instead of ~5 distributed
         # rounds (measured crossover in BENCH/)
         try:
             kernel = run_kernel(
                 universe, _cc_body(), _CC_FIELDS, vertices=vertices,
                 max_edge_rows=None if local else LOCAL_CC_MAX_EDGES,
+                run=None if run_dir is None else Resumable(run_dir, "cc", {}, ("component", KEY)),
             )
         except BaseException:
             if pin:
@@ -588,7 +598,7 @@ def _cc_loop(
         prev_sketch = sketch
         if manifest is not None:
             manifest.record_superstep(
-                spark, k, wall_ms=(time.monotonic() - t0) * 1e3, delta=delta, rows=rows
+                {"k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": delta, "rows": rows}
             )
         # release the superseded round's pinned state (the new round is
         # materialized and no longer depends on it). The contracted

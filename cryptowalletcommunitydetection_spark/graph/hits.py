@@ -50,6 +50,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
@@ -57,7 +58,7 @@ from pyspark.sql.types import DoubleType
 from ..plans.checkpoint import release_local_checkpoint
 from ..plans.superstep import run_supersteps
 from .edges import canonicalize_edges, symmetrize, vertices_of
-from .local_kernel import KEY, run_kernel
+from .local_kernel import KEY, iterate, run_kernel
 
 LOCAL_HITS_MAX_EDGES = 4_000_000
 """Directed edge rows below which the driver-side kernel runs
@@ -82,43 +83,33 @@ def _hits_body(tol: float, max_iter: int, directed: bool):
     loop-free directed rows (deduplicated here) or, with
     ``directed=False``, canonical rows (symmetrized here) — the same
     update rule, normalization and stopping test as the distributed
-    loop. The meta record carries the step count, the convergence flag
-    and one record per superstep (``k``, ``wall_ms``, ``delta``,
-    ``rows`` = vertices)."""
+    loop. The supersteps run on ``iterate``, with the distributed
+    loop's records (``delta``, ``rows`` = vertices)."""
 
     def body(g):
-        import time
-
-        import numpy as np
-
         n, src, dst = g.n, g.src, g.dst
         if directed:
             key = np.unique(src * n + dst)
             src, dst = key // n, key % n
         else:
             src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
-        h = np.full(n, 1.0 / max(n, 1))
-        a = h.copy()
-        steps, converged, records = 0, n == 0, []
-        while not converged and steps < max_iter:
-            t0 = time.monotonic()
+
+        def step(state):
+            h, a = state
             a_raw = np.bincount(dst, weights=h[src], minlength=n)
             h_raw = np.bincount(src, weights=a_raw[dst], minlength=n)
             na, nh = a_raw.sum(), h_raw.sum()
             a_new = a_raw / na if na > 0 else a_raw
             h_new = h_raw / nh if nh > 0 else h_raw
             delta = np.abs(a_new - a).sum() + np.abs(h_new - h).sum()
-            a, h = a_new, h_new
-            records.append({
-                "k": steps, "wall_ms": (time.monotonic() - t0) * 1e3,
-                "delta": float(delta), "rows": n,
-            })
-            steps += 1
-            converged = bool(delta < tol)
-        return (
-            {"id": np.arange(n), "hub": h, "authority": a},
-            {"k": steps, "conv": converged, "steps": records},
+            return (h_new, a_new), {"delta": float(delta), "rows": n}
+
+        h0 = np.full(n, 1.0 / max(n, 1))
+        (h, a), meta = iterate(
+            g, (h0, h0), step, lambda m: m["delta"] < tol, max_iter if n else 0,
         )
+        meta["conv"] = meta["conv"] or n == 0
+        return {"id": np.arange(n), "hub": h, "authority": a}, meta
 
     return body
 

@@ -40,25 +40,28 @@ Scale design (same physical-strategy playbook as PageRank/CC/LPA):
 - the distributed loop runs on plans/superstep.py's
   ``run_supersteps``, as PageRank's, LPA's and HITS': one
   changed-count aggregate per superstep computes and pins the new
-  state (a local checkpoint, or Parquet under ``run_dir`` keyed on the
-  edge set's content identity, so a run is resumable and a changed
-  input starts fresh), each superstep returns one metrics record, and
-  every cache and state is released also when a superstep fails.
+  state (a local checkpoint, or Parquet under ``run_dir``), each
+  superstep returns one metrics record, and every cache and state is
+  released also when a superstep fails,
+- under ``run_dir`` either path is resumable one superstep at a time:
+  the manifest is keyed on the edge set's content identity, so a
+  changed input starts fresh and a run dir resumes on either path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import RunManifest, content_identity, release_local_checkpoint
-from ..plans.superstep import count_changed, run_supersteps
+from ..plans.superstep import count_changed, run_supersteps, unchanged
 from .edges import canonicalize_edges, symmetrize
-from .local_kernel import KEY, run_kernel
+from .local_kernel import KEY, Resumable, iterate, run_kernel
 
 LOCAL_KCORE_MAX_EDGES = 4_000_000
 """Size gate (canonical undirected edge rows) below which the H-index
@@ -69,8 +72,8 @@ uniform random string-keyed graphs): local wins 5.2x at 1M raw rows,
 last measured local win, applied by the kernel's own collect
 (``run_kernel``'s ``max_edge_rows``). Integer state in both paths, so
 local/distributed parity is exact (tested; the crossover script also
-sketch-checks agreement at every level). ``run_dir`` checkpointing
-always uses the distributed loop (``run_supersteps``)."""
+sketch-checks agreement at every level). The gate applies with or
+without ``run_dir``."""
 
 
 @dataclass
@@ -91,22 +94,15 @@ def _kcore_body(max_iter: int):
     group with ``np.maximum.reduceat`` — the vectorized twin of the
     histogram + window in the distributed superstep. Terminates at the
     exact coreness fixpoint (monotone nonincreasing integer state). The
-    meta record carries the step count, the convergence flag and the
-    distributed loop's per-superstep records (``k``, ``wall_ms``,
-    ``delta`` = changed cores, ``rows`` = vertices)."""
+    supersteps run on ``iterate``, with the distributed loop's records
+    (``delta`` = changed cores, ``rows`` = vertices)."""
 
     def body(g):
-        import time
-
-        import numpy as np
-
         # symmetrized directed arrays: H-index gathers over in-neighbors
         s = np.concatenate([g.src, g.dst])
         t = np.concatenate([g.dst, g.src])
-        c = np.bincount(t, minlength=g.n).astype(np.int64)  # c_0 = degree
-        steps, converged, records = 0, False, []
-        for k in range(max_iter):
-            t0 = time.monotonic()
+
+        def step(c):
             vals = c[s]
             o = np.lexsort((-vals, t))
             tt, vv = t[o], vals[o]
@@ -119,16 +115,11 @@ def _kcore_body(max_iter: int):
             # edge endpoint, so h aligns with 0..n-1
             h = np.maximum.reduceat(np.minimum(vv, rank), starts)
             new_c = np.minimum(c, h)
-            changed = int((new_c != c).sum())
-            c = new_c
-            steps = k + 1
-            records.append({
-                "k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed, "rows": g.n,
-            })
-            if changed == 0:
-                converged = True
-                break
-        return {"id": np.arange(g.n), "core": c}, {"k": steps, "conv": converged, "steps": records}
+            return new_c, {"delta": int((new_c != c).sum()), "rows": g.n}
+
+        c0 = np.bincount(t, minlength=g.n).astype(np.int64)  # c_0 = degree
+        c, meta = iterate(g, c0, step, unchanged, max_iter)
+        return {"id": np.arange(g.n), "core": c}, meta
 
     return body
 
@@ -161,15 +152,15 @@ def core_numbers(
     not a hint: duplicate orientations would inflate degrees.
 
     ``local``: ``None`` auto-selects the driver-side vectorized kernel
-    below ``LOCAL_KCORE_MAX_EDGES`` when no ``run_dir`` is requested;
+    below ``LOCAL_KCORE_MAX_EDGES``, with or without ``run_dir``;
     ``False`` forces the distributed loop; ``True`` forces local.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iter`` supersteps (unlike LPA's legitimate 2-cycles, a capped
     H-index run has NOT computed coreness — the monotone state is
     merely an upper bound). With ``run_dir`` the state up to the cap is
-    checkpointed, so a rerun with a higher ``max_iter`` resumes instead
-    of restarting.
+    checkpointed one superstep at a time on either path, so a rerun
+    with a higher ``max_iter`` resumes instead of restarting.
     """
     if assume_canonical:
         canon = edges.select("src", "dst")
@@ -177,14 +168,17 @@ def core_numbers(
         canon = canonicalize_edges(edges).select("src", "dst")
 
     # shuffled rows are pinned for a fall-through (see run_kernel)
-    pin = run_dir is None and local is None and not assume_canonical
+    pin = local is None and not assume_canonical
     if pin:
         canon = canon.localCheckpoint(eager=False)
-    if run_dir is None and local is not False:
+    if local is not False:
         try:
             out = run_kernel(
                 canon, _kcore_body(max_iter), {"id": KEY, "core": LongType()},
                 max_edge_rows=None if local else LOCAL_KCORE_MAX_EDGES,
+                # coreness is a function of the distinct canonical edge set only
+                run=None if run_dir is None else Resumable(
+                    run_dir, "kcore", {}, ("core", LongType())),
             )
         except BaseException:
             if pin:
@@ -210,7 +204,6 @@ def core_numbers(
     )
     manifest = None
     if run_dir is not None:
-        # coreness is a function of the distinct canonical edge set only
         manifest = RunManifest.open_or_create(
             run_dir, "kcore", {"input": content_identity(canon, "src", "dst")}
         )
@@ -248,7 +241,7 @@ def core_numbers(
     try:
         res = run_supersteps(
             e.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).cast("long").alias("core")),
-            step, count_changed("core"), lambda m: m["delta"] == 0,
+            step, count_changed("core"), unchanged,
             max_iter=max_iter, manifest=manifest, inputs=(canon, e),
         )
     finally:

@@ -23,7 +23,13 @@ share, so each operator keeps only its numpy body:
   vertex ids as codes (a code matrix for a field holding an array of
   ids, such as a walk), and a meta record; the result goes
   back to Spark as one partition of Arrow batches held by the driver
-  (no checkpoint, nothing to release).
+  (no checkpoint, nothing to release);
+- with a ``Resumable`` the call keeps a run manifest (plans/checkpoint.py)
+  without a Spark job of its own: the manifest key is computed over the
+  collected rows in numpy, the resume state is read with pyarrow, and
+  the body's supersteps (``iterate``) commit one state each, so a
+  ``run_dir`` call below the gate is one Spark job and resumes after
+  its last committed superstep.
 """
 
 from __future__ import annotations
@@ -37,11 +43,13 @@ from typing import Any, Callable, NamedTuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, StructField, StructType
 
+from ..plans.checkpoint import RunManifest, arrow_identity
 from ..plans.superstep import scoped_conf
 
 log = logging.getLogger(__name__)
@@ -63,6 +71,24 @@ _AS_RDD = {"spark.sql.execution.arrow.localRelationThreshold": "0"}
 _AS_RDD_LOCK = threading.Lock()
 
 
+class Resumable(NamedTuple):
+    """A kernel call that keeps a run manifest under ``run_dir``.
+
+    The manifest is ``algo`` with ``params`` plus the content keys of
+    the collected rows: ``input`` over the edge rows (src, dst and, with
+    ``weight``, the weight as a double), ``vertices`` over the marker
+    ids, and for each value channel the params name in ``values`` over
+    (id, value) — a ``None`` name leaves that channel out. The state is
+    one value per vertex: ``state`` names its column and gives its type
+    (``KEY`` or a Spark type)."""
+
+    run_dir: str
+    algo: str
+    params: dict
+    state: tuple[str, Any]
+    values: tuple[str | None, ...] = ()
+
+
 class KernelOutput(NamedTuple):
     """A kernel's result. ``rows`` is one partition over the Arrow
     batches the driver built (no checkpoint: nothing is pinned and
@@ -82,6 +108,7 @@ def run_kernel(
     vertices: DataFrame | None = None,
     values: tuple[DataFrame, ...] = (),
     max_edge_rows: int | None = None,
+    run: Resumable | None = None,
 ) -> KernelOutput | None:
     """Run ``body`` over ``edges(src, dst[, weight])`` in the driver.
 
@@ -102,6 +129,16 @@ def run_kernel(
     ``rows`` is one partition over the driver-held Arrow result: no
     checkpoint, nothing to release. With ``fields=None`` the call
     returns only the meta record.
+
+    With ``run`` (a ``Resumable``) the call opens its run manifest once
+    the gate has passed, with no Spark job: ``g.start`` is None on a
+    fresh start, else the resume point (``k``, the last ``record`` and
+    ``state``: the stored values per vertex code, read with pyarrow);
+    ``g.commit(state, record)``
+    writes and records one superstep (see ``iterate``, which calls it)
+    and deletes the state it supersedes when this call wrote it. The
+    meta record's ``steps`` become the manifest's records. Without
+    ``run``, ``g.start`` is None and ``g.commit`` does nothing.
 
     ``max_edge_rows`` (the operator's size gate, in rows of ``edges``)
     makes the call speculative: the collect reads at most that many
@@ -162,15 +199,26 @@ def run_kernel(
     if not ok.all():  # a row with a null endpoint is no edge
         src, dst = src[ok], dst[ok]
         wt = wt[ok] if wt is not None else None
-    chans = [
-        (code(m.column("src")), m.column("w").to_numpy().astype(np.float64))
-        for m in map(rows_of, range(2, 2 + len(values)))
-    ]
+    value_rows = [rows_of(c) for c in range(2, 2 + len(values))]
+    chans = [(code(m.column("src")), m.column("w").to_numpy().astype(np.float64))
+             for m in value_rows]
+    g = SimpleNamespace(
+        ids=ids, n=len(ids), src=src, dst=dst, weight=wt, values=chans,
+        start=None, commit=lambda state, record: None,
+    )
+    manifest = None
+    if run is not None:
+        manifest = _open_run(
+            run, g, code, [e.column("src"), e.column("dst")] + ([e.column("w")] if weight else []),
+            rows_of(1) if markers else None, value_rows,
+        )
     t0 = time.perf_counter()
-    cols, meta = body(SimpleNamespace(ids=ids, n=len(ids), src=src, dst=dst, weight=wt, values=chans))
+    cols, meta = body(g)
     body_ms = (time.perf_counter() - t0) * 1e3
     if "error" in meta:
         raise ValueError(meta["error"])
+    if manifest is not None:
+        meta = {**meta, "steps": manifest.metrics()}
     fields = fields or {}
 
     def column(c):
@@ -197,3 +245,55 @@ def run_kernel(
     # one partition per Arrow batch (maxRecordsPerBatch rows): merge them
     # so a write makes one file
     return KernelOutput(rows.coalesce(1), meta)
+
+
+def _open_run(run: Resumable, g, code, edge_cols, markers, channels) -> RunManifest:
+    """Open ``run``'s manifest keyed on the collected rows, and set
+    ``g.start`` and ``g.commit`` (see ``run_kernel``)."""
+    params = {**run.params, "input": arrow_identity(edge_cols)}
+    if markers is not None:
+        params["vertices"] = arrow_identity([markers.column("src")])
+    for name, rows in zip(run.values, channels):
+        if name is not None:
+            params[name] = arrow_identity([rows.column("src"), rows.column("w")])
+    manifest = RunManifest.open_or_create(run.run_dir, run.algo, params)
+    col, typ = run.state
+    last = manifest.last_complete()
+    if last >= 0:
+        t = pq.read_table(manifest.step_path(last), columns=["id", col])
+        vals = t.column(col)
+        vals = code(vals.cast(g.ids.type)) if typ == KEY else vals.to_numpy()
+        state = np.empty(g.n, vals.dtype)
+        state[code(t.column("id").cast(g.ids.type))] = vals
+        g.start = SimpleNamespace(k=last + 1, record=manifest.supersteps[-1], state=state)
+
+    def commit(state, record):
+        vals = (g.ids.take(pa.array(state, pa.int64())) if typ == KEY
+                else pa.array(state, to_arrow_type(typ)))
+        manifest.commit(pa.table({"id": g.ids, col: vals}), record)
+
+    g.commit = commit
+    return manifest
+
+
+def iterate(g, state, step, done, max_iter: int):
+    """The driver-side twin of ``run_supersteps`` (plans/superstep.py)
+    for a body whose state is one value per vertex code: from ``state``
+    (or the run's resume state, ``g.start``), ``step(state)`` returns
+    the next state and its record entries (``delta``, ``rows`` and any
+    extras) until ``done(record)`` or ``max_iter`` supersteps, and
+    ``g.commit`` writes each superstep under a run manifest. Returns
+    the last state and the meta record ``{k, conv, steps}``: the
+    superstep count, the convergence flag and one record per superstep
+    (``k``, ``wall_ms`` and the step's entries)."""
+    k, finished, records = 0, False, []
+    if g.start is not None:  # resumed: finished if that superstep converged
+        state, k, finished = g.start.state, g.start.k, done(g.start.record)
+    while not finished and k < max_iter:
+        t0 = time.perf_counter()
+        state, entries = step(state)
+        records.append({"k": k, "wall_ms": (time.perf_counter() - t0) * 1e3, **entries})
+        g.commit(state, records[-1])
+        k += 1
+        finished = done(records[-1])
+    return state, {"k": k, "conv": finished, "steps": records}

@@ -12,27 +12,29 @@ in tests/oracles.py, since NetworkX's asyn LPA is randomized):
   (synchronous LPA can 2-cycle on bipartite structures — the cap plus
   checkpointed per-step metrics make that observable and resumable).
 
-Below ``LOCAL_LPA_MAX_EDGES`` the supersteps run as one numpy task.
-Above it, or with ``run_dir``, they run on plans/superstep.py's
+Below ``LOCAL_LPA_MAX_EDGES`` the supersteps run as one numpy body in
+the driver, with or without ``run_dir`` (the kernel commits one state
+per superstep). Above it they run on plans/superstep.py's
 ``run_supersteps``: one changed-count aggregate per superstep computes
 and pins the new labels (a local checkpoint, or Parquet under
-``run_dir``, keyed on the input's content identity so a changed input
-starts fresh), and every cache and state is released also when a
-superstep fails.
+``run_dir``), and every cache and state is released also when a
+superstep fails. A run dir is keyed on the input's content identity,
+so a changed input starts fresh, and resumes on either path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.checkpoint import RunManifest, content_identity, release_local_checkpoint
-from ..plans.superstep import count_changed, run_supersteps
+from ..plans.superstep import count_changed, run_supersteps, unchanged
 from .edges import canonicalize_edges, symmetrize, vertices_of
-from .local_kernel import KEY, run_kernel
+from .local_kernel import KEY, Resumable, iterate, run_kernel
 
 
 @dataclass
@@ -55,8 +57,7 @@ the deduped vote rows (the kernel dedups). Vote sums are float64 in
 both paths; with integral weights (including the unweighted unit
 vote) sums are exact below 2^53 regardless of order, so the
 min-(−score, label) tie-break is bit-identical to the distributed
-hash-agg argmax. ``run_dir`` checkpointing always uses the distributed
-loop (``run_supersteps``).
+hash-agg argmax. The gate applies with or without ``run_dir``.
 
 The 4M value is measured, not guessed (``bench_scripts/lpa_crossover.py``,
 local[32], fresh JVM per level, min-of-2, identical label sketches): at
@@ -72,18 +73,12 @@ def _lpa_body(max_iter: int, directed: bool):
     vote both ways; directed rows are deduplicated per (src, dst),
     weights summed, or one unit vote when unweighted. Codes are in key
     order, so "smallest label" ties resolve to the distributed loop's
-    winner. Per superstep: one (dst, label) key compaction + bincount
-    + lexsorted group-head pick — the vectorized twin of the two hash
-    aggs in the distributed superstep. The meta record carries the step
-    count, the convergence flag and one record per superstep (``k``,
-    ``wall_ms``, ``delta`` = changed labels, ``rows`` = vertices), as
-    the distributed loop returns them."""
+    winner. Per superstep (on ``iterate``): one (dst, label) key
+    compaction + bincount + lexsorted group-head pick — the vectorized
+    twin of the two hash aggs in the distributed superstep, with the
+    same records (``delta`` = changed labels, ``rows`` = vertices)."""
 
     def body(g):
-        import time
-
-        import numpy as np
-
         nn = g.n
         src, dst, w = g.src, g.dst, g.weight
         if directed:
@@ -94,10 +89,7 @@ def _lpa_body(max_iter: int, directed: bool):
             src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
             w = np.concatenate([w, w]) if w is not None else np.ones(len(src))
 
-        lab = np.arange(nn, dtype=np.int64)  # label_0(v) = v
-        steps, converged, records = 0, False, []
-        for k in range(max_iter):
-            t0 = time.monotonic()
+        def step(lab):
             # (dst, neighbor-label) vote sums
             uk, ki = np.unique(dst * nn + lab[src], return_inverse=True)
             s = np.bincount(ki, weights=w)
@@ -111,19 +103,11 @@ def _lpa_body(max_iter: int, directed: bool):
             head[1:] = kd_o[1:] != kd_o[:-1]
             new = lab.copy()
             new[kd_o[head]] = kl_o[head]
-            changed = int((new != lab).sum())
-            lab = new
-            steps = k + 1
-            records.append({
-                "k": k, "wall_ms": (time.monotonic() - t0) * 1e3, "delta": changed, "rows": nn,
-            })
-            if changed == 0:
-                converged = True
-                break
-        return (
-            {"id": np.arange(nn), "label": lab},
-            {"k": steps, "conv": converged, "steps": records},
-        )
+            return new, {"delta": int((new != lab).sum()), "rows": nn}
+
+        # label_0(v) = v
+        lab, meta = iterate(g, np.arange(nn, dtype=np.int64), step, unchanged, max_iter)
+        return {"id": np.arange(nn), "label": lab}, meta
 
     return body
 
@@ -149,11 +133,15 @@ def label_propagation(
 
     ``local`` picks the physical strategy below ``LOCAL_LPA_MAX_EDGES``
     vote rows: ``None`` (default) auto-selects the driver-side
-    vectorized kernel when ``run_dir`` is not requested; ``False``
-    forces the distributed superstep loop; ``True`` forces the local
-    kernel regardless of size (expert). Label parity between the two
-    paths is exact for integral weights (see LOCAL_LPA_MAX_EDGES) and
-    tested."""
+    vectorized kernel, with or without ``run_dir``; ``False`` forces
+    the distributed superstep loop; ``True`` forces the local kernel
+    regardless of size (expert). Label parity between the two paths is
+    exact for integral weights (see LOCAL_LPA_MAX_EDGES) and tested.
+
+    ``run_dir`` makes the run resumable one superstep at a time on
+    either path (see ``RunManifest``): the manifest is keyed on the
+    input rows (weights as doubles), and a run dir written by one path
+    resumes on the other."""
     has_w = weighted and "weight" in edges.columns
     cols = ["src", "dst"] + (["weight"] if has_w else [])
     if directed:
@@ -169,18 +157,27 @@ def label_propagation(
 
     # local fast path (see LOCAL_LPA_MAX_EDGES); shuffled rows are
     # pinned lazily for a fall-through past the gate (see run_kernel)
+    params = {"weighted": has_w, "directed": directed}
     pinned = None
-    if run_dir is None and local is None and not (directed or assume_canonical):
+    if local is None and not (directed or assume_canonical):
         pinned = base = base.localCheckpoint(eager=False)
+    manifest = None
     try:
-        if run_dir is None and local is not False:
+        if local is not False:
             out = run_kernel(
                 base, _lpa_body(max_iter, directed), {"id": KEY, "label": KEY},
                 weight=has_w,
                 max_edge_rows=None if local else LOCAL_LPA_MAX_EDGES // (1 if directed else 2),
+                run=None if run_dir is None else Resumable(run_dir, "lpa", params, ("label", KEY)),
             )
             if out is not None:
                 return LPAResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
+        if run_dir is not None:
+            # the kernel's key: the input rows, weights as doubles
+            w = [F.col("weight").cast("double")] if has_w else []
+            manifest = RunManifest.open_or_create(
+                run_dir, "lpa", {**params, "input": content_identity(base, "src", "dst", *w)},
+            )
 
         w = F.col("weight") if has_w else F.lit(1)
         if directed:
@@ -205,16 +202,6 @@ def label_propagation(
         if pinned is not None:
             release_local_checkpoint(pinned)
 
-    manifest = None
-    if run_dir is not None:
-        # key the manifest on the input identity so a different edge
-        # table in the same run_dir starts fresh instead of resuming.
-        # ``e`` always carries a weight column (lit(1) when unweighted),
-        # so the content key covers weighted-vote changes.
-        manifest = RunManifest.open_or_create(run_dir, "lpa", {
-            "weighted": has_w, "directed": directed,
-            "input": content_identity(e, "src", "dst", "weight"),
-        })
     verts = vertices_of(e).persist(StorageLevel.MEMORY_AND_DISK)
 
     def step(prev: DataFrame, _: dict) -> DataFrame:
@@ -246,7 +233,7 @@ def label_propagation(
     # one action per superstep: the changed-count and row-count aggregate
     res = run_supersteps(
         verts.select("id", F.col("id").alias("label")), step,
-        count_changed("label"), lambda m: m["delta"] == 0,
+        count_changed("label"), unchanged,
         max_iter=max_iter, manifest=manifest, inputs=(e, verts),
     )
     return LPAResult(

@@ -29,8 +29,8 @@ Scale design:
   and state is released when a superstep fails,
 - below ``LOCAL_PR_MAX_EDGES`` the whole iteration runs as one
   vectorized numpy body in the driver instead, with or without
-  ``run_dir`` (the body writes the same per-superstep Parquet states) and builds the
-  transition table itself from the input rows.
+  ``run_dir`` (the kernel commits the same per-superstep Parquet
+  states), and builds the transition table itself from the input rows.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
@@ -46,7 +47,7 @@ from pyspark.storagelevel import StorageLevel
 from ..plans.checkpoint import RunManifest, content_identity, release_local_checkpoint
 from ..plans.superstep import run_supersteps, scoped_conf
 from .edges import canonicalize_edges, symmetrize, vertices_of
-from .local_kernel import KEY, run_kernel
+from .local_kernel import KEY, Resumable, iterate, run_kernel
 
 # Above this vertex count the rank table is no longer broadcast.
 BROADCAST_MAX_VERTICES = 2_000_000
@@ -63,12 +64,11 @@ crossover (BENCH/BASELINE.md, 20-superstep walls, local[32]): local
 wins 1.9x at 2M normalized rows, loses 0.61x at 8M — 4M is the
 bracketed midpoint, and also the memory-safe bound for the driver
 (~200 MB edge index + key table). The gate counts input rows (doubled
-when undirected: canonical rows): in the kernel's own collect
-(``run_kernel``'s ``max_edge_rows``), or under ``run_dir`` in the
-manifest identity's aggregate. The gate applies with or without
-``run_dir`` (the kernel then checkpoints each superstep itself); the
-distributed loop (``run_supersteps``, plans/superstep.py) covers
-everything above the gate, and
+when undirected: canonical rows) in the kernel's own collect
+(``run_kernel``'s ``max_edge_rows``), with or without ``run_dir`` (the
+kernel then commits each superstep itself); the distributed loop
+(``run_supersteps``, plans/superstep.py) covers everything above the
+gate, and
 ``strategy="broadcast"/"copartition"`` forces it. Parity
 between the two paths is within float64 summation-order noise (≪ the
 1e-6 convergence contract) and is tested."""
@@ -108,8 +108,6 @@ def _pagerank_body(
     tol: float,
     max_iter: int,
     directed: bool,
-    start_k: int,
-    step_dirs: list[str] | None,
     has_init: bool,
     has_pers: bool,
 ):
@@ -127,29 +125,19 @@ def _pagerank_body(
     Value channel 0 (``has_init``) holds prior ranks, the next one
     (``has_pers``) teleport weights; ids outside the universe are
     dropped. Priors never expand the universe, missing vertices start
-    at 1/n, and a fresh run (``start_k == 0``) renormalizes the vector
-    to sum 1 (the fixed point is init-independent for α < 1), falling
-    back to the cold start when it cannot. A resumed run takes its
-    stored state verbatim, so it is bit-identical to an uninterrupted
+    at 1/n, and the vector is renormalized to sum 1 (the fixed point is
+    init-independent for α < 1), falling back to the cold start when it
+    cannot. A resumed run (``g.start``) takes its stored state verbatim
+    and ignores the priors, so it is bit-identical to an uninterrupted
     one. Teleport weights are summed per id and normalized; no mass on
-    the graph is an error.
-
-    With ``step_dirs`` (indexed by superstep) each superstep's state is
-    written to ``step_dirs[k]/part-00000.parquet`` (``id``, ``rank``).
-    The meta record carries the step count, the convergence flag and
-    one record per superstep (``k``, ``wall_ms``, ``delta``, ``rows``,
-    ``dangling_mass_next``)."""
+    the graph is an error. The supersteps run on ``iterate``; each
+    record carries ``dangling_mass_next``, which the distributed loop
+    reads on a resume."""
 
     def body(g):
-        import os
-        import shutil
-        import time
-
-        import numpy as np
-
         nn = g.n
         if nn == 0:
-            meta = {"k": start_k, "conv": True, "steps": []}
+            meta = {"k": 0, "conv": True, "steps": []}
             if has_pers:
                 meta["error"] = _NO_TELEPORT
             return {"id": [], "rank": []}, meta
@@ -165,16 +153,15 @@ def _pagerank_body(
         dang[src] = False
 
         ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
-        if has_init:
+        if has_init and g.start is None:
             pos, val = g.values[0]
             ok = pos >= 0
             ranks[pos[ok]] = val[ok]
-            if start_k == 0:  # a resumed state stays verbatim
-                s = float(ranks.sum())
-                if np.isfinite(s) and s > 0:
-                    ranks /= s
-                else:  # degenerate prior: fall back to the cold start
-                    ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
+            s = float(ranks.sum())
+            if np.isfinite(s) and s > 0:
+                ranks /= s
+            else:  # degenerate prior: fall back to the cold start
+                ranks = np.full(nn, 1.0 / nn, dtype=np.float64)
         svec = None
         if has_pers:
             pos, val = g.values[int(has_init)]
@@ -185,14 +172,9 @@ def _pagerank_body(
             if not st > 0:
                 return {"id": [], "rank": []}, {"error": _NO_TELEPORT}
             svec /= st
-        if step_dirs is not None:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
 
-        dmass = float(ranks[dang].sum())
-        steps, converged, records = start_k, False, []
-        for k in range(start_k, max_iter):
-            t0 = time.monotonic()
+        def step(ranks):
+            dmass = float(ranks[dang].sum())
             contrib = np.bincount(dst, weights=ranks[src] * p, minlength=nn)
             if svec is None:
                 new = (1.0 - alpha) / nn + alpha * dmass / nn + alpha * contrib
@@ -200,113 +182,15 @@ def _pagerank_body(
                 # nx personalization semantics (dangling = teleport):
                 # x' = (1-a)·s + a·(contrib + dmass·s)
                 new = ((1.0 - alpha) + alpha * dmass) * svec + alpha * contrib
-            delta = float(np.abs(new - ranks).sum())
-            ranks = new
-            dmass = float(ranks[dang].sum())
-            if step_dirs is not None:
-                d = step_dirs[k]
-                shutil.rmtree(d, ignore_errors=True)  # stale files of an older run
-                os.makedirs(d)
-                pq.write_table(
-                    pa.table({"id": g.ids, "rank": ranks}),
-                    os.path.join(d, "part-00000.parquet"),
-                )
-            records.append({
-                "k": k, "wall_ms": (time.monotonic() - t0) * 1e3,
-                "delta": delta, "rows": nn, "dangling_mass_next": dmass,
-            })
-            steps = k + 1
-            if delta < tol:
-                converged = True
-                break
-        return (
-            {"id": np.arange(nn), "rank": ranks},
-            {"k": steps, "conv": converged, "steps": records},
-        )
+            return new, {
+                "delta": float(np.abs(new - ranks).sum()), "rows": nn,
+                "dangling_mass_next": float(new[dang].sum()),
+            }
+
+        ranks, meta = iterate(g, ranks, step, lambda m: m["delta"] < tol, max_iter)
+        return {"id": np.arange(nn), "rank": ranks}, meta
 
     return body
-
-
-def _local_pagerank(
-    base: DataFrame,
-    has_w: bool,
-    directed: bool,
-    vertices: DataFrame | None,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    init_ranks: DataFrame | None = None,
-    personalization: DataFrame | None = None,
-    step_dirs: list[str] | None = None,
-    start_k: int = 0,
-    max_edge_rows: int | None = None,
-) -> PageRankResult | None:
-    """Single-task power iteration (see ``_pagerank_body``) over the
-    input rows ``base(src, dst[, weight])`` — canonical rows when
-    undirected — with ``vertices`` ids in the universe. Null priors of
-    ``init_ranks`` are dropped here, and so are non-finite / non-positive
-    ones unless the run resumes; ``personalization`` holds the
-    caller-cleaned teleport weights. ``None`` when ``base`` holds more
-    than ``max_edge_rows`` rows (see ``run_kernel``)."""
-    values = []
-    if init_ranks is not None:
-        r0 = F.col("rank").cast("double")
-        keep = r0.isNotNull()
-        if start_k == 0:
-            keep = keep & ~F.isnan(r0) & (r0 > 0)
-        values.append(init_ranks.filter(keep).select("id", r0.alias("value")))
-    if personalization is not None:
-        values.append(personalization.select("id", F.col("weight").alias("value")))
-    body = _pagerank_body(
-        alpha, tol, max_iter, directed, start_k, step_dirs,
-        init_ranks is not None, personalization is not None,
-    )
-    out = run_kernel(
-        base, body, {"id": KEY, "rank": DoubleType()}, weight=has_w,
-        vertices=vertices, values=tuple(values), max_edge_rows=max_edge_rows,
-    )
-    if out is None:
-        return None
-    return PageRankResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
-
-
-def _checkpointed_local(
-    spark: SparkSession,
-    run_dir: str,
-    params: dict,
-    base: DataFrame,
-    has_w: bool,
-    directed: bool,
-    vertices: DataFrame | None,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    init_ranks: DataFrame | None,
-    personalization: DataFrame | None,
-) -> PageRankResult:
-    """``_local_pagerank`` under a run manifest: resume from the last
-    recorded state (``init_ranks`` is then ignored), let the kernel write
-    one Parquet state per superstep, and record those supersteps — with
-    footer lineage, zero Spark jobs — once the body has returned."""
-    manifest = RunManifest.open_or_create(run_dir, "pagerank", params)
-    last, done = manifest.resume_point(lambda m: m["delta"] < tol)
-    if done:
-        return PageRankResult(
-            manifest.load_state(spark, last).select("id", "rank"),
-            last + 1, True, manifest.metrics(),
-        )
-    res = _local_pagerank(
-        base, has_w, directed, vertices, alpha, tol, max_iter,
-        manifest.load_state(spark, last) if last >= 0 else init_ranks,
-        personalization, [manifest.step_path(k) for k in range(max_iter)], last + 1,
-    )
-    for m in res.metrics:
-        manifest.record_superstep(
-            spark, m["k"], wall_ms=m["wall_ms"], delta=m["delta"],
-            rows=m["rows"], extra={"dangling_mass_next": m["dangling_mass_next"]},
-        )
-    res.metrics = manifest.metrics()
-    return res
 
 
 def pagerank(
@@ -355,25 +239,29 @@ def pagerank(
     start at 1/N, the assembled vector is renormalized to sum 1, and
     non-finite / non-positive priors are discarded. Ignored when a
     ``run_dir`` manifest resumes checkpointed state (the state
-    supersedes any prior); on the distributed loop it costs one extra
+    supersedes any prior, and the prior is no part of the run's
+    identity); on the distributed loop it costs one extra
     Spark action at superstep 0 only (the normalization + dangling-mass
     aggregate), on the local path none (the prior rides the kernel's
     input).
 
     ``run_dir`` makes the run resumable: each superstep's state is
     written to ``run_dir/superstep_{k:05d}/`` and recorded, with wall,
-    delta and per-file lineage, in ``run_dir/manifest.json``; a rerun
+    delta and per-file lineage, in ``run_dir/manifest.json``, and the
+    state it supersedes is deleted (see ``RunManifest``); a rerun
     with the same inputs and parameters resumes after the last recorded
     superstep (``max_iter`` may differ) and returns the stored state at
     once if that superstep had converged. A different input — edges,
     weights, ``vertices``, seeds — or a different key space (original
-    keys on the local path, xxhash64 vids on the distributed path)
-    starts fresh. Resume granularity is one superstep on the
-    distributed loop and one kernel call on the local path: the kernel
-    writes its states while it runs, but the manifest records them only
-    after the body returns, so a call killed mid-kernel resumes from the
-    previous call's last superstep and no record ever points at a
-    partial file. ``run_dir`` must be a POSIX path that the driver and
+    keys on the local path, xxhash64 vids for string keys on the
+    distributed path) starts fresh; with integer keys a run dir written
+    by one path resumes on the other. Resume granularity is one
+    superstep on both paths: the local kernel commits each superstep's
+    state and record as it completes, and the manifest records a state
+    only after its write returns, so no record ever points at a partial
+    file. Below the gate the call stays one Spark job: the kernel keys
+    the manifest over its collected rows and reads the resume state
+    with pyarrow. ``run_dir`` must be a POSIX path that the driver and
     the executors both see.
 
     ``directed=False`` treats the input as canonical undirected edges and
@@ -395,8 +283,8 @@ def pagerank(
     - "local" (auto-selected below ``LOCAL_PR_MAX_EDGES`` normalized
       edge rows): one vectorized power-iteration task over the whole
       transition table — the broadcast-join principle applied to the
-      iteration itself; see ``_local_pagerank``. Resumable under
-      ``run_dir`` like the distributed loop.
+      iteration itself; see ``_pagerank_body``. Resumable under
+      ``run_dir`` like the distributed loop, one superstep at a time.
     - "broadcast": ranks broadcast to dst-partitioned edges; fastest
       while the rank table is broadcastable. Serial cost: building the
       broadcast (~|V|) every superstep.
@@ -439,55 +327,53 @@ def pagerank(
 
     # Manifest identity of a checkpointed run. max_iter is a stopping
     # condition, not part of the computation's identity — a resume may
-    # raise it and continue the same run. The content keys (see
-    # content_identity) cover the input rows with their weights — same
-    # topology with changed weights is a DIFFERENT input — the extra
-    # `vertices`, and the teleport input of a seeded run. "ids" (added
-    # where the path is known) names the key space the stored states
-    # are written in.
+    # raise it and continue the same run. The content keys cover the
+    # input rows with their weights (as doubles) — same topology with
+    # changed weights is a DIFFERENT input — the extra `vertices`, and
+    # the teleport rows of a seeded run: the local path's kernel
+    # computes them over its collected rows, the distributed path with
+    # content_identity, and both give the same key. "ids" names the key
+    # space the stored states are written in.
     params = {"alpha": alpha, "tol": tol, "weighted": has_w, "directed": directed}
     # local fast path (see LOCAL_PR_MAX_EDGES); undirected input rows are
-    # canonical, two transition rows each. Under run_dir the identity
-    # aggregate counts the input rows, so the gate is decided here;
-    # without it the kernel's collect applies the gate and returns
-    # None past it. Both read only the input rows, so with
-    # assume_canonical nothing on this path shuffles; shuffled rows with
-    # a second reader ahead are pinned lazily (see run_kernel).
+    # canonical, two transition rows each. The kernel's collect applies
+    # the gate and returns None past it; it reads only the input rows,
+    # so with assume_canonical nothing on this path shuffles. Shuffled
+    # rows with a second reader ahead are pinned lazily (see run_kernel).
     gate = LOCAL_PR_MAX_EDGES // (1 if directed else 2)
-    local = strategy == "local"
     pinned = None
     if not (directed or assume_canonical) and (run_dir is not None or strategy == "auto"):
         pinned = base = base.localCheckpoint(eager=False)
-    if run_dir is not None:
-        params["input"] = content_identity(base, *cols)
-        if vertices is not None:
-            params["vertices"] = content_identity(vertices, "id")
-        if pers_clean is not None:
-            params["personalization"] = content_identity(pers_clean, "id", "weight")
-        local = local or (strategy == "auto" and params["input"][0] <= gate)
-    if local or (strategy == "auto" and run_dir is None):
-        # Zero teleport mass (seeded run, no seed id in the graph) is
-        # detected INSIDE the kernel; run_kernel raises the contract
-        # ValueError at the call site.
+    if strategy in ("local", "auto"):
+        # Null, non-finite and non-positive priors are dropped here, and
+        # the priors are no part of the run's identity; zero teleport
+        # mass (seeded run, no seed id in the graph) is detected INSIDE
+        # the kernel, and run_kernel raises the contract ValueError here.
+        r0 = F.col("rank").cast("double")
+        values = [init_ranks.filter(r0.isNotNull() & ~F.isnan(r0) & (r0 > 0)).select(
+            "id", r0.alias("value"))] if init_ranks is not None else []
+        if pers_rows is not None:
+            values.append(pers_rows.select("id", F.col("weight").alias("value")))
+        run = None if run_dir is None else Resumable(
+            run_dir, "pagerank", {**params, "ids": "key"}, ("rank", DoubleType()),
+            (None,) * (init_ranks is not None) + ("personalization",),
+        )
         try:
-            if run_dir is not None:
-                res = _checkpointed_local(
-                    spark, run_dir, {**params, "ids": "key"}, base, has_w, directed,
-                    vertices, alpha, tol, max_iter, init_ranks, pers_rows,
-                )
-            else:
-                res = _local_pagerank(
-                    base, has_w, directed, vertices, alpha, tol, max_iter,
-                    init_ranks, pers_rows, max_edge_rows=None if local else gate,
-                )
+            out = run_kernel(
+                base, _pagerank_body(alpha, tol, max_iter, directed, init_ranks is not None,
+                                     pers_rows is not None),
+                {"id": KEY, "rank": DoubleType()}, weight=has_w, vertices=vertices,
+                values=tuple(values), max_edge_rows=None if strategy == "local" else gate,
+                run=run,
+            )
         except BaseException:
             if pinned is not None:
                 release_local_checkpoint(pinned)
             raise
-        if res is not None:
+        if out is not None:
             if pinned is not None:
                 release_local_checkpoint(pinned)  # the result is pinned on its own
-            return res
+            return PageRankResult(out.rows, out.meta["k"], out.meta["conv"], out.meta["steps"])
 
     e = base.select("src", "dst", (F.col("weight") if has_w else F.lit(1)).alias("weight"))
     if not directed:
@@ -516,6 +402,13 @@ def pagerank(
     # every cache below is released on the way out, also on failure
     vdict = verts = svec = norm_edges = dangling = None
     try:
+        if run_dir is not None:
+            w = [F.col("weight").cast("double")] if has_w else []
+            params["input"] = content_identity(base, "src", "dst", *w)
+            if vertices is not None:
+                params["vertices"] = content_identity(vertices, "id")
+            if pers_rows is not None:
+                params["personalization"] = content_identity(pers_rows, "id", "weight")
         if isinstance(e.schema["src"].dataType, StringType):
             keys = vertices_of(e)
             if vertices is not None:
@@ -577,7 +470,7 @@ def pagerank(
             empty = verts.select("id", F.lit(0.0).alias("rank"))
             return PageRankResult(_decode_ranks(empty, vdict), 0, True)
 
-        np = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if strategy in ("auto", "local"):
             strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "copartition"
         broadcast_ranks = strategy == "broadcast"
@@ -588,9 +481,9 @@ def pagerank(
         # - copartition: partition by src (sorted) so the rank join streams
         #   the cached edge side.
         if broadcast_ranks:
-            norm_edges = norm.repartition(np, "dst")
+            norm_edges = norm.repartition(parts, "dst")
         else:
-            norm_edges = norm.repartition(np, "src").sortWithinPartitions("src")
+            norm_edges = norm.repartition(parts, "src").sortWithinPartitions("src")
         norm_edges = norm_edges.persist(StorageLevel.MEMORY_AND_DISK)
         norm_edges.count()  # materialize once
         if pinned is not None:

@@ -1,1 +1,1 @@
-from .checkpoint import RunManifest, checkpoint_df  # noqa: F401
+from .checkpoint import RunManifest  # noqa: F401

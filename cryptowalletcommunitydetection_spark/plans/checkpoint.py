@@ -7,10 +7,15 @@ each superstep's state is written to Parquet (which also truncates Spark
 lineage — without it, iterative join plans grow unboundedly) and a JSON
 manifest records, per superstep, wall time, convergence delta, row count
 and per-partition lineage, so any run can resume from the last complete
-superstep with identical results (tested in tests/test_resume.py).
-plans/superstep.py drives the distributed loops over it; a manifest is
-keyed on its operator's parameters and on ``content_identity`` of the
-inputs, so a changed input starts fresh.
+superstep with identical results (tested in tests/test_resume.py). Like
+the reference's one cursor, a run keeps one live state: the last.
+plans/superstep.py drives the distributed loops over it, and
+graph/local_kernel.py's ``run_kernel`` the driver-side kernels; a
+manifest is keyed on its operator's parameters and on the content
+identity of the inputs (``content_identity`` in Spark,
+``arrow_identity`` over the kernel's collected rows: the same key), so
+a changed input starts fresh and a run dir crosses strategies where
+their key spaces agree.
 
 Group/superstep identifiers are deterministic — the reference's uuid4 ids
 (services/wallet_clustering.py:6-7,33) would break replay equality.
@@ -20,23 +25,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def checkpoint_df(df: DataFrame, path: str) -> DataFrame:
-    """Write ``df`` to Parquet and read it back (lineage truncation).
-
-    The write is atomic at the directory level from the manifest's point
-    of view: the manifest records a superstep only after the write
-    returns, so a killed run never references a partial checkpoint.
-    """
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+from ..functions.xxh64 import hash_arrow
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -56,13 +56,15 @@ def release_local_checkpoint(df: DataFrame) -> None:
             leaf.rdd().unpersist(False)
 
 
-def content_identity(df: DataFrame, *cols: str) -> list[int]:
+def content_identity(df: DataFrame, *cols: str | Column) -> list[int]:
     """Content key ``[rows, Σhi, Σlo]`` of ``df`` over ``cols``: the row
     count plus the sums of the two 32-bit halves of ``xxhash64(cols)``,
     in ONE single-stage aggregate (no groupBy shuffle). Order-independent
     and multiplicity-safe: a duplicated row adds its hash again, where an
     XOR would cancel the pair. The halves are summed as decimals, so no
-    row count can overflow them under ANSI mode."""
+    row count can overflow them under ANSI mode. Weights enter as
+    doubles (``weight.cast("double")``), the type the driver-side
+    kernel collects, so ``arrow_identity`` reproduces the key."""
     h = F.xxhash64(*cols)
     row = df.agg(
         F.count(F.lit(1)),
@@ -72,71 +74,54 @@ def content_identity(df: DataFrame, *cols: str) -> list[int]:
     return [int(row[0]), int(row[1] or 0), int(row[2] or 0)]
 
 
-def partition_lineage(spark: SparkSession, path: str) -> list[dict[str, Any]]:
-    """Per-partition lineage of a checkpoint: file name, rows, bytes.
+def arrow_identity(columns) -> list[int]:
+    """``content_identity`` of the rows held by the pyarrow ``columns``,
+    bit for bit and without a Spark job: the same ``xxhash64`` chain
+    (``functions/xxh64.py::hash_arrow``), halves and sums."""
+    h = hash_arrow(columns).view(np.int64)
+    return [len(h), int((h >> 32).sum()), int((h & 0xFFFFFFFF).sum())]
 
-    Local checkpoint dirs are read as parquet FOOTERS only (pyarrow on
-    the driver — zero Spark jobs; the footer is O(1) per file, so even a
-    wide checkpoint costs milliseconds). Remote paths fall back to one
-    distributed per-file count job.
-    """
-    local_dir = path
-    for pre in ("file://", "file:"):
-        if local_dir.startswith(pre):
-            local_dir = local_dir[len(pre):]
-    if os.path.isdir(local_dir):
-        import pyarrow.parquet as pq
 
-        out = []
-        for fn in sorted(os.listdir(local_dir)):
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.join(local_dir, fn)
-            out.append(
-                {
-                    "file": fn,
-                    "rows": pq.ParquetFile(fp).metadata.num_rows,
-                    "bytes": os.path.getsize(fp),
-                }
-            )
-        return out
-    rows = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    )
-    out = []
-    for r in rows:
-        fname = r["file"]
-        local = fname.replace("file://", "").replace("file:", "")
-        size = os.path.getsize(local) if os.path.exists(local) else None
-        out.append({"file": os.path.basename(local), "rows": r["rows"], "bytes": size})
-    return sorted(out, key=lambda d: d["file"])
+def partition_lineage(path: str) -> list[dict[str, Any]]:
+    """Per-partition lineage of a checkpoint: file name, rows, bytes,
+    read from the Parquet FOOTERS in the driver (pyarrow, zero Spark
+    jobs; O(1) per file, so even a wide checkpoint costs milliseconds).
+    A run dir is a POSIX path that the driver sees."""
+    return [
+        {"file": fn, "rows": pq.ParquetFile(os.path.join(path, fn)).metadata.num_rows,
+         "bytes": os.path.getsize(os.path.join(path, fn))}
+        for fn in sorted(os.listdir(path)) if fn.endswith(".parquet")
+    ]
 
 
 @dataclass
 class RunManifest:
     """JSON manifest of an iterative run under ``run_dir``.
 
-    Layout::
+    Layout of a finished run::
 
         run_dir/
-          manifest.json          # {algo, params, supersteps: [...]}
-          superstep_00000/       # parquet state after superstep 0
-          superstep_00001/
-          ...
+          manifest.json          # {algo, params, supersteps: [...]}, one
+                                 # record per superstep 0..k
+          superstep_0000k/       # parquet state after the last superstep
 
-    A state directory is either a Spark write (one part file per
-    partition, via ``checkpoint``) or, from a driver-side kernel such as
-    PageRank's local path, one ``part-00000.parquet`` written with
-    pyarrow; ``load_state`` and ``partition_lineage`` read both.
+    Resume reads only the last recorded state, so recording superstep
+    ``k`` deletes every earlier state that this manifest object (one
+    operator call) wrote. A state an earlier call of the same run wrote
+    stays: a DataFrame that call returned may still read it, so a
+    resumed run dir holds that state plus its own last one. A fresh
+    start over another run deletes that run's states. A state directory is
+    either a Spark write (one part file per partition) or, from a
+    driver-side kernel, one ``part-00000.parquet`` written with pyarrow
+    (see ``checkpoint``); ``load_state`` and ``partition_lineage`` read
+    both.
     """
 
     run_dir: str
     algo: str = ""
     params: dict[str, Any] = field(default_factory=dict)
     supersteps: list[dict[str, Any]] = field(default_factory=list)
+    written: set[int] = field(default_factory=set)  # states this object wrote
 
     @property
     def manifest_path(self) -> str:
@@ -160,12 +145,17 @@ class RunManifest:
     def open_or_create(
         cls, run_dir: str, algo: str, params: dict[str, Any]
     ) -> "RunManifest":
-        """Resume if a manifest exists with the same algo+params, else start fresh."""
+        """Resume if a manifest exists with the same algo+params, else
+        start fresh: the other run's states go, so that a finished run
+        dir holds only its own last state."""
         mp = os.path.join(run_dir, "manifest.json")
         if os.path.exists(mp):
             m = cls.load(run_dir)
             if m.algo == algo and m.params == params:
                 return m
+            for d in os.listdir(run_dir):
+                if d.startswith("superstep_"):
+                    shutil.rmtree(os.path.join(run_dir, d), ignore_errors=True)
         os.makedirs(run_dir, exist_ok=True)
         m = cls(run_dir=run_dir, algo=algo, params=params)
         m.save()
@@ -186,45 +176,44 @@ class RunManifest:
         """Highest superstep index recorded as complete; -1 if none."""
         return max((s["k"] for s in self.supersteps), default=-1)
 
-    def resume_point(self, done: Callable[[dict], bool]) -> tuple[int, bool]:
-        """The last recorded superstep (-1 if none) and whether the run
-        had converged there, by the operator's test ``done(record)``."""
-        last = self.last_complete()
-        return last, any(
-            s["k"] == last and s.get("delta") is not None and done(s)
-            for s in self.supersteps
-        )
-
     def load_state(self, spark: SparkSession, k: int) -> DataFrame:
         return spark.read.parquet(self.step_path(k))
 
-    def record_superstep(
-        self,
-        spark: SparkSession,
-        k: int,
-        *,
-        wall_ms: float,
-        delta: float | int | None,
-        rows: int,
-        extra: dict[str, Any] | None = None,
-    ) -> None:
-        entry: dict[str, Any] = {
-            "k": k,
-            "wall_ms": round(wall_ms, 3),
-            "delta": delta,
-            "rows": rows,
-            "completed_at": time.time(),
-        }
-        if extra:
-            entry.update(extra)
-        entry["partitions"] = partition_lineage(spark, self.step_path(k))
+    def record_superstep(self, record: dict[str, Any]) -> None:
+        """Record superstep ``record["k"]`` (``wall_ms``, ``delta``,
+        ``rows`` and any extra entries) with its state's lineage, then
+        delete the states it supersedes that this object wrote."""
+        k = record["k"]
+        entry = {**record, "wall_ms": round(record["wall_ms"], 3), "completed_at": time.time(),
+                 "partitions": partition_lineage(self.step_path(k))}
         # idempotent on resume: drop any stale record for the same k
         self.supersteps = [s for s in self.supersteps if s["k"] != k] + [entry]
         self.supersteps.sort(key=lambda s: s["k"])
         self.save()
+        for j in sorted(j for j in self.written if j < k):  # superseded
+            shutil.rmtree(self.step_path(j), ignore_errors=True)
+            self.written.discard(j)
 
-    def checkpoint(self, df: DataFrame, k: int) -> DataFrame:
-        return checkpoint_df(df, self.step_path(k))
+    def checkpoint(self, state: DataFrame | pa.Table, k: int) -> DataFrame | pa.Table:
+        """Write superstep ``k``'s state: a DataFrame through Spark, read
+        back (lineage truncation); a driver-side pyarrow Table as one
+        part file, returned as it is. The manifest records the state
+        only after the write returns, so a killed run never references
+        a partial checkpoint."""
+        self.written.add(k)
+        if isinstance(state, DataFrame):
+            state.write.mode("overwrite").parquet(self.step_path(k))
+            return state.sparkSession.read.parquet(self.step_path(k))
+        d = self.step_path(k)
+        shutil.rmtree(d, ignore_errors=True)  # stale files of an older run
+        os.makedirs(d)
+        pq.write_table(state, os.path.join(d, "part-00000.parquet"))
+        return state
+
+    def commit(self, state: pa.Table, record: dict[str, Any]) -> None:
+        """Write and record one superstep of a driver-side kernel."""
+        self.checkpoint(state, record["k"])
+        self.record_superstep(record)
 
     def metrics(self) -> list[dict[str, Any]]:
         return list(self.supersteps)

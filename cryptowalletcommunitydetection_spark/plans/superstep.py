@@ -6,8 +6,10 @@ current one, pin it, measure it, test convergence. ``run_supersteps``
 owns what surrounds the operator's plan — the checkpoint (Parquet
 under a ``RunManifest``, else a lazy ``localCheckpoint`` that the
 measure action computes and pins in the same job), the release of
-superseded and, on failure, live states and persisted inputs, the
+superseded and, on failure, live states and persisted inputs (a
+manifest deletes the Parquet states it supersedes itself), the
 resume from a manifest, and one metrics record per superstep.
+graph/local_kernel.py's ``iterate`` is its driver-side twin.
 ``scoped_conf`` is the one place that narrows session conf for a plan.
 """
 
@@ -61,12 +63,12 @@ def run_supersteps(
     pinned: list[DataFrame] = []  # live local checkpoints, oldest first
     try:
         if manifest is not None:
-            last, finished = manifest.resume_point(done)
+            last = manifest.last_complete()
             if last >= 0:
                 state = manifest.load_state(spark, last)
                 state = resume(state) if resume else state
                 record, k0 = manifest.supersteps[-1], last + 1
-                if finished:
+                if done(record):
                     return Supersteps(state, record, k0, True, manifest.metrics())
         else:
             state = state.localCheckpoint(eager=True)
@@ -84,10 +86,7 @@ def run_supersteps(
             record = {"k": k, "wall_ms": (time.monotonic() - t0) * 1e3, **m}
             records.append(record)
             if manifest is not None:
-                manifest.record_superstep(
-                    spark, k, wall_ms=record["wall_ms"], delta=m.pop("delta"),
-                    rows=m.pop("rows"), extra=m,
-                )
+                manifest.record_superstep(record)
             while len(pinned) > 1:  # superseded: ``new`` no longer reads them
                 release_local_checkpoint(pinned[0])
                 pinned.pop(0)
@@ -104,6 +103,11 @@ def run_supersteps(
     finally:
         for df in inputs:
             df.unpersist()
+
+
+def unchanged(record: dict) -> bool:
+    """The convergence test of an integer-state loop: no value moved."""
+    return record["delta"] == 0
 
 
 def count_changed(col: str) -> Callable[[DataFrame], dict]:

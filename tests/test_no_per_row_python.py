@@ -75,10 +75,11 @@ def test_python_tasks_enter_graph_through_known_kernels():
 
 def test_superstep_lifecycle_lives_in_plans():
     """The distributed loops' checkpointing, release, resume and metrics
-    live in plans/superstep.py. Outside plans/ only CC's star loop (not
-    ported yet) and PageRank's checkpointed local kernel record
-    supersteps themselves, and no graph operator sets session conf:
-    ``scoped_conf`` narrows it for a plan and restores it."""
+    live in plans/superstep.py, and the driver-side kernels commit
+    through ``RunManifest.commit``. Outside plans/ only CC's star loop
+    (not ported yet) records supersteps itself, and no graph operator
+    sets session conf: ``scoped_conf`` narrows it for a plan and
+    restores it."""
     package = Path(graph.__file__).parent.parent
     sites = set()
     for f in sorted(package.rglob("*.py")):
@@ -89,7 +90,7 @@ def test_superstep_lifecycle_lives_in_plans():
                 if (isinstance(sub, ast.Call) and isinstance(sub.func, ast.Attribute)
                         and sub.func.attr == "record_superstep"):
                     sites.add((f"{f.parent.name}/{f.name}", getattr(node, "name", None)))
-    assert sites == {("graph/cc.py", "_cc_loop"), ("graph/pagerank.py", "_checkpointed_local")}
+    assert sites == {("graph/cc.py", "_cc_loop")}
     graph_dir = Path(graph.__file__).parent
     assert [f.name for f in graph_dir.glob("*.py") if "spark.conf.set(" in f.read_text()] == []
 

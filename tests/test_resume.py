@@ -125,18 +125,27 @@ def test_pagerank_resume_is_noop_after_convergence(spark, tmp_path):
     assert _ranks(r1) == _ranks(r2)
 
 
-def test_cc_resume(spark, tmp_path):
+def _cc_resume(spark, tmp_path, local):
     pairs = datagen.erdos_renyi(60, 0.03, seed=13)
     edges = datagen.edges_df(spark, pairs)
     d = str(tmp_path / "cc")
     full = {r["id"]: r["component"] for r in connected_components(spark, edges).collect()}
-    partial = connected_components(spark, edges, max_iter=1, run_dir=d, strict=False)
+    partial = connected_components(spark, edges, max_iter=1, run_dir=d, strict=False, local=local)
     partial.count()
     resumed = {
         r["id"]: r["component"]
-        for r in connected_components(spark, edges, run_dir=d).collect()
+        for r in connected_components(spark, edges, run_dir=d, local=local).collect()
     }
     assert resumed == full
+
+
+def test_cc_resume(spark, tmp_path):
+    """Below the gate the kernel's one superstep is the final labels."""
+    _cc_resume(spark, tmp_path, None)
+
+
+def test_cc_resume_distributed(spark, tmp_path):
+    _cc_resume(spark, tmp_path, False)
 
 
 def test_lpa_resume(spark, tmp_path):
@@ -234,8 +243,10 @@ class Killed(RuntimeError):
 def _killed_then_resumed(spark, tmp_path, monkeypatch, run):
     """Run ``run(run_dir)`` killed right after superstep 2's state is
     written and before the manifest records it, then rerun it. The kill
-    leaves nothing pinned; the rerun resumes after superstep 1 and
-    returns the same as an uninterrupted run."""
+    leaves nothing pinned; the rerun resumes after superstep 1 (its
+    first state written is superstep 2's) and returns the same as an
+    uninterrupted run. ``RunManifest.checkpoint`` writes the states of
+    both paths: Spark's, and the driver-side kernel's."""
     d = str(tmp_path / "killed")
     checkpoint = RunManifest.checkpoint
 
@@ -251,7 +262,17 @@ def _killed_then_resumed(spark, tmp_path, monkeypatch, run):
             run(d)
         monkeypatch.undo()
     assert [s["k"] for s in RunManifest.load(d).supersteps] == [0, 1]
-    resumed, straight = run(d), run(str(tmp_path / "straight"))
+    written = []
+
+    def spy(self, df, k):
+        written.append(k)
+        return checkpoint(self, df, k)
+
+    monkeypatch.setattr(RunManifest, "checkpoint", spy)
+    resumed = run(d)
+    monkeypatch.undo()
+    assert written[0] == 2, written
+    straight = run(str(tmp_path / "straight"))
     assert (resumed.supersteps, resumed.converged) == (straight.supersteps, straight.converged)
     assert [m["k"] for m in resumed.metrics] == list(range(straight.supersteps))
     return resumed, straight
@@ -268,23 +289,42 @@ def test_pagerank_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12
 
 
-def test_lpa_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+def _lpa_killed(spark, tmp_path, monkeypatch, local):
     edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
     resumed, straight = _killed_then_resumed(
-        spark, tmp_path, monkeypatch, lambda d: label_propagation(spark, edges, run_dir=d),
+        spark, tmp_path, monkeypatch,
+        lambda d: label_propagation(spark, edges, run_dir=d, local=local),
     )
     assert resumed.converged
     labels = [{r["id"]: r["label"] for r in x.labels.collect()} for x in (resumed, straight)]
     assert labels[0] == labels[1]
 
 
-def test_kcore_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+def test_lpa_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+    _lpa_killed(spark, tmp_path, monkeypatch, False)
+
+
+def test_lpa_resume_after_killed_superstep_local(spark, tmp_path, monkeypatch):
+    """The driver-side kernel commits each superstep: a body killed
+    after superstep 2's state was written resumes at superstep 2."""
+    _lpa_killed(spark, tmp_path, monkeypatch, None)
+
+
+def _kcore_killed(spark, tmp_path, monkeypatch, local):
     edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
     resumed, straight = _killed_then_resumed(
-        spark, tmp_path, monkeypatch, lambda d: core_numbers(spark, edges, run_dir=d),
+        spark, tmp_path, monkeypatch, lambda d: core_numbers(spark, edges, run_dir=d, local=local),
     )
     cores = [{r["id"]: r["core"] for r in x.cores.collect()} for x in (resumed, straight)]
     assert cores[0] == cores[1]
+
+
+def test_kcore_resume_after_killed_superstep(spark, tmp_path, monkeypatch):
+    _kcore_killed(spark, tmp_path, monkeypatch, False)
+
+
+def test_kcore_resume_after_killed_superstep_local(spark, tmp_path, monkeypatch):
+    _kcore_killed(spark, tmp_path, monkeypatch, None)
 
 
 def test_kcore_run_dir_reused_on_changed_input_starts_fresh(spark, tmp_path):
@@ -303,3 +343,133 @@ def test_kcore_run_dir_reused_on_changed_input_starts_fresh(spark, tmp_path):
     assert [m["k"] for m in reused.metrics] == list(range(straight.supersteps))
     got = {r["id"]: r["core"] for r in reused.cores.collect()}
     assert got == {r["id"]: r["core"] for r in straight.cores.collect()}
+
+
+# every operator with a run_dir, by path: the call, its result as
+# Python values, and the tolerance of the path parity (0 = exact)
+_RUNS = {
+    "pagerank": (
+        lambda spark, e, d, local, **kw: pagerank(
+            spark, e, tol=1e-8, run_dir=d, strategy={None: "auto", False: "broadcast"}[local],
+            **kw),
+        lambda r: {x["id"]: x["rank"] for x in r.ranks.collect()}, 1e-9,
+    ),
+    "lpa": (
+        lambda spark, e, d, local, **kw: label_propagation(
+            spark, e, run_dir=d, local=local, **kw),
+        lambda r: {x["id"]: x["label"] for x in r.labels.collect()}, 0,
+    ),
+    "kcore": (
+        lambda spark, e, d, local, **kw: core_numbers(spark, e, run_dir=d, local=local, **kw),
+        lambda r: {x["id"]: x["core"] for x in r.cores.collect()}, 0,
+    ),
+    "cc": (
+        lambda spark, e, d, local, **kw: connected_components(
+            spark, e, run_dir=d, local=local, **kw),
+        lambda r: {x["id"]: x["component"] for x in r.collect()}, 0,
+    ),
+}
+_PATHS = {"local": None, "distributed": False}
+
+
+def _close(a, b, tol):
+    return a.keys() == b.keys() and all(abs(a[k] - b[k]) <= tol for k in a)
+
+
+def _supersteps(d):
+    return sorted(f for f in os.listdir(d) if f.startswith("superstep_"))
+
+
+def _holds_one_state(d):
+    """Resume reads only the last state, so a finished run dir holds the
+    manifest plus that one state, while the manifest keeps one record
+    per superstep."""
+    records = RunManifest.load(d).supersteps
+    assert _supersteps(d) == [f"superstep_{records[-1]['k']:05d}"]
+    assert [s["k"] for s in records] == list(range(len(records)))
+
+
+@pytest.mark.parametrize("name", sorted(_RUNS))
+def test_finished_distributed_run_dir_holds_one_state(spark, tmp_path, name):
+    call, _, _ = _RUNS[name]
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    d = str(tmp_path / "run")
+    call(spark, edges, d, _PATHS["distributed"])
+    _holds_one_state(d)
+
+
+def test_fresh_start_clears_the_other_runs_states(spark, tmp_path):
+    """A run dir reused on another input starts fresh, and the states of
+    the run it replaces go with that run's manifest."""
+    d = str(tmp_path / "run")
+    a = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    label_propagation(spark, a, max_iter=5, run_dir=d)
+    assert _supersteps(d) == ["superstep_00004"]
+    b = label_propagation(spark, datagen.edges_df(spark, datagen.two_cliques_bridge(4)), run_dir=d)
+    assert b.supersteps < 5
+    _holds_one_state(d)
+
+
+@pytest.mark.parametrize("path", sorted(_PATHS))
+def test_earlier_result_stays_readable_after_a_resume(spark, tmp_path, path):
+    """A later call that resumes a run dir and continues it deletes only
+    the states it wrote: the state an earlier call returned (which the
+    distributed path reads lazily from the run dir) stays."""
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    local = _PATHS[path]
+    d = str(tmp_path / "run")
+    first = label_propagation(spark, edges, max_iter=2, run_dir=d, local=local)
+    assert not first.converged
+    resumed = label_propagation(spark, edges, run_dir=d, local=local)
+    assert resumed.converged and resumed.supersteps > 3
+    assert _supersteps(d) == ["superstep_00001", f"superstep_{resumed.supersteps - 1:05d}"]
+    capped = label_propagation(spark, edges, max_iter=2, local=local)
+    got = {r["id"]: r["label"] for r in first.labels.collect()}
+    assert got == {r["id"]: r["label"] for r in capped.labels.collect()}
+
+
+@pytest.mark.parametrize("order", ["local-then-distributed", "distributed-then-local"])
+@pytest.mark.parametrize("name", ["pagerank", "lpa", "kcore"])
+def test_run_dir_resumes_across_strategies(spark, tmp_path, name, order):
+    """With int64 keys both paths write states in the same key space and
+    key the manifest alike, so a run dir capped on one path resumes on
+    the other after its last superstep and ends where a straight run
+    ends."""
+    call, values, tol = _RUNS[name]
+    first, second = [_PATHS[p] for p in order.split("-then-")]
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    d = str(tmp_path / "run")
+    try:
+        call(spark, edges, d, first, max_iter=2)
+    except RuntimeError:  # k-core refuses to return a capped state
+        assert name == "kcore"
+    records = RunManifest.load(d).supersteps
+    assert [s["k"] for s in records] == [0, 1]
+    resumed = call(spark, edges, d, second)
+    straight = call(spark, edges, str(tmp_path / "straight"), second)
+    assert resumed.metrics[:2] == records
+    assert (resumed.supersteps, resumed.converged) == (straight.supersteps, straight.converged)
+    assert _close(values(resumed), values(straight), tol)
+
+
+@pytest.mark.parametrize("name", sorted(_RUNS))
+def test_small_run_dir_call_is_one_spark_job(spark, tmp_path, name):
+    """Below the gate a run_dir call is one Spark job, fresh or resumed:
+    the kernel keys the manifest over its collected rows and reads the
+    resume state with pyarrow. Its result equals the call without
+    run_dir bit for bit, and the finished run dir holds one state."""
+    call, values, _ = _RUNS[name]
+    edges = datagen.edges_df(spark, datagen.erdos_renyi(36, 0.15, seed=21))
+    sc = spark.sparkContext
+    d = str(tmp_path / "run")
+    for leg in ("fresh", "resumed"):
+        group = f"run-dir-one-job-{name}-{leg}"
+        sc.setJobGroup(group, group, interruptOnCancel=False)
+        try:
+            res = call(spark, edges, d, None, assume_canonical=True)
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, leg
+        assert values(res) == values(call(spark, edges, None, None, assume_canonical=True))
+        _holds_one_state(d)
